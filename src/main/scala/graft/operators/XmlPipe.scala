@@ -1,10 +1,18 @@
 package graft.operators
 
-import java.io.{BufferedOutputStream, OutputStream}
+import java.io.{BufferedOutputStream, ByteArrayOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
+
 import graft.functions.{MemMarkup, Render}
+import org.apache.spark.{FutureAction, SparkException}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -94,19 +102,82 @@ object XmlPipe {
   }
 
   /** Stream one complete docset to an OutputStream in source order —
-    * the reference's stdout edge (Query.java:147-169). Constant driver
-    * memory: partitions are fetched one at a time via toLocalIterator;
-    * the transform stages still run in parallel on executors.
+    * the reference's stdout edge (Query.java:147-169).
+    *
+    * Ordering contract: documents are written in partition index order,
+    * and in row order within a partition, exactly as
+    * `docs.select("doc").collect()` would return them, between
+    * [[Header]] and [[Footer]]. Each executor task encodes its whole
+    * partition into one UTF-8 byte block; the driver runs one
+    * single-partition job per partition. Partition 0 runs alone first,
+    * so the first document reaches `out` as soon as one partition can
+    * be computed. After it, up to `defaultParallelism` partitions are
+    * in flight, each block is written as soon as every block before it
+    * is, and the next partition is submitted as each block is written.
+    * Driver memory is bounded by `defaultParallelism` encoded
+    * partitions; a single partition's block is also bounded by
+    * `spark.driver.maxResultSize`.
+    *
+    * A failed partition job or an exception from `out` cancels every
+    * job still in flight and is rethrown as a `SparkException` naming
+    * the partition, with the original as its cause; an interrupt of the
+    * calling thread cancels them too and is rethrown as it is. The
+    * footer is never written after a failure, so a truncated docset
+    * cannot look complete.
     */
   def writeDocset(docs: DataFrame, out: OutputStream): Unit = {
-    val bos = new BufferedOutputStream(out, 1 << 16)
-    bos.write(Header.getBytes(StandardCharsets.UTF_8))
-    val it = docs.select(col("doc")).toLocalIterator()
-    while (it.hasNext) {
-      bos.write(it.next().getString(0).getBytes(StandardCharsets.UTF_8))
+    val qe = docs.select(col("doc")).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("writeDocset")) {
+      val rows = qe.toRdd
+      val sc = rows.sparkContext
+      val n = rows.getNumPartitions
+      val width = math.max(1, sc.defaultParallelism)
+      val inFlight = mutable.Queue.empty[(Int, FutureAction[Array[Byte]])]
+      def submit(p: Int): Unit = {
+        val block = new Array[Array[Byte]](1)
+        inFlight.enqueue(p -> sc.submitJob(rows, encodeBlock, Seq(p),
+          (_: Int, b: Array[Byte]) => block(0) = b, block(0)))
+      }
+      val bos = new BufferedOutputStream(out, 1 << 16)
+      var p = 0 // the partition being fetched or written; n = the footer
+      try {
+        bos.write(Header.getBytes(StandardCharsets.UTF_8))
+        if (n > 0) submit(0)
+        var next = 1
+        while (inFlight.nonEmpty) {
+          val (q, job) = inFlight.dequeue()
+          p = q
+          bos.write(Await.result(job, Duration.Inf))
+          while (next < n && inFlight.size < width) { submit(next); next += 1 }
+        }
+        p = n
+        bos.write(Footer.getBytes(StandardCharsets.UTF_8))
+        bos.flush()
+      } catch {
+        case e @ (NonFatal(_) | _: InterruptedException) =>
+          val err = e match {
+            case _: InterruptedException => e
+            case _ => new SparkException(
+              if (p < n) s"writeDocset: partition $p of $n failed; " +
+                "the docset is truncated and has no footer"
+              else "writeDocset: writing the docset footer failed", e)
+          }
+          inFlight.foreach { case (_, job) =>
+            try { job.cancel(); Await.ready(job, Duration.Inf) }
+            catch { case NonFatal(c) => err.addSuppressed(c) }
+          }
+          throw err
+      }
     }
-    bos.write(Footer.getBytes(StandardCharsets.UTF_8))
-    bos.flush()
+  }
+
+  /** One partition's documents as one UTF-8 block (the `doc` column of
+    * the sink's single-column rows).
+    */
+  private def encodeBlock(rows: Iterator[InternalRow]): Array[Byte] = {
+    val buf = new ByteArrayOutputStream(1 << 16)
+    rows.foreach(_.getUTF8String(0).writeTo(buf))
+    buf.toByteArray
   }
 
   /** Scale path: write N independent, individually-well-formed docset

@@ -1,14 +1,54 @@
 package graft
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, IOException}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import graft.functions.SdbmHash
 import graft.operators.XmlPipe
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Holds back the rows of some partitions in the sink failure tests, so
+  * the jobs still in flight when the sink fails can only end by being
+  * cancelled. Local mode runs tasks in the test JVM, so a static latch
+  * reaches them.
+  */
+object SinkGate {
+  @volatile var latch = new CountDownLatch(0)
+}
+
+/** Start/end times and partition of every job in one job group. */
+class SinkJobs(group: String) extends SparkListener {
+  final class Job(val start: Long) { var end = -1L; var partition = -1 }
+  private val jobs = mutable.Map.empty[Int, Job]
+  private val stageJob = mutable.Map.empty[Int, Int]
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+      jobs(e.jobId) = new Job(e.time)
+      e.stageIds.foreach(stageJob(_) = e.jobId)
+    }
+  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    jobs.get(e.jobId).foreach(_.end = e.time)
+  }
+  override def onTaskStart(e: SparkListenerTaskStart): Unit = synchronized {
+    stageJob.get(e.stageId).foreach(jobs(_).partition = e.taskInfo.partitionId)
+  }
+
+  /** The jobs seen once every event posted so far has been delivered. */
+  def drain(sc: org.apache.spark.SparkContext): Seq[Job] = {
+    org.apache.spark.ListenerBusDrain(sc)
+    synchronized(jobs.toSeq.sortBy(_._1).map(_._2))
+  }
+}
 
 /** Golden tests for F10/F11 framing (reference Query.java:147-192):
   * leading `\n` per document, undeclared `sphinx:` prefix, escaping,
@@ -235,5 +275,173 @@ class XmlPipeSpec extends AnyFunSuite {
       assert(content.startsWith(XmlPipe.Header))
       assert(content.trim.endsWith("</sphinx:docset>"))
     }
+  }
+
+  /** Runs `body` with its jobs in `group` and returns them as recorded. */
+  private def recordingJobs[T](group: String)(body: => T): (T, Seq[SinkJobs#Job]) = {
+    val sc = spark.sparkContext
+    val listener = new SinkJobs(group)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "writeDocset under test")
+      val res = try body finally sc.clearJobGroup()
+      (res, listener.drain(sc))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def written(docs: DataFrame): String = {
+    val out = new ByteArrayOutputStream()
+    XmlPipe.writeDocset(docs, out)
+    out.toString(StandardCharsets.UTF_8)
+  }
+
+  private def collected(docs: DataFrame): String =
+    XmlPipe.Header + docs.select("doc").collect().map(_.getString(0)).mkString +
+      XmlPipe.Footer
+
+  test("writeDocset keeps partition order and bytes over many uneven " +
+      "partitions, some empty") {
+    val n = 3 * spark.sparkContext.defaultParallelism + 2
+    // partition k holds ids [100k, 100k + 100); every fourth is emptied,
+    // the rest keep 100, 50, 34, 25 or 20 rows
+    val df = spark.range(0, 100L * n, 1, n)
+      .filter((col("id") / 100).cast("long") % 4 =!= 2 &&
+        col("id") % ((col("id") / 100).cast("long") % 5 + 1) === 0)
+      .select(col("id").as("doc_id"),
+        concat(lit("π漢字 <&> "), col("id").cast("string")).as("body"))
+    val docs = XmlPipe.formatDocs(df, Seq("doc_id"))
+    assert(docs.rdd.getNumPartitions == n)
+    val sizes = docs.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+    assert(sizes.count(_ == 0) >= 3 && sizes.filter(_ > 0).distinct.size >= 3,
+      s"partition sizes $sizes")
+    assert(written(docs) == collected(docs))
+  }
+
+  test("writeDocset of a globally orderBy-sorted frame over >= 8 range " +
+      "partitions writes the global order") {
+    val s = spark
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> s.conf.getOption(k))
+    try {
+      s.conf.set("spark.sql.shuffle.partitions", "12")
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val df = s.range(0, 3000, 1, 5)
+        .select(((col("id") * 7919) % 3001).as("doc_id"),
+          concat(lit("v<"), col("id").cast("string")).as("body"))
+      val docs = XmlPipe.formatDocs(df, Seq("doc_id")).orderBy(col("id"))
+      assert(docs.select("doc").queryExecution.toRdd.getNumPartitions >= 8)
+      val got = written(docs)
+      assert(got == collected(docs))
+      val ids = "<sphinx:document id=\"(\\d+)\"".r
+        .findAllMatchIn(got).map(_.group(1).toLong).toSeq
+      assert(ids.size == 3000 && ids == ids.sorted)
+    } finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  test("writeDocset runs partition 0 alone, then at most " +
+      "defaultParallelism jobs at a time, one job per partition") {
+    val sc = spark.sparkContext
+    val width = sc.defaultParallelism
+    val n = 3 * width + 2
+    val df = spark.range(0, 400L * n, 1, n)
+      .select(col("id").as("doc_id"), sha2(col("id").cast("string"), 512).as("body"))
+    val docs = XmlPipe.formatDocs(df, Seq("doc_id"))
+    val (got, jobs) = recordingJobs("xmlpipe-shape")(written(docs))
+    assert(got == collected(docs))
+    assert(jobs.size == n, "one sink job per partition")
+    assert(jobs.map(_.partition).sorted == (0 until n))
+    val first = jobs.find(_.partition == 0).get
+    jobs.filterNot(_ eq first).foreach(j => assert(first.end <= j.start,
+      s"partition ${j.partition} started at ${j.start}, before partition " +
+        s"0 ended at ${first.end}"))
+    // at equal times an end is counted before a start
+    val overlap = jobs.flatMap(j => Seq(j.start -> 1, j.end -> -1)).sorted
+      .scanLeft(0)(_ + _._2).max
+    assert(overlap <= width, s"$overlap sink jobs overlapped")
+    assert(overlap > 1, "partitions after the first never ran concurrently")
+  }
+
+  /** `n` partitions of `per` rows each (partition k holds ids
+    * [k*per, (k+1)*per)), each with a `bodyLen`-char body. Rows of
+    * partitions after `gate` wait on [[SinkGate]]; a row of partition
+    * `throwIn` throws.
+    */
+  private def gatedDocs(n: Int, per: Int, bodyLen: Int, gate: Int,
+      throwIn: Int = -1): DataFrame = {
+    val body = udf { (id: Long) =>
+      val part = (id / per).toInt
+      if (part == throwIn)
+        throw new IllegalStateException(s"boom in partition $part")
+      if (part > gate && !SinkGate.latch.await(30, TimeUnit.SECONDS))
+        throw new IllegalStateException(s"partition $part held back for 30 s")
+      "x" * bodyLen
+    }
+    XmlPipe.formatDocs(spark.range(0, n.toLong * per, 1, n)
+      .select(col("id").as("doc_id"), body(col("id")).as("body")), Seq("doc_id"))
+  }
+
+  /** Runs a failing `writeDocset`, then checks that no job it had in
+    * flight is left running (they are held back by [[SinkGate]], so
+    * only a cancel ends them) and returns the exception. A failed task
+    * already fails the sibling jobs on the same RDD inside Spark; a
+    * failing `out` leaves them to the sink's own cancel.
+    */
+  private def failingSink(group: String)(body: => Unit): SparkException = {
+    val sc = spark.sparkContext
+    SinkGate.latch = new CountDownLatch(1)
+    try {
+      val (err, jobs) = recordingJobs(group)(intercept[SparkException](body))
+      assert(jobs.nonEmpty && jobs.forall(_.end >= 0),
+        s"sink jobs left running: ${jobs.filter(_.end < 0).map(_.partition)}")
+      assert(sc.statusTracker.getActiveJobIds.toSet
+        .intersect(sc.statusTracker.getJobIdsForGroup(group).toSet).isEmpty)
+      err
+    } finally SinkGate.latch.countDown()
+  }
+
+  test("writeDocset: a failing partition cancels the jobs in flight and " +
+      "names the partition; no footer") {
+    val n = 3 * spark.sparkContext.defaultParallelism + 2
+    val bad = n / 2
+    val docs = gatedDocs(n, per = 20, bodyLen = 10, gate = bad, throwIn = bad)
+    val out = new ByteArrayOutputStream()
+    val err = failingSink("xmlpipe-fail-udf")(XmlPipe.writeDocset(docs, out))
+    assert(err.getMessage.startsWith(s"writeDocset: partition $bad of $n failed"),
+      err.getMessage)
+    assert(err.getCause != null)
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(c => String.valueOf(c.getMessage)
+      .contains(s"boom in partition $bad")), "the UDF's error is not in the cause chain")
+    assert(!out.toString(StandardCharsets.UTF_8).endsWith(XmlPipe.Footer))
+  }
+
+  test("writeDocset: an OutputStream failing mid-docset cancels the jobs " +
+      "in flight and names the partition; no footer") {
+    val n = 3 * spark.sparkContext.defaultParallelism + 2
+    val (per, bodyLen) = (40, 2000) // every block > the 64 KiB buffer
+    val bad = n / 2
+    val blocks = gatedDocs(n, per, bodyLen, gate = n).select("doc").collect()
+      .map(_.getString(0).getBytes(StandardCharsets.UTF_8).length.toLong)
+      .grouped(per).map(_.sum).toSeq
+    assert(blocks.forall(_ > (1 << 16)))
+    // the header is flushed with block 0; fail halfway through block `bad`
+    val limit = XmlPipe.Header.length + blocks.take(bad).sum + blocks(bad) / 2
+    val closed = new IOException("indexer closed the pipe")
+    val out = new ByteArrayOutputStream() {
+      override def write(b: Array[Byte], off: Int, len: Int): Unit =
+        if (size() + len > limit) throw closed else super.write(b, off, len)
+      override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+    }
+    val docs = gatedDocs(n, per, bodyLen, gate = bad)
+    val err = failingSink("xmlpipe-fail-out")(XmlPipe.writeDocset(docs, out))
+    assert(err.getMessage.startsWith(s"writeDocset: partition $bad of $n failed"),
+      err.getMessage)
+    assert(err.getCause eq closed)
+    assert(!out.toString(StandardCharsets.UTF_8).endsWith(XmlPipe.Footer))
+    assert(out.size() == limit - blocks(bad) / 2)
   }
 }
