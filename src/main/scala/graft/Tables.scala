@@ -125,6 +125,22 @@ object Tables {
       .option("table", table)
       .load()
 
+  /** Hash-spread `df` on `key` over `defaultParallelism` partitions.
+    * A parquet file written as a single row group reads as ONE task
+    * however large it is, and every narrow step above the scan (an
+    * explode, a per-row hash) inherits that one task: a gram
+    * self-join over such a scan runs its explode, join side and
+    * partial aggregate on one core. Spreading the cheap input rows
+    * first puts that work on every core for the price of one small
+    * shuffle. This is the only place the workaround lives; call it
+    * right before the expensive per-row step. [[load]] deliberately
+    * does not spread: most queries start with a cheap filter or
+    * aggregate, where the extra exchange would only add cost.
+    */
+  def spread(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      org.apache.spark.sql.functions.col(key))
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     try normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
     catch {

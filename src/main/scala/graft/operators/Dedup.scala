@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.functions.{minhash_shingled, shared_count, shingle_hashes, simhash64}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -344,20 +345,18 @@ object Dedup {
     // Persisted because the plan fans out 4 ways (both sides of the
     // band self-join + both verify joins) — without it the shingle
     // pipeline is recomputed per branch.
-    // Single-row-group parquet reads as ONE task; spread the (cheap to
-    // shuffle, expensive to hash) raw tokens across cores first.
-    // Docs too short to produce any shingle are excluded up front:
-    // they would otherwise all share the empty-signature band keys and
-    // pair quadratically with each other (and 0 >= 0*minJaccard would
-    // pass the verify).
+    // The (cheap to shuffle, expensive to hash) raw tokens are spread
+    // across cores first. Docs too short to produce any shingle are
+    // excluded up front: they would otherwise all share the
+    // empty-signature band keys and pair quadratically with each other
+    // (and 0 >= 0*minJaccard would pass the verify).
     // The verify payload is sorted distinct 64-bit shingle HASHES, not
     // shingle strings: ~10× less persisted/shuffled state for long
     // docs, and the per-pair Jaccard is a codegen'd merge pass instead
     // of array_intersect/array_union hash-set builds.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val base = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("wt"))
-      .filter(size(col("wt")) >= shingleWords)
-      .repartition(par, col("id"))
+    val base = Tables.spread(
+        docs.select(col(idCol).as("id"), tokens(col(textCol)).as("wt"))
+          .filter(size(col("wt")) >= shingleWords), "id")
       .withColumn("sig", minhash_shingled(col("wt"), shingleWords, k))
       .withColumn("toks", shingle_hashes(col("wt"), shingleWords))
       .drop("wt")
@@ -552,15 +551,31 @@ object Dedup {
       .unionByName(reps)
   }
 
+  /** (id, g): each document's distinct character n-grams, exploded
+    * after [[Tables.spread]] so the three gram self-joins below run on
+    * every core.
+    */
+  private def spreadGrams(docs: DataFrame, n: Int, idCol: String,
+      textCol: String): DataFrame =
+    Tables.spread(docs.select(col(idCol).as("id"), col(textCol).as("t")),
+        "id")
+      .select(col("id"), explode(charNgrams(col("t"), n)).as("g"))
+
   /** Exact character-n-gram Jaccard pairs via shingle join (ground
     * truth / oracle-checkable). Output: (id_a, id_b, shared, n_a, n_b)
     * for pairs with jaccard = shared/(n_a+n_b-shared) >= minJaccard.
+    *
+    * The (id, text) rows are spread across `defaultParallelism` hash
+    * partitions of id before the gram explode, so the explode, the
+    * gram self-join and its partial aggregate run on every core even
+    * when the input is a single-row-group scan that reads as one task
+    * (on the 500-doc ground-truth slice that single task was most of
+    * the build). The result set does not depend on the partitioning.
     */
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3,
       minJaccard: Double = 0.8, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val grams = docs.select(col(idCol).as("id"),
-      explode(charNgrams(col(textCol), n)).as("g"))
+    val grams = spreadGrams(docs, n, idCol, textCol)
     val counts = grams.groupBy(col("id")).agg(count(lit(1)).as("ng"))
     // Lossless size prefilter: jaccard >= t forces the distinct-gram
     // counts to satisfy min(na,nb) >= t*max(na,nb) (shared <= min and
@@ -615,8 +630,7 @@ object Dedup {
     // reuse already dedupes the identical join legs — and at corpus
     // scale materializing every 8-char gram would be a block-manager
     // wall the recomputation never pays.
-    val grams = docs.select(col(idCol).as("id"),
-      explode(charNgrams(col(textCol), n)).as("g"))
+    val grams = spreadGrams(docs, n, idCol, textCol)
     val counts = grams.groupBy(col("id")).agg(count(lit(1)).as("ng"))
     // plain equi-join on id — AQE picks the strategy by runtime size
     val g = grams.join(counts, "id")
@@ -680,8 +694,7 @@ object Dedup {
     // same-host runs): the explode is cheap and codegen-pipelined
     // into each consumer, while the pin pays serialization plus a job
     // barrier the recomputation never does.
-    val grams = docs.select(col(idCol).as("id"),
-      explode(charNgrams(col(textCol), n)).as("g"))
+    val grams = spreadGrams(docs, n, idCol, textCol)
     val counts = grams.groupBy(col("id")).agg(count(lit(1)).as("ng"))
     // global token order key: ascending df, gram text as tie-break —
     // attached per-gram by a vocab-keyed equi-join (no rank window)
@@ -823,13 +836,10 @@ object Dedup {
     // sequence(1, len-(n-1)) is DESCENDING when len < n — guard first.
     val posArr = when(len < n, array().cast("array<int>"))
       .otherwise(sequence(lit(1), len - (n - 1)))
-    // Single-row-group parquet reads as ONE task (same trap as
-    // minhashPairs): spread the cheap (id, text) rows across cores
-    // BEFORE the explode so gram generation + hashing parallelize.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val grams = docs
-      .select(col(idCol).as("id"), col(textCol).as("t"))
-      .repartition(par, col("id"))
+    // spread the cheap (id, text) rows BEFORE the explode so gram
+    // generation + hashing parallelize
+    val grams = Tables.spread(
+        docs.select(col(idCol).as("id"), col(textCol).as("t")), "id")
       .select(col("id"), col("t"), explode(posArr).as("pos"))
       .select(col("id"), col("pos"),
         xxhash64(substr(col("t"), col("pos"), lit(n))).as("h"))

@@ -19,16 +19,13 @@ private[graft] object RegText {
   /** The corpus-LM score frame (doc_id, n_bigrams, mean_bp), built
     * once per (session, sfDir) and shared by text_lm_score and
     * text_lm_buckets via the cross-query memo — the explode-heavy
-    * three-pass pipeline runs exactly once per suite. Repartitioned
-    * off the single fixture row group like text_bigrams so the
-    * explode parallelizes.
+    * three-pass pipeline runs exactly once per suite. Spread across
+    * cores like text_bigrams so the explode parallelizes.
     */
   private def lmScored(s: SparkSession, dir: String): DataFrame =
     memoFrame(s, dir, "lm_score") {
-      val par = s.sparkContext.defaultParallelism
-      TextStats.lmScore(
-        t(s, dir, "documents").select(col("doc_id"), col("text"))
-          .repartition(par, col("doc_id")))
+      TextStats.lmScore(Tables.spread(
+        t(s, dir, "documents").select(col("doc_id"), col("text")), "doc_id"))
     }
 
   /** The 8-round BPE-trained word table (w, seq, cnt), built once per
@@ -183,10 +180,8 @@ private[graft] object RegText {
       // the standard bigram-PMI denominators. Three hash aggregations
       // over one exploded pass + two vocabulary-keyed equi-joins;
       // the single-row N attaches via a bounded 1-row broadcast.
-      val par = s.sparkContext.defaultParallelism
-      val bg = t(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .repartition(par, col("doc_id"))
+      val bg = Tables.spread(
+          t(s, dir, "documents").select(col("doc_id"), col("text")), "doc_id")
         .select(explode(graft.functions.word_shingles(
           Dedup.tokens(col("text")), 2)).as("pair"))
         .select(col("pair"),
@@ -225,10 +220,8 @@ private[graft] object RegText {
       // did-the-crawl-shift detector. One tokenize pass -> one token
       // hash agg -> two bounded 1-row broadcasts -> TakeOrdered 20;
       // at 100 TB the only wide op is the token-keyed aggregate.
-      val par = s.sparkContext.defaultParallelism
-      val tk = t(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .repartition(par, col("doc_id"))
+      val tk = Tables.spread(
+          t(s, dir, "documents").select(col("doc_id"), col("text")), "doc_id")
         .select(pmod(col("doc_id"), lit(2L)).as("h"),
           explode(Dedup.tokens(col("text"))).as("w"))
       val counts = tk.groupBy(col("w")).agg(
@@ -369,11 +362,9 @@ private[graft] object RegText {
       // a BPE-style tokenizer trainer consults each merge step (the
       // top row IS the next merge). The codegen'd shingle kernel (not
       // the interpreted HOF form), spread across cores before the
-      // explode (single-row-group scan = one task otherwise).
-      val par = s.sparkContext.defaultParallelism
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .repartition(par, col("doc_id"))
+      // explode.
+      Tables.spread(
+          t(s, dir, "documents").select(col("doc_id"), col("text")), "doc_id")
         .select(explode(graft.functions.word_shingles(
           Dedup.tokens(col("text")), 2)).as("pair"))
         .groupBy(col("pair")).agg(count(lit(1)).as("n"))
@@ -479,12 +470,10 @@ private[graft] object RegText {
       // the fitted Zipf exponent in exact milli units: integer least
       // squares over (log2 rank, log2 freq) bucket points, cumulative
       // ranks via a bounded sequence-explode (TextStats.zipfSlope).
-      // Repartitioned off the single fixture row group like
-      // text_bigrams so the 3-gram explode parallelizes.
-      TextStats.zipfSlope(t(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism,
-          col("doc_id")))),
+      // Spread like text_bigrams so the 3-gram explode parallelizes.
+      TextStats.zipfSlope(Tables.spread(
+        t(s, dir, "documents").select(col("doc_id"), col("text")),
+        "doc_id"))),
     "text_zipf_by_source" -> ((s, dir) => {
       // per-source vocabulary shape — the text_zipf rollup grouped by
       // source, the side-by-side source-quality comparison (a source
@@ -736,10 +725,8 @@ private[graft] object RegText {
     "text_rake" -> ((s, dir) => {
       // RAKE keyphrases (Rose et al. 2010): stopword-delimited runs,
       // deg/freq word scores in micro-units (TextStats.rakePhrases)
-      val par = s.sparkContext.defaultParallelism
-      TextStats.rakePhrases(
-        t(s, dir, "documents").select(col("doc_id"), col("text"))
-          .repartition(par, col("doc_id")))
+      TextStats.rakePhrases(Tables.spread(
+        t(s, dir, "documents").select(col("doc_id"), col("text")), "doc_id"))
     }),
     "text_heaps_law" -> ((s, dir) =>
       // Heaps'-law vocabulary growth: cumulative docs/tokens/vocab at

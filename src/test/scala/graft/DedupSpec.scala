@@ -341,6 +341,36 @@ class DedupSpec extends AnyFunSuite {
       norm(Dedup.ngramJaccardPairs(docs)))
   }
 
+  test("the gram self-joins return the same rows over a single-" +
+      "partition input as over a multi-partition one") {
+    import spark.implicits._
+    val excerpt = "the quick brown fox jumps over the lazy dog"
+    val docs = corpus.union(Seq(
+      (6L, excerpt),
+      (7L, "breaking news tonight: " + excerpt + " was the line of the day"),
+      (8L, "the quick brown fox jumps over the lazy dog tonite"),
+      (9L, "the quick brown fox jumps over the lazy dog tonight"))
+      .toDF("doc_id", "text"))
+    val one = docs.coalesce(1)
+    val many = docs.repartition(5, col("text"))
+    assert(one.rdd.getNumPartitions == 1 && many.rdd.getNumPartitions == 5)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val runs = Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)](
+      "ngramJaccardPairs" -> (d => Dedup.ngramJaccardPairs(d,
+        minJaccard = 0.5)),
+      "containmentPairs" -> (d => Dedup.containmentPairs(d, n = 8,
+        minContainmentBp = 9000L)),
+      "jaccardPairsAllPairs" -> (d => Dedup.jaccardPairsAllPairs(d,
+        minJaccard = 0.5)))
+    for ((name, f) <- runs) {
+      val single = rows(f(one))
+      assert(single.nonEmpty, s"$name found no pairs; the case is vacuous")
+      assert(single == rows(f(many)), s"$name depends on the partitioning")
+    }
+  }
+
   test("containmentPairs finds an excerpt fully quoted in a long doc " +
       "that symmetric Jaccard misses, and scores it exactly") {
     import spark.implicits._

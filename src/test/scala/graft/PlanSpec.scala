@@ -569,6 +569,48 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("ground-truth gram explodes sit on a defaultParallelism hash " +
+      "exchange, never directly on the single-task file scan") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec,
+      GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val par = spark.sparkContext.defaultParallelism
+    // dedup_ngram_jaccard reads the gt_pairs memo, whose checkpoint
+    // hides the gram join: guard the memo's registered builder
+    val plans = Seq(
+      "gt_pairs" -> SparkEntry.groundTruthPairsPlan(spark, dir),
+      "dedup_containment" -> SparkEntry.queries("dedup_containment")(
+        spark, dir))
+    for ((name, df) <- plans) {
+      val sp = df.queryExecution.sparkPlan
+      val gens = sp.collect { case g: GenerateExec => g }
+      assert(gens.nonEmpty, s"$name: no gram Generate in\n$sp")
+      for (g <- gens) {
+        // walk down the narrow chain under the explode to the first
+        // node that is not a projection or filter
+        var below: SparkPlan = g.child
+        while (below.children.size == 1 &&
+            !below.isInstanceOf[ShuffleExchangeExec])
+          below = below.children.head
+        below match {
+          case e: ShuffleExchangeExec =>
+            e.outputPartitioning match {
+              case h: HashPartitioning =>
+                assert(h.numPartitions == par,
+                  s"$name: spread to ${h.numPartitions}, want $par\n$sp")
+              case other =>
+                fail(s"$name: explode sits on a $other exchange\n$sp")
+            }
+          case _: FileSourceScanExec =>
+            fail(s"$name: explode runs directly on the file scan\n$sp")
+          case other =>
+            fail(s"$name: explode sits on ${other.nodeName}\n$sp")
+        }
+      }
+    }
+  }
+
   test("retention and gapfill shuffle on their aggregate keys only — " +
       "no window over raw events in retention, spine join keyed") {
     val pr = plan("events_retention")
