@@ -37,7 +37,7 @@ object Tables {
     *    casting to TIMESTAMP preserves the wall clock AND gives epoch
     *    arithmetic identical to DuckDB's naive-timestamp epoch_us.
     */
-  private def normalizeTs(df: DataFrame): DataFrame = {
+  private[graft] def normalizeTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     val fixes: Seq[(String, Column)] = df.schema.fields.collect {
       case StructField(n, LongType, _, _) if n == "ts" =>

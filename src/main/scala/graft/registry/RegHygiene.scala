@@ -118,9 +118,9 @@ private[graft] object RegHygiene {
     }),
     "quality_filtered_stream" -> ((s, dir) => {
       // the stateless-streaming twin of quality_filtered: same
-      // operator, same oracle, run through readStream → append sink;
-      // bundled with the XML pipe's run (r19 — the two stateless
-      // micro-batch floors overlap; queries stay independent)
+      // operator, same oracle, run through readStream → append sink
+      // as one query of its own (StatelessPipe); no other stream
+      // shares or waits on its run
       graft.streaming.EventsStream.qualityFilteredToCompletion(s, dir)
         .orderBy(col("doc_id"))
     }),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import scala.util.control.NonFatal
+
 /** Structured Streaming twin of graft.operators.Events: the same
   * tumbling-window aggregation driven through readStream → watermark →
   * windowed agg → sink. Batch and stream share one query shape, so the
@@ -184,7 +186,7 @@ object EventsStream {
           (a, b) => (math.max(a._1, b._1), math.max(a._2, b._2))): Unit
         Some((name, rows, bytes))
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Per-name MAX within one drain window — the exactly-once twin
     * stops the same name twice, and the PEAK footprint is the right
@@ -221,13 +223,24 @@ object EventsStream {
     m
   }
 
-  /** Error-path teardown for two-query bundles: each stop() in its
-    * own guard, so a failing first stop cannot leak the sibling query
-    * on the shared stream session.
+  /** Error-path teardown after `cause` failed a run: each stop() in
+    * its own guard, so a failing first stop cannot leak a sibling
+    * query on the shared stream session. A stop failure is attached to
+    * `cause` as suppressed (the caller rethrows `cause`); an interrupt
+    * during a stop re-sets the thread's interrupt flag; fatal errors
+    * propagate.
     */
-  private def stopQuietly(
+  private[streaming] def stopQuietly(cause: Throwable,
       qs: org.apache.spark.sql.streaming.StreamingQuery*): Unit =
-    qs.foreach(q => try q.stop() catch { case _: Throwable => () })
+    qs.foreach { q =>
+      try q.stop()
+      catch {
+        case e: InterruptedException =>
+          Thread.currentThread().interrupt()
+          cause.addSuppressed(e)
+        case NonFatal(e) => cause.addSuppressed(e)
+      }
+    }
 
   // --------------------------------------------------------------
   // Run-sharing bundles (r17 judge ask #3)
@@ -434,30 +447,18 @@ object EventsStream {
     f.delete()
   }
 
-  /** Streaming source over the events parquet (nanos ts handled the
-    * same way as Tables.load).
+  /** Streaming source over `<table>.parquet` under `dir`, with the
+    * same ts normalization as [[graft.Tables.load]].
     */
-  def source(spark: SparkSession, dir: String): DataFrame = {
+  def source(spark: SparkSession, dir: String,
+      table: String = "events"): DataFrame = {
     // nanosAsLong must be set at session construction (Sessions.builder);
     // fail loudly before the schema probe gives a cryptic parquet error.
     graft.Tables.requireNanosConf(spark)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // file-stream sources take a directory; select just events.parquet
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    // same two-flavor ts normalization as Tables.load: nanos-as-long
-    // fixtures truncate to micros; micros-NTZ fixtures cast to
-    // TIMESTAMP (session tz pinned UTC — wall clock preserved, and
-    // event-time watermarks require the LTZ type)
-    raw.schema.fields.foldLeft(raw) { (d, f) =>
-      f.dataType match {
-        case org.apache.spark.sql.types.LongType if f.name == "ts" =>
-          d.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          d.withColumn(f.name, col(f.name).cast("timestamp"))
-        case _ => d
-      }
-    }
+    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
+    // file-stream sources take a directory; select just this table
+    graft.Tables.normalizeTs(spark.readStream.schema(schema)
+      .option("pathGlobFilter", s"$table.parquet").parquet(dir))
   }
 
   /** Run the tumbling aggregation as a streaming query to completion
@@ -756,7 +757,7 @@ object EventsStream {
     val qO = outer.writeStream
       .outputMode("append").format("memory").queryName(qnO).start()
     try { qI.processAllAvailable(); qO.processAllAvailable() }
-    catch { case t: Throwable => stopQuietly(qI, qO); throw t }
+    catch { case t: Throwable => stopQuietly(t, qI, qO); throw t }
     val metI = stopCaptured(qI)
     val metO = stopCaptured(qO)
     Seq(("inner", spark.table(qnI), metI),
@@ -815,7 +816,7 @@ object EventsStream {
           s"(watermark-horizon dedup == global DISTINCT only then); " +
           s"this run had $dataBatches")
     } catch { case t: Throwable =>
-      stopQuietly(qE, qF); throw t
+      stopQuietly(t, qE, qF); throw t
     }
     val metE = stopCaptured(qE)
     val metF = stopCaptured(qF)
@@ -914,54 +915,25 @@ object EventsStream {
     * (doc ids, typed rendering, markup, framing fields) applied to a
     * LIVE stream: stateless append, so rows flow through the same
     * codegen'd expressions as the batch exporter and land in the sink
-    * as formatted `(id, doc)` pairs. Batch twin's oracle applies
-    * (ordering imposed on the completed table; a stream itself cannot
-    * sort). The file-sink edge of the same shape is
+    * as formatted `(id, doc)` pairs. One query, one data micro-batch,
+    * through [[StatelessPipe]]. Batch twin's oracle applies (ordering
+    * imposed on the completed table; a stream itself cannot sort).
+    * The file-sink edge of the same shape is
     * [[graft.operators.XmlPipe.writeStreamingDocsets]].
     */
   def xmlToCompletion(spark0: SparkSession, dir: String): DataFrame =
-    fromBundle(spark0, "stateless", dir, "xml")(
-      statelessBundle(spark0, dir))
+    StatelessPipe.toCompletion(spark0, dir, "events",
+      "graft_events_stream_xml", ev => graft.operators.XmlPipe.formatDocs(
+        ev.select("event_id", "props", "ts"), Seq("event_id")))
 
-  /** The stateless quality-filter twin, bundled with the XML pipe —
-    * see [[statelessBundle]]. Same rows as
-    * `StatelessPipe.toCompletion(_, _, "documents", qualityFilter)`.
+  /** The stateless quality-filter twin: `TextStats.qualityFilter`
+    * over the documents stream, one query through [[StatelessPipe]].
+    * Same rows as the batch filter over `Tables.load(…, "documents")`.
     */
   def qualityFilteredToCompletion(spark0: SparkSession,
       dir: String): DataFrame =
-    fromBundle(spark0, "stateless", dir, "quality")(
-      statelessBundle(spark0, dir))
-
-  /** One shared run for the two STATELESS streaming twins (r19
-    * optimization): the XML formatting pipe (events) and the quality
-    * filter (documents) are each a single data micro-batch through an
-    * append memory sink with no state store — previously two solo
-    * runs paying two micro-batch floors back to back; here their
-    * walls overlap. The queries stay independent (different sources,
-    * different sinks), so results are byte-identical to the solos.
-    */
-  private def statelessBundle(spark0: SparkSession, dir: String)
-      : Seq[(String, DataFrame, Option[(String, Long, Long)])] = {
-    val spark = streamSession(spark0)
-    val ev = source(spark, dir)
-      .select(col("event_id"), col("props"), col("ts"))
-    val docs = graft.operators.XmlPipe.formatDocs(ev, Seq("event_id"))
-    val qnX = "graft_events_stream_xml"
-    val qX = docs.writeStream
-      .outputMode("append").format("memory").queryName(qnX).start()
-    val dschema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val dsrc = spark.readStream.schema(dschema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val qnQ = "graft_stateless_quality_bundle"
-    val qQ = graft.operators.TextStats.qualityFilter(dsrc).writeStream
-      .outputMode("append").format("memory").queryName(qnQ).start()
-    try { qX.processAllAvailable(); qQ.processAllAvailable() }
-    catch { case t: Throwable => stopQuietly(qX, qQ); throw t }
-    val metX = stopCaptured(qX)
-    val metQ = stopCaptured(qQ)
-    Seq(("xml", spark.table(qnX), metX),
-      ("quality", spark.table(qnQ), metQ))
-  }
+    StatelessPipe.toCompletion(spark0, dir, "documents",
+      "graft_stateless_quality", graft.operators.TextStats.qualityFilter(_))
 
   /** foreachBatch sink — the programmable-sink API: each micro-batch
     * lands as an atomic parquet append via the BATCH writer (the
@@ -1595,7 +1567,7 @@ object EventsStream {
       // flush batch concurrently with all the others
       phased("ingest:drain")(qs.foreach(_.processAllAvailable()))
     } catch { case t: Throwable =>
-      qs.foreach(q => try q.stop() catch { case _: Throwable => () })
+      stopQuietly(t, qs: _*)
       ev.unpersist()
       deleteRec(replayA); deleteRec(replayB)
       throw t
@@ -1891,7 +1863,7 @@ object EventsStream {
       sf.setLastModified(c2f.lastModified() + 60000L)
       qs.foreach(_.processAllAvailable())
     } catch { case t: Throwable =>
-      qs.foreach(q => try q.stop() catch { case _: Throwable => () })
+      stopQuietly(t, qs: _*)
       ev.unpersist()
       deleteRec(replayDir)
       throw t

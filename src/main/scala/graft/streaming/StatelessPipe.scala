@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Run a stateless batch transform as a Structured Streaming query —
   * the zero-cost half of the batch/stream duality: any narrow
@@ -16,30 +17,18 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   */
 object StatelessPipe {
 
-  /** Memory-sink names are unique per invocation: the pipes run on the
-    * shared stream-session clone (see EventsStream.streamSession), so
-    * two different stateless twins over the same table would otherwise
-    * replace each other's sink view — and the returned DataFrame is a
-    * lazy reference to that view.
-    */
-  private val qSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Stream `<table>.parquet` under `dir` through `transform`
-    * (which must be stateless: no aggregation, no dedup, no
-    * watermark) and return the fully-materialized append output.
+  /** Stream `<table>.parquet` under `dir` (read through
+    * [[EventsStream.source]], so timestamps are normalized as in
+    * `Tables.load`) through `transform` (which must be stateless: no
+    * aggregation, no dedup, no watermark) and return the
+    * fully-materialized append output. `name` is the memory sink's
+    * query name and temp view on the shared stream session: a re-run
+    * under the same name replaces the view instead of adding one, and
+    * a frame returned earlier keeps reading its own sink.
     */
   def toCompletion(spark0: SparkSession, dir: String, table: String,
-      transform: DataFrame => DataFrame): DataFrame = {
-    val spark = EventsStream.streamSession(spark0)
-    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", s"$table.parquet").parquet(dir)
-    val qname = s"graft_stateless_${table}_${qSeq.incrementAndGet()}"
-    val q = transform(src).writeStream
-      .outputMode("append").format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(qname)
-  }
+      name: String, transform: DataFrame => DataFrame): DataFrame =
+    run(spark0, dir, table, name, transform)._1
 
   /** As [[toCompletion]], additionally collecting aggregate metrics
     * through `Dataset.observe` — observability piggybacked on the
@@ -53,21 +42,30 @@ object StatelessPipe {
     * progress event's observedMetrics instead).
     */
   def toCompletionObserved(spark0: SparkSession, dir: String,
-      table: String, transform: DataFrame => DataFrame,
+      table: String, name: String, transform: DataFrame => DataFrame,
       metrics: Seq[Column]): (DataFrame, Option[Row]) = {
     require(metrics.nonEmpty, "observe needs at least one metric column")
-    val spark = EventsStream.streamSession(spark0)
-    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", s"$table.parquet").parquet(dir)
-    val qname = s"graft_stateless_obs_${table}_${qSeq.incrementAndGet()}"
-    val q = transform(src).observe("hygiene", metrics.head, metrics.tail: _*)
-      .writeStream
-      .outputMode("append").format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
+    val (out, q) = run(spark0, dir, table, name,
+      src => transform(src).observe("hygiene", metrics.head, metrics.tail: _*))
     val row = q.recentProgress.reverseIterator
       .flatMap(p => Option(p.observedMetrics.get("hygiene")))
       .take(1).toSeq.headOption
-    (spark.table(qname), row)
+    (out, row)
+  }
+
+  /** Start the one append query, drain it and stop it. A failed drain
+    * rethrows the query's own failure, with any stop failure attached
+    * as suppressed.
+    */
+  private def run(spark0: SparkSession, dir: String, table: String,
+      name: String, transform: DataFrame => DataFrame)
+      : (DataFrame, StreamingQuery) = {
+    val spark = EventsStream.streamSession(spark0)
+    val q = transform(EventsStream.source(spark, dir, table)).writeStream
+      .outputMode("append").format("memory").queryName(name).start()
+    try q.processAllAvailable()
+    catch { case t: Throwable => EventsStream.stopQuietly(t, q); throw t }
+    q.stop()
+    (spark.table(name), q)
   }
 }

@@ -748,7 +748,8 @@ class EventsSpec extends AnyFunSuite {
     val batch = rows(graft.operators.TextStats.qualityFilter(
       Tables.load(spark, dir, "documents")))
     val stream = rows(graft.streaming.StatelessPipe.toCompletion(
-      spark, dir, "documents", graft.operators.TextStats.qualityFilter(_)))
+      spark, dir, "documents", "graft_test_stateless_quality",
+      graft.operators.TextStats.qualityFilter(_)))
     assert(stream == batch)
     assert(batch.nonEmpty)
   }
@@ -758,6 +759,7 @@ class EventsSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val (out, metrics) = graft.streaming.StatelessPipe
       .toCompletionObserved(spark, dir, "documents",
+        "graft_test_stateless_observed",
         graft.operators.TextStats.qualityFilter(_),
         Seq(count(lit(1)).as("n_rows"),
           sum(col("keep").cast("long")).as("n_kept")))
@@ -769,6 +771,60 @@ class EventsSpec extends AnyFunSuite {
     val m = metrics.getOrElse(fail("no observed metrics surfaced"))
     assert(m.getAs[Long]("n_rows") == wantRows)
     assert(m.getAs[Long]("n_kept") == wantKept)
+  }
+
+  test("streaming xml twin runs alone: one query, the batch " +
+      "formatter's (id, doc) rows, no bundle run for either stateless twin") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import graft.streaming.EventsStream
+    val dir = "/root/testdata/sf0.001"
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(col("id"), col("doc")).collect().map(_.toString).toSeq.sorted
+    val batch = rows(graft.operators.XmlPipe.formatDocs(
+      Tables.load(spark, dir, "events").select("event_id", "props", "ts"),
+      Seq("event_id")))
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.incrementAndGet(): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val ss = EventsStream.streamSession(spark)
+    val c0 = EventsStream.bundleRunCount.get()
+    ss.streams.addListener(listener)
+    val stream =
+      try rows(EventsStream.xmlToCompletion(spark, dir))
+      finally ss.streams.removeListener(listener)
+    assert(batch.nonEmpty && stream == batch)
+    assert(started.get() == 1, "the xml twin must start exactly one query")
+
+    val quality = EventsStream.qualityFilteredToCompletion(spark, dir)
+    val want = graft.operators.TextStats.qualityFilter(
+      Tables.load(spark, dir, "documents"))
+    assert(quality.exceptAll(want).isEmpty && want.exceptAll(quality).isEmpty)
+    assert(EventsStream.bundleRunCount.get() == c0,
+      "solo path must not touch the bundle machinery")
+  }
+
+  test("re-running xml_events_stream replaces its memory-sink view; " +
+      "the first frame keeps its rows") {
+    val dir = "/root/testdata/sf0.001"
+    val ss = graft.streaming.EventsStream.streamSession(spark)
+    def tempViews: Set[String] =
+      ss.catalog.listTables().collect().filter(_.isTemporary)
+        .map(_.name).toSet
+    val run = SparkEntry.queries("xml_events_stream")
+    val first = run(spark, dir)
+    val firstRows = first.collect().map(_.toString).toSeq
+    val views = tempViews
+    assert(views.contains("graft_events_stream_xml"))
+    val second = run(spark, dir)
+    assert(tempViews == views, "a re-run must not add a sink view")
+    assert(first.collect().map(_.toString).toSeq == firstRows)
+    assert(second.collect().map(_.toString).toSeq == firstRows)
+    assert(firstRows.nonEmpty)
   }
 
   test("retention: cohorts anchor at first-seen week, offsets count " +
