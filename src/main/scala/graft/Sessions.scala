@@ -18,6 +18,11 @@ import org.apache.spark.sql.SparkSession
   *    under concurrent loads.
   *  - UTC session time zone: oracle (DuckDB) parity for all timestamp
   *    rendering and arithmetic.
+  *  - ANSI mode, pinned: integer and DECIMAL overflow raise
+  *    `ARITHMETIC_OVERFLOW` instead of wrapping or turning NULL, so a
+  *    value outside an operator's documented envelope fails loudly
+  *    (OverflowSpec). Spark 4 defaults it on; the pin keeps a
+  *    deployment's spark-defaults from switching it off underneath.
   */
 object Sessions {
   def builder(appName: String, master: String,
@@ -34,4 +39,5 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.ansi.enabled", "true")
 }

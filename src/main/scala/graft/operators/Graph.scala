@@ -682,7 +682,7 @@ object Graph {
     // out of a codegen'd generate. A/B/C probe (r19, one JVM,
     // interleaved reps, sf0.1 + 10x disjoint-shard fixtures):
     // nested 4.47 s / 18.6 s, chained 3.15 s / 13.6 s — identical
-    // 50-row output asserted before timing (tools/LinkPredProbe).
+    // 50-row output asserted before timing (OPTIMIZATION_r19.md §1).
     val wedges = grouped
       .select(posexplode(col("ns")).as(Seq("i", "a")), col("ns"))
       .select(col("a"), explode(

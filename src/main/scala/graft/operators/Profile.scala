@@ -388,6 +388,12 @@ object Profile {
     *
     * Output: one row per unordered column pair (col_a, col_b, n,
     * slope, r2), pairs in the given column order.
+    *
+    * Envelope: per-row products of centi-unit values are int64, so
+    * every value must satisfy |round(v * 100)| < ~3.04e9 centi-units
+    * (sqrt(2^63)), i.e. |v| < ~3.04e7. Outside it the query fails with
+    * ARITHMETIC_OVERFLOW under the session's ANSI mode (OverflowSpec)
+    * instead of returning a wrong number.
     */
   def corrMatrix(df: DataFrame, cols: Seq[(String, String)]): DataFrame = {
     require(cols.size >= 2, "need at least two columns")

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, TimeMode}
+import org.apache.spark.sql.types._
 
 import scala.util.control.NonFatal
 
@@ -21,10 +23,11 @@ object EventsStream {
     * coalescing, and the shuffle-partition setting is frozen into the
     * state store at first run — at SPARK_GRAFT_CPUS=32 that is 32
     * near-empty state stores per stateful operator, whose per-batch
-    * open/commit overhead dominates small streams (4 stores per
-    * operator keeps per-batch open/commit cost proportional to the
-    * fixture's state volume). Production sizing picks this from state
-    * volume, not core count; results are partitioning-independent.
+    * open/commit overhead dominates small streams (the default of one
+    * store per operator, [[buildStreamSession]], keeps that cost
+    * proportional to the fixture's state volume). Production sizing
+    * picks this from state volume, not core count; results are
+    * partitioning-independent.
     */
   private[graft] def streamSession(spark: SparkSession): SparkSession =
     sessionMemo.synchronized {
@@ -48,24 +51,19 @@ object EventsStream {
 
   private def buildStreamSession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
-    // 1 state partition (was 4 -> 2 -> 1 across the r19 sweeps;
-    // env-tunable): with the r19 merged ingest running 13 concurrent
-    // queries x ~5 micro-batches, the per-commit state-store overhead
-    // (RocksDB changelog sync + version files per store instance)
-    // dominates — 4 -> 2 cut the bundle payer 10.9 -> 8.1 s, and the
-    // optimization round's 2 -> 1 measurement cut the warm drain wave
-    // 9.5 -> 6.6-7.5 s (payer 11.8 -> 9.8 s on the same host):
-    // cross-QUERY concurrency (13 streams) already saturates the
-    // cores, so per-query state parallelism only multiplies store
-    // commits. Fixture state is tiny either way; a deployment sizes
-    // this to its key cardinality with the same knob. Solo harnesses
-    // (ScaleProbe's streaming probes) pin 4 IN CODE via the
-    // graft.stream.partitions system property — the env var is the
-    // out-of-band override, the property the in-process one.
+    // 1 state partition by default: every partition of a stateful
+    // operator is its own state-store instance, paying a RocksDB
+    // changelog sync plus version files on every micro-batch commit,
+    // and the fixture's state (at most a few thousand keys) fits one
+    // store easily, so more partitions multiply commit cost without
+    // adding useful parallelism. The value was measured (4 -> 2 -> 1)
+    // when the streaming entries still shared runs, so whether 1 is
+    // still the best setting for one query per entry is not measured.
+    // A deployment sizes this to its key cardinality through the
+    // SPARK_GRAFT_STREAM_PARTITIONS env var; the scale probe sets 4 for
+    // its 100x fixtures through [[setStreamShufflePartitions]].
     ss.conf.set("spark.sql.shuffle.partitions",
-      sys.props.get("graft.stream.partitions")
-        .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS"))
-        .getOrElse("1"))
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "1"))
     // State-store backend: the default HDFS-backed provider keeps every
     // state row on the executor HEAP — at 100 TB stream scale (billions
     // of open sessions / join rows) that is an OOM, not a tuning knob.
@@ -201,28 +199,6 @@ object EventsStream {
         (a, b) => (math.max(a._1, b._1), math.max(a._2, b._2))): Unit
     }
 
-  /** Uniform teardown for every solo completion harness: record the
-    * query's state totals into the CURRENT drain window, then stop.
-    */
-  private def stopRecorded(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    recordState(captureState(q))
-    q.stop()
-  }
-
-  /** Teardown for bundled runs: capture-and-return instead of
-    * recording, so a sibling's state sample lands in the DRAIN WINDOW
-    * OF THE ENTRY THAT CONSUMES IT (Bench attributes state rows/bytes
-    * per registered entry by draining after each one).
-    */
-  private def stopCaptured(
-      q: org.apache.spark.sql.streaming.StreamingQuery)
-      : Option[(String, Long, Long)] = {
-    val m = captureState(q)
-    q.stop()
-    m
-  }
-
   /** Error-path teardown after `cause` failed a run: each stop() in
     * its own guard, so a failing first stop cannot leak a sibling
     * query on the shared stream session. A stop failure is attached to
@@ -242,151 +218,6 @@ object EventsStream {
       }
     }
 
-  // --------------------------------------------------------------
-  // Run-sharing bundles (r17 judge ask #3)
-  //
-  // Several registered entries drive the SAME event stream: a bounds
-  // gate and the sink it scores (heavy_hitters / _bounds), sibling
-  // operator variants replaying identical chunks (the sessionize
-  // trio), the three cells of the stream-stream join matrix, the
-  // stream-static enrich pair. Re-running the stream once per entry
-  // (x bench repeats) re-measures the same micro-batch floor 2-3x
-  // per group — at 100 TB nobody re-ingests the stream per analytic:
-  // ONE ingest is multiplexed into every query that consumes it, and
-  // gates score the sinks the stream already wrote.
-  //
-  // fromBundle models exactly that with a STICKY PAYER: the first
-  // member invoked on a (group, dir) becomes the group's payer and
-  // re-runs ONE bundled replay — every member's streaming query
-  // CONCURRENTLY over shared chunks — on each of its own invocations
-  // (so the payer's repeated measurement stays honest); every other
-  // member reads its precomputed result (and its state-metric
-  // sample, recorded in the consuming entry's drain window) as a
-  // sink read. The payer must be sticky: an earlier credit design
-  // let consumer repeats and requeue passes absorb bundle runs into
-  // their medians and serve the payer a leftover sink read — the
-  // group's cost then appeared in NOBODY's published number. With a
-  // fixed payer, per-entry numbers are stable by construction:
-  // payer = bundle cost, consumers = sink-read cost, group total =
-  // bundle + ε. Results are deterministic functions of (dir, params),
-  // so a consumer re-reading the latest run is value-identical to
-  // re-running it.
-  //
-  // Results are either lazy frames over the run's memory sinks
-  // (driver-held, immutable, never swept by the harness block sweep)
-  // or — where a plan would reference checkpoint blocks the harness
-  // sweeps between entries — small collected LocalRelations.
-  // --------------------------------------------------------------
-
-  private final class BundleState(
-      val payer: String,
-      val slices: java.util.HashMap[
-        String, (DataFrame, Option[(String, Long, Long)])])
-
-  /** Bundle results, keyed on the STREAM SESSION OBJECT (weak — a
-    * dropped parent session releases its sink frames, same policy as
-    * sessionMemo) with a per-session (group|dir) map inside. The r18
-    * shape keyed a flat map on identityHashCode(session), which (a)
-    * admitted a theoretical cross-session hash collision serving one
-    * session's memory-sink frames to another, and (b) pinned every
-    * probed dir's sink data for the JVM's lifetime. Weak session keys
-    * fix both retention paths; [[dropBundles]] handles the
-    * within-session case (a scale probe touching base + scaled dirs).
-    */
-  private val bundles =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.HashMap[String, BundleState]]()
-
-  /** Drop every bundle result held for `spark0`'s stream session —
-    * invoked between probe dirs (ScaleProbe) so sink frames over
-    * long-deleted replay dirs are not retained. Bench never calls
-    * this mid-suite: consumers there must keep sink-reading the
-    * payer's latest run.
-    */
-  private[graft] def dropBundles(spark0: SparkSession): Unit =
-    bundles.synchronized {
-      bundles.remove(streamSession(spark0)): Unit
-      // per-dir fixture facts go too: the probe is the only caller,
-      // and it is exactly the workload that visits many dirs
-      ingestPrepMemo.clear()
-    }
-
-  /** Bundle executions in this JVM — white-box observability for the
-    * sticky-payer contract (EventsStreamBundleSpec): a payer call
-    * increments it, a consumer sink read must not.
-    */
-  private[graft] val bundleRunCount =
-    new java.util.concurrent.atomic.AtomicLong()
-
-  /** Opt-in phase timing for the bundle harnesses
-    * (SPARK_GRAFT_BUNDLE_TIMING=1): per-phase stderr lines for
-    * attributing payer wall between fixture prep, chunk landing,
-    * micro-batch barriers and sink materialization — the measurement
-    * that drove the r19 payer squeeze.
-    */
-  private val bundleTiming: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_BUNDLE_TIMING", "0") == "1"
-
-  private def phased[T](label: String)(f: => T): T =
-    if (!bundleTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"BUNDLE-PHASE $label%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
-  /** Deterministic per-fixture prep for the shared events ingest,
-    * memoized across bundle re-runs on the same key the chunk cache
-    * uses (the fixture dir + harness parameter): timestamp extrema,
-    * the split instant, and the warm-start base (closed sessions +
-    * init state — one row per pre-cutover session, bounded by the
-    * fixture's user count). These are FIXTURE FACTS, not
-    * measurements: the payer's repeated invocations exist to
-    * re-measure the STREAMS, and re-deriving the same four batch
-    * aggregates per repeat was ~40% of the payer's wall. `empty`
-    * marks a fixture with no events (the memo must remember that
-    * outcome too, not re-scan to rediscover it).
-    */
-  private final case class IngestPrep(empty: Boolean, lo: Long, hi: Long,
-      loUid: Long, midUs: Long,
-      warmFinals: Seq[(Long, Long, Long, Long)],
-      warmInit: Seq[(Long, Long, Long, Long)])
-
-  private val ingestPrepMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IngestPrep]()
-
-  private def fromBundle(spark0: SparkSession, group: String,
-      dir: String, member: String)(
-      run: => Seq[(String, DataFrame, Option[(String, Long, Long)])])
-      : DataFrame = bundles.synchronized {
-    // keyed per stream session OBJECT: results live in that session's
-    // memory sinks and must not leak across parent sessions
-    var perSession = bundles.get(streamSession(spark0))
-    if (perSession == null) {
-      perSession = new java.util.HashMap[String, BundleState]()
-      bundles.put(streamSession(spark0), perSession): Unit
-    }
-    val key = s"$group|$dir"
-    var st = perSession.get(key)
-    if (st == null || st.payer == member) {
-      bundleRunCount.incrementAndGet(): Unit
-      val res = run
-      if (st == null) {
-        st = new BundleState(member,
-          new java.util.HashMap[
-            String, (DataFrame, Option[(String, Long, Long)])]())
-        perSession.put(key, st)
-      }
-      res.foreach { case (m, df, met) => st.slices.put(m, (df, met)) }
-    }
-    val slice = st.slices.get(member)
-    require(slice != null, s"bundle $group returned no slice for $member")
-    recordState(slice._2)
-    slice._1
-  }
-
   /** Shared replay-harness plumbing: atomically land a chunk as ONE
     * parquet file in the replay dir (staged write + rename, so the
     * file stream never sees a partial file), and recursive cleanup.
@@ -403,7 +234,10 @@ object EventsStream {
     * `shards` literal — EventsSpec runs shards = 4 then 1 on the same
     * dir) keys a distinct entry; literal LocalRelation rows (the
     * sentinel frames, whose data is NOT in the canonical plan text)
-    * are appended explicitly. Keying costs one analysis, never a job.
+    * are appended explicitly, and so is the schema: canonicalization
+    * erases column names, so two harnesses' sentinels with equal values
+    * under different names (`user_id` vs `shard`) would otherwise share
+    * a file. Keying costs one analysis, never a job.
     * The copy takes a fresh mtime, which preserves the file-stream
     * discovery order the harnesses encode via write sequencing and
     * explicit setLastModified calls.
@@ -421,8 +255,8 @@ object EventsStream {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         l.data.mkString(",")
     }.mkString(";")
-    val key =
-      s"$sfDir|$prefix|$name|${analyzed.canonicalized.toString}|$localData"
+    val key = s"$sfDir|$prefix|$name|${analyzed.canonicalized.toString}" +
+      s"|$localData|${df.schema.toDDL}"
     val target = new java.io.File(replayDir, s"$name.parquet")
     val hit = chunkCache.get(key)
     if (hit != null && java.nio.file.Files.isRegularFile(hit)) {
@@ -461,38 +295,116 @@ object EventsStream {
       .option("pathGlobFilter", s"$table.parquet").parquet(dir))
   }
 
+  /** Drain `q`, record its state peak into the current drain window
+    * and stop it. A failed drain stops the query and rethrows the
+    * query's own failure, any stop failure attached as suppressed.
+    */
+  private[streaming] def drain(q: StreamingQuery): Unit = {
+    try q.processAllAvailable()
+    catch {
+      case e @ (NonFatal(_) | _: InterruptedException) =>
+        stopQuietly(e, q)
+        throw e
+    }
+    recordState(captureState(q))
+    q.stop()
+  }
+
+  /** Run `df` as one query into the memory sink `qname` and return the
+    * sink table. Sink names are fixed per entry, so a re-run replaces
+    * the temp view on the stream session instead of adding one.
+    */
+  private def toMemory(df: DataFrame, mode: String,
+      qname: String): DataFrame = {
+    drain(df.writeStream.outputMode(mode).format("memory")
+      .queryName(qname).start())
+    df.sparkSession.table(qname)
+  }
+
+  /** The sentinel-replay harness behind every watermark-flushed twin.
+    * A finite fixture never pushes the watermark past its own tail,
+    * so watermark-gated output (closed windows and sessions, outer-join
+    * null rows, timer flushes) would never emit. The harness lands
+    * `chunks` in order — slices of the fixture, then a far-future
+    * sentinel row on an out-of-band key — as one parquet file each in a
+    * fresh replay dir, with strictly increasing mtimes. It then streams
+    * the dir through `query` with `maxFilesPerTrigger = 1`: the file
+    * source takes unseen files oldest first, so each chunk is one
+    * micro-batch in landing order, and the no-data batch after the
+    * sentinel flushes everything its watermark passed. One query,
+    * drained, recorded and stopped; the replay dir is deleted after.
+    * Returns the sink table; the caller filters the sentinel out.
+    */
+  private def sentinelReplay(spark: SparkSession, dir: String,
+      schema: StructType, chunks: Seq[(String, DataFrame)], mode: String,
+      qname: String)(query: DataFrame => DataFrame): DataFrame = {
+    val replayDir = graft.Scratch.dir("graft-replay").toFile
+    try {
+      chunks.foldLeft(0L) { case (prev, (name, df)) =>
+        val f = writeChunk(replayDir, dir, df, name)
+        if (prev > 0L) f.setLastModified(prev + 60000L): Unit
+        f.lastModified()
+      }
+      toMemory(query(spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(replayDir.toString)), mode, qname)
+    } finally deleteRec(replayDir)
+  }
+
+  private val HourUs = 3600L * 1000000L
+  private val GapMinutes = 30
+  private val GapUs = GapMinutes * 60L * 1000000L
+
+  private def instant(us: Long): java.sql.Timestamp =
+    new java.sql.Timestamp(us / 1000L)
+
+  /** (min ts µs, max ts µs, min user_id) of an events frame, or None
+    * when the fixture has no events: the replay harnesses then return
+    * an empty result of their output schema (the batch operators are
+    * total on empty input, EdgeCasesSpec; the streaming twins must be
+    * too). The min user id anchors the out-of-band sentinel keys.
+    */
+  private def extent(ev: DataFrame): Option[(Long, Long, Long)] = {
+    val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
+      min(col("user_id"))).head()
+    if (r.isNullAt(0)) None
+    else Some((r.getLong(0), r.getLong(1), r.getLong(2)))
+  }
+
+  private def emptyFrame(spark: SparkSession,
+      fields: (String, DataType)*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
+
+  private def emptySessions(spark: SparkSession, ev: DataFrame): DataFrame =
+    emptyFrame(spark, "user_id" -> ev.schema("user_id").dataType,
+      "session_start" -> TimestampType, "session_end" -> TimestampType,
+      "n_events" -> LongType)
+
+  /** Per-window (n, sum_value) over the watermarked event stream, keyed
+    * by the window start plus `keys`: the tumbling, append and sliding
+    * twins differ only in the window and the keys.
+    */
+  private def windowAgg(src: DataFrame, w: Column, keys: Column*)
+      : DataFrame =
+    src.withWatermark("ts", "1 hour")
+      .groupBy(w.as("w") +: keys: _*)
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,4)"))
+          .cast("double").as("sum_value"))
+      .select(Seq(col("w.start").as("window_start")) ++ keys ++
+        Seq(col("n"), col("sum_value")): _*)
+
   /** Run the tumbling aggregation as a streaming query to completion
     * (memory sink, complete mode) and return the final result — used
     * by the correctness gate so streaming goes through the same DuckDB
     * oracle as the batch twin.
     */
-  def tumblingToCompletion(spark0: SparkSession, dir: String,
-      width: String = "1 hour"): DataFrame =
-    if (width == "1 hour")
-      fromBundle(spark0, "ingest-g30", dir, "tumbling")(
-        ingestBundle(spark0, dir, 30))
-    else tumblingSolo(spark0, dir, width)
-
-  private def tumblingSolo(spark0: SparkSession, dir: String,
-      width: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val agg = source(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), width).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)"))
-          .cast("double").as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-    val qname = "graft_events_stream"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .start()
-    try q.processAllAvailable() finally stopRecorded(q)
-    spark.table(qname)
-  }
+  def tumblingToCompletion(spark0: SparkSession, dir: String): DataFrame =
+    toMemory(windowAgg(source(streamSession(spark0), dir),
+      window(col("ts"), "1 hour"), col("event_type")),
+      "complete", "graft_events_stream")
 
   /** Offline state introspection — Spark's State Data Source
     * (`spark.read.format("statestore")`, SPARK-45511): run the
@@ -507,29 +419,23 @@ object EventsStream {
     * Key/value struct field names come from the checkpoint schema, not
     * hard-coded (Spark names computed grouping keys internally).
     */
-  def stateInspect(spark0: SparkSession, dir: String,
-      width: String = "1 hour"): DataFrame = {
+  def stateInspect(spark0: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(spark0)
     val ckptDir = graft.Scratch.dir("graft-state-ckpt").toFile
-    val agg = source(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), width).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val qname = "graft_events_state_inspect"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", ckptDir.toString)
-      .start()
     try {
-      try q.processAllAvailable() finally stopRecorded(q)
+      drain(source(spark, dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("graft_events_state_inspect")
+        .option("checkpointLocation", ckptDir.toString).start())
       val st = spark.read.format("statestore")
         .option("path", ckptDir.toString).load()
       val keyFields = st.schema("key").dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+        .asInstanceOf[StructType].fieldNames
       val valFields = st.schema("value").dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+        .asInstanceOf[StructType].fieldNames
       st.select(
           col(s"key.${keyFields(0)}.start").as("window_start"),
           col(s"key.${keyFields(1)}").as("event_type"),
@@ -547,66 +453,33 @@ object EventsStream {
     * sinks that overwrite). The semantic consequence: emission is
     * watermark-driven, so a finite fixture needs the watermark pushed
     * past the last real window's end or the tail windows never flush —
-    * same replay-harness shape as the outer join and sessionize
-    * (far-future sentinel row, filtered from the result by its
-    * event_type, whose own window never closes and is never emitted).
-    * Result equals the batch tumbling aggregation, same oracle.
+    * the [[sentinelReplay]] harness (far-future sentinel row, filtered
+    * from the result by its event_type, whose own window never closes
+    * and is never emitted). Result equals the batch tumbling
+    * aggregation, same oracle.
     */
-  def tumblingAppendToCompletion(spark0: SparkSession, dir: String,
-      width: String = "1 hour"): DataFrame =
-    if (width == "1 hour")
-      fromBundle(spark0, "ingest-g30", dir, "tumblingAppend")(
-        ingestBundle(spark0, dir, 30))
-    else tumblingAppendSolo(spark0, dir, width)
-
-  private def tumblingAppendSolo(spark0: SparkSession, dir: String,
-      width: String): DataFrame = {
+  def tumblingAppendToCompletion(spark0: SparkSession,
+      dir: String): DataFrame = {
     val spark = streamSession(spark0)
     import spark.implicits._
     val ev = graft.Tables.load(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
-    val stats = ev.agg(max(unix_micros(col("ts")))).head()
-    if (stats.isNullAt(0)) {
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("window_start", TimestampType),
-          StructField("event_type", StringType),
-          StructField("n", LongType, nullable = false),
-          StructField("sum_value", DoubleType))))
+    extent(ev) match {
+      case None => emptyFrame(spark, "window_start" -> TimestampType,
+        "event_type" -> StringType, "n" -> LongType,
+        "sum_value" -> DoubleType)
+      case Some((_, hiUs, _)) =>
+        val sentinelType = "zzz_watermark_sentinel"
+        val sentinel = Seq((-1L, instant(hiUs + 3L * HourUs), -1L,
+            sentinelType, 0.0))
+          .toDF("user_id", "ts", "event_id", "event_type", "value")
+        sentinelReplay(spark, dir, ev.schema,
+            Seq("chunk1" -> ev, "sentinel" -> sentinel), "append",
+            "graft_events_stream_append")(
+            windowAgg(_, window(col("ts"), "1 hour"), col("event_type")))
+          .filter(col("event_type") =!= sentinelType)
     }
-    val sentinelType = "zzz_watermark_sentinel"
-    val sentinelTs = new java.sql.Timestamp(
-      (stats.getLong(0) + 3L * 3600L * 1000000L) / 1000L)
-    val replayDir = graft.Scratch.dir("graft-append-replay").toFile
-    val agg = spark.readStream.schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir.toString)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), width).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)"))
-          .cast("double").as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-    val qname = "graft_events_stream_append"
-    val q = agg.writeStream
-      .outputMode("append").format("memory").queryName(qname).start()
-    try {
-      writeChunk(replayDir, dir, ev, "chunk1")
-      q.processAllAvailable() // only windows already behind the watermark
-      writeChunk(replayDir, dir, Seq((-1L, sentinelTs, -1L, sentinelType, 0.0))
-        .toDF("user_id", "ts", "event_id", "event_type", "value"),
-        "sentinel")
-      q.processAllAvailable() // watermark clears every real window: flush
-    } finally {
-      stopRecorded(q)
-      deleteRec(replayDir)
-    }
-    spark.table(qname).filter(col("event_type") =!= sentinelType)
   }
 
   /** Sliding-window streaming aggregation — the streaming twin of
@@ -616,30 +489,10 @@ object EventsStream {
     * memory sink so the final table equals the batch result and goes
     * through the same DuckDB oracle.
     */
-  def slidingToCompletion(spark0: SparkSession, dir: String,
-      width: String = "1 hour", slide: String = "15 minutes"): DataFrame =
-    if (width == "1 hour" && slide == "15 minutes")
-      fromBundle(spark0, "ingest-g30", dir, "sliding")(
-        ingestBundle(spark0, dir, 30))
-    else slidingSolo(spark0, dir, width, slide)
-
-  private def slidingSolo(spark0: SparkSession, dir: String,
-      width: String, slide: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val agg = source(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), width, slide).as("w"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)"))
-          .cast("double").as("sum_value"))
-      .select(col("w.start").as("window_start"), col("n"),
-        col("sum_value"))
-    val qname = "graft_events_stream_sliding"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally stopRecorded(q)
-    spark.table(qname)
-  }
+  def slidingToCompletion(spark0: SparkSession, dir: String): DataFrame =
+    toMemory(windowAgg(source(streamSession(spark0), dir),
+      window(col("ts"), "1 hour", "15 minutes")),
+      "complete", "graft_events_stream_sliding")
 
   /** Streaming NATIVE session windows — `session_window` inside a
     * watermarked streaming aggregation: Spark merges overlapping
@@ -651,58 +504,29 @@ object EventsStream {
     * user's own session never closes and is filtered out).
     * Oracle: the batch `session_window` twin (>= gap boundary).
     */
-  def sessionWindowToCompletion(spark0: SparkSession, dir: String,
-      gap: String = "30 minutes"): DataFrame =
-    if (gap == "30 minutes")
-      fromBundle(spark0, "ingest-g30", dir, "swin")(
-        ingestBundle(spark0, dir, 30))
-    else sessionWindowSolo(spark0, dir, gap)
-
-  private def sessionWindowSolo(spark0: SparkSession, dir: String,
-      gap: String): DataFrame = {
+  def sessionWindowToCompletion(spark0: SparkSession,
+      dir: String): DataFrame = {
     val spark = streamSession(spark0)
     import spark.implicits._
     val ev = graft.Tables.load(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"))
-    val stats = ev.agg(min(col("user_id")),
-      max(unix_micros(col("ts")))).head()
-    if (stats.isNullAt(0)) {
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("user_id", ev.schema("user_id").dataType),
-          StructField("session_start", TimestampType),
-          StructField("session_end", TimestampType),
-          StructField("n_events", LongType, nullable = false))))
+    extent(ev) match {
+      case None => emptySessions(spark, ev)
+      case Some((_, hiUs, loUid)) =>
+        val sentinel = Seq((loUid - 1L, instant(hiUs + 3L * HourUs), -1L))
+          .toDF("user_id", "ts", "event_id")
+        sentinelReplay(spark, dir, ev.schema,
+            Seq("chunk1" -> ev, "sentinel" -> sentinel), "append",
+            "graft_events_stream_session_window")(
+            _.withWatermark("ts", "1 hour")
+              .groupBy(col("user_id"),
+                session_window(col("ts"), s"$GapMinutes minutes").as("w"))
+              .agg(count(lit(1)).as("n_events"),
+                max(col("ts")).as("session_end"))
+              .select(col("user_id"), col("w.start").as("session_start"),
+                col("session_end"), col("n_events")))
+          .filter(col("user_id") >= loUid)
     }
-    val sentinelUid = stats.getLong(0) - 1L
-    val sentinelTs = new java.sql.Timestamp(
-      (stats.getLong(1) + 3L * 3600L * 1000000L) / 1000L)
-    val replayDir = graft.Scratch.dir("graft-swin-replay").toFile
-    val sessions = spark.readStream.schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir.toString)
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
-      .agg(count(lit(1)).as("n_events"), max(col("ts")).as("session_end"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("session_end"), col("n_events"))
-    val qname = "graft_events_stream_session_window"
-    val q = sessions.writeStream
-      .outputMode("append").format("memory").queryName(qname).start()
-    try {
-      writeChunk(replayDir, dir, ev, "chunk1")
-      q.processAllAvailable()
-      writeChunk(replayDir, dir, Seq((sentinelUid, sentinelTs, -1L))
-        .toDF("user_id", "ts", "event_id"), "sentinel")
-      q.processAllAvailable() // watermark clears every real session
-    } finally {
-      stopRecorded(q)
-      deleteRec(replayDir)
-    }
-    spark.table(qname).filter(col("user_id") =!= sentinelUid)
   }
 
   /** Stream-static enrichment join — the continuous-ingest shape of
@@ -713,8 +537,19 @@ object EventsStream {
     * changing dimension picks up updates on the next batch without
     * restarting the query.
     */
-  def enrichToCompletion(spark0: SparkSession, dir: String): DataFrame =
-    fromBundle(spark0, "enrich", dir, "inner")(enrichBundle(spark0, dir))
+  def enrichToCompletion(spark0: SparkSession, dir: String): DataFrame = {
+    val spark = streamSession(spark0)
+    val cust = graft.Tables.load(spark, dir, "customer")
+      .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
+    val nat = graft.Tables.load(spark, dir, "nation")
+      .select(col("n_nationkey"), col("n_name"))
+    toMemory(source(spark, dir)
+      .join(cust, col("user_id") === col("c_custkey"))
+      .join(nat, col("c_nationkey") === col("n_nationkey"))
+      .select(col("event_id"), col("user_id"),
+        col("c_name").as("cust_name"), col("n_name").as("nation_name")),
+      "append", "graft_events_stream_enrich")
+  }
 
   /** Stream-static LEFT OUTER enrichment — the dimension-lookup shape
     * when the dimension is INCOMPLETE (late-arriving dims, partial
@@ -723,45 +558,17 @@ object EventsStream {
     * Still stateless (no watermark, no state store): the outer side
     * is the stream, the static side broadcasts per micro-batch.
     */
-  def enrichOuterToCompletion(spark0: SparkSession, dir: String): DataFrame =
-    fromBundle(spark0, "enrich", dir, "outer")(enrichBundle(spark0, dir))
-
-  /** One shared ingest for the enrich pair: both stateless dimension
-    * joins run concurrently over the same event stream (one batch
-    * each — no replay needed; the file source reads events.parquet
-    * directly).
-    */
-  private def enrichBundle(spark0: SparkSession, dir: String)
-      : Seq[(String, DataFrame, Option[(String, Long, Long)])] = {
+  def enrichOuterToCompletion(spark0: SparkSession,
+      dir: String): DataFrame = {
     val spark = streamSession(spark0)
-    val cust = graft.Tables.load(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-    val nat = graft.Tables.load(spark, dir, "nation")
-      .select(col("n_nationkey"), col("n_name"))
-    val inner = source(spark, dir)
-      .join(cust, col("user_id") === col("c_custkey"))
-      .join(nat, col("c_nationkey") === col("n_nationkey"))
-      .select(col("event_id"), col("user_id"),
-        col("c_name").as("cust_name"), col("n_name").as("nation_name"))
     val custGaps = graft.Tables.load(spark, dir, "customer")
       .filter(col("c_custkey") % 10 =!= 0) // staged dimension gaps
       .select(col("c_custkey"), col("c_name"))
-    val outer = source(spark, dir)
+    toMemory(source(spark, dir)
       .join(custGaps, col("user_id") === col("c_custkey"), "left")
       .select(col("event_id"), col("user_id"),
-        col("c_name").as("cust_name"))
-    val qnI = "graft_events_stream_enrich"
-    val qnO = "graft_events_stream_enrich_outer"
-    val qI = inner.writeStream
-      .outputMode("append").format("memory").queryName(qnI).start()
-    val qO = outer.writeStream
-      .outputMode("append").format("memory").queryName(qnO).start()
-    try { qI.processAllAvailable(); qO.processAllAvailable() }
-    catch { case t: Throwable => stopQuietly(t, qI, qO); throw t }
-    val metI = stopCaptured(qI)
-    val metO = stopCaptured(qO)
-    Seq(("inner", spark.table(qnI), metI),
-      ("outer", spark.table(qnO), metO))
+        col("c_name").as("cust_name")),
+      "append", "graft_events_stream_enrich_outer")
   }
 
   /** Streaming dedup within the watermark horizon (the streaming twin
@@ -774,55 +581,12 @@ object EventsStream {
     * deterministic regardless of which duplicate survives.
     */
   def dedupToCompletion(spark0: SparkSession, dir: String): DataFrame =
-    fromBundle(spark0, "wm-dedup", dir, "event")(dedupBundle(spark0, dir))
-
-  /** One shared run for the two watermark-dedup twins (r19
-    * optimization): both read events.parquet directly (single data
-    * micro-batch each — the semantics their oracles assume, asserted
-    * below exactly as the solo harnesses did) and were previously two
-    * back-to-back solo runs paying two micro-batch floors. The
-    * streams stay INDEPENDENT queries — only their walls overlap, so
-    * results are byte-identical to the solo runs.
-    */
-  private def dedupBundle(spark0: SparkSession, dir: String)
-      : Seq[(String, DataFrame, Option[(String, Long, Long)])] = {
-    val spark = streamSession(spark0)
-    val agg = source(spark, dir)
+    toMemory(source(streamSession(spark0), dir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_unique"))
-    val qnE = "graft_events_dedup"
-    val qE = agg.writeStream
-      .outputMode("complete").format("memory").queryName(qnE).start()
-    val norm = trim(regexp_replace(lower(coalesce(col("props"), lit(""))),
-      "\\s+", " "))
-    val deduped = source(spark, dir)
-      .withColumn("norm", norm)
-      .withColumn("fingerprint",
-        graft.functions.sdbm_hash(lit(0L), col("norm")))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("fingerprint")
-      .select(col("fingerprint"), col("norm"))
-    val qnF = "graft_events_fp_dedup"
-    val qF = deduped.writeStream
-      .outputMode("append").format("memory").queryName(qnF).start()
-    try {
-      qE.processAllAvailable()
-      qF.processAllAvailable()
-      val dataBatches = qF.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches == 1,
-        s"fingerprint-dedup oracle assumes ONE data micro-batch " +
-          s"(watermark-horizon dedup == global DISTINCT only then); " +
-          s"this run had $dataBatches")
-    } catch { case t: Throwable =>
-      stopQuietly(t, qE, qF); throw t
-    }
-    val metE = stopCaptured(qE)
-    val metF = stopCaptured(qF)
-    Seq(("event", spark.table(qnE), metE),
-      ("fp", spark.table(qnF), metF))
-  }
+      .agg(count(lit(1)).as("n_unique")),
+      "complete", "graft_events_dedup")
 
   /** Stream-stream interval join — click→purchase attribution: each
     * purchase joins every click by the same user in the preceding
@@ -836,8 +600,7 @@ object EventsStream {
     */
   def attributionToCompletion(spark0: SparkSession,
       dir: String): DataFrame =
-    fromBundle(spark0, "ingest-g30", dir, "inner")(
-      ingestBundle(spark0, dir, 30))
+    attribution(spark0, dir, "inner", "graft_events_stream_attribution")
 
   /** Stream-stream LEFT OUTER interval join — attribution including
     * the clicks that never converted: a matched (click, purchase) pair
@@ -856,43 +619,10 @@ object EventsStream {
     *
     * Oracle: the batch LEFT JOIN with the same interval predicate.
     */
-  private[graft] def attributionOuterStart(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, replayDir: String,
-      qname: String, joinType: String = "leftOuter")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir)
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"),
-        col("event_id").as("click_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val buys = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"),
-        col("event_id").as("purchase_id"), col("ts").as("purchase_ts"),
-        col("value"))
-      .withWatermark("purchase_ts", "1 hour")
-    val joined = clicks.join(buys,
-      col("c_user") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-      joinType)
-      // coalesce is an identity under leftOuter (c_user never null) and
-      // picks the surviving side under fullOuter's purchase-only rows
-      .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
-        col("click_id"), col("purchase_id"),
-        (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
-          .as("lag_us"),
-        col("value"))
-    joined.writeStream
-      .outputMode("append").format("memory").queryName(qname).start()
-  }
-
   def attributionOuterToCompletion(spark0: SparkSession,
       dir: String): DataFrame =
-    fromBundle(spark0, "ingest-g30", dir, "leftOuter")(
-      ingestBundle(spark0, dir, 30))
+    attribution(spark0, dir, "leftOuter",
+      "graft_events_stream_attribution_outer")
 
   /** Stream-stream FULL OUTER interval join — the last cell of the
     * streaming join matrix: matched pairs emit eagerly; an unmatched
@@ -907,9 +637,67 @@ object EventsStream {
     */
   def attributionFullOuterToCompletion(spark0: SparkSession,
       dir: String): DataFrame =
-    fromBundle(spark0, "ingest-g30", dir, "fullOuter")(
-      ingestBundle(spark0, dir, 30))
+    attribution(spark0, dir, "fullOuter",
+      "graft_events_stream_attribution_full")
 
+  /** The click→purchase interval join of an event stream, as `joinType`
+    * (inner / leftOuter / fullOuter), each side under its own 1-hour
+    * watermark.
+    */
+  private[graft] def attributionJoin(src: DataFrame,
+      joinType: String): DataFrame = {
+    val clicks = src.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"),
+        col("event_id").as("click_id"), col("ts").as("click_ts"))
+      .withWatermark("click_ts", "1 hour")
+    val buys = src.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"),
+        col("event_id").as("purchase_id"), col("ts").as("purchase_ts"),
+        col("value"))
+      .withWatermark("purchase_ts", "1 hour")
+    clicks.join(buys,
+      col("c_user") === col("p_user") &&
+        col("purchase_ts") >= col("click_ts") &&
+        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+      joinType)
+      // coalesce is an identity under inner/leftOuter (c_user never
+      // null) and picks the surviving side under fullOuter's
+      // purchase-only rows
+      .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
+        col("click_id"), col("purchase_id"),
+        (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
+          .as("lag_us"),
+        col("value"))
+  }
+
+  private def attribution(spark0: SparkSession, dir: String,
+      joinType: String, qname: String): DataFrame = {
+    val spark = streamSession(spark0)
+    import spark.implicits._
+    val ev = graft.Tables.load(spark, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type"), col("value"))
+    extent(ev) match {
+      case None => emptyFrame(spark,
+        "user_id" -> ev.schema("user_id").dataType,
+        "click_id" -> ev.schema("event_id").dataType,
+        "purchase_id" -> ev.schema("event_id").dataType,
+        "lag_us" -> LongType, "value" -> ev.schema("value").dataType)
+      case Some((_, hiUs, loUid)) =>
+        // two distinct out-of-band sentinel users, so the sentinel click
+        // cannot find the sentinel purchase; far enough that the
+        // watermark (sentinel ts - 1 h delay) clears every click's
+        // eviction point (click_ts + 1 h interval), with margin
+        val at = instant(hiUs + 3L * HourUs)
+        val sentinel = Seq((loUid - 1L, at, -1L, "click", 0.0),
+            (loUid - 2L, at, -2L, "purchase", 0.0))
+          .toDF("user_id", "ts", "event_id", "event_type", "value")
+        sentinelReplay(spark, dir, ev.schema,
+            Seq("chunk1" -> ev, "sentinel" -> sentinel), "append", qname)(
+            attributionJoin(_, joinType))
+          .filter(col("user_id") >= loUid)
+    }
+  }
 
   /** Streaming xmlpipe2 formatting — the reference-parity projection
     * (doc ids, typed rendering, markup, framing fields) applied to a
@@ -935,14 +723,6 @@ object EventsStream {
     StatelessPipe.toCompletion(spark0, dir, "documents",
       "graft_stateless_quality", graft.operators.TextStats.qualityFilter(_))
 
-  /** foreachBatch sink — the programmable-sink API: each micro-batch
-    * lands as an atomic parquet append via the BATCH writer (the
-    * production route to any sink Structured Streaming lacks, and to
-    * exactly-once via batchId-keyed idempotent writes; this fixture
-    * run is a single data batch, so plain append is already exact).
-    * Returns the re-read output so the driver oracle hash-checks the
-    * full sink→source loop.
-    */
   /** Streaming incremental view maintenance — the q_ivm_agg delta
     * applied as a STREAM: the signed insert/delete batch is chunked
     * into three replay files (`maxFilesPerTrigger = 1` forces one
@@ -983,27 +763,33 @@ object EventsStream {
         .schema
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-      val q = src.writeStream
+      drain(src.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           state = graft.operators.Merge.incrementalAgg(state,
             batch.select(col("o_custkey"), col("cents"), col("op")),
             "o_custkey", "cents").localCheckpoint()
         }
-        .start()
-      try q.processAllAvailable() finally stopRecorded(q)
+        .start())
       state
     } finally deleteRec(replayDir)
   }
 
+  /** foreachBatch sink — the programmable-sink API: each micro-batch
+    * lands as an atomic parquet append via the BATCH writer (the
+    * production route to any sink Structured Streaming lacks, and to
+    * exactly-once via batchId-keyed idempotent writes; this fixture
+    * run is a single data batch, so plain append is already exact).
+    * Returns the re-read output so the driver oracle hash-checks the
+    * full sink→source loop.
+    */
   def foreachBatchToParquet(spark0: SparkSession, dir: String,
       outDir: String): DataFrame = {
     val spark = streamSession(spark0)
-    val q = source(spark, dir).writeStream
+    drain(source(spark, dir).writeStream
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         df.write.mode("append").parquet(outDir)
       }
-      .start()
-    try q.processAllAvailable() finally stopRecorded(q)
+      .start())
     spark.read.parquet(outDir)
   }
 
@@ -1028,8 +814,112 @@ object EventsStream {
     * loud instead of silently hash-mismatching.
     */
   def fingerprintDedupToCompletion(spark0: SparkSession,
-      dir: String): DataFrame =
-    fromBundle(spark0, "wm-dedup", dir, "fp")(dedupBundle(spark0, dir))
+      dir: String): DataFrame = {
+    val spark = streamSession(spark0)
+    val norm = trim(regexp_replace(lower(coalesce(col("props"), lit(""))),
+      "\\s+", " "))
+    val qname = "graft_events_fp_dedup"
+    val q = source(spark, dir)
+      .withColumn("norm", norm)
+      .withColumn("fingerprint",
+        graft.functions.sdbm_hash(lit(0L), col("norm")))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("fingerprint")
+      .select(col("fingerprint"), col("norm"))
+      .writeStream.outputMode("append").format("memory").queryName(qname)
+      .start()
+    drain(q)
+    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+    require(dataBatches == 1,
+      s"fingerprint-dedup oracle assumes ONE data micro-batch " +
+        s"(watermark-horizon dedup == global DISTINCT only then); " +
+        s"this run had $dataBatches")
+    spark.table(qname)
+  }
+
+  /** Replay-harness split instant: strictly inside the longest batch
+    * session, so the two micro-batches provably bisect an open session
+    * and the cross-batch GroupState merge is exercised (a bare time
+    * median can fall between sessions on sparse fixtures). Falls back
+    * to the median when every session is instantaneous. Harness-only:
+    * the streaming operator itself never sees this.
+    */
+  private[graft] def splitInstant(ev: DataFrame, loUs: Long,
+      hiUs: Long): Long = {
+    val widest = graft.operators.Events.sessionize(ev, GapMinutes)
+      .select(unix_micros(col("session_start")).as("s"),
+        unix_micros(col("session_end")).as("e"))
+      .filter(col("e") > col("s") + 1)
+      .orderBy((col("e") - col("s")).desc, col("s"))
+      .limit(1).collect()
+    if (widest.nonEmpty)
+      widest(0).getLong(0) + (widest(0).getLong(1) - widest(0).getLong(0)) / 2
+    else loUs + (hiUs - loUs) / 2
+  }
+
+  /** The typed, watermarked `(user_id, ts, us, event_id)` stream every
+    * sessionizer consumes. The watermarked ts attribute must stay in
+    * the stateful operator's input (the event-time-timeout checker
+    * requires it); us is the exact-microsecond twin used for the gap
+    * arithmetic.
+    */
+  private def sessionInput(src: DataFrame)
+      : Dataset[(Long, java.sql.Timestamp, Long, Long)] = {
+    import src.sparkSession.implicits._
+    src.withWatermark("ts", "1 hour")
+      .select(col("user_id"), col("ts"),
+        unix_micros(col("ts")).as("us"), col("event_id"))
+      .as[(Long, java.sql.Timestamp, Long, Long)]
+  }
+
+  /** A sessionizer sink's `(user_id, start_us, end_us, n_events)` rows
+    * as sessions, the out-of-band sentinel users (below `loUid`)
+    * dropped.
+    */
+  private def sessionRows(sink: DataFrame, loUid: Long): DataFrame =
+    sink.filter(col("user_id") >= loUid)
+      .select(col("user_id"),
+        timestamp_micros(col("start_us")).as("session_start"),
+        timestamp_micros(col("end_us")).as("session_end"), col("n_events"))
+
+  /** Sentinel replay for the two sessionizers without initial state:
+    * the flatMapGroupsWithState and the transformWithState sessionizer
+    * consume the identical typed stream and emit the same
+    * `(user_id, start_us, end_us, n_events)` rows — only the stateful
+    * operator differs. Two chunks split at [[splitInstant]] (sessions
+    * spanning the split must be merged from state), then a far-future
+    * sentinel whose watermark passes every open session's timeout
+    * (hi + gap + delay + margin).
+    */
+  private def sessionReplay(spark0: SparkSession, dir: String,
+      qname: String)(
+      stateful: Dataset[(Long, java.sql.Timestamp, Long, Long)] =>
+        Dataset[(Long, Long, Long, Long)]): DataFrame = {
+    val spark = streamSession(spark0)
+    import spark.implicits._
+    // persisted while the chunks land: extent + split-instant sessionize
+    // + two chunk writes would otherwise re-scan the source
+    val ev = graft.Tables.load(spark, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      extent(ev) match {
+        case None => emptySessions(spark, ev)
+        case Some((loUs, hiUs, loUid)) =>
+          val midUs = splitInstant(ev, loUs, hiUs)
+          val sentinel = Seq((loUid - 1L,
+              instant(hiUs + GapUs + 2L * HourUs), -1L))
+            .toDF("user_id", "ts", "event_id")
+          sessionRows(sentinelReplay(spark, dir, ev.schema, Seq(
+              "chunk1" -> ev.filter(unix_micros(col("ts")) < midUs),
+              "chunk2" -> ev.filter(unix_micros(col("ts")) >= midUs),
+              "sentinel" -> sentinel), "append", qname)(src =>
+              stateful(sessionInput(src))
+                .toDF("user_id", "start_us", "end_us", "n_events")),
+            loUid)
+      }
+    } finally ev.unpersist()
+  }
 
   /** Streaming sessionization via flatMapGroupsWithState with the
     * open session carried ACROSS micro-batches in GroupState and
@@ -1045,137 +935,21 @@ object EventsStream {
     *     watermark advance so timeouts fire without new input).
     *
     * The fixture replay proves the cross-batch path: events are split
-    * at the median timestamp into two files fed as separate
-    * micro-batches (sessions spanning the split must be merged from
-    * state), then a far-future sentinel row advances the watermark so
-    * every open session times out and flushes — modeling "time keeps
-    * passing" after a finite fixture. Results are value-identical to
-    * batch Events.sessionize and share its oracle.
+    * at [[splitInstant]] into two files fed as separate micro-batches
+    * (sessions spanning the split must be merged from state), then a
+    * far-future sentinel row advances the watermark so every open
+    * session times out and flushes — modeling "time keeps passing"
+    * after a finite fixture. Results are value-identical to batch
+    * Events.sessionize and share its oracle.
     */
-  /** Replay-harness split instant: strictly inside the longest batch
-    * session, so the two micro-batches provably bisect an open session
-    * and the cross-batch GroupState merge is exercised (a bare time
-    * median can fall between sessions on sparse fixtures). Falls back
-    * to the median when every session is instantaneous. Harness-only:
-    * the streaming operator itself never sees this.
-    */
-  private[graft] def splitInstant(ev: DataFrame, loUs: Long,
-      hiUs: Long, gapMinutes: Int = 30): Long = {
-    val widest = graft.operators.Events.sessionize(ev, gapMinutes)
-      .select(unix_micros(col("session_start")).as("s"),
-        unix_micros(col("session_end")).as("e"))
-      .filter(col("e") > col("s") + 1)
-      .orderBy((col("e") - col("s")).desc, col("s"))
-      .limit(1).collect()
-    if (widest.nonEmpty)
-      widest(0).getLong(0) + (widest(0).getLong(1) - widest(0).getLong(0)) / 2
-    else loUs + (hiUs - loUs) / 2
-  }
+  def sessionizeToCompletion(spark0: SparkSession, dir: String): DataFrame =
+    sessionReplay(spark0, dir, "graft_events_sessions")(fmgwsSessionizer)
 
-  /** Shared sentinel-replay harness for the sessionizer twins: both
-    * the flatMapGroupsWithState and the transformWithState sessionizer
-    * consume the identical watermarked typed stream and emit the same
-    * `(user_id, start_us, end_us, n_events)` rows — only the stateful
-    * operator in the middle differs, so the replay plumbing (chunk
-    * split bisecting an open session, far-future sentinel flushing
-    * open state) lives here once.
-    */
-  private def sessionReplay(spark0: SparkSession, dir: String,
-      gapMinutes: Int, qname: String)(
-      stateful: org.apache.spark.sql.Dataset[(Long, java.sql.Timestamp, Long, Long)] =>
-        org.apache.spark.sql.Dataset[(Long, Long, Long, Long)]): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    val watermarkDelay = "1 hour"
-    val delayUs = 3600L * 1000000L
-
-    // --- replay setup: two time-ordered chunks + watermark sentinel ---
-    // persisted for the harness duration: stats + split-instant
-    // sessionize + two chunk writes would otherwise re-scan the source
-    val ev = graft.Tables.load(spark, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi"),
-      min(col("user_id")).as("lo_uid")).head()
-    if (stats.isNullAt(0)) {
-      // empty fixture: min/max aggregates are null — short-circuit with
-      // an empty result of the output schema instead of NPE'ing in the
-      // replay setup (the batch operators are total on empty input,
-      // EdgeCasesSpec; the streaming twin must be too)
-      ev.unpersist()
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("user_id", ev.schema("user_id").dataType),
-          StructField("session_start", TimestampType),
-          StructField("session_end", TimestampType),
-          StructField("n_events", LongType))))
-    }
-    val hiUs: Long = stats.getLong(1)
-    val midUs = splitInstant(ev, stats.getLong(0), hiUs, gapMinutes)
-    // sentinel id guaranteed out-of-band for this dataset
-    val sentinelUid = stats.getLong(2) - 1L
-    val replayDir = graft.Scratch.dir("graft-replay").toFile
-
-    val src = spark.readStream.schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir.toString)
-      .withWatermark("ts", watermarkDelay)
-      // the watermarked ts attribute must stay in the stateful
-      // operator's input (the event-time-timeout checker requires it);
-      // us is the exact-microsecond twin used for the gap arithmetic
-      .select(col("user_id"), col("ts"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .as[(Long, java.sql.Timestamp, Long, Long)]
-    val sessions = stateful(src)
-    val q = sessions
-      .toDF("user_id", "start_us", "end_us", "n_events")
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .start()
-    try {
-      writeChunk(replayDir, dir, ev.filter(unix_micros(col("ts")) < midUs), "chunk1")
-      q.processAllAvailable() // batch 1: sessions fully inside chunk 1
-      writeChunk(replayDir, dir, ev.filter(unix_micros(col("ts")) >= midUs), "chunk2")
-      q.processAllAvailable() // batch 2: must merge state across the split
-      // sentinel: one far-future row pushes the watermark beyond every
-      // open session's timeout (hi + gap + delay + margin)
-      writeChunk(replayDir, dir, Seq((sentinelUid,
-        new java.sql.Timestamp((hiUs + gapUs + delayUs + delayUs) / 1000L),
-        -1L)).toDF("user_id", "ts", "event_id"), "sentinel")
-      q.processAllAvailable() // batch 3 + no-data batch: flush timeouts
-    } finally {
-      stopRecorded(q)
-      ev.unpersist()
-      // the memory sink holds the results; the replay files are dead
-      deleteRec(replayDir)
-    }
-    spark.table(qname)
-      .filter(col("user_id") =!= sentinelUid)
-      .select(col("user_id"),
-        timestamp_micros(col("start_us")).as("session_start"),
-        timestamp_micros(col("end_us")).as("session_end"), col("n_events"))
-  }
-
-  def sessionizeToCompletion(spark0: SparkSession, dir: String,
-      gapMinutes: Int = 30): DataFrame =
-    if (gapMinutes == 30)
-      fromBundle(spark0, "ingest-g30", dir, "fmgws")(
-        ingestBundle(spark0, dir, 30))
-    else sessionReplay(spark0, dir, gapMinutes,
-      "graft_events_sessions")(fmgwsSessionizer(gapMinutes))
-
-  /** The flatMapGroupsWithState sessionizer over a watermarked typed
-    * stream — shared by the solo replay and the trio bundle.
-    */
-  private def fmgwsSessionizer(gapMinutes: Int)(
-      src: org.apache.spark.sql.Dataset[(Long, java.sql.Timestamp, Long, Long)])
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long)] = {
+  /** The flatMapGroupsWithState sessionizer over the typed stream. */
+  private def fmgwsSessionizer(
+      src: Dataset[(Long, java.sql.Timestamp, Long, Long)])
+      : Dataset[(Long, Long, Long, Long)] = {
     import src.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
     src.groupByKey(_._1)
       .flatMapGroupsWithState[(Long, Long, Long), (Long, Long, Long, Long)](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -1194,7 +968,7 @@ object EventsStream {
               var (start, last, n) =
                 state.getOption.getOrElse((evs.head._1, evs.head._1, 0L))
               for (e <- evs) {
-                if (e._1 - last > gapUs) {
+                if (e._1 - last > GapUs) {
                   out += ((uid, start, last, n))
                   start = e._1
                   n = 0L
@@ -1210,435 +984,21 @@ object EventsStream {
               // boundary event (ts-last == gap exactly) is still in
               // flight on an out-of-order stream.
               state.setTimeoutTimestamp(
-                (last + 999L) / 1000L + gapMinutes * 60L * 1000L)
+                (last + 999L) / 1000L + GapMinutes * 60L * 1000L)
               out.result().iterator
             }
           }
       }
   }
 
-  /** The transformWithState sessionizer — ditto. */
-  private def twsSessionizer(gapMinutes: Int)(
-      src: org.apache.spark.sql.Dataset[(Long, java.sql.Timestamp, Long, Long)])
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.TimeMode
+  /** The transformWithState sessionizer over the typed stream. */
+  private def twsSessionizer(
+      src: Dataset[(Long, java.sql.Timestamp, Long, Long)])
+      : Dataset[(Long, Long, Long, Long)] = {
     import src.sparkSession.implicits._
     src.groupByKey(_._1)
-      .transformWithState(
-        new SessionProcessor(gapMinutes),
-        TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  private def emptySessionsDf(spark: SparkSession,
-      uidType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("user_id", uidType),
-        StructField("session_start", TimestampType),
-        StructField("session_end", TimestampType),
-        StructField("n_events", LongType))))
-  }
-
-  /** The whole EVENTS-STREAM ingest — the sessionizer family
-    * (flatMapGroupsWithState, transformWithState, the warm-start
-    * cutover, the NATIVE session_window aggregation, the
-    * MapState/ListState type profile), the stream-stream attribution
-    * join matrix (inner / left-outer / full-outer), and the
-    * Misra–Gries heavy-hitter pair (capacity 8 exact + capacity 2
-    * decrement regime) — over ONE shared replay: nine of the ten
-    * queries consume identical chunks from one replay dir (the same
-    * (user_id, ts, event_id, event_type, value) rows feed each
-    * operator's own projection) while the warm-start twin replays
-    * only the post-cutover slice of the SAME persisted event frame
-    * (plus its batch half), all ten as concurrent streaming queries.
-    * One scan + split-instant + chunk materialization amortizes
-    * across the whole group, and the ten per-micro-batch floors
-    * overlap instead of summing — at deployment scale nobody
-    * re-ingests the event stream per analytic, so the r18 shape
-    * (three separate bundles each re-landing the same fixture) was
-    * paying the ingest floor three times (r18 judge ask #4).
-    *
-    * Sentinels: all harness sentinel rows ride OUT-OF-BAND user ids
-    * (below the fixture's min uid) and every member's tail filters
-    * `user_id >= loUid`, so no sentinel can reach a result. The
-    * replay-A sentinel chunk carries the attribution pair (a click
-    * and a purchase on distinct uids at hi + 3 h, so they cannot
-    * join each other) plus the session sentinel (hi + gap + 2 h);
-    * the resulting watermark (hi + 2 h) clears the sessionizers'
-    * last+gap timeouts, the session_window close, the type profile's
-    * and heavy-hitter sketches' fixed horizons (hi + 1 h), and every
-    * attribution click's interval upper bound (≤ hi + 1 h). The
-    * heavy-hitter legs map sentinel rows to shard -1 (dropped by the
-    * tail) rather than filtering them out: a pre-state filter is
-    * pushed below the watermark node by Catalyst, and the sentinels
-    * are what advance the watermark past the sketches' flush horizon
-    * — they must flow THROUGH the sketch on an out-of-band key, and
-    * must never increment a real shard's type counters.
-    */
-  private def ingestBundle(spark0: SparkSession, dir: String,
-      gapMinutes: Int)
-      : Seq[(String, DataFrame, Option[(String, Long, Long)])] = {
-    val spark = streamSession(spark0)
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.TimeMode
-    import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    val delayUs = 3600L * 1000000L
-    val ev = graft.Tables.load(spark, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), col("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the sessionizer-shaped projection for the batch legs
-    val evS = ev.select(col("user_id"), col("ts"), col("event_id"))
-    val prep = phased("ingest:prep")(ingestPrepMemo.computeIfAbsent(
-      s"$dir|$gapMinutes",
-      _ => {
-        val stats = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-          max(unix_micros(col("ts"))).as("hi"),
-          min(col("user_id")).as("lo_uid")).head()
-        if (stats.isNullAt(0))
-          IngestPrep(empty = true, 0L, 0L, 0L, 0L, Nil, Nil)
-        else {
-          val lo = stats.getLong(0); val hi = stats.getLong(1)
-          // one split instant serves both the replay bisect and the
-          // warm cutover (both must bisect an open session)
-          val mid = splitInstant(evS, lo, hi, gapMinutes)
-          // warm-start base: sessionize the pre-cutover half ONCE and
-          // collect (one row per session — bounded by user count);
-          // every session but a user's LAST is final, the last may
-          // continue across the cutover and seeds the init state
-          val rn = row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id"))
-              .orderBy(col("session_end").desc))
-          val ranked = graft.operators.Events.sessionize(
-              evS.filter(unix_micros(col("ts")) < mid), gapMinutes)
-            .select(col("user_id"),
-              unix_micros(col("session_start")).as("start_us"),
-              unix_micros(col("session_end")).as("end_us"),
-              col("n_events"), rn.as("rn"))
-            .collect()
-          val tup = (r: org.apache.spark.sql.Row) =>
-            (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-          IngestPrep(empty = false, lo, hi, stats.getLong(2), mid,
-            ranked.filter(_.getInt(4) > 1).map(tup).toSeq,
-            ranked.filter(_.getInt(4) == 1).map(tup).toSeq)
-        }
-      }))
-    if (prep.empty) {
-      ev.unpersist()
-      val empty = emptySessionsDf(spark, ev.schema("user_id").dataType)
-      import org.apache.spark.sql.types._
-      val emptyProfile = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("user_id", ev.schema("user_id").dataType),
-          StructField("n_types", LongType),
-          StructField("n_events", LongType),
-          StructField("types_csv", StringType))))
-      val emptyAttr = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("user_id", ev.schema("user_id").dataType),
-          StructField("click_id", ev.schema("event_id").dataType),
-          StructField("purchase_id", ev.schema("event_id").dataType),
-          StructField("lag_us", LongType),
-          StructField("value", ev.schema("value").dataType))))
-      val emptyHh = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("event_type", StringType),
-          StructField("n_events", LongType))))
-      val emptyTumbling = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("window_start", TimestampType),
-          StructField("event_type", StringType),
-          StructField("n", LongType, nullable = false),
-          StructField("sum_value", DoubleType))))
-      val emptySliding = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("window_start", TimestampType),
-          StructField("n", LongType, nullable = false),
-          StructField("sum_value", DoubleType))))
-      return Seq("fmgws", "tws", "warm", "swin").map(m =>
-        (m, empty, None)) ++
-        Seq(("profile", emptyProfile, None)) ++
-        Seq("inner", "leftOuter", "fullOuter").map(m =>
-          (m, emptyAttr, None)) ++
-        Seq("c8", "c2").map(m => (m, emptyHh, None)) ++
-        Seq(("tumbling", emptyTumbling, None),
-          ("sliding", emptySliding, None),
-          ("tumblingAppend", emptyTumbling, None))
-    }
-    val hiUs = prep.hi
-    val loUid = prep.loUid
-    val midUs = prep.midUs
-    val sentinelUid = loUid - 1L
-    val sentinelTs =
-      new java.sql.Timestamp((hiUs + gapUs + delayUs + delayUs) / 1000L)
-    // the attribution sentinels: distinct out-of-band uids so the
-    // sentinel click can never join the sentinel purchase
-    val attrTs = new java.sql.Timestamp((hiUs + 3L * delayUs) / 1000L)
-
-    def replayRaw(replayDir: java.io.File): DataFrame =
-      spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replayDir.toString)
-        .withWatermark("ts", "1 hour")
-
-    def replaySrc(replayDir: java.io.File) =
-      replayRaw(replayDir)
-        // the watermarked ts attribute must stay in the stateful
-        // operator's input (the event-time checkers require it); us is
-        // the exact-microsecond twin used for the gap arithmetic
-        .select(col("user_id"), col("ts"),
-          unix_micros(col("ts")).as("us"), col("event_id"))
-        .as[(Long, java.sql.Timestamp, Long, Long)]
-
-    // ---- replay A: fMGWS + tws + native session_window + profile ----
-    val replayA = graft.Scratch.dir("graft-replay").toFile
-    val srcA = replaySrc(replayA)
-    val qnF = "graft_events_sessions"
-    val qnT = "graft_events_sessions_tws"
-    val qnSW = "graft_events_stream_session_window"
-    val qnP = "graft_events_type_profile"
-    val qF = fmgwsSessionizer(gapMinutes)(srcA)
-      .toDF("user_id", "start_us", "end_us", "n_events")
-      .writeStream.outputMode("append").format("memory").queryName(qnF)
-      .start()
-    val qT = twsSessionizer(gapMinutes)(srcA)
-      .toDF("user_id", "start_us", "end_us", "n_events")
-      .writeStream.outputMode("append").format("memory").queryName(qnT)
-      .start()
-    val qSW = replayRaw(replayA)
-      .groupBy(col("user_id"),
-        session_window(col("ts"), s"$gapMinutes minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"), max(col("ts")).as("session_end"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("session_end"), col("n_events"))
-      .writeStream.outputMode("append").format("memory").queryName(qnSW)
-      .start()
-    // the profile's fixed flush horizon: above every real event,
-    // below the sentinel-driven watermark — every profile emits
-    // exactly once when the sentinel lands
-    val flushAtMs = (hiUs + delayUs) / 1000L
-    val qP = replayRaw(replayA)
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, String)]
-      .groupByKey(_._1)
-      .transformWithState(new TypeProfileProcessor(flushAtMs),
+      .transformWithState(new SessionProcessor(GapMinutes),
         TimeMode.EventTime(), OutputMode.Append())
-      .toDF("user_id", "n_types", "n_events", "types_csv")
-      .writeStream.outputMode("append").format("memory").queryName(qnP)
-      .start()
-    // ---- the stream-stream attribution matrix, same replay ----
-    val attrMembers = Seq(
-      "inner" -> "graft_events_stream_attribution",
-      "leftOuter" -> "graft_events_stream_attribution_outer",
-      "fullOuter" -> "graft_events_stream_attribution_full")
-    val qsAttr = attrMembers.map { case (m, qname) =>
-      attributionOuterStart(spark, ev.schema, replayA.toString, qname, m)
-    }
-    // ---- the Misra–Gries heavy-hitter pair, same replay ----
-    // (shard derived in-stream from user_id; sentinel rows map to
-    // shard -1 — a pre-state FILTER would be pushed below the
-    // watermark node by Catalyst, and the unfiltered sentinels are
-    // what advance the watermark past the sketches' flush horizon, so
-    // sentinels must flow THROUGH the sketch on an out-of-band key
-    // the tail drops, exactly as the pre-merge harness did)
-    val hhCaps = Seq(8, 2)
-    val qsHh = hhCaps.map { capacity =>
-      replayRaw(replayA)
-        .select(when(col("user_id") < loUid, lit(-1L))
-          .otherwise(pmod(col("user_id"), lit(4L))).as("shard"),
-          col("ts"), col("event_type"))
-        .as[(Long, java.sql.Timestamp, String)]
-        .groupByKey(_._1)
-        .transformWithState(
-          new HeavyHitterProcessor((hiUs + delayUs) / 1000L, capacity),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF("shard", "event_type", "cnt")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(s"graft_events_heavy_hitters_c$capacity")
-        .start()
-    }
-    // ---- windowed aggregations (complete + append), same replay ----
-    // chunk-boundary-invariant by construction (complete mode re-emits
-    // the whole table; append emits each window exactly once when the
-    // watermark closes it — hi + 2 h clears every real window's end ≤
-    // hi + 1 h). Sentinel rows land ONLY in windows starting after hi
-    // (their ts ≥ hi + gap + 2 h can't reach a window starting ≤ hi at
-    // 1 h width), so the tails' window_start ≤ hi filter is exact.
-    val qTum = replayRaw(replayA)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)"))
-          .cast("double").as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("graft_events_stream").start()
-    val qSlide = replayRaw(replayA)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)"))
-          .cast("double").as("sum_value"))
-      .select(col("w.start").as("window_start"), col("n"),
-        col("sum_value"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("graft_events_stream_sliding").start()
-    val qTumApp = replayRaw(replayA)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)"))
-          .cast("double").as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("graft_events_stream_append").start()
-
-    // ---- replay B: warm-start cutover (batch half + stream) ----
-    // both legs come from the memoized prep as LocalRelations: the
-    // finals (every closed pre-cutover session) and the init state
-    // (each user's last, possibly-still-open session)
-    val finals = prep.warmFinals
-      .toDF("user_id", "start_us", "end_us", "n_events")
-    val initState = prep.warmInit.toDS()
-      .groupByKey(_._1).mapValues(t => (t._2, t._3, t._4))
-    val replayB = graft.Scratch.dir("graft-warm-replay").toFile
-    val qnW = "graft_events_sessions_warm"
-    val qW = phased("ingest:warm-start")(
-      replaySrc(replayB).groupByKey(_._1)
-        .transformWithState(new SessionProcessorWarmStart(gapMinutes),
-          TimeMode.EventTime(), OutputMode.Append(), initState)
-        .toDF("user_id", "start_us", "end_us", "n_events")
-        .writeStream.outputMode("append").format("memory").queryName(qnW)
-        .start())
-
-    val qs = Seq(qF, qT, qW, qSW, qP) ++ qsAttr ++ qsHh ++
-      Seq(qTum, qSlide, qTumApp)
-    try {
-      // ALL chunks land before ONE drain wave. Per-query batch
-      // boundaries — chunk1 before chunk2 before sentinel, one file
-      // per micro-batch — are already guaranteed by
-      // maxFilesPerTrigger=1 plus strictly increasing mtimes (the
-      // file source takes unseen files oldest-first), so the
-      // intermediate barriers the r18 harness took between chunks
-      // bought determinism the source provides for free, while
-      // serializing ten queries' micro-batch floors into three waves
-      // of wall. The watermark sequence per query is unchanged:
-      // batch(chunk1) at -inf, batch(chunk2) at mid-1h, sentinel at
-      // hi-1h, the no-data batch at the sentinel-driven horizon.
-      //
-      // Sentinels: the far-future rows push the watermark beyond
-      // every open session's timeout (hi + gap + delay + margin),
-      // past the session_window close, past the profile's and
-      // sketches' fixed flush horizons, and past every attribution
-      // click's interval upper bound — one chunk on replay A (the
-      // session sentinel + the non-joining attribution pair), one on
-      // replay B.
-      val sentinelA = Seq(
-        (sentinelUid, sentinelTs, -1L, "sentinel", 0.0),
-        (loUid - 2L, attrTs, -2L, "click", 0.0),
-        (loUid - 3L, attrTs, -3L, "purchase", 0.0))
-        .toDF("user_id", "ts", "event_id", "event_type", "value")
-      val sentinelB = Seq((sentinelUid, sentinelTs, -1L, "sentinel", 0.0))
-        .toDF("user_id", "ts", "event_id", "event_type", "value")
-      phased("ingest:chunks")({
-        val c1 = writeChunk(replayA, dir,
-          ev.filter(unix_micros(col("ts")) < midUs), "chunk1")
-        val post = writeChunk(replayB, dir,
-          ev.filter(unix_micros(col("ts")) >= midUs), "post")
-        val c2 = writeChunk(replayA, dir,
-          ev.filter(unix_micros(col("ts")) >= midUs), "chunk2")
-        c2.setLastModified(c1.lastModified() + 60000L): Unit
-        val sA = writeChunk(replayA, dir, sentinelA, "sentinel")
-        sA.setLastModified(c2.lastModified() + 60000L): Unit
-        val sB = writeChunk(replayB, dir, sentinelB, "sentinel")
-        sB.setLastModified(post.lastModified() + 60000L): Unit
-      })
-      // one wave: every query chews its ordered chunks + the no-data
-      // flush batch concurrently with all the others
-      phased("ingest:drain")(qs.foreach(_.processAllAvailable()))
-    } catch { case t: Throwable =>
-      stopQuietly(t, qs: _*)
-      ev.unpersist()
-      deleteRec(replayA); deleteRec(replayB)
-      throw t
-    }
-    if (bundleTiming) qs.foreach { q =>
-      val ps = q.recentProgress
-      val trig = ps.flatMap(p =>
-        Option(p.durationMs.get("triggerExecution")).map(_.longValue)).sum
-      val addB = ps.flatMap(p =>
-        Option(p.durationMs.get("addBatch")).map(_.longValue)).sum
-      val qn = ps.flatMap(p => Option(p.name)).headOption
-        .getOrElse(q.id.toString)
-      System.err.println(f"BUNDLE-QUERY $qn%-42s" +
-        f" batches=${ps.length}%2d trigger=${trig / 1000.0}%6.2f s" +
-        f" addBatch=${addB / 1000.0}%6.2f s")
-    }
-    val mets = phased("ingest:stop")(qs.map(stopCaptured))
-    // warm's union references the finals LocalRelation (driver-held,
-    // sweep-proof) — but materialize the result anyway: the sink
-    // table name is rewritten by the NEXT bundle run while consumers
-    // may still hold this slice
-    val warmLazy = spark.table(qnW)
-      .filter(col("user_id") >= loUid)
-      .select(col("user_id"), col("start_us"), col("end_us"),
-        col("n_events"))
-      .union(finals)
-      .select(col("user_id"),
-        timestamp_micros(col("start_us")).as("session_start"),
-        timestamp_micros(col("end_us")).as("session_end"),
-        col("n_events"))
-    val warmDf = phased("ingest:warm-collect")(spark.createDataFrame(
-      java.util.Arrays.asList(warmLazy.collect(): _*), warmLazy.schema))
-    ev.unpersist()
-    deleteRec(replayA); deleteRec(replayB)
-    // every tail filters the OUT-OF-BAND uid band (< loUid): the
-    // session sentinel and the attribution pair both ride below the
-    // fixture's min uid
-    def tail(qn: String): DataFrame = spark.table(qn)
-      .filter(col("user_id") >= loUid)
-      .select(col("user_id"),
-        timestamp_micros(col("start_us")).as("session_start"),
-        timestamp_micros(col("end_us")).as("session_end"),
-        col("n_events"))
-    val attrSlices = attrMembers.zipWithIndex.map { case ((m, qname), i) =>
-      (m, spark.table(qname).filter(col("user_id") >= loUid),
-        mets(5 + i))
-    }
-    val hhSlices = hhCaps.zipWithIndex.map { case (capacity, i) =>
-      (s"c$capacity",
-        spark.table(s"graft_events_heavy_hitters_c$capacity")
-          .filter(col("shard") >= 0)
-          .groupBy(col("event_type")).agg(sum(col("cnt")).as("n_events"))
-          .orderBy(col("event_type")), mets(8 + i))
-    }
-    // sentinel exclusion for the window aggs: sentinels live only in
-    // windows starting strictly after hi (see the query comments)
-    val hiTs = timestamp_micros(lit(hiUs))
-    val windowSlices = Seq(
-      ("tumbling", spark.table("graft_events_stream")
-        .filter(col("window_start") <= hiTs), mets(10)),
-      ("sliding", spark.table("graft_events_stream_sliding")
-        .filter(col("window_start") <= hiTs), mets(11)),
-      ("tumblingAppend", spark.table("graft_events_stream_append")
-        .filter(col("window_start") <= hiTs), mets(12)))
-    Seq(("fmgws", tail(qnF), mets(0)), ("tws", tail(qnT), mets(1)),
-      ("warm", warmDf, mets(2)),
-      ("swin", spark.table(qnSW)
-        .filter(col("user_id") >= loUid), mets(3)),
-      ("profile", spark.table(qnP)
-        .filter(col("user_id") >= loUid), mets(4))) ++
-      attrSlices ++ hhSlices ++ windowSlices
   }
 
   /** The transformWithState sessionizer — Spark 4's arbitrary-state
@@ -1653,13 +1013,9 @@ object EventsStream {
     * the old API allowed exactly one state value and one timeout).
     * Runs on the RocksDB provider like every stateful twin here.
     */
-  def sessionizeTwsToCompletion(spark0: SparkSession, dir: String,
-      gapMinutes: Int = 30): DataFrame =
-    if (gapMinutes == 30)
-      fromBundle(spark0, "ingest-g30", dir, "tws")(
-        ingestBundle(spark0, dir, 30))
-    else sessionReplay(spark0, dir, gapMinutes,
-      "graft_events_sessions_tws")(twsSessionizer(gapMinutes))
+  def sessionizeTwsToCompletion(spark0: SparkSession,
+      dir: String): DataFrame =
+    sessionReplay(spark0, dir, "graft_events_sessions_tws")(twsSessionizer)
 
   /** Per-user event-type profile through the remaining
     * transformWithState primitives: a MapState (type → count) and a
@@ -1674,9 +1030,43 @@ object EventsStream {
     * yields counts (order-free sums), the list is emitted SORTED, so
     * the batch GROUP BY with count(DISTINCT)/string_agg is the oracle.
     */
-  def typeProfileToCompletion(spark0: SparkSession, dir: String): DataFrame =
-    fromBundle(spark0, "ingest-g30", dir, "profile")(
-      ingestBundle(spark0, dir, 30))
+  def typeProfileToCompletion(spark0: SparkSession,
+      dir: String): DataFrame = {
+    val spark = streamSession(spark0)
+    import spark.implicits._
+    val ev = graft.Tables.load(spark, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_type"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      extent(ev) match {
+        case None => emptyFrame(spark,
+          "user_id" -> ev.schema("user_id").dataType,
+          "n_types" -> LongType, "n_events" -> LongType,
+          "types_csv" -> StringType)
+        case Some((loUs, hiUs, loUid)) =>
+          // fixed flush horizon: above every real event, below the
+          // sentinel-driven watermark (sentinel ts - 1 h delay), so
+          // every profile emits exactly once when the sentinel lands
+          val flushAtMs = (hiUs + HourUs) / 1000L
+          // two chunks: the map/list must MERGE across micro-batches
+          val midUs = (loUs + hiUs) / 2
+          val sentinel = Seq((loUid - 1L, instant(hiUs + 3L * HourUs),
+            "sentinel")).toDF("user_id", "ts", "event_type")
+          sentinelReplay(spark, dir, ev.schema, Seq(
+              "c1" -> ev.filter(unix_micros(col("ts")) < midUs),
+              "c2" -> ev.filter(unix_micros(col("ts")) >= midUs),
+              "sentinel" -> sentinel), "append",
+              "graft_events_type_profile")(
+              _.withWatermark("ts", "1 hour")
+                .as[(Long, java.sql.Timestamp, String)]
+                .groupByKey(_._1)
+                .transformWithState(new TypeProfileProcessor(flushAtMs),
+                  TimeMode.EventTime(), OutputMode.Append())
+                .toDF("user_id", "n_types", "n_events", "types_csv"))
+            .filter(col("user_id") >= loUid)
+      }
+    } finally ev.unpersist()
+  }
 
   /** Processor for [[typeProfileToCompletion]]: MapState counts per
     * event type (point-increments — no blob rewrite), ListState keeps
@@ -1744,141 +1134,70 @@ object EventsStream {
     * On the fixture, capacity (8) exceeds the distinct-type count
     * (5), so the decrement never fires, every counter is EXACT, and
     * shard-merging by plain sum equals the batch GROUP BY — which is
-    * the driver oracle. The decrement path is exercised (and its
-    * guarantee asserted against batch truth) by the capacity-2 run
-    * in EventsStreamHHSpec AND, since round 16, by the
+    * the driver oracle. The decrement path is exercised by the
     * events_stream_heavy_hitters_bounds driver gate (capacity 2,
     * max per-type deficit checked against the telescoped
-    * N/(capacity+1) bound); the batch Misra–Gries
-    * TypedImperativeAggregate (profile_heavy_sketch) gate-checks the
-    * approximate regime independently.
+    * N/(capacity+1) bound) and asserted against batch truth by the
+    * capacity-2 runs in EventsSpec and EventsStreamTwinsSpec; the
+    * batch Misra–Gries TypedImperativeAggregate (profile_heavy_sketch)
+    * gate-checks the approximate regime independently.
     *
-    * Output: (event_type, n_events) summed over shards, ordered.
+    * Replay: two chunks (the counters must merge across
+    * micro-batches), then a sentinel on its own shard key (-1, dropped
+    * by the tail) whose watermark passes the flush horizon. Output:
+    * (event_type, n_events) summed over shards, ordered.
     */
   def heavyHittersToCompletion(spark0: SparkSession, dir: String,
       capacity: Int = 8, shards: Int = 4): DataFrame = {
     require(capacity > 0 && shards > 0)
-    // the registered pair — the exact sink (capacity 8) and the
-    // decrement-regime gate stream (capacity 2) — rides the SHARED
-    // events ingest: both sketches consume the same chunks as the
-    // sessionizer family and the attribution matrix, so the bounds
-    // gate scores the run the group's payer already paid for
-    if (shards == 4 && (capacity == 8 || capacity == 2))
-      fromBundle(spark0, "ingest-g30", dir, s"c$capacity")(
-        ingestBundle(spark0, dir, 30))
-    else {
-      // non-registered parameterizations (spec probes) run solo
-      val (_, df, met) =
-        heavyHittersBundle(spark0, dir, shards, Seq(capacity)).head
-      recordState(met)
-      df
-    }
+    val spark = streamSession(spark0)
+    import spark.implicits._
+    val ev = graft.Tables.load(spark, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_type"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      extent(ev) match {
+        case None => emptyFrame(spark,
+          "event_type" -> StringType, "n_events" -> LongType)
+        case Some((loUs, hiUs, _)) =>
+          val flushAtMs = (hiUs + HourUs) / 1000L
+          val midUs = (loUs + hiUs) / 2
+          val sharded = ev.select(
+            pmod(col("user_id"), lit(shards.toLong)).as("shard"),
+            col("ts"), col("event_type"))
+          val sentinel = Seq((-1L, instant(hiUs + 3L * HourUs),
+            "sentinel")).toDF("shard", "ts", "event_type")
+          sentinelReplay(spark, dir, sharded.schema, Seq(
+              "c1" -> sharded.filter(unix_micros(col("ts")) < midUs),
+              "c2" -> sharded.filter(unix_micros(col("ts")) >= midUs),
+              "sentinel" -> sentinel), "append",
+              s"graft_events_heavy_hitters_c$capacity")(
+              _.withWatermark("ts", "1 hour")
+                .as[(Long, java.sql.Timestamp, String)]
+                .groupByKey(_._1)
+                .transformWithState(
+                  new HeavyHitterProcessor(flushAtMs, capacity),
+                  TimeMode.EventTime(), OutputMode.Append())
+                .toDF("shard", "event_type", "cnt"))
+            .filter(col("shard") >= 0)
+            .groupBy(col("event_type")).agg(sum(col("cnt")).as("n_events"))
+            .orderBy(col("event_type"))
+      }
+    } finally ev.unpersist()
   }
 
-  /** Isolated (non-bundled) twins for the scale probe: the probe's
-    * streaming measurements must attribute wall and state rows/bytes
-    * to ONE operator — a bundled call would run (and sum the state
-    * of) the whole shared-ingest group, burying the MG-sketch
-    * flatness claim the probe exists to make.
-    */
-  private[graft] def heavyHittersSolo(spark0: SparkSession,
-      dir: String): DataFrame = {
-    val (_, df, met) =
-      heavyHittersBundle(spark0, dir, shards = 4, capacities = Seq(8)).head
-    recordState(met)
-    df
-  }
-
-  private[graft] def sessionizeSolo(spark0: SparkSession,
-      dir: String): DataFrame =
-    sessionReplay(spark0, dir, 30,
-      "graft_events_sessions")(fmgwsSessionizer(30))
-
-  /** Probe-side state-partition override. The session default (2)
-    * is sized for the merged 13-query ingest, where per-commit store
-    * overhead dominates; a SOLO query ingesting the 100x fixture
-    * wants the parallelism back (measured: heavy_hitters 100x solo
-    * 44.0 s at 4 partitions vs 71.7 s at 2). Streaming queries read
-    * the conf at start, so setting it between probe runs is exact —
-    * the per-regime sizing a deployment does with the same knob.
+  /** Probe-side state-partition override. The session default of 1
+    * suits fixture-sized state; a query ingesting the scale probe's
+    * 100x fixture wants the parallelism back (measured: heavy_hitters
+    * 100x 44.0 s at 4 partitions vs 71.7 s at 2). Streaming queries
+    * read the conf at start, so setting it between probe runs is
+    * exact — the per-regime sizing a deployment does with the same
+    * knob.
     */
   private[graft] def setStreamShufflePartitions(spark0: SparkSession,
       n: Int): Unit =
     streamSession(spark0).conf.set("spark.sql.shuffle.partitions",
       n.toString)
-
-  private def heavyHittersBundle(spark0: SparkSession, dir: String,
-      shards: Int, capacities: Seq[Int])
-      : Seq[(String, DataFrame, Option[(String, Long, Long)])] = {
-    val spark = streamSession(spark0)
-    import org.apache.spark.sql.streaming.TimeMode
-    import spark.implicits._
-    val ev = graft.Tables.load(spark, dir, "events")
-      .select(pmod(col("user_id"), lit(shards.toLong)).as("shard"),
-        col("ts"), col("event_type"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = ev.agg(max(unix_micros(col("ts"))).as("hi"),
-      min(unix_micros(col("ts"))).as("lo")).head()
-    if (stats.isNullAt(0)) {
-      ev.unpersist()
-      val empty = spark.emptyDataFrame
-        .withColumn("event_type", lit("").cast("string"))
-        .withColumn("n_events", lit(0L)).limit(0)
-      return capacities.map(c => (s"c$c", empty, None))
-    }
-    val hiUs = stats.getLong(0)
-    val delayUs = 3600L * 1000000L
-    val flushAtMs = (hiUs + delayUs) / 1000L
-    val replayDir = graft.Scratch.dir("graft-hh-replay").toFile
-    val src = spark.readStream.schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir.toString)
-      .withWatermark("ts", "1 hour")
-      .select(col("shard"), col("ts"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, String)]
-    val qs = capacities.map { capacity =>
-      val hh = src.groupByKey(_._1)
-        .transformWithState(
-          new HeavyHitterProcessor(flushAtMs, capacity),
-          TimeMode.EventTime(),
-          OutputMode.Append())
-      hh.toDF("shard", "event_type", "cnt")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(s"graft_events_heavy_hitters_c$capacity")
-        .start()
-    }
-    try {
-      // two chunks so the MapState counters must MERGE across
-      // micro-batches, then the sentinel (its own shard key, filtered
-      // below) pushes the watermark past the flush horizon
-      val midUs = (stats.getLong(0) + stats.getLong(1)) / 2
-      writeChunk(replayDir, dir, ev.filter(unix_micros(col("ts")) < midUs), "c1")
-      qs.foreach(_.processAllAvailable())
-      val c2f =
-        writeChunk(replayDir, dir, ev.filter(unix_micros(col("ts")) >= midUs), "c2")
-      val sf = writeChunk(replayDir, dir, Seq((-1L,
-        new java.sql.Timestamp((hiUs + 3L * delayUs) / 1000L), "sentinel"))
-        .toDF("shard", "ts", "event_type"), "sentinel")
-      sf.setLastModified(c2f.lastModified() + 60000L)
-      qs.foreach(_.processAllAvailable())
-    } catch { case t: Throwable =>
-      stopQuietly(t, qs: _*)
-      ev.unpersist()
-      deleteRec(replayDir)
-      throw t
-    }
-    val mets = qs.map(stopCaptured)
-    ev.unpersist()
-    deleteRec(replayDir)
-    capacities.zip(mets).map { case (capacity, met) =>
-      (s"c$capacity",
-        spark.table(s"graft_events_heavy_hitters_c$capacity")
-          .filter(col("shard") >= 0)
-          .groupBy(col("event_type")).agg(sum(col("cnt")).as("n_events"))
-          .orderBy(col("event_type")), met)
-    }
-  }
 
   /** Processor for [[heavyHittersToCompletion]]: a `capacity`-bounded
     * MapState of (type → counter) per shard with the Misra–Gries
@@ -1959,108 +1278,63 @@ object EventsStream {
     * This is how a 100 TB deployment turns on streaming without
     * replaying history or dropping the sessions open at the switch.
     */
-  def sessionizeWarmStartToCompletion(spark0: SparkSession, dir: String,
-      gapMinutes: Int = 30): DataFrame =
-    if (gapMinutes == 30)
-      fromBundle(spark0, "ingest-g30", dir, "warm")(
-        ingestBundle(spark0, dir, 30))
-    else sessionizeWarmStartSolo(spark0, dir, gapMinutes)
-
-  private def sessionizeWarmStartSolo(spark0: SparkSession, dir: String,
-      gapMinutes: Int): DataFrame = {
+  def sessionizeWarmStartToCompletion(spark0: SparkSession,
+      dir: String): DataFrame = {
     val spark = streamSession(spark0)
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.TimeMode
     import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    val delayUs = 3600L * 1000000L
     val ev = graft.Tables.load(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi"),
-      min(col("user_id")).as("lo_uid")).head()
-    if (stats.isNullAt(0)) {
-      ev.unpersist()
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("user_id", ev.schema("user_id").dataType),
-          StructField("session_start", TimestampType),
-          StructField("session_end", TimestampType),
-          StructField("n_events", LongType))))
-    }
-    val hiUs = stats.getLong(1)
-    // the cutover bisects an open session (same instant the replay
-    // harness uses), so the bootstrap path is provably exercised
-    val midUs = splitInstant(ev, stats.getLong(0), hiUs, gapMinutes)
-    val sentinelUid = stats.getLong(2) - 1L
-
-    // ---- batch half: history up to the cutover ----
-    val pre = graft.operators.Events.sessionize(
-      ev.filter(unix_micros(col("ts")) < midUs), gapMinutes)
-    val rn = row_number().over(Window.partitionBy(col("user_id"))
-      .orderBy(col("session_end").desc))
-    val ranked = pre.withColumn("rn", rn)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // every session but the user's LAST is final — no later event can
-    // extend it (the last one might continue across the cutover)
-    // materialized now: the union at the end runs after the caches are
-    // released, and the finals must not recompute the batch sessionize
-    val finals = ranked.filter(col("rn") > 1)
-      .select(col("user_id"), unix_micros(col("session_start")).as("start_us"),
-        unix_micros(col("session_end")).as("end_us"), col("n_events"))
-      .localCheckpoint()
-    val initState = ranked.filter(col("rn") === 1)
-      .select(col("user_id"), unix_micros(col("session_start")),
-        unix_micros(col("session_end")), col("n_events"))
-      .as[(Long, Long, Long, Long)]
-      .groupByKey(_._1).mapValues(t => (t._2, t._3, t._4))
-
-    // ---- streaming half: post-cutover events over bootstrapped state ----
-    val replayDir = graft.Scratch.dir("graft-warm-replay").toFile
-    val src = spark.readStream.schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir.toString)
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("ts"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      .as[(Long, java.sql.Timestamp, Long, Long)]
-    val sessions = src.groupByKey(_._1)
-      .transformWithState(
-        new SessionProcessorWarmStart(gapMinutes),
-        TimeMode.EventTime(),
-        OutputMode.Append(),
-        initState)
-    val qname = "graft_events_sessions_warm"
-    val q = sessions
-      .toDF("user_id", "start_us", "end_us", "n_events")
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .start()
     try {
-      writeChunk(replayDir, dir, ev.filter(unix_micros(col("ts")) >= midUs),
-        "post")
-      q.processAllAvailable() // bootstrap + post-cutover merge
-      writeChunk(replayDir, dir, Seq((sentinelUid,
-        new java.sql.Timestamp((hiUs + gapUs + delayUs + delayUs) / 1000L),
-        -1L)).toDF("user_id", "ts", "event_id"), "sentinel")
-      q.processAllAvailable() // watermark flush of surviving state
-    } finally {
-      stopRecorded(q)
-      ranked.unpersist()
-      ev.unpersist()
-      deleteRec(replayDir)
-    }
-    spark.table(qname)
-      .filter(col("user_id") =!= sentinelUid)
-      .select(col("user_id"), col("start_us"), col("end_us"),
-        col("n_events"))
-      .union(finals)
-      .select(col("user_id"),
-        timestamp_micros(col("start_us")).as("session_start"),
-        timestamp_micros(col("end_us")).as("session_end"), col("n_events"))
+      extent(ev) match {
+        case None => emptySessions(spark, ev)
+        case Some((loUs, hiUs, loUid)) =>
+          // the cutover bisects an open session (same instant the replay
+          // harness uses), so the bootstrap path is provably exercised
+          val midUs = splitInstant(ev, loUs, hiUs)
+          // ---- batch half: history up to the cutover ----
+          val rn = row_number().over(Window.partitionBy(col("user_id"))
+            .orderBy(col("session_end").desc))
+          val ranked = graft.operators.Events.sessionize(
+              ev.filter(unix_micros(col("ts")) < midUs), GapMinutes)
+            .withColumn("rn", rn)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            // every session but the user's LAST is final — no later event
+            // can extend it (the last one might continue across the
+            // cutover); materialized now: the union at the end runs after
+            // the caches are released, and the finals must not recompute
+            // the batch sessionize
+            val finals = ranked.filter(col("rn") > 1)
+              .select(col("user_id"),
+                unix_micros(col("session_start")).as("start_us"),
+                unix_micros(col("session_end")).as("end_us"),
+                col("n_events"))
+              .localCheckpoint()
+            val initState = ranked.filter(col("rn") === 1)
+              .select(col("user_id"), unix_micros(col("session_start")),
+                unix_micros(col("session_end")), col("n_events"))
+              .as[(Long, Long, Long, Long)]
+              .groupByKey(_._1).mapValues(t => (t._2, t._3, t._4))
+            // ---- streaming half: post-cutover events over the
+            // bootstrapped state, then the flushing sentinel ----
+            val sentinel = Seq((loUid - 1L,
+                instant(hiUs + GapUs + 2L * HourUs), -1L))
+              .toDF("user_id", "ts", "event_id")
+            val sink = sentinelReplay(spark, dir, ev.schema, Seq(
+                "post" -> ev.filter(unix_micros(col("ts")) >= midUs),
+                "sentinel" -> sentinel), "append",
+                "graft_events_sessions_warm")(src =>
+                sessionInput(src).groupByKey(_._1)
+                  .transformWithState(
+                    new SessionProcessorWarmStart(GapMinutes),
+                    TimeMode.EventTime(), OutputMode.Append(), initState)
+                  .toDF("user_id", "start_us", "end_us", "n_events"))
+            sessionRows(sink.union(finals), loUid)
+          } finally ranked.unpersist()
+      }
+    } finally ev.unpersist()
   }
 
   /** Shared state machine for the transformWithState sessionizers.

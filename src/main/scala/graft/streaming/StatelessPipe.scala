@@ -53,9 +53,9 @@ object StatelessPipe {
     (out, row)
   }
 
-  /** Start the one append query, drain it and stop it. A failed drain
-    * rethrows the query's own failure, with any stop failure attached
-    * as suppressed.
+  /** Start the one append query, drain it and stop it
+    * ([[EventsStream.drain]]: a failed drain rethrows the query's own
+    * failure, with any stop failure attached as suppressed).
     */
   private def run(spark0: SparkSession, dir: String, table: String,
       name: String, transform: DataFrame => DataFrame)
@@ -63,9 +63,7 @@ object StatelessPipe {
     val spark = EventsStream.streamSession(spark0)
     val q = transform(EventsStream.source(spark, dir, table)).writeStream
       .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    catch { case t: Throwable => EventsStream.stopQuietly(t, q); throw t }
-    q.stop()
+    EventsStream.drain(q)
     (spark.table(name), q)
   }
 }

@@ -147,7 +147,7 @@ object ScaleProbe {
       }
       // streaming-state probe (r17 judge ask #5): one MG-sketch query
       // (state must stay FLAT — O(shards*capacity) regardless of
-      // volume) and one sessionizer trio (peak state tracks open
+      // volume) and one sessionizer (peak state tracks open
       // sessions ~ user count) over the scaled events, with the PEAK
       // state rows/bytes captured per run. Default on at <=10x; the
       // deeper decades re-measure batch curvature only.
@@ -155,14 +155,6 @@ object ScaleProbe {
         if (copies <= 10) "1" else "0") != "0"
       val streamingJson = if (!streamingOn) "" else {
         import graft.streaming.EventsStream
-        // solo probes run ONE query at a time (no cross-query
-        // concurrency to saturate the cores), so pin 4 state
-        // partitions in code — the bundle-tuned default of 1 would
-        // otherwise leak into the probe via the shared env default.
-        // Must precede the first stream-session build (memoized).
-        if (!sys.props.contains("graft.stream.partitions") &&
-            !sys.env.contains("SPARK_GRAFT_STREAM_PARTITIONS"))
-          sys.props("graft.stream.partitions") = "4"
         def probe(label: String,
             call: String => org.apache.spark.sql.DataFrame): String = {
           def run(d: String): (Double, Long, Long, Long, Long) = {
@@ -176,13 +168,8 @@ object ScaleProbe {
           }
           val (b1, br, bb, bsst, _) = run(sfDir)
           val (b2, _, _, _, _) = run(sfDir)
-          // between dirs: drop the base dir's bundle results so the
-          // probe doesn't retain sink frames over both fixtures (the
-          // bench never probes multiple dirs, so it never calls this)
-          EventsStream.dropBundles(spark)
           val (s1, sr, sb, ssst, spin) = run(scaled.toString)
           val (s2, _, _, _, _) = run(scaled.toString)
-          EventsStream.dropBundles(spark)
           val (bw, sw) = (math.min(b1, b2), math.min(s1, s2))
           val stateRatio = if (br > 0) sr.toDouble / br else -1.0
           System.err.println(
@@ -211,17 +198,15 @@ object ScaleProbe {
             s"""when logical rows are flat; logical rows are the """ +
             s"""state bound","state_rows_ratio":${f"$stateRatio%.2f"}}"""
         }
-        // SOLO twins: the registered entries ride the shared-ingest
-        // bundle (thirteen queries, one replay), which is the right
-        // shape for the suite but the wrong one for the probe — the
-        // state columns here must isolate ONE operator's growth. Solo
-        // runs get their state parallelism back (the session default
-        // of 2 is sized for the 13-concurrent bundle regime).
+        // each registered entry runs exactly one streaming query, so
+        // the state columns isolate one operator's growth. 4 state
+        // partitions: the session default of 1 suits fixture-sized
+        // state, the 100x fixture wants the parallelism back.
         EventsStream.setStreamShufflePartitions(spark, 4)
         val hh = probe("heavy_hitters",
-          d => EventsStream.heavyHittersSolo(spark, d))
+          d => EventsStream.heavyHittersToCompletion(spark, d))
         val sess = probe("sessionize",
-          d => EventsStream.sessionizeSolo(spark, d))
+          d => EventsStream.sessionizeToCompletion(spark, d))
         s""","streaming":{$hh,$sess}"""
       }
       val run = s"""{"copies":$copies,"sf_dir":"$sfDir",""" +

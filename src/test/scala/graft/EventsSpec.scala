@@ -623,8 +623,13 @@ class EventsSpec extends AnyFunSuite {
       stage.delete()
     }
     val qname = "graft_attr_outer_timing_test"
-    val q = graft.streaming.EventsStream.attributionOuterStart(
-      spark, ev.schema, replayDir.toString, qname)
+    val q = graft.streaming.EventsStream.attributionJoin(
+        spark.readStream.schema(ev.schema)
+          .option("pathGlobFilter", "*.parquet")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(replayDir.toString), "leftOuter")
+      .writeStream.outputMode("append").format("memory").queryName(qname)
+      .start()
     try {
       writeChunk(ev, "chunk1")
       q.processAllAvailable()
@@ -775,8 +780,6 @@ class EventsSpec extends AnyFunSuite {
 
   test("streaming xml twin runs alone: one query, the batch " +
       "formatter's (id, doc) rows, no bundle run for either stateless twin") {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
     import graft.streaming.EventsStream
     val dir = "/root/testdata/sf0.001"
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -784,28 +787,56 @@ class EventsSpec extends AnyFunSuite {
     val batch = rows(graft.operators.XmlPipe.formatDocs(
       Tables.load(spark, dir, "events").select("event_id", "props", "ts"),
       Seq("event_id")))
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit =
-        started.incrementAndGet(): Unit
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    val ss = EventsStream.streamSession(spark)
-    val c0 = EventsStream.bundleRunCount.get()
-    ss.streams.addListener(listener)
-    val stream =
-      try rows(EventsStream.xmlToCompletion(spark, dir))
-      finally ss.streams.removeListener(listener)
+    val (stream, started) = SparkTestSession.queriesStarted(
+      rows(EventsStream.xmlToCompletion(spark, dir)))
     assert(batch.nonEmpty && stream == batch)
-    assert(started.get() == 1, "the xml twin must start exactly one query")
+    assert(started == 1, "the xml twin must start exactly one query")
 
     val quality = EventsStream.qualityFilteredToCompletion(spark, dir)
     val want = graft.operators.TextStats.qualityFilter(
       Tables.load(spark, dir, "documents"))
     assert(quality.exceptAll(want).isEmpty && want.exceptAll(quality).isEmpty)
-    assert(EventsStream.bundleRunCount.get() == c0,
-      "solo path must not touch the bundle machinery")
+  }
+
+  test("every streaming entry that reads the events stream starts " +
+      "exactly one query per call and records only its own sink's " +
+      "state") {
+    import graft.streaming.EventsStream
+    val dir = "/root/testdata/sf0.001"
+    // entry -> its memory sink; None marks a stateless entry, which
+    // records no state sample at all
+    val sinks: Seq[(String, Option[String])] = Seq(
+      "events_stream_tumbling" -> Some("graft_events_stream"),
+      "events_stream_tumbling_append" -> Some("graft_events_stream_append"),
+      "events_stream_sliding" -> Some("graft_events_stream_sliding"),
+      "events_stream_session_window" ->
+        Some("graft_events_stream_session_window"),
+      "events_stream_attribution" -> Some("graft_events_stream_attribution"),
+      "events_stream_attribution_outer" ->
+        Some("graft_events_stream_attribution_outer"),
+      "events_stream_attribution_full" ->
+        Some("graft_events_stream_attribution_full"),
+      "events_stream_sessionize" -> Some("graft_events_sessions"),
+      "events_stream_sessionize_tws" -> Some("graft_events_sessions_tws"),
+      "events_stream_sessionize_warm" -> Some("graft_events_sessions_warm"),
+      "events_stream_type_profile" -> Some("graft_events_type_profile"),
+      "events_stream_heavy_hitters" ->
+        Some("graft_events_heavy_hitters_c8"),
+      "events_stream_heavy_hitters_bounds" ->
+        Some("graft_events_heavy_hitters_c2"),
+      "events_stream_dedup" -> Some("graft_events_dedup"),
+      "events_stream_fingerprint_dedup" -> Some("graft_events_fp_dedup"),
+      "events_stream_enrich" -> None,
+      "events_stream_enrich_outer" -> None)
+    sinks.foreach { case (name, sink) =>
+      EventsStream.drainStateMetrics()
+      val (rows, started) = SparkTestSession.queriesStarted(
+        SparkEntry.queries(name)(spark, dir).collect())
+      assert(started == 1, s"$name started $started streaming queries")
+      assert(EventsStream.drainStateMetrics().keySet == sink.toSet,
+        s"$name recorded state for other sinks")
+      assert(rows.nonEmpty, s"$name returned no rows")
+    }
   }
 
   test("re-running xml_events_stream replaces its memory-sink view; " +

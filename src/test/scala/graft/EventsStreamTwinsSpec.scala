@@ -5,20 +5,16 @@ import graft.streaming.EventsStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The run-sharing contract behind the streaming gate/variant groups
-  * (EventsStream.fromBundle): the FIRST member invoked on a
-  * (group, dir) is the sticky payer — it executes the bundled replay
-  * and re-executes it on every one of its own invocations (honest
-  * repeated measurement) — while every other member reads the sink
-  * the payer's run wrote (no stream re-execution), with its own
-  * state-metric sample landing in ITS drain window. Results must be
-  * invocation-order-free and equal to the batch oracles.
+/** The streaming twins that share an event stream shape — the three
+  * sessionizers, the Misra–Gries pair and the attribution join — each
+  * run as one query of their own and equal their batch oracles on a
+  * hand-built fixture with known sessions, a known type skew and
+  * known click→purchase pairs.
   *
-  * Runs on a private fixture dir so group keys cannot collide with
-  * other suites sharing the JVM-wide session.
+  * Runs on a private fixture dir so chunk-cache keys cannot collide
+  * with other suites sharing the JVM-wide session.
   */
-class EventsStreamBundleSpec extends AnyFunSuite {
-
+class EventsStreamTwinsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   /** 3 users x 2 sessions x 4 events (plus a type skew for the MG
@@ -39,7 +35,7 @@ class EventsStreamBundleSpec extends AnyFunSuite {
       (id, u, ts, tpe, k * 1.5)
     }
     val d = java.nio.file.Files
-      .createTempDirectory("graft-bundle-fixture").toString
+      .createTempDirectory("graft-twins-fixture").toString
     rows.toDF("event_id", "user_id", "ts", "event_type", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
     d
@@ -51,25 +47,16 @@ class EventsStreamBundleSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
 
-  test("sessionizer trio: first member pays, siblings sink-read, " +
-      "payer re-invocation re-runs, all equal the batch sessionizer") {
+  test("sessionizer trio: each twin records only its own state sample " +
+      "and all three equal the batch sessionizer") {
     EventsStream.drainStateMetrics()
-    val c0 = EventsStream.bundleRunCount.get()
-    // tws invoked FIRST on this dir -> tws is the payer
     val tws = EventsStream.sessionizeTwsToCompletion(spark, dir)
-    assert(EventsStream.bundleRunCount.get() == c0 + 1)
-    val mTws = EventsStream.drainStateMetrics()
-    assert(mTws.keySet == Set("graft_events_sessions_tws"),
-      s"payer drain window carries only its own sample: $mTws")
-
-    // siblings are sink reads: no new bundle execution, and each
-    // consumer's state sample lands in its own drain window
+    assert(EventsStream.drainStateMetrics().keySet ==
+      Set("graft_events_sessions_tws"))
     val fmgws = EventsStream.sessionizeToCompletion(spark, dir)
-    assert(EventsStream.bundleRunCount.get() == c0 + 1)
     assert(EventsStream.drainStateMetrics().keySet ==
       Set("graft_events_sessions"))
     val warm = EventsStream.sessionizeWarmStartToCompletion(spark, dir)
-    assert(EventsStream.bundleRunCount.get() == c0 + 1)
     assert(EventsStream.drainStateMetrics().keySet ==
       Set("graft_events_sessions_warm"))
 
@@ -81,40 +68,23 @@ class EventsStreamBundleSpec extends AnyFunSuite {
     assert(sessionSet(tws) == batch)
     assert(sessionSet(fmgws) == batch)
     assert(sessionSet(warm) == batch)
-
-    // the payer re-runs the bundle on its own next invocation
-    // (repeated measurement must measure, not serve a memo) ...
-    EventsStream.sessionizeTwsToCompletion(spark, dir)
-    assert(EventsStream.bundleRunCount.get() == c0 + 2)
-    // ... while consumers keep sink-reading
-    EventsStream.sessionizeToCompletion(spark, dir)
-    assert(EventsStream.bundleRunCount.get() == c0 + 2)
   }
 
-  test("heavy-hitters pair rides the shared ingest: both sketches " +
-      "sink-read the run the session payer already paid for; values " +
-      "match batch truth") {
+  test("heavy-hitters pair: capacity 8 equals batch truth, capacity 2 " +
+      "honors the Misra-Gries bound") {
     val truth = Tables.load(spark, dir, "events")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = truth.values.sum
 
-    // the sessionizer test above already created this (group, dir)
-    // bundle with tws as the sticky payer — the heavy-hitter members
-    // of the SAME merged ingest group are pure consumers here
-    val c0 = EventsStream.bundleRunCount.get()
     val exact = EventsStream.heavyHittersToCompletion(spark, dir)
-    assert(EventsStream.bundleRunCount.get() == c0,
-      "a non-payer member must sink-read, not re-run the ingest")
     // capacity 8 > 3 distinct types: every counter exact
     val got = exact.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == truth)
 
-    // the decrement-regime twin reads the same bundle's sink
     val est = EventsStream.heavyHittersToCompletion(spark, dir,
       capacity = 2)
-    assert(EventsStream.bundleRunCount.get() == c0)
     val estMap = est.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // Misra-Gries guarantee per type: 0 <= true - est <= N/(cap+1)
@@ -125,12 +95,8 @@ class EventsStreamBundleSpec extends AnyFunSuite {
     }
   }
 
-  test("attribution matrix rides the shared ingest (sink reads) and " +
-      "equals the batch interval join") {
-    val c0 = EventsStream.bundleRunCount.get()
+  test("attribution equals the batch interval join") {
     val inner = EventsStream.attributionToCompletion(spark, dir)
-    assert(EventsStream.bundleRunCount.get() == c0,
-      "attribution members of the merged ingest group must sink-read")
     val got = inner.select(col("user_id"), col("click_id"),
         col("purchase_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -150,14 +116,13 @@ class EventsStreamBundleSpec extends AnyFunSuite {
     assert(truth.nonEmpty && got == truth)
   }
 
-  test("non-registered parameterizations run solo, not through a " +
-      "shared bundle") {
-    val c0 = EventsStream.bundleRunCount.get()
-    val solo = EventsStream.heavyHittersToCompletion(spark, dir,
-      capacity = 8, shards = 1)
-    assert(solo.collect().nonEmpty)
-    assert(EventsStream.bundleRunCount.get() == c0,
-      "solo path must not touch the bundle machinery")
+  test("a non-registered heavy-hitters parameterization (shards = 1) " +
+      "runs exactly one query of its own") {
+    val (solo, started) = SparkTestSession.queriesStarted(
+      EventsStream.heavyHittersToCompletion(spark, dir,
+        capacity = 8, shards = 1).collect())
+    assert(solo.nonEmpty)
+    assert(started == 1, s"$started queries started")
   }
 
   test("scale-probe partition override: setStreamShufflePartitions " +

@@ -749,4 +749,38 @@ class OverflowSpec extends AnyFunSuite {
     assert(got == Seq(("src0", 10L, 10000L, target.toLong,
       Some(epochs.toLong))), s"got $got")
   }
+
+  test("corrMatrix envelope: centi-unit |v| = 3.0e9 (v² = 9.0e18 < " +
+      "2^63) computes the exact rational; |v| = 3.1e9 (v² = 9.61e18) " +
+      "fails with ARITHMETIC_OVERFLOW instead of a wrong number") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    // claim (Profile.corrMatrix scaladoc): per-row products of
+    // centi-unit values are int64, so |round(v * 100)| < ~3.04e9
+    // (sqrt(2^63)). Inside: x = ±3.0e7 (3.0e9 centi-units) squares to
+    // 9.0e18 per row; the DECIMAL(38,0) sums then carry 1.8e19 exactly.
+    val cols = Seq("x" -> "x", "y" -> "y")
+    val inside = Seq((3.0e7, 1.0), (-3.0e7, 2.0), (0.0, 3.0))
+      .toDF("x", "y")
+    val row = graft.operators.Profile.corrMatrix(inside, cols)
+      .select("n", "slope", "r2").as[(Long, Double, Double)].collect()
+    // exact sufficient statistics in centi-units: sx = 0, sy = 600,
+    // sxx = 1.8e19, syy = 140000, sxy = 3e11 - 6e11 = -3e11
+    val num = BigInt(3) * BigInt(-300000000000L)
+    val den = BigInt(3) * BigInt("18000000000000000000")
+    val deny = BigInt(3) * 140000 - BigInt(600) * 600
+    assert(row.toSeq == Seq((3L, num.toDouble / den.toDouble,
+      num.toDouble * num.toDouble / (den.toDouble * deny.toDouble))),
+      row.mkString(", "))
+    // past the bound: 3.1e9 centi-units square to 9.61e18 > 2^63 - 1
+    val over = Seq((3.1e7, 1.0), (0.0, 2.0)).toDF("x", "y")
+    val e = intercept[Exception] {
+      graft.operators.Profile.corrMatrix(over, cols).collect()
+    }
+    def messages(x: Throwable): Seq[String] =
+      if (x == null) Nil
+      else Option(x.getMessage).toSeq ++ messages(x.getCause)
+    assert(messages(e).exists(_.contains("ARITHMETIC_OVERFLOW")),
+      messages(e).mkString(" | "))
+  }
 }

@@ -10,6 +10,26 @@ object SparkTestSession {
     f.delete()
   }
 
+  /** Run `f`, counting the streaming queries started on the stream
+    * session meanwhile. `onQueryStarted` runs before `start()` returns,
+    * so the count is complete when `f` returns.
+    */
+  def queriesStarted[T](f: => T): (T, Int) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.incrementAndGet(): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val ss = graft.streaming.EventsStream.streamSession(spark)
+    ss.streams.addListener(listener)
+    val r = try f finally ss.streams.removeListener(listener)
+    (r, started.get())
+  }
+
   lazy val spark: SparkSession = {
     val s = Sessions.builder("graft-test", "local[4]", "4")
       .config("spark.sql.warehouse.dir",

@@ -10,11 +10,10 @@ import scala.jdk.CollectionConverters._
   * copy fails the build instead of a later review.
   */
 class SpreadGuardSpec extends AnyFunSuite {
-  /** Files allowed to keep a copy: the primitive itself, and the A/B
-    * probe tool (which replays pre-optimization plan shapes verbatim)
-    * until it is deleted.
+  /** The one file allowed to repartition by `defaultParallelism`: the
+    * primitive itself.
     */
-  private val exempt = Set("Tables.scala", "AbProbe.scala")
+  private val exempt = Set("Tables.scala")
 
   /** `repartition(` calls whose partition count is `defaultParallelism`,
     * directly or through a `val` bound to it in the same file.
