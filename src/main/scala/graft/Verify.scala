@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -24,8 +27,16 @@ object Verify {
       val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch {
+        case e: InterruptedException =>
+          Thread.currentThread().interrupt() // and end the run
+          throw e
+        case NonFatal(e) =>
+          val root = org.apache.commons.lang3.exception.ExceptionUtils
+            .getRootCause(e)
+          System.err.println(s"[verify] $name failed: ${e.getClass.getName}" +
+            s": ${e.getMessage}; root cause ${root.getClass.getName}: " +
+            root.getMessage)
       }
       SparkEntry.sweepLeakedBlocks(spark, persistedBefore)
     }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.OutputStream
-
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -100,10 +98,6 @@ object Pipeline {
     }
     XmlPipe.formatDocs(df, cfg.keys, cfg.strictParity)
   }
-
-  /** Single ordered docset to a stream (the reference's stdout edge). */
-  def export(spark: SparkSession, cfg: ExportConfig, out: OutputStream): Unit =
-    XmlPipe.writeDocset(docs(spark, cfg), out)
 
   /** Sharded docsets for distributed indexing (the 100 TB edge). */
   def exportSharded(spark: SparkSession, cfg: ExportConfig, path: String): Unit =

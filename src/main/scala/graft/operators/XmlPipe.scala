@@ -2,6 +2,7 @@ package graft.operators
 
 import java.io.{BufferedOutputStream, ByteArrayOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.collection.mutable
 import scala.concurrent.Await
@@ -180,53 +181,45 @@ object XmlPipe {
     buf.toByteArray
   }
 
-  /** Scale path: write N independent, individually-well-formed docset
-    * shards (one per partition) — Sphinx distributed indexing consumes
-    * one xmlpipe source per shard, so a 100 TB export never serializes
-    * through the driver.
+  /** [[writeDocset]] to a file, all or nothing: a hidden sibling temp
+    * replaces `file` only after [[writeDocset]] returns; a failure
+    * deletes the temp and leaves `file` as it was.
     */
-  def writeShardedDocsets(docs: DataFrame, path: String): Unit = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc")).as[String]
-      .mapPartitions(it => Iterator(Header) ++ it ++ Iterator(Footer))
-      .write.mode("overwrite").text(path)
+  def writeDocsetFile(docs: DataFrame, file: String): Unit = {
+    val target = Paths.get(file).toAbsolutePath
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val out = Files.newOutputStream(tmp, StandardOpenOption.CREATE_NEW)
+      try writeDocset(docs, out) finally out.close()
+      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 
-  /** Inverse of the export — read docset shards back into rows, for
-    * migration validation ("does the index source I just produced
-    * parse back to my data?") and for consuming docsets produced by
-    * OTHER xmlpipe2 emitters. Spark-first and driver-free: the text
-    * source splits each shard on the document open tag (`lineSep`),
-    * so parsing is a narrow per-fragment regex projection — no DOM
-    * materialization, parallel over shards. Requested fields come
-    * back as UNESCAPED strings (`&amp;/&lt;/&gt;` inverted in the
-    * amp-last order that makes escape∘unescape the identity even for
-    * data that literally contains entities); a field absent from a
-    * document reads as the empty string, the xmlpipe2 convention.
-    * CDATA-wrapped bodies (mem markup, binary descriptors) come back
-    * as their rendered markup — the docset is the source of truth for
-    * those.
+  /** Scale path: one well-formed docset shard per partition
+    * (`part-NNNNN.xml`, byte for byte what [[writeDocset]] emits for
+    * that partition) through the `xmlpipe2` connector
+    * ([[graft.sources.DocsetSource]]) — Sphinx distributed indexing
+    * consumes one xmlpipe source per shard, so a 100 TB export never
+    * serializes through the driver. All or nothing: a failed job
+    * leaves the previous shards as they were.
+    */
+  def writeShardedDocsets(docs: DataFrame, path: String): Unit =
+    docs.select(col("doc")).write.format("xmlpipe2").mode("overwrite")
+      .save(path)
+
+  /** Inverse of the export through the `xmlpipe2` connector — `id`
+    * plus the requested fields as unescaped strings (absent → "") —
+    * for migration validation and for docsets from OTHER xmlpipe2
+    * emitters. CDATA-wrapped bodies (mem markup, binary descriptors)
+    * come back as their rendered markup. A malformed document id or a
+    * missing path fails naming the shard or the path.
     */
   def readDocset(spark: org.apache.spark.sql.SparkSession, path: String,
-      fields: Seq[String]): DataFrame = {
-    val unescape = (c: Column) =>
-      replace(replace(replace(c, lit("&lt;"), lit("<")),
-        lit("&gt;"), lit(">")), lit("&amp;"), lit("&"))
-    spark.read.option("lineSep", "\n<sphinx:document id=\"").text(path)
-      // the first fragment per shard is the docset header; real
-      // fragments begin with the id digits the lineSep split exposed
-      .filter(col("value").rlike("^-?[0-9]+\""))
-      .select(
-        regexp_extract(col("value"), "^(-?[0-9]+)\"", 1)
-          .cast(LongType).as("id") +:
-          fields.map { f =>
-            // quote the field name: element names are data here, not
-            // pattern syntax (a dot would otherwise match any char)
-            val q = java.util.regex.Pattern.quote(f)
-            unescape(
-              regexp_extract(col("value"), s"(?s)<$q>(.*?)</$q>", 1)).as(f)
-          }: _*)
-  }
+      fields: Seq[String]): DataFrame =
+    spark.read.format("xmlpipe2").option("fields", fields.mkString(","))
+      .load(path)
 
   /** Continuous indexing: each micro-batch of a STREAMING formatted
     * frame lands as a self-contained sharded docset under

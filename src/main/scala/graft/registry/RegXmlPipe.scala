@@ -15,6 +15,19 @@ import org.apache.spark.sql.functions._
   * shared helpers stay on [[graft.SparkEntry]] (private[graft]).
   */
 private[graft] object RegXmlPipe {
+  /** Lands `docs` (keyed by `doc_id`) as a sharded docset in a scratch
+    * dir, reads it back with `read`, and pins the result before the
+    * dir is deleted.
+    */
+  private def viaDocset(docs: DataFrame, scratch: String)(
+      read: String => DataFrame): DataFrame = {
+    val tmp = graft.Scratch.dir(scratch).toFile
+    try {
+      val out = new java.io.File(tmp, "docset").toString
+      XmlPipe.writeShardedDocsets(XmlPipe.formatDocs(docs, Seq("doc_id")), out)
+      read(out).localCheckpoint()
+    } finally deleteRecursively(tmp)
+  }
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "xml_documents" -> ((s, dir) => {
@@ -174,22 +187,14 @@ private[graft] object RegXmlPipe {
     }),
     "xml_read_roundtrip" -> ((s, dir) => {
       // export → import loop: format documents, land sharded docsets,
-      // parse them back with the docset READER — proving a produced
+      // parse them back with XmlPipe.readDocset — proving a produced
       // index source round-trips to the original values (the
       // migration-validation story). All fields come back as strings;
       // the oracle renders the same columns as text.
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      val tmp = graft.Scratch.dir("graft-xmlrt").toFile
-      val back =
-        try {
-          val out = new java.io.File(tmp, "docset").toString
-          XmlPipe.writeShardedDocsets(
-            XmlPipe.formatDocs(docs, Seq("doc_id")), out)
-          XmlPipe.readDocset(s, out,
-            Seq("doc_id", "lang", "source", "n_chars")).localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("id"))
+      viaDocset(docs, "graft-xmlrt")(out => XmlPipe.readDocset(s, out,
+        Seq("doc_id", "lang", "source", "n_chars"))).orderBy(col("id"))
     }),
 
     "xml_parse_roundtrip" -> ((s, dir) => {
@@ -198,7 +203,7 @@ private[graft] object RegXmlPipe {
       // each fragment back with Spark 4's NATIVE from_xml — typed
       // recovery (attribute id → _id, entity unescaping, int
       // re-typing) through Catalyst's own StaxXmlParser instead of
-      // the regex docset reader. Proves a produced fragment is
+      // the xmlpipe2 connector. Proves a produced fragment is
       // consumable by a stock Spark pipeline with no graft code on
       // the read side; the oracle reads the same values straight
       // from the source table. Narrow per-row projection — no
@@ -219,25 +224,17 @@ private[graft] object RegXmlPipe {
     }),
 
     "xml_dsv2_source" -> ((s, dir) => {
-      // the DataSource V2 connector end to end: export documents as
-      // sharded docsets, read them back through
+      // the DataSource V2 connector end to end by its short name:
+      // export documents as sharded docsets, read them back through
       // format("xmlpipe2") — the registered TableProvider — proving
       // the connector seam (the one a Cassandra source would plug
       // into) against the driver oracle. Same equivalence as
-      // xml_read_roundtrip, via the DSv2 scan instead of column exprs.
+      // xml_read_roundtrip, without the readDocset helper.
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      val tmp = graft.Scratch.dir("graft-dsv2q").toFile
-      val back =
-        try {
-          val out = new java.io.File(tmp, "docset").toString
-          XmlPipe.writeShardedDocsets(
-            XmlPipe.formatDocs(docs, Seq("doc_id")), out)
-          s.read.format("xmlpipe2")
-            .option("fields", "doc_id,lang,source,n_chars").load(out)
-            .localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("id"))
+      viaDocset(docs, "graft-dsv2q")(out => s.read.format("xmlpipe2")
+        .option("fields", "doc_id,lang,source,n_chars").load(out))
+        .orderBy(col("id"))
     }),
 
     "xml_dsv2_count" -> ((s, dir) => {
@@ -249,18 +246,14 @@ private[graft] object RegXmlPipe {
       // still count correctly, so the query asserts the plan shape
       // into the hashed output.
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
-      val tmp = graft.Scratch.dir("graft-dsv2c").toFile
-      try {
-        val out = new java.io.File(tmp, "docset").toString
-        XmlPipe.writeShardedDocsets(
-          XmlPipe.formatDocs(docs, Seq("doc_id")), out)
+      viaDocset(docs, "graft-dsv2c") { out =>
         val counted = s.read.format("xmlpipe2")
           .option("fields", "doc_id").load(out)
           .agg(count(lit(1)).as("n_docs"))
         val pushed = counted.queryExecution.executedPlan.toString
           .contains("PushedAggregation: [COUNT(*)]")
-        counted.withColumn("agg_pushed", lit(pushed)).localCheckpoint()
-      } finally deleteRecursively(tmp)
+        counted.withColumn("agg_pushed", lit(pushed))
+      }
     }),
 
     "corpus_manifest" -> ((s, dir) => {

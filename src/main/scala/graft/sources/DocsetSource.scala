@@ -1,7 +1,9 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
 import java.util
 
+import graft.operators.XmlPipe
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -15,31 +17,24 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 connector for the xmlpipe2 docset format:
+/** DataSource V2 connector for the xmlpipe2 docset format, and the
+  * engine's only docset codec ([[XmlPipe.writeShardedDocsets]] and
+  * [[XmlPipe.readDocset]] are this connector):
   *
   *   spark.read.format("xmlpipe2").option("fields", "text,source")
   *     .load(shardDir)
   *
-  * This is the engine's demonstration of the CONNECTOR extension
-  * point — the same `TableProvider`/`Scan`/`PartitionReader` seam a
+  * It is the same `TableProvider`/`Scan`/`PartitionReader` seam a
   * Cassandra source (F1/F2, Query.java:127-143) plugs into in a
-  * connected deployment (this sandbox has no Cassandra, so the
-  * machinery is proven on the engine's own interchange format
-  * instead). Plan integration is real, not cosmetic: one input
-  * partition per shard file (reader parallelism = shard count, the
-  * write side's sharding contract), and column pruning pushes into
-  * the scan via `SupportsPushDownRequiredColumns` — `select(one
-  * field)` parses only that field per fragment, visible as the
-  * BatchScan's pruned readSchema.
+  * connected deployment. One input partition per shard file, and
+  * column pruning pushes into the scan: `select(one field)` parses only
+  * that field per fragment, visible as the BatchScan's readSchema.
   *
   * Schema: `id` (long, from the document attribute) plus one string
   * column per requested field (absent field → empty string, the
-  * xmlpipe2 convention; entities unescaped amp-last, the exact
-  * inverse of the writer — same kernel as
-  * [[graft.operators.XmlPipe.readDocset]]'s column formulation).
-  * Each reader streams fragment-by-fragment from its shard; a shard
-  * is one writer partition, so memory is bounded by the write-side
-  * shard sizing.
+  * xmlpipe2 convention; entities unescaped by [[DocsetSource.unescape]]).
+  * Each reader streams its shard and holds one fragment at a time.
+  * Local filesystem only, like all other I/O in the engine.
   */
 class DocsetSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "xmlpipe2"
@@ -61,6 +56,12 @@ object DocsetSource {
   private[sources] def schemaFor(fields: Seq[String]): StructType =
     StructType(StructField("id", LongType, nullable = false) +:
       fields.map(f => StructField(f, StringType, nullable = false)))
+
+  /** The one xmlpipe2 unescape, inverse of [[XmlPipe.escapeText]]:
+    * amp-last, so escape∘unescape is the identity even for text that
+    * literally contains entities. */
+  private[sources] def unescape(raw: String): String =
+    raw.replace("&lt;", "<").replace("&gt;", ">").replace("&amp;", "&")
 
   /** List shard files under `path` (skips hidden/_SUCCESS entries). */
   private[sources] def shardFiles(path: String): Seq[String] = {
@@ -95,17 +96,18 @@ private[sources] class DocsetTable(tableSchema: StructType,
 /** Write side of the connector: the input contract is the formatted
   * `(id, doc)` frame [[graft.operators.XmlPipe.formatDocs]] produces;
   * each task writes one individually-well-formed docset shard
-  * (header + its partition's documents + footer) to a HIDDEN temp
-  * file, and the JOB commit performs the swap — delete old shards,
-  * rename every temp into its final name — so a job that dies with
+  * ([[XmlPipe.Header]] + its partition's `doc` bytes +
+  * [[XmlPipe.Footer]], byte for byte what [[XmlPipe.writeDocset]]
+  * emits for that partition) to a temp file in the job's HIDDEN
+  * staging dir, and the JOB commit performs the swap — move every
+  * temp onto its final name `part-NNNNN.xml`, then delete the stale
+  * `part-*` files an earlier write left — so a job that dies with
   * some tasks committed leaves the OLD docset fully intact (task
-  * failures never touch visible files; job abort deletes the temps).
+  * failures never touch visible files; job abort deletes the staging
+  * dir).
   * Only `mode("overwrite")` is supported: shard names derive from
   * partition ids, so an append would collide with the prior write's
   * names — rejected loudly rather than silently replacing data.
-  * (Renames run on the driver against the same filesystem; a
-  * cluster deployment does the same through the Hadoop FileSystem
-  * API — rename is the primitive that makes the swap near-atomic.)
   */
 private[sources] class DocsetWriteBuilder(schema: StructType, path: String)
     extends WriteBuilder with SupportsTruncate {
@@ -128,15 +130,20 @@ private[sources] class DocsetWriteBuilder(schema: StructType, path: String)
 
 private[sources] class DocsetBatchWrite(schema: StructType, path: String)
     extends BatchWrite {
+  // the job's temps live in one hidden dir that abort deletes whole: a
+  // task still running when the job fails, or one whose commit Spark
+  // no longer reports, leaves nothing beside the shards
+  private val staging =
+    new java.io.File(path, s"_staging-${java.util.UUID.randomUUID()}")
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    new java.io.File(path).mkdirs()
-    new DocsetWriterFactory(schema.fieldIndex("doc"), path)
+    staging.mkdirs()
+    new DocsetWriterFactory(schema.fieldIndex("doc"), staging.toString)
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // the swap runs only once EVERY task has succeeded, and its order
     // matters for crash atomicity: move each temp into its final name
-    // FIRST (same-directory move, so each individual swap is atomic),
+    // FIRST (same-filesystem move, so each individual swap is atomic),
     // THEN delete only the stale shards a previous wider write left
     // behind. A driver crash mid-commit thus leaves every shard name
     // with a complete file (old or new) — delete-first left a window
@@ -153,36 +160,39 @@ private[sources] class DocsetBatchWrite(schema: StructType, path: String)
       if (f.isFile && f.getName.startsWith("part-") &&
           !fresh.contains(f.getName)) f.delete()
     })
+    dropStaging()
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach { case DocsetCommit(tmpPath, _) =>
-      new java.io.File(tmpPath).delete()
-    }
+    dropStaging()
+  private def dropStaging(): Unit = {
+    Option(staging.listFiles()).foreach(_.foreach(_.delete()))
+    staging.delete()
+  }
 }
 
-private[sources] class DocsetWriterFactory(docIdx: Int, path: String)
+private[sources] class DocsetWriterFactory(docIdx: Int, staging: String)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new DocsetShardWriter(docIdx, path, partitionId)
+    new DocsetShardWriter(docIdx, staging, partitionId)
 }
 
 private[sources] case class DocsetCommit(tmpPath: String, partitionId: Int)
     extends WriterCommitMessage
 
-private[sources] class DocsetShardWriter(docIdx: Int, path: String,
+private[sources] class DocsetShardWriter(docIdx: Int, staging: String,
     partitionId: Int) extends DataWriter[InternalRow] {
   private val tmp = java.io.File.createTempFile(
-    s"_shard_$partitionId-", ".tmp", new java.io.File(path))
-  private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-    new java.io.FileOutputStream(tmp),
-    java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
-  out.write(graft.operators.XmlPipe.Header)
+    s"_shard_$partitionId-", ".tmp", new java.io.File(staging))
+  // the `doc` values' own UTF-8 bytes, as XmlPipe.writeDocset emits them
+  private val out = new java.io.BufferedOutputStream(
+    new java.io.FileOutputStream(tmp), 1 << 16)
+  out.write(XmlPipe.Header.getBytes(StandardCharsets.UTF_8))
 
   override def write(record: InternalRow): Unit =
-    out.write(record.getUTF8String(docIdx).toString)
+    record.getUTF8String(docIdx).writeTo(out)
   override def commit(): WriterCommitMessage = {
-    out.write(graft.operators.XmlPipe.Footer)
+    out.write(XmlPipe.Footer.getBytes(StandardCharsets.UTF_8))
     out.close()
     // no rename here: visibility is the JOB commit's decision
     DocsetCommit(tmp.toString, partitionId)
@@ -299,79 +309,35 @@ private[sources] class DocsetScanBuilder(full: StructType, path: String)
     if (ok) countPushed = true
     ok
   }
-  override def build(): Scan =
-    if (countPushed) new DocsetCountScan(path)
-    else new DocsetScan(required, path, bound)
+  override def build(): Scan = new DocsetScan(required, path, bound, countPushed)
 }
 
-/** COUNT(*)-pushdown scan: one long per shard file — the number of
-  * fragment open tags — summed by Spark's final aggregate.
+/** Batch scan: one input partition per shard file. Under COUNT(*)
+  * pushdown (`countOnly`) each shard yields one pre-counted row, summed
+  * by Spark's final aggregate. A path that does not exist fails naming
+  * it, so a mistyped path cannot read as an empty docset (an existing
+  * empty directory still reads as no shards).
   */
-private[sources] class DocsetCountScan(path: String) extends Scan with Batch {
-  override def readSchema(): StructType =
-    StructType(Seq(StructField("count(*)", LongType, nullable = false)))
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"xmlpipe2 $path PushedAggregation: [COUNT(*)]"
-  override def planInputPartitions(): Array[InputPartition] =
-    DocsetSource.shardFiles(path).map(DocsetPartition.apply).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(
-          partition: InputPartition): PartitionReader[InternalRow] =
-        new DocsetCountReader(
-          partition.asInstanceOf[DocsetPartition].file)
-    }
-}
-
-/** Counts `\n<sphinx:document id="` delimiters in one shard with a
-  * streamed byte match — the whole file is never materialized as a
-  * String and no fragment is parsed.
-  */
-private[sources] class DocsetCountReader(file: String)
-    extends PartitionReader[InternalRow] {
-  private var done = false
-  private var count = 0L
-  override def next(): Boolean = {
-    if (done) return false
-    val delim = ("\n<sphinx:document id=\"")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val in = new java.io.BufferedInputStream(
-      new java.io.FileInputStream(file), 1 << 16)
-    try {
-      var matched = 0
-      var b = in.read()
-      while (b >= 0) {
-        if (b == delim(matched)) {
-          matched += 1
-          if (matched == delim.length) { count += 1; matched = 0 }
-        } else if (matched > 0) {
-          // the delimiter has no internal repeated prefix beyond a
-          // restart at its own first byte, so the only fallback to
-          // check is whether the mismatching byte re-opens it
-          matched = if (b == delim(0)) 1 else 0
-        }
-        b = in.read()
-      }
-    } finally in.close()
-    done = true
-    true
-  }
-  override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-}
-
 private[sources] class DocsetScan(required: StructType, path: String,
-    bound: DocsetIdBound = DocsetIdBound()) extends Scan with Batch {
-  override def readSchema(): StructType = required
+    bound: DocsetIdBound = DocsetIdBound(), countOnly: Boolean = false)
+    extends Scan with Batch {
+  override def readSchema(): StructType =
+    if (countOnly)
+      StructType(Seq(StructField("count(*)", LongType, nullable = false)))
+    else required
   override def toBatch: Batch = this
   override def description(): String =
-    s"xmlpipe2 $path ${required.fieldNames.mkString("[", ",", "]")}" +
+    if (countOnly) s"xmlpipe2 $path PushedAggregation: [COUNT(*)]"
+    else s"xmlpipe2 $path ${required.fieldNames.mkString("[", ",", "]")}" +
       (if (bound.isTrivial) "" else s" PushedIdBound: [$bound]")
-  override def planInputPartitions(): Array[InputPartition] =
+  override def planInputPartitions(): Array[InputPartition] = {
+    if (!new java.io.File(path).exists())
+      throw new java.io.FileNotFoundException(
+        s"xmlpipe2: path does not exist: $path")
     DocsetSource.shardFiles(path).map(DocsetPartition.apply).toArray
+  }
   override def createReaderFactory(): PartitionReaderFactory =
-    new DocsetReaderFactory(required, bound)
+    new DocsetReaderFactory(required, bound, countOnly)
   override def toMicroBatchStream(
       checkpointLocation: String): MicroBatchStream =
     new DocsetMicroBatchStream(required, path)
@@ -397,9 +363,6 @@ private[sources] case class DocsetNameOffset(name: String) extends Offset {
 
 private[sources] class DocsetMicroBatchStream(required: StructType,
     path: String) extends MicroBatchStream {
-  private def filesAfter(watermark: String): Seq[String] =
-    DocsetSource.shardFiles(path)
-      .filter(f => fileName(f) > watermark)
   private def fileName(f: String): String = new java.io.File(f).getName
 
   override def initialOffset(): Offset = DocsetNameOffset("")
@@ -443,34 +406,41 @@ private[sources] case class DocsetPartition(file: String)
     extends InputPartition
 
 private[sources] class DocsetReaderFactory(required: StructType,
-    bound: DocsetIdBound = DocsetIdBound())
+    bound: DocsetIdBound = DocsetIdBound(), countOnly: Boolean = false)
     extends PartitionReaderFactory {
   override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] =
-    new DocsetPartitionReader(
-      partition.asInstanceOf[DocsetPartition].file, required, bound)
+      partition: InputPartition): PartitionReader[InternalRow] = {
+    val file = partition.asInstanceOf[DocsetPartition].file
+    if (countOnly) new DocsetCountReader(file)
+    else new DocsetPartitionReader(file, required, bound)
+  }
 }
 
-/** Streams one shard: fragments split on the document open tag, one
-  * row per fragment, parsing only the pruned columns.
-  *
-  * KEEP IN LOCKSTEP with [[graft.operators.XmlPipe.readDocset]]'s
-  * column formulation: same fragment split, same absent-field →
-  * empty-string convention, same amp-last unescape order. Two
-  * mechanisms on purpose (JVM loop here for the connector's row
-  * reader, codegen'd column exprs there) — a change to the escaping
-  * contract must land in both.
+/** COUNT(*) pushdown: one row, the shard's fragment delimiters as
+  * counted by [[DocsetScanner]], with no fragment kept or parsed. */
+private[sources] class DocsetCountReader(file: String)
+    extends PartitionReader[InternalRow] {
+  private var count = -1L
+  override def next(): Boolean = count < 0 && {
+    val scanner = new DocsetScanner(new java.io.FileInputStream(file))
+    count = 0
+    try while (scanner.advance(null)) count += 1 finally scanner.close()
+    true
+  }
+  override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
+  override def close(): Unit = ()
+}
+
+/** Streams one shard, one row per [[DocsetScanner]] fragment (one
+  * held at a time, never the shard), parsing only the pruned columns.
   */
 private[sources] class DocsetPartitionReader(file: String,
     required: StructType, bound: DocsetIdBound = DocsetIdBound())
     extends PartitionReader[InternalRow] {
-  private val fragments: Iterator[String] = {
-    val content = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // index 0 is the docset header (before the first document)
-    content.split("\n<sphinx:document id=\"").iterator.drop(1)
-  }
+  private val scanner = new DocsetScanner(new java.io.FileInputStream(file))
+  // the bytes before the first delimiter are the docset header
+  private var more = scanner.advance(null)
+  private val bytes = new java.io.ByteArrayOutputStream(1 << 12)
   private var current: InternalRow = _
 
   // no bound pushed → don't even parse the id prefix per fragment
@@ -481,8 +451,10 @@ private[sources] class DocsetPartitionReader(file: String,
     // attribute) before paying element extraction + unescape for a
     // document the filter would drop anyway. The parsed id is handed
     // to parse() so accepted fragments never pay the prefix scan twice.
-    while (fragments.hasNext) {
-      val frag = fragments.next()
+    while (more) {
+      bytes.reset()
+      more = scanner.advance(bytes)
+      val frag = bytes.toString(StandardCharsets.UTF_8)
       val id: java.lang.Long =
         if (trivialBound) null else parseId(frag)
       if (trivialBound || bound.matches(id)) {
@@ -494,12 +466,8 @@ private[sources] class DocsetPartitionReader(file: String,
   }
 
   private def parseId(frag: String): java.lang.Long = {
-    // fail with the file and fragment named: a foreign/corrupt docset
-    // whose id attribute is non-numeric should read as a data error,
-    // not a bare NumberFormatException from a nameless task (the
-    // column-expression twin readDocset drops such fragments via its
-    // rlike guard; the row reader is strict by design — silent skips
-    // in a CONNECTOR hide corruption)
+    // a non-numeric id fails naming the file: a data error, not a
+    // bare NumberFormatException from a nameless task
     val prefix = frag.takeWhile(_ != '"')
     try java.lang.Long.valueOf(prefix)
     catch {
@@ -510,27 +478,76 @@ private[sources] class DocsetPartitionReader(file: String,
     }
   }
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = scanner.close()
 
-  private def parse(frag: String, preParsedId: java.lang.Long): InternalRow = {
-    val values = required.fields.map { f =>
+  private def parse(frag: String, preParsedId: java.lang.Long): InternalRow =
+    new GenericInternalRow(required.fields.map[Any] { f =>
       if (f.name == "id") {
         if (preParsedId ne null) preParsedId else parseId(frag)
       } else {
-        val open = s"<${f.name}>"
-        val start = frag.indexOf(open)
-        val raw =
-          if (start < 0) ""
-          else {
-            val from = start + open.length
-            val end = frag.indexOf(s"</${f.name}>", from)
-            if (end < 0) "" else frag.substring(from, end)
-          }
-        // amp-last: the exact inverse of the writer's escape order
-        UTF8String.fromString(raw.replace("&lt;", "<")
-          .replace("&gt;", ">").replace("&amp;", "&"))
+        // an absent or unclosed element reads as ""
+        val open = frag.indexOf(s"<${f.name}>")
+        val from = open + f.name.length + 2
+        val end = if (open < 0) -1 else frag.indexOf(s"</${f.name}>", from)
+        UTF8String.fromString(
+          if (end < 0) "" else DocsetSource.unescape(frag.substring(from, end)))
+      }
+    })
+}
+
+/** The one fragment-delimiter scanner of the xmlpipe2 format: finds
+  * each newline + document open tag in a byte stream through one
+  * reused buffer (ASCII, so a byte match is safe on UTF-8). The scan
+  * always has a whole delimiter's length of buffer ahead of it — the
+  * tail moves to the front before each refill — so a delimiter that
+  * straddles two reads is matched in place.
+  */
+private[graft] final class DocsetScanner(in: java.io.InputStream,
+    bufferBytes: Int = DocsetScanner.BufferBytes) extends java.io.Closeable {
+  import DocsetScanner.Delimiter
+  private val buf = new Array[Byte](bufferBytes max Delimiter.length)
+  private var pos = 0
+  private var lim = 0
+  private var eof = false
+
+  /** Consumes the input through the next delimiter, appending the
+    * bytes before it to `sink` (null discards them). False when the
+    * input ends first; `sink` then holds everything up to the end.
+    */
+  def advance(sink: java.io.ByteArrayOutputStream): Boolean = {
+    def emit(to: Int): Unit = {
+      if (sink != null) sink.write(buf, pos, to - pos)
+      pos = to
+    }
+    while (true) {
+      if (lim - pos < Delimiter.length && !eof) {
+        System.arraycopy(buf, pos, buf, 0, lim - pos)
+        lim -= pos
+        pos = 0
+        val n = in.read(buf, lim, buf.length - lim)
+        if (n < 0) eof = true else lim += n
+      } else {
+        val last = lim - Delimiter.length // last start of a whole delimiter
+        var i = pos
+        while (i <= last && !(buf(i) == Delimiter(0) && java.util.Arrays.equals(
+            buf, i, i + Delimiter.length, Delimiter, 0, Delimiter.length))) i += 1
+        if (i <= last) {
+          emit(i)
+          pos += Delimiter.length
+          return true
+        }
+        if (eof) { emit(lim); return false }
+        emit(last + 1)
       }
     }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
+    false
   }
+
+  override def close(): Unit = in.close()
+}
+
+private[graft] object DocsetScanner {
+  val BufferBytes: Int = 1 << 16
+  private val Delimiter =
+    "\n<sphinx:document id=\"".getBytes(StandardCharsets.UTF_8)
 }

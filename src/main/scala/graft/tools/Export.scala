@@ -121,14 +121,12 @@ object Export {
         }
       val t0 = System.nanoTime()
       // "sharded:<dir>" → one well-formed docset per partition (the
-      // distributed-indexing path); otherwise one ordered stream.
+      // distributed-indexing path); otherwise one ordered stream, to
+      // stdout or, all or nothing, to a file.
       if (out.startsWith("sharded:")) {
         XmlPipe.writeShardedDocsets(docs, out.stripPrefix("sharded:"))
       } else if (out == "-") XmlPipe.writeDocset(docs, System.out)
-      else {
-        val fos = new java.io.FileOutputStream(out)
-        try XmlPipe.writeDocset(docs, fos) finally fos.close()
-      }
+      else XmlPipe.writeDocsetFile(docs, out)
       meter.foreach { m =>
         // listener bus is async: wait for the row count to settle
         var prev = -1L

@@ -303,6 +303,185 @@ class DocsetSourceSpec extends AnyFunSuite {
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("requires a path")),
       messages(e).mkString(" | "))
+    // a path that does not exist fails naming it — through a row scan,
+    // the COUNT(*) pushdown and readDocset — rather than reading as an
+    // empty docset
+    val missing = java.nio.file.Files.createTempDirectory("graft-dsv2-missing")
+      .resolve("no-such-docset").toString
+    try {
+      val reads: Seq[() => Any] = Seq(
+        () => spark.read.format("xmlpipe2").option("fields", "x")
+          .load(missing).collect(),
+        () => spark.read.format("xmlpipe2").option("fields", "x")
+          .load(missing).count(),
+        () => XmlPipe.readDocset(spark, missing, Seq("x")).collect())
+      reads.foreach { read =>
+        val m = messages(intercept[Exception](read()))
+        assert(m.exists(_.contains(missing)), m.mkString(" | "))
+      }
+    } finally new java.io.File(missing).getParentFile.delete()
+  }
+
+  test("a failed rewrite leaves the previous sharded docset " +
+      "byte-identical and no shard temp behind") {
+    withDocset(rows) { out =>
+      def snapshot(): Seq[(String, Seq[Byte])] =
+        new java.io.File(out).listFiles().toSeq.sortBy(_.getName).map(f =>
+          f.getName -> (if (f.isFile) java.nio.file.Files.readAllBytes(
+            f.toPath).toSeq else Seq.empty))
+      val before = snapshot()
+      assert(before.count(_._1.startsWith("part-")) == 3, before.map(_._1))
+      // partitions 0 and 1 finish about when partition 2 fails (their
+      // commits can land after the job has failed); partition 3 is still
+      // writing, its temp open
+      val n = 4
+      val body = udf { (id: Long) =>
+        if (id / 10 == 2) throw new IllegalStateException("boom in partition 2")
+        if (id / 10 == 3) Thread.sleep(20)
+        s"doc $id"
+      }
+      val failing = XmlPipe.formatDocs(spark.range(0, n * 10L, 1, n)
+        .select(col("id").as("doc_id"), body(col("id")).as("text")),
+        Seq("doc_id"))
+      intercept[Exception](XmlPipe.writeShardedDocsets(failing, out))
+      val after = snapshot()
+      assert(after.map(_._1) == before.map(_._1), after.map(_._1))
+      assert(after == before, "the previous generation changed")
+    }
+  }
+
+  test("each shard is Header + its partition's doc values + Footer, " +
+      "byte for byte, over uneven and empty partitions, and parses with " +
+      "the JDK StAX reader") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val sizes = Seq(0, 5, 1, 0, 9, 2)
+    val data = spark.sparkContext.parallelize(sizes.indices, sizes.size)
+      .mapPartitionsWithIndex { (p, _) =>
+        (0 until sizes(p)).iterator.map(k =>
+          Row(p * 100L + k, s"p$p <&> é漢 line\n$k"))
+      }
+    val docs = XmlPipe.formatDocs(spark.createDataFrame(data,
+      StructType.fromDDL("doc_id BIGINT, text STRING")), Seq("doc_id"))
+    val want = docs.select("doc").rdd.mapPartitionsWithIndex { (p, it) =>
+      Iterator(p -> it.map(_.getString(0)).mkString)
+    }.collect().toMap
+    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-bytes").toFile
+    try {
+      val out = new java.io.File(tmp, "ds")
+      XmlPipe.writeShardedDocsets(docs, out.toString)
+      val shards = out.listFiles().map(_.getName).sorted.toSeq
+      assert(shards == sizes.indices.map(p => f"part-$p%05d.xml"), shards)
+      val factory = javax.xml.stream.XMLInputFactory.newDefaultFactory()
+      // the sphinx: prefix is undeclared, as in the reference
+      factory.setProperty(javax.xml.stream.XMLInputFactory.IS_NAMESPACE_AWARE,
+        false)
+      sizes.indices.foreach { p =>
+        val f = new java.io.File(out, f"part-$p%05d.xml")
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        assert(bytes.sameElements((XmlPipe.Header + want(p) + XmlPipe.Footer)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)), f.getName)
+        val in = new java.io.FileInputStream(f)
+        try {
+          val r = factory.createXMLStreamReader(in)
+          var documents = 0
+          while (r.hasNext) {
+            if (r.next() == javax.xml.stream.XMLStreamConstants.START_ELEMENT &&
+                r.getLocalName == "sphinx:document") documents += 1
+          }
+          assert(documents == sizes(p), f.getName)
+        } finally in.close()
+      }
+    } finally SparkTestSession.deleteRecursively(tmp)
+  }
+
+  test("a shard several times the scanner buffer round-trips through " +
+      "readDocset and COUNT(*) pushdown, multi-byte text and delimiters " +
+      "straddling the buffer refills included") {
+    import graft.sources.DocsetScanner
+    import spark.implicits._
+    // short documents: the delimiter is a third of every one, so the
+    // refills cut through delimiters (checked below, not assumed)
+    val rnd = new scala.util.Random(11)
+    val alphabet = "ab <&>\"π漢字é\n&amp;"
+    val rows = (1L to 6000L).map { i =>
+      (i, (0 until rnd.nextInt(20))
+        .map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-big").toFile
+    try {
+      val out = new java.io.File(tmp, "ds").toString
+      XmlPipe.writeShardedDocsets(XmlPipe.formatDocs(
+        rows.toDF("doc_id", "body").coalesce(1), Seq("doc_id")), out)
+      val shard = new java.io.File(out).listFiles()
+        .filter(_.getName.startsWith("part-"))
+      assert(shard.length == 1 &&
+        shard.head.length() > 4L * DocsetScanner.BufferBytes,
+        shard.map(_.length()).mkString(","))
+      // replay the scanner over the shard, recording where each read
+      // ended, and require a delimiter that spans one of those ends
+      val readEnds = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val in = new java.io.FileInputStream(shard.head) {
+        private var at = 0L
+        override def read(b: Array[Byte], off: Int, len: Int): Int = {
+          val n = super.read(b, off, len)
+          if (n > 0) { at += n; readEnds += at }
+          n
+        }
+      }
+      val scanner = new DocsetScanner(in)
+      try while (scanner.advance(null)) () finally scanner.close()
+      val text = new String(java.nio.file.Files.readAllBytes(shard.head.toPath),
+        java.nio.charset.StandardCharsets.ISO_8859_1) // one char per byte
+      val delim = "\n<sphinx:document id=\""
+      val starts = Iterator.iterate(text.indexOf(delim))(
+        i => text.indexOf(delim, i + 1)).takeWhile(_ >= 0).toSeq
+      assert(starts.size == rows.size)
+      val straddled = readEnds.count(e =>
+        starts.exists(o => o < e && e < o + delim.length))
+      assert(readEnds.size > 4 && straddled > 0,
+        s"${readEnds.size} reads, $straddled cut through a delimiter")
+      val back = XmlPipe.readDocset(spark, out, Seq("body"))
+      assert(back.orderBy("id").as[(Long, String)].collect().toSeq == rows)
+      val counted = back.agg(count(lit(1)))
+      assert(counted.queryExecution.executedPlan.toString
+        .contains("PushedAggregation: [COUNT(*)]"))
+      assert(counted.collect().head.getLong(0) == rows.size)
+    } finally SparkTestSession.deleteRecursively(tmp)
+  }
+
+
+  test("the fragment scanner splits exactly like the delimiter at every " +
+      "buffer size, delimiters and partial matches straddling the reads") {
+    import graft.sources.DocsetScanner
+    val delim = "\n<sphinx:document id=\""
+    val docset = XmlPipe.Header + delim + "1\"><t>π漢</t></sphinx:document>" +
+      delim + "2\"><t>\n<sphinx:documen\n\n<sph</t></sphinx:document>" +
+      delim + delim + "-3\"><t>é</t></sphinx:document>" +
+      XmlPipe.Footer + "\n<sphinx:docum"
+    val bytes = docset.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val want = docset.split(java.util.regex.Pattern.quote(delim), -1)
+      .toSeq.drop(1)
+    assert(want.size == 4)
+    // the scanner keeps a whole delimiter's length ahead of its scan, so
+    // its buffer is never shorter than one delimiter
+    for (size <- delim.length to delim.length * 3) {
+      def scanner() =
+        new DocsetScanner(new java.io.ByteArrayInputStream(bytes), size)
+      val s = scanner()
+      val frags = scala.collection.mutable.ArrayBuffer.empty[String]
+      var more = s.advance(null) // the header
+      while (more) {
+        val frag = new java.io.ByteArrayOutputStream
+        more = s.advance(frag)
+        frags += frag.toString(java.nio.charset.StandardCharsets.UTF_8)
+      }
+      assert(frags.toSeq == want, s"buffer of $size bytes")
+      val c = scanner()
+      var delimiters = 0
+      while (c.advance(null)) delimiters += 1
+      assert(delimiters == want.size, s"count with a buffer of $size bytes")
+    }
   }
 
   test("streaming recovery: a crash between sink commit and checkpoint " +

@@ -798,47 +798,6 @@ class EventsSpec extends AnyFunSuite {
     assert(quality.exceptAll(want).isEmpty && want.exceptAll(quality).isEmpty)
   }
 
-  test("every streaming entry that reads the events stream starts " +
-      "exactly one query per call and records only its own sink's " +
-      "state") {
-    import graft.streaming.EventsStream
-    val dir = "/root/testdata/sf0.001"
-    // entry -> its memory sink; None marks a stateless entry, which
-    // records no state sample at all
-    val sinks: Seq[(String, Option[String])] = Seq(
-      "events_stream_tumbling" -> Some("graft_events_stream"),
-      "events_stream_tumbling_append" -> Some("graft_events_stream_append"),
-      "events_stream_sliding" -> Some("graft_events_stream_sliding"),
-      "events_stream_session_window" ->
-        Some("graft_events_stream_session_window"),
-      "events_stream_attribution" -> Some("graft_events_stream_attribution"),
-      "events_stream_attribution_outer" ->
-        Some("graft_events_stream_attribution_outer"),
-      "events_stream_attribution_full" ->
-        Some("graft_events_stream_attribution_full"),
-      "events_stream_sessionize" -> Some("graft_events_sessions"),
-      "events_stream_sessionize_tws" -> Some("graft_events_sessions_tws"),
-      "events_stream_sessionize_warm" -> Some("graft_events_sessions_warm"),
-      "events_stream_type_profile" -> Some("graft_events_type_profile"),
-      "events_stream_heavy_hitters" ->
-        Some("graft_events_heavy_hitters_c8"),
-      "events_stream_heavy_hitters_bounds" ->
-        Some("graft_events_heavy_hitters_c2"),
-      "events_stream_dedup" -> Some("graft_events_dedup"),
-      "events_stream_fingerprint_dedup" -> Some("graft_events_fp_dedup"),
-      "events_stream_enrich" -> None,
-      "events_stream_enrich_outer" -> None)
-    sinks.foreach { case (name, sink) =>
-      EventsStream.drainStateMetrics()
-      val (rows, started) = SparkTestSession.queriesStarted(
-        SparkEntry.queries(name)(spark, dir).collect())
-      assert(started == 1, s"$name started $started streaming queries")
-      assert(EventsStream.drainStateMetrics().keySet == sink.toSet,
-        s"$name recorded state for other sinks")
-      assert(rows.nonEmpty, s"$name returned no rows")
-    }
-  }
-
   test("re-running xml_events_stream replaces its memory-sink view; " +
       "the first frame keeps its rows") {
     val dir = "/root/testdata/sf0.001"

@@ -444,4 +444,27 @@ class XmlPipeSpec extends AnyFunSuite {
     assert(!out.toString(StandardCharsets.UTF_8).endsWith(XmlPipe.Footer))
     assert(out.size() == limit - blocks(bad) / 2)
   }
+
+  test("writeDocsetFile is all or nothing: a failing partition leaves " +
+      "neither the target nor a temp; a success lands the whole docset") {
+    val n = 6
+    val dir = java.nio.file.Files.createTempDirectory("graft-docset-file")
+    val target = dir.resolve("docset.xml").toString
+    try {
+      val bad = gatedDocs(n, per = 20, bodyLen = 10, gate = n, throwIn = 3)
+      // which in-flight partition the failure surfaces through is up to
+      // Spark's cancellation order; that it fails and leaves nothing is not
+      val err = intercept[SparkException](XmlPipe.writeDocsetFile(bad, target))
+      assert(err.getMessage.startsWith("writeDocset: partition"), err.getMessage)
+      assert(dir.toFile.list().isEmpty,
+        s"left behind: ${dir.toFile.list().mkString(", ")}")
+      val good = gatedDocs(n, per = 20, bodyLen = 10, gate = n)
+      XmlPipe.writeDocsetFile(good, target)
+      assert(dir.toFile.list().toSeq == Seq("docset.xml"))
+      val want = new ByteArrayOutputStream()
+      XmlPipe.writeDocset(good, want)
+      assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(target))
+        .sameElements(want.toByteArray))
+    } finally SparkTestSession.deleteRecursively(dir.toFile)
+  }
 }
