@@ -1,10 +1,20 @@
 package graft
 
-/** Scratch-space allocator for harness-ephemeral data: streaming
-  * replay chunks and checkpoints, lake-layout round-trip dirs, DSv2
-  * connector round-trips. On hosts with a writable /dev/shm (and
-  * headroom — below) the scratch lives on tmpfs; otherwise it falls
-  * back to the JVM's original java.io.tmpdir.
+import org.apache.spark.sql.DataFrame
+
+/** The one lifecycle for harness-ephemeral data: streaming replay
+  * chunks and checkpoints, lake-layout and interchange round-trip
+  * dirs, docset round-trips. [[landed]] and [[withDir]] create a fresh
+  * directory, run the caller's body in it and delete it afterwards, on
+  * success and on failure; [[landed]] also materializes the body's
+  * frame before the delete, so no caller can return a lazy read of
+  * files that are gone. The allocator itself ([[dir]]) is private, and
+  * `ScratchGuardSpec` keeps temp-directory creation and recursive
+  * deletes out of the rest of `src/main`.
+  *
+  * On hosts with a writable /dev/shm (and headroom — below) the
+  * scratch lives on tmpfs; otherwise it falls back to the JVM's
+  * original java.io.tmpdir.
   *
   * Why: every completion-harness micro-batch pays sink + checkpoint
   * + RocksDB commit IO, and the io_* layout queries pay manifest and
@@ -25,8 +35,8 @@ package graft
   * scratch, which otherwise follows java.io.tmpdir) to the ORIGINAL
   * disk tmpdir before moving java.io.tmpdir to tmpfs, and the
   * redirect itself is gated on tmpfs headroom. Bulk fixtures (e.g.
-  * the scale probe's Nx parquet copies) use [[diskDir]], never the
-  * tmpfs root.
+  * the scale probe's Nx parquet copies) use [[withDiskDir]], never
+  * the tmpfs root.
   *
   * Stale-entry sweep: each JVM owns one `run-<pid>` subdirectory and
   * only ever allocates inside it. At first use, sibling run dirs are
@@ -67,17 +77,13 @@ object Scratch {
   }
 
   /** Require this much usable tmpfs before pointing ephemeral IO at
-    * it: the harness working set (replay chunks + chunk cache +
-    * streaming checkpoints + RocksDB working dirs) stays well under
-    * 1 GiB at sf0.1, so 4 GiB of headroom means the redirect can
-    * never be the thing that fills /dev/shm.
+    * it: the harness working set (one query's replay chunks or
+    * round-trip files + streaming checkpoints + RocksDB working dirs)
+    * stays well under 1 GiB at sf0.1, so 4 GiB of headroom means the
+    * redirect can never be the thing that fills /dev/shm.
     */
   private val MinTmpfsBytes = 4L << 30
 
-  /** This run's scratch root: tmpfs-backed if /dev/shm is writable
-    * with headroom, else the original disk tmpdir. Always a per-pid
-    * subdirectory (the liveness unit the sweep keys on).
-    */
   /** `<parent>/graft-scratch`, created and liveness-swept — or None
     * if it can't be created. Both the tmpfs and the disk-fallback
     * paths go through here so dead runs' scratch (replay chunks,
@@ -92,6 +98,10 @@ object Scratch {
     else None
   }
 
+  /** This run's scratch root: tmpfs-backed if /dev/shm is writable
+    * with headroom, else the original disk tmpdir. Always a per-pid
+    * subdirectory (the liveness unit the sweep keys on).
+    */
   lazy val base: java.nio.file.Path = {
     val shm = new java.io.File("/dev/shm")
     val tmpfsRoot =
@@ -110,19 +120,53 @@ object Scratch {
     mine.toPath
   }
 
-  /** A fresh scratch directory under [[base]] — the drop-in for
-    * `Files.createTempDirectory(prefix)` at every harness site.
+  /** A fresh scratch directory under [[base]]. Private: callers get
+    * one through [[landed]] or [[withDir]], which delete it.
     */
-  def dir(prefix: String): java.nio.file.Path =
+  private def dir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(base, prefix)
 
-  /** A fresh DISK-backed temp directory (the original tmpdir), for
-    * bulk data that must not compete with RAM: scale-probe fixture
-    * copies, anything multi-GB.
+  /** Runs `body` in a fresh scratch directory and returns its frame
+    * materialized (see [[materialized]]), so the rows stay readable
+    * after the directory is deleted — also when `body` returns a lazy
+    * read of the files it wrote. The directory is deleted on success
+    * and on failure.
     */
-  def diskDir(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(originalTmpdir), prefix)
+  def landed(prefix: String)(body: java.io.File => DataFrame): DataFrame =
+    withDir(prefix)(d => materialized(body(d)))
+
+  /** [[landed]]'s lifecycle without the materialization, for a result
+    * that never reads the directory (a memory-sink table).
+    */
+  def withDir[A](prefix: String)(body: java.io.File => A): A =
+    deletedAfter(dir(prefix))(body)
+
+  /** [[withDir]] on the DISK-backed original tmpdir, for bulk data that
+    * must not compete with RAM: scale-probe fixture copies, anything
+    * multi-GB.
+    */
+  def withDiskDir[A](prefix: String)(body: java.io.File => A): A =
+    deletedAfter(java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(originalTmpdir), prefix))(body)
+
+  private def deletedAfter[A](d: java.nio.file.Path)(
+      body: java.io.File => A): A = {
+    val f = d.toFile
+    try body(f) finally deleteRec(f)
+  }
+
+  /** `df` as an eager `localCheckpoint`, or as it is when its plan
+    * already is one (a `LogicalRDD` leaf over a checkpointed RDD):
+    * re-checkpointing would only duplicate the cached blocks. A
+    * `LogicalRDD` over a plain RDD (`createDataFrame(rdd, schema)`)
+    * still reads its input lazily, so it is checkpointed.
+    */
+  private[graft] def materialized(df: DataFrame): DataFrame =
+    df.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD
+          if lr.rdd.isCheckpointed => df
+      case _ => df.localCheckpoint()
+    }
 
   /** Point the JVM's java.io.tmpdir at the tmpfs scratch root, so
     * the IMPLICIT ephemeral paths follow too: Spark's auto-created

@@ -64,20 +64,16 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, String), DataFrame]()
 
-  /** Memoize `build` under (s, dir, name), checkpointing the result
-    * unless it already is one (an operator may hand back an
-    * already-pinned frame — re-checkpointing would duplicate cache).
+  /** Memoize `build` under (s, dir, name), materialized through
+    * [[Scratch.materialized]] (an operator may hand back an
+    * already-pinned frame, which is kept as it is).
     */
   private[graft] def memoFrame(s: SparkSession, dir: String,
       name: String)(build: => DataFrame): DataFrame = {
     val key = (s, dir, name)
     val hit = frameMemo.get(key)
     if (hit != null) return hit
-    val built = build
-    val frame = built.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => built
-      case _ => built.localCheckpoint()
-    }
+    val frame = Scratch.materialized(build)
     val prev = frameMemo.putIfAbsent(key, frame)
     if (prev != null) {
       // lost the race: free the redundant checkpoint's blocks now —
@@ -304,12 +300,6 @@ object SparkEntry {
     "trim(" + Scrub.HtmlRules.foldLeft(e) { case (acc, (pat, repl)) =>
       s"regexp_replace($acc, ${q(pat)}, ${q(repl)}, 'g')"
     } + ")"
-  }
-
-  /** Recursive temp-dir cleanup for the sink round-trip queries. */
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.

@@ -10,7 +10,7 @@ import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
 import graft.functions.{MemMarkup, Render}
-import org.apache.spark.{FutureAction, SparkException}
+import org.apache.spark.{FutureAction, SparkException, TaskContext, TaskKilledException}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
@@ -121,8 +121,12 @@ object XmlPipe {
     *
     * A failed partition job or an exception from `out` cancels every
     * job still in flight and is rethrown as a `SparkException` naming
-    * the partition, with the original as its cause; an interrupt of the
-    * calling thread cancels them too and is rethrown as it is. The
+    * the partition, with the original as its cause. A failing task
+    * also fails every other job in flight on the same RDD, so the
+    * partition named is the one whose task threw ([[PartitionFailed]]
+    * in the cause chain), not the one the sink was awaiting; an `out`
+    * failure names the partition being written. An interrupt of the
+    * calling thread cancels the jobs too and is rethrown as it is. The
     * footer is never written after a failure, so a truncated docset
     * cannot look complete.
     */
@@ -156,11 +160,14 @@ object XmlPipe {
         bos.flush()
       } catch {
         case e @ (NonFatal(_) | _: InterruptedException) =>
+          val failed = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+            .collectFirst { case f: PartitionFailed => f.partition }
+            .getOrElse(p)
           val err = e match {
             case _: InterruptedException => e
             case _ => new SparkException(
-              if (p < n) s"writeDocset: partition $p of $n failed; " +
-                "the docset is truncated and has no footer"
+              if (failed < n) s"writeDocset: partition $failed of $n " +
+                "failed; the docset is truncated and has no footer"
               else "writeDocset: writing the docset footer failed", e)
           }
           inFlight.foreach { case (_, job) =>
@@ -172,12 +179,23 @@ object XmlPipe {
     }
   }
 
+  /** A [[writeDocset]] task failure, tagged with the partition whose
+    * task threw.
+    */
+  private final class PartitionFailed(val partition: Int, cause: Throwable)
+      extends RuntimeException(s"partition $partition: $cause", cause)
+
   /** One partition's documents as one UTF-8 block (the `doc` column of
     * the sink's single-column rows).
     */
   private def encodeBlock(rows: Iterator[InternalRow]): Array[Byte] = {
     val buf = new ByteArrayOutputStream(1 << 16)
-    rows.foreach(_.getUTF8String(0).writeTo(buf))
+    try rows.foreach(_.getUTF8String(0).writeTo(buf))
+    catch {
+      case e: TaskKilledException => throw e
+      case NonFatal(e) =>
+        throw new PartitionFailed(TaskContext.getPartitionId(), e)
+    }
     buf.toByteArray
   }
 

@@ -141,15 +141,10 @@ private[graft] object RegEventsA {
     "events_stream_foreach" -> ((s, dir) => {
       // foreachBatch programmable sink: stream -> per-batch parquet
       // append -> re-read; hashed against the events table itself
-      val tmp = graft.Scratch.dir("graft-feb").toFile
-      // localCheckpoint() is EAGER: the sink files are fully read into
-      // block storage before the finally deletes them — the lifetime
-      // this relies on, so don't swap in a lazy checkpoint/persist
-      val back =
-        try graft.streaming.EventsStream
-          .foreachBatchToParquet(s, dir, tmp.toString).localCheckpoint()
-        finally deleteRecursively(tmp)
-      back.orderBy(col("event_id"))
+      Scratch.landed("graft-feb") { tmp =>
+        graft.streaming.EventsStream
+          .foreachBatchToParquet(s, dir, tmp.toString)
+      }.orderBy(col("event_id"))
     }),
     "events_stream_attribution" -> ((s, dir) => {
       // stream-stream interval join (click -> purchase within 1 h per

@@ -47,8 +47,7 @@ private[graft] object RegIo {
       // inside survivors); LayoutSpec proves files actually got
       // skipped. At 100 TB this is listing-level pruning — the
       // manifest stays one row per file.
-      val tmp = graft.Scratch.dir("graft-skip").toFile
-      try {
+      Scratch.landed("graft-skip") { tmp =>
         t(s, dir, "lineitem")
           .repartitionByRange(8, col("l_orderkey"))
           .sortWithinPartitions(col("l_orderkey"))
@@ -57,8 +56,7 @@ private[graft] object RegIo {
         Layout.skipScan(s, tmp.toString, man, "l_orderkey", 1000L, 2000L)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
           .orderBy(col("l_orderkey"), col("l_linenumber"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
     "io_compaction" -> ((s, dir) => {
       // small-file compaction: 64 round-robin shards rewritten to
@@ -66,15 +64,13 @@ private[graft] object RegIo {
       // (file counts driven by ROW COUNT, so they're exact on both
       // sides) rides with content proof re-aggregated from the
       // compacted directory.
-      val tmpIn = graft.Scratch.dir("graft-cmp-in").toFile
-      val tmpOut = graft.Scratch.dir("graft-cmp-out").toFile
-      try {
+      Scratch.landed("graft-cmp") { tmp =>
+        val (tmpIn, tmpOut) = (s"$tmp/in", s"$tmp/out")
         t(s, dir, "events")
           .select(col("event_id"), col("event_type"), col("value"))
-          .repartition(64).write.mode("overwrite").parquet(tmpIn.toString)
-        val stats = Layout.compact(s, tmpIn.toString, tmpOut.toString,
-          "event_id", 2000L)
-        val back = s.read.parquet(tmpOut.toString)
+          .repartition(64).write.mode("overwrite").parquet(tmpIn)
+        val stats = Layout.compact(s, tmpIn, tmpOut, "event_id", 2000L)
+        val back = s.read.parquet(tmpOut)
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("event_id")).as("nd_ids"),
             sum(col("value").cast("decimal(18,4)"))
@@ -82,16 +78,14 @@ private[graft] object RegIo {
         stats.crossJoin(back)
           .select(col("files_before"), col("files_after"),
             col("n_rows"), col("nd_ids"), col("sum_value"))
-          .localCheckpoint()
-      } finally { deleteRecursively(tmpIn); deleteRecursively(tmpOut) }
+      }
     }),
     "io_schema_evolution" -> ((s, dir) => {
       // schema evolution on the lake path: generation 1 lacks a
       // column generation 2 added; mergeSchema unions the file
       // schemas (missing column null-filled) and the directory name
       // becomes the discovered partition column `g`.
-      val tmp = graft.Scratch.dir("graft-evo").toFile
-      try {
+      Scratch.landed("graft-evo") { tmp =>
         val o = t(s, dir, "orders")
         o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_totalprice"))
@@ -104,8 +98,7 @@ private[graft] object RegIo {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderpriority"), col("g").cast("long").as("g"))
           .orderBy(col("o_orderkey"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
     "ivm_stream" -> ((s, dir) => {
       // q_ivm_agg's delta replayed as a 3-micro-batch STREAM, state
@@ -232,14 +225,10 @@ private[graft] object RegIo {
       val cols = Seq("doc_id", "source", "text")
       val schema = org.apache.spark.sql.types.StructType(
         cols.map(n => docs.schema(n)))
-      val tmp = graft.Scratch.dir("graft-jsonl-rt").toFile
-      val back =
-        try {
-          JsonlExport.writeShards(docs.repartition(4), cols, tmp.toString)
-          // materialize before the shards are deleted
-          JsonlSource.read(s, tmp.toString, schema).localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("doc_id"))
+      Scratch.landed("graft-jsonl-rt") { tmp =>
+        JsonlExport.writeShards(docs.repartition(4), cols, tmp.toString)
+        JsonlSource.read(s, tmp.toString, schema)
+      }.orderBy(col("doc_id"))
     }),
 
     "jsonl_corrupt_audit" -> ((s, dir) => {
@@ -259,20 +248,16 @@ private[graft] object RegIo {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("source",
           org.apache.spark.sql.types.StringType)))
-      val tmp = graft.Scratch.dir("graft-jsonl-dirty").toFile
-      val r =
-        try {
-          clean.union(bad).coalesce(2).write.mode("overwrite")
-            .text(tmp.toString)
-          JsonlSource.readWithCorrupt(s, tmp.toString, schema)
-            .agg(
-              count(when(col("_corrupt").isNull, 1)).as("n_clean"),
-              sum(when(col("_corrupt").isNull, col("doc_id")))
-                .cast("long").as("clean_id_sum"),
-              count(col("_corrupt")).as("n_corrupt"))
-            .localCheckpoint()
-        } finally deleteRecursively(tmp)
-      r
+      Scratch.landed("graft-jsonl-dirty") { tmp =>
+        clean.union(bad).coalesce(2).write.mode("overwrite")
+          .text(tmp.toString)
+        JsonlSource.readWithCorrupt(s, tmp.toString, schema)
+          .agg(
+            count(when(col("_corrupt").isNull, 1)).as("n_clean"),
+            sum(when(col("_corrupt").isNull, col("doc_id")))
+              .cast("long").as("clean_id_sum"),
+            count(col("_corrupt")).as("n_corrupt"))
+      }
     }),
 
     "csv_roundtrip" -> ((s, dir) => {
@@ -282,13 +267,10 @@ private[graft] object RegIo {
       val cols = Seq("doc_id", "source", "text")
       val schema = org.apache.spark.sql.types.StructType(
         cols.map(n => docs.schema(n)))
-      val tmp = graft.Scratch.dir("graft-csv-rt").toFile
-      val back =
-        try {
-          CsvIO.writeShards(docs.repartition(4), cols, tmp.toString)
-          CsvIO.read(s, tmp.toString, schema).localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("doc_id"))
+      Scratch.landed("graft-csv-rt") { tmp =>
+        CsvIO.writeShards(docs.repartition(4), cols, tmp.toString)
+        CsvIO.read(s, tmp.toString, schema)
+      }.orderBy(col("doc_id"))
     }),
 
     "orc_roundtrip" -> ((s, dir) => {
@@ -297,13 +279,10 @@ private[graft] object RegIo {
       // self-described so no dialect to pin). events is the richest
       // fixture typewise: timestamp (µs), double, strings, longs.
       val ev = t(s, dir, "events")
-      val tmp = graft.Scratch.dir("graft-orc-rt").toFile
-      val back =
-        try {
-          ev.repartition(4).write.mode("overwrite").orc(tmp.toString)
-          s.read.schema(ev.schema).orc(tmp.toString).localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("event_id"))
+      Scratch.landed("graft-orc-rt") { tmp =>
+        ev.repartition(4).write.mode("overwrite").orc(tmp.toString)
+        s.read.schema(ev.schema).orc(tmp.toString)
+      }.orderBy(col("event_id"))
     }),
 
     "avro_roundtrip" -> ((s, dir) => {
@@ -311,16 +290,13 @@ private[graft] object RegIo {
       // spark-avro isn't on the bundled classpath, so AvroIO drives
       // the public AvroKeyOutput/InputFormat Hadoop path instead)
       val ev = t(s, dir, "events")
-      val tmp = graft.Scratch.dir("graft-avro-rt").toFile
-      // the Hadoop committer requires a NONEXISTENT output dir: write
-      // to a subpath of the (pre-created) temp dir
-      val out = new java.io.File(tmp, "out").toString
-      val back =
-        try {
-          AvroIO.write(ev.repartition(4), out)
-          AvroIO.read(s, out, ev.schema).localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("event_id"))
+      Scratch.landed("graft-avro-rt") { tmp =>
+        // the Hadoop committer requires a NONEXISTENT output dir: write
+        // to a subpath of the (pre-created) temp dir
+        val out = new java.io.File(tmp, "out").toString
+        AvroIO.write(ev.repartition(4), out)
+        AvroIO.read(s, out, ev.schema)
+      }.orderBy(col("event_id"))
     }),
 
     // ---- SQL text-query surface over registered graft functions ----
@@ -347,23 +323,20 @@ private[graft] object RegIo {
       // aggregated from the unpartitioned original.
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"), col("ts"))
-      val tmp = graft.Scratch.dir("graft-part").toFile
-      val back =
-        try {
-          val out = new java.io.File(tmp, "events_by_day").toString
-          Layout.writeDatePartitioned(ev, "ts", out)
-          val read = s.read.parquet(out)
-            .filter(col("event_date") >= lit("2024-01-10").cast("date") &&
-              col("event_date") <= lit("2024-01-14").cast("date"))
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("value").cast("decimal(18,4)"))
-                .cast("double").as("sum_value"))
-          graft.PlanCapture.record(
-            "partition-pruned read (pre-materialize)", read)
-          read.localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("event_type"))
+      Scratch.landed("graft-part") { tmp =>
+        val out = new java.io.File(tmp, "events_by_day").toString
+        Layout.writeDatePartitioned(ev, "ts", out)
+        val read = s.read.parquet(out)
+          .filter(col("event_date") >= lit("2024-01-10").cast("date") &&
+            col("event_date") <= lit("2024-01-14").cast("date"))
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,4)"))
+              .cast("double").as("sum_value"))
+        graft.PlanCapture.record(
+          "partition-pruned read (pre-materialize)", read)
+        read
+      }.orderBy(col("event_type"))
     }),
     "io_dpp" -> ((s, dir) => {
       // dynamic partition pruning: the fact side is the same
@@ -380,30 +353,27 @@ private[graft] object RegIo {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"),
           col("ts"))
-      val tmp = graft.Scratch.dir("graft-dpp").toFile
-      val back =
-        try {
-          val outF = new java.io.File(tmp, "events_by_day").toString
-          val outD = new java.io.File(tmp, "dates_dim").toString
-          Layout.writeDatePartitioned(ev, "ts", outF)
-          // one row per calendar day, attribute g = day-of-epoch mod 7
-          ev.select(to_date(col("ts")).as("d")).distinct()
-            .withColumn("g", pmod(datediff(col("d"),
-              lit("2024-01-01").cast("date")), lit(7)))
-            .write.mode("overwrite").parquet(outD)
-          val fact = s.read.parquet(outF)
-          val dim = s.read.parquet(outD).filter(col("g") === 2)
-          val read = fact.join(broadcast(dim),
-              fact("event_date") === dim("d"))
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("value").cast("decimal(18,4)"))
-                .cast("double").as("sum_value"))
-          graft.PlanCapture.record(
-            "dpp-pruned read (pre-materialize)", read)
-          read.localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("event_type"))
+      Scratch.landed("graft-dpp") { tmp =>
+        val outF = new java.io.File(tmp, "events_by_day").toString
+        val outD = new java.io.File(tmp, "dates_dim").toString
+        Layout.writeDatePartitioned(ev, "ts", outF)
+        // one row per calendar day, attribute g = day-of-epoch mod 7
+        ev.select(to_date(col("ts")).as("d")).distinct()
+          .withColumn("g", pmod(datediff(col("d"),
+            lit("2024-01-01").cast("date")), lit(7)))
+          .write.mode("overwrite").parquet(outD)
+        val fact = s.read.parquet(outF)
+        val dim = s.read.parquet(outD).filter(col("g") === 2)
+        val read = fact.join(broadcast(dim),
+            fact("event_date") === dim("d"))
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,4)"))
+              .cast("double").as("sum_value"))
+        graft.PlanCapture.record(
+          "dpp-pruned read (pre-materialize)", read)
+        read
+      }.orderBy(col("event_type"))
     }),
     "io_dynamic_overwrite" -> ((s, dir) => {
       // partition restatement: write events partitioned by type, then
@@ -413,25 +383,21 @@ private[graft] object RegIo {
       // untouched. Oracle: the same restatement computed relationally.
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
-      val tmp = graft.Scratch.dir("graft-dyn").toFile
-      val back =
-        try {
-          val out = new java.io.File(tmp, "events_by_type").toString
-          Layout.overwritePartitionsDynamic(ev, "event_type", out)
-          // 1-row scalar: the partition being restated
-          val first = ev.agg(min(col("event_type"))).head().getString(0)
-          Layout.overwritePartitionsDynamic(
-            ev.filter(col("event_type") === first)
-              .withColumn("value", col("value") * 2),
-            "event_type", out)
-          s.read.parquet(out)
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("value").cast("decimal(18,4)"))
-                .cast("double").as("sum_value"))
-            .localCheckpoint()
-        } finally deleteRecursively(tmp)
-      back.orderBy(col("event_type"))
+      Scratch.landed("graft-dyn") { tmp =>
+        val out = new java.io.File(tmp, "events_by_type").toString
+        Layout.overwritePartitionsDynamic(ev, "event_type", out)
+        // 1-row scalar: the partition being restated
+        val first = ev.agg(min(col("event_type"))).head().getString(0)
+        Layout.overwritePartitionsDynamic(
+          ev.filter(col("event_type") === first)
+            .withColumn("value", col("value") * 2),
+          "event_type", out)
+        s.read.parquet(out)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,4)"))
+              .cast("double").as("sum_value"))
+      }.orderBy(col("event_type"))
     }),
 
     // ---- typed Aggregator (UDAF) surface ----

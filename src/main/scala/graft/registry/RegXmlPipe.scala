@@ -16,18 +16,15 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object RegXmlPipe {
   /** Lands `docs` (keyed by `doc_id`) as a sharded docset in a scratch
-    * dir, reads it back with `read`, and pins the result before the
-    * dir is deleted.
+    * dir and reads it back with `read`.
     */
   private def viaDocset(docs: DataFrame, scratch: String)(
-      read: String => DataFrame): DataFrame = {
-    val tmp = graft.Scratch.dir(scratch).toFile
-    try {
+      read: String => DataFrame): DataFrame =
+    Scratch.landed(scratch) { tmp =>
       val out = new java.io.File(tmp, "docset").toString
       XmlPipe.writeShardedDocsets(XmlPipe.formatDocs(docs, Seq("doc_id")), out)
-      read(out).localCheckpoint()
-    } finally deleteRecursively(tmp)
-  }
+      read(out)
+    }
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "xml_documents" -> ((s, dir) => {

@@ -81,18 +81,6 @@ object EventsStream {
       ss.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
-      // optional per-commit compaction (default off — production uses
-      // background compaction on the maintenance interval): flip on
-      // to measure the POST-COMPACTION physical footprint, the bound
-      // the r18 judge asked for on heavy_hitters' state_bytes growth
-      // (SST debt from put volume, not live state). A deployment
-      // bounds the same debt with the maintenance interval; the probe
-      // harnesses finish in seconds, under that interval, so their
-      // uncompacted footprint is the worst case by construction.
-      if (sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_COMPACT_ON_COMMIT",
-          "0") == "1")
-        ss.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "true")
     }
     ss
   }
@@ -218,67 +206,21 @@ object EventsStream {
       }
     }
 
-  /** Shared replay-harness plumbing: atomically land a chunk as ONE
-    * parquet file in the replay dir (staged write + rename, so the
-    * file stream never sees a partial file), and recursive cleanup.
-    * Used by every sentinel-replay completion harness below.
-    *
-    * Chunks are deterministic functions of (fixture dir, harness
-    * parameters, chunk name), so the first materialization is
-    * memoized and later calls — the bench's repeat runs, and sibling
-    * variants sharing a harness — land a byte-identical COPY instead
-    * of re-running the chunk's batch job (a Spark filter+write per
-    * chunk per repeat was ~25% of several harnesses' wall). The cache
-    * key embeds the chunk frame's CANONICALIZED analyzed plan, so a
-    * harness parameter that changes the frame (e.g. the heavy-hitter
-    * `shards` literal — EventsSpec runs shards = 4 then 1 on the same
-    * dir) keys a distinct entry; literal LocalRelation rows (the
-    * sentinel frames, whose data is NOT in the canonical plan text)
-    * are appended explicitly, and so is the schema: canonicalization
-    * erases column names, so two harnesses' sentinels with equal values
-    * under different names (`user_id` vs `shard`) would otherwise share
-    * a file. Keying costs one analysis, never a job.
-    * The copy takes a fresh mtime, which preserves the file-stream
-    * discovery order the harnesses encode via write sequencing and
-    * explicit setLastModified calls.
+  /** Lands a replay chunk as ONE parquet file in the replay dir: a
+    * staged write plus a rename, so the file stream never sees a
+    * partial file. Used by every sentinel-replay completion harness
+    * below.
     */
-  private lazy val chunkCacheDir: java.nio.file.Path =
-    graft.Scratch.dir("graft-chunk-cache")
-  private val chunkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  private def writeChunk(replayDir: java.io.File, sfDir: String,
-      df: DataFrame, name: String): java.io.File = {
-    val prefix = replayDir.getName.replaceAll("[0-9]+$", "")
-    val analyzed = df.queryExecution.analyzed
-    val localData = analyzed.collect {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.mkString(",")
-    }.mkString(";")
-    val key = s"$sfDir|$prefix|$name|${analyzed.canonicalized.toString}" +
-      s"|$localData|${df.schema.toDDL}"
+  private def writeChunk(replayDir: java.io.File, df: DataFrame,
+      name: String): java.io.File = {
     val target = new java.io.File(replayDir, s"$name.parquet")
-    val hit = chunkCache.get(key)
-    if (hit != null && java.nio.file.Files.isRegularFile(hit)) {
-      java.nio.file.Files.copy(hit, target.toPath): Unit
-    } else {
-      val stage = new java.io.File(replayDir, s"_stage_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, target.toPath)
-      stage.listFiles().foreach(_.delete())
-      stage.delete()
-      val cached = chunkCacheDir.resolve(
-        java.util.UUID.randomUUID().toString + s"-$name.parquet")
-      java.nio.file.Files.copy(target.toPath, cached)
-      chunkCache.put(key, cached)
-    }
+    val stage = new java.io.File(replayDir, s"_stage_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, target.toPath)
+    stage.listFiles().foreach(_.delete())
+    stage.delete()
     target
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
   }
 
   /** Streaming source over `<table>.parquet` under `dir`, with the
@@ -335,13 +277,12 @@ object EventsStream {
     * drained, recorded and stopped; the replay dir is deleted after.
     * Returns the sink table; the caller filters the sentinel out.
     */
-  private def sentinelReplay(spark: SparkSession, dir: String,
-      schema: StructType, chunks: Seq[(String, DataFrame)], mode: String,
-      qname: String)(query: DataFrame => DataFrame): DataFrame = {
-    val replayDir = graft.Scratch.dir("graft-replay").toFile
-    try {
+  private def sentinelReplay(spark: SparkSession, schema: StructType,
+      chunks: Seq[(String, DataFrame)], mode: String,
+      qname: String)(query: DataFrame => DataFrame): DataFrame =
+    graft.Scratch.withDir("graft-replay") { replayDir =>
       chunks.foldLeft(0L) { case (prev, (name, df)) =>
-        val f = writeChunk(replayDir, dir, df, name)
+        val f = writeChunk(replayDir, df, name)
         if (prev > 0L) f.setLastModified(prev + 60000L): Unit
         f.lastModified()
       }
@@ -349,8 +290,7 @@ object EventsStream {
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", "1")
         .parquet(replayDir.toString)), mode, qname)
-    } finally deleteRec(replayDir)
-  }
+    }
 
   private val HourUs = 3600L * 1000000L
   private val GapMinutes = 30
@@ -421,8 +361,7 @@ object EventsStream {
     */
   def stateInspect(spark0: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(spark0)
-    val ckptDir = graft.Scratch.dir("graft-state-ckpt").toFile
-    try {
+    graft.Scratch.landed("graft-state-ckpt") { ckptDir =>
       drain(source(spark, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -440,10 +379,7 @@ object EventsStream {
           col(s"key.${keyFields(0)}.start").as("window_start"),
           col(s"key.${keyFields(1)}").as("event_type"),
           col(s"value.${valFields(0)}").as("n"))
-        // materialize before the checkpoint dir is deleted (the state
-        // source reads its files lazily); Bench/Verify sweep the blocks
-        .localCheckpoint()
-    } finally deleteRec(ckptDir)
+    }
   }
 
   /** APPEND-mode tumbling aggregation — the production output mode for
@@ -474,7 +410,7 @@ object EventsStream {
         val sentinel = Seq((-1L, instant(hiUs + 3L * HourUs), -1L,
             sentinelType, 0.0))
           .toDF("user_id", "ts", "event_id", "event_type", "value")
-        sentinelReplay(spark, dir, ev.schema,
+        sentinelReplay(spark, ev.schema,
             Seq("chunk1" -> ev, "sentinel" -> sentinel), "append",
             "graft_events_stream_append")(
             windowAgg(_, window(col("ts"), "1 hour"), col("event_type")))
@@ -515,7 +451,7 @@ object EventsStream {
       case Some((_, hiUs, loUid)) =>
         val sentinel = Seq((loUid - 1L, instant(hiUs + 3L * HourUs), -1L))
           .toDF("user_id", "ts", "event_id")
-        sentinelReplay(spark, dir, ev.schema,
+        sentinelReplay(spark, ev.schema,
             Seq("chunk1" -> ev, "sentinel" -> sentinel), "append",
             "graft_events_stream_session_window")(
             _.withWatermark("ts", "1 hour")
@@ -692,7 +628,7 @@ object EventsStream {
         val sentinel = Seq((loUid - 1L, at, -1L, "click", 0.0),
             (loUid - 2L, at, -2L, "purchase", 0.0))
           .toDF("user_id", "ts", "event_id", "event_type", "value")
-        sentinelReplay(spark, dir, ev.schema,
+        sentinelReplay(spark, ev.schema,
             Seq("chunk1" -> ev, "sentinel" -> sentinel), "append", qname)(
             attributionJoin(_, joinType))
           .filter(col("user_id") >= loUid)
@@ -751,10 +687,9 @@ object EventsStream {
       .unionByName(o.filter(col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey"), col("o_custkey"),
           (col("cents") + 1).as("cents"), lit("I").as("op")))
-    val replayDir = graft.Scratch.dir("graft-ivm-replay").toFile
-    try {
+    graft.Scratch.landed("graft-ivm-replay") { replayDir =>
       (0 until 3).foreach { i =>
-        writeChunk(replayDir, dir, delta.filter(col("o_orderkey") % 3 === i),
+        writeChunk(replayDir, delta.filter(col("o_orderkey") % 3 === i),
           s"chunk$i")
       }
       var state = state0.localCheckpoint()
@@ -771,7 +706,7 @@ object EventsStream {
         }
         .start())
       state
-    } finally deleteRec(replayDir)
+    }
   }
 
   /** foreachBatch sink — the programmable-sink API: each micro-batch
@@ -910,7 +845,7 @@ object EventsStream {
           val sentinel = Seq((loUid - 1L,
               instant(hiUs + GapUs + 2L * HourUs), -1L))
             .toDF("user_id", "ts", "event_id")
-          sessionRows(sentinelReplay(spark, dir, ev.schema, Seq(
+          sessionRows(sentinelReplay(spark, ev.schema, Seq(
               "chunk1" -> ev.filter(unix_micros(col("ts")) < midUs),
               "chunk2" -> ev.filter(unix_micros(col("ts")) >= midUs),
               "sentinel" -> sentinel), "append", qname)(src =>
@@ -1052,7 +987,7 @@ object EventsStream {
           val midUs = (loUs + hiUs) / 2
           val sentinel = Seq((loUid - 1L, instant(hiUs + 3L * HourUs),
             "sentinel")).toDF("user_id", "ts", "event_type")
-          sentinelReplay(spark, dir, ev.schema, Seq(
+          sentinelReplay(spark, ev.schema, Seq(
               "c1" -> ev.filter(unix_micros(col("ts")) < midUs),
               "c2" -> ev.filter(unix_micros(col("ts")) >= midUs),
               "sentinel" -> sentinel), "append",
@@ -1167,7 +1102,7 @@ object EventsStream {
             col("ts"), col("event_type"))
           val sentinel = Seq((-1L, instant(hiUs + 3L * HourUs),
             "sentinel")).toDF("shard", "ts", "event_type")
-          sentinelReplay(spark, dir, sharded.schema, Seq(
+          sentinelReplay(spark, sharded.schema, Seq(
               "c1" -> sharded.filter(unix_micros(col("ts")) < midUs),
               "c2" -> sharded.filter(unix_micros(col("ts")) >= midUs),
               "sentinel" -> sentinel), "append",
@@ -1322,7 +1257,7 @@ object EventsStream {
             val sentinel = Seq((loUid - 1L,
                 instant(hiUs + GapUs + 2L * HourUs), -1L))
               .toDF("user_id", "ts", "event_id")
-            val sink = sentinelReplay(spark, dir, ev.schema, Seq(
+            val sink = sentinelReplay(spark, ev.schema, Seq(
                 "post" -> ev.filter(unix_micros(col("ts")) >= midUs),
                 "sentinel" -> sentinel), "append",
                 "graft_events_sessions_warm")(src =>

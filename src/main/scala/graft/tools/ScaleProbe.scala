@@ -112,8 +112,7 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("WARN")
     // fixtures are multi-GB at 100x — disk, never the tmpfs scratch
     // (they'd consume the RAM the streaming/replay scratch relies on)
-    val scaled = Scratch.diskDir("graft-scale-fixtures").toFile
-    try {
+    Scratch.withDiskDir("graft-scale-fixtures") { scaled =>
       buildScaled(spark, sfDir, scaled.toString, copies)
       val qs = SparkEntry.queries
       // warm both paths once (session, codegen, catalog) with the
@@ -181,9 +180,7 @@ object ScaleProbe {
           // footprint — SST files (put volume awaiting compaction) +
           // block-cache pins — so with flat logical rows it tracks
           // ingest, not state. The sst/pinned split below makes the
-          // decomposition a measured artifact fact; re-running with
-          // SPARK_GRAFT_ROCKSDB_COMPACT_ON_COMMIT=1 bounds the
-          // post-compaction residue.
+          // decomposition a measured artifact fact.
           s""""$label":{"base_s":${f"$bw%.3f"},"scaled_s":${f"$sw%.3f"},""" +
             s""""wall_ratio":${f"${sw / bw}%.2f"},""" +
             s""""base_state_rows":$br,"scaled_state_rows":$sr,""" +
@@ -238,7 +235,7 @@ object ScaleProbe {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("target/scale_probe.json"), json + "\n")
       println(json)
-    } finally deleteRec(scaled)
+    }
   }
 
   /** Merge a fresh same-scale run into a prior one: per-family the
@@ -323,10 +320,5 @@ object ScaleProbe {
     Seq("region", "nation").foreach(t =>
       Tables.load(spark, sfDir, t).write.mode("overwrite")
         .parquet(s"$out/$t.parquet"))
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(): Unit
   }
 }

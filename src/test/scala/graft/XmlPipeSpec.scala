@@ -22,6 +22,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SinkGate {
   @volatile var latch = new CountDownLatch(0)
+  /** Opened by [[OnJobFailure]] once a sink job has failed. */
+  @volatile var failed = new CountDownLatch(0)
+}
+
+/** Runs `f` when a job of one job group ends failed. */
+class OnJobFailure(group: String)(f: => Unit) extends SparkListener {
+  private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+      mine.add(e.jobId): Unit
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = e.jobResult match {
+    case _: JobFailed if mine.contains(e.jobId) => f
+    case _ => ()
+  }
 }
 
 /** Start/end times and partition of every job in one job group. */
@@ -367,16 +381,20 @@ class XmlPipeSpec extends AnyFunSuite {
 
   /** `n` partitions of `per` rows each (partition k holds ids
     * [k*per, (k+1)*per)), each with a `bodyLen`-char body. Rows of
-    * partitions after `gate` wait on [[SinkGate]]; a row of partition
-    * `throwIn` throws.
+    * partitions after `gate` wait on [[SinkGate.latch]], rows of
+    * partition `holdUntilFailed` on [[SinkGate.failed]]; a row of
+    * partition `throwIn` throws.
     */
   private def gatedDocs(n: Int, per: Int, bodyLen: Int, gate: Int,
-      throwIn: Int = -1): DataFrame = {
+      throwIn: Int = -1, holdUntilFailed: Int = -1): DataFrame = {
     val body = udf { (id: Long) =>
       val part = (id / per).toInt
       if (part == throwIn)
         throw new IllegalStateException(s"boom in partition $part")
       if (part > gate && !SinkGate.latch.await(30, TimeUnit.SECONDS))
+        throw new IllegalStateException(s"partition $part held back for 30 s")
+      if (part == holdUntilFailed &&
+          !SinkGate.failed.await(30, TimeUnit.SECONDS))
         throw new IllegalStateException(s"partition $part held back for 30 s")
       "x" * bodyLen
     }
@@ -419,6 +437,29 @@ class XmlPipeSpec extends AnyFunSuite {
     assert(!out.toString(StandardCharsets.UTF_8).endsWith(XmlPipe.Footer))
   }
 
+  test("writeDocset names the partition whose task threw, not the " +
+      "earlier partition it was awaiting when its job failed too") {
+    val n = 3 * spark.sparkContext.defaultParallelism + 2
+    val bad = n / 2
+    // the sink awaits partition bad - 1 while partition bad throws; the
+    // failing task fails every sink job on the same RDD, bad - 1's too
+    val docs = gatedDocs(n, per = 20, bodyLen = 10, gate = bad,
+      throwIn = bad, holdUntilFailed = bad - 1)
+    val group = "xmlpipe-fail-order"
+    val gate = new OnJobFailure(group)(SinkGate.failed.countDown())
+    SinkGate.failed = new CountDownLatch(1)
+    spark.sparkContext.addSparkListener(gate)
+    try {
+      val err = failingSink(group)(
+        XmlPipe.writeDocset(docs, new ByteArrayOutputStream()))
+      assert(err.getMessage.startsWith(
+        s"writeDocset: partition $bad of $n failed"), err.getMessage)
+    } finally {
+      spark.sparkContext.removeSparkListener(gate)
+      SinkGate.failed.countDown()
+    }
+  }
+
   test("writeDocset: an OutputStream failing mid-docset cancels the jobs " +
       "in flight and names the partition; no footer") {
     val n = 3 * spark.sparkContext.defaultParallelism + 2
@@ -452,10 +493,9 @@ class XmlPipeSpec extends AnyFunSuite {
     val target = dir.resolve("docset.xml").toString
     try {
       val bad = gatedDocs(n, per = 20, bodyLen = 10, gate = n, throwIn = 3)
-      // which in-flight partition the failure surfaces through is up to
-      // Spark's cancellation order; that it fails and leaves nothing is not
       val err = intercept[SparkException](XmlPipe.writeDocsetFile(bad, target))
-      assert(err.getMessage.startsWith("writeDocset: partition"), err.getMessage)
+      assert(err.getMessage.startsWith("writeDocset: partition 3 of 6 failed"),
+        err.getMessage)
       assert(dir.toFile.list().isEmpty,
         s"left behind: ${dir.toFile.list().mkString(", ")}")
       val good = gatedDocs(n, per = 20, bodyLen = 10, gate = n)
