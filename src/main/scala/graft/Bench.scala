@@ -1,41 +1,56 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The repeated-measure bench over the registered queries.
+  *
+  * Each timed run is the cost of the query's whole output: its memos
+  * are evicted first (a memo reader pays its build), the frame is
+  * built and written through the `noop` sink (no column or sort is
+  * pruned away), and the blocks the run leaked are unpersisted after
+  * it. A query publishes the median of its `repeats` runs. Its runs
+  * stop at the first failure, and a failed query is named in `failed`
+  * with its cause and counts in neither `queries` nor the total.
+  *
+  * The artifact [[run]] returns holds exactly these keys:
+  *  - `metric` ("total"), `value` (the sum of `queries`), `unit` ("sec");
+  *  - `n_queries`, `queries` (name → median s), `failed` (name →
+  *    "ExceptionClass: message");
+  *  - `queries_runs` (name → every run's seconds, in order),
+  *    `query_start_offsets_s`, `queries_gc_ms`, `queries_storage_mb`,
+  *    and for streaming entries `queries_state_rows` and
+  *    `queries_state_bytes`;
+  *  - `plan_flags`, `bnlj_names`, `bnlj_unadjudicated_names` (the
+  *    [[PlanAudit]] census over this run's plan dumps);
+  *  - `repeats`, `sf`, `plans_dir`, `canary`, and `scale_probe` with
+  *    `scale_probe_mtime_utc` (`target/scale_probe.json`, or null).
+  */
 object Bench {
+  private val json = new ObjectMapper()
+
   /** Fixed constant-work probe: a 50M-row range sum (CPU + scheduling)
     * plus a small fixed parquet scan (I/O path). The work never changes
     * across rounds, so its wall-clock is a pure measure of machine load
     * at the moment it runs. Timed at bench start/middle/end and emitted
-    * in the JSON line — a run where the canary inflates alongside query
-    * times is load-skewed, identifiable from the artifact alone (the
-    * VM-load phantom faked a minhash "regression" for two rounds before
-    * an A/B proved it; see Dedup.scala's postmortem).
+    * in the artifact — a run where the canary inflates alongside query
+    * times is load-skewed, identifiable from the artifact alone.
     */
-  private def canaryProbe(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): Double = {
+  private def canaryProbe(spark: SparkSession, sfDir: String): Double = {
     val t0 = System.nanoTime()
     spark.range(50000000L).selectExpr("sum(id)").collect()
     Tables.load(spark, sfDir, "nation").selectExpr("count(*)").collect()
-    (System.nanoTime() - t0) / 1e9
+    seconds(t0)
   }
 
-  /** Minimal JSON string escaper (backslash, quote, and all control
-    * characters) for free-text fields embedded in the artifacts.
-    */
-  private def jsonEsc(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
+  private def seconds(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
-  /** In-place median; n is small (bench repeats), exactness over speed. */
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2)
@@ -44,518 +59,227 @@ object Bench {
 
   /** Cumulative stop-the-world GC milliseconds for this JVM — local
     * mode runs driver and executors in one JVM, so the delta across a
-    * query's timed runs IS the executor GC tax that query paid (the
-    * r13 driver artifact had a ~200 s load window the canary series
-    * could only localize post-hoc; a per-query GC column makes the
-    * artifact self-diagnosing at the point of damage).
+    * query's timed runs IS the executor GC tax that query paid.
     */
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
+  private def gcMillis(): Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
 
-  /** Block-manager storage memory in use (MB) across executors — in
-    * local mode one entry. Read AFTER each query's sweep: a rising
-    * series across the suite means pinned blocks are accumulating
-    * (the r13 mid-suite pressure hypothesis this column exists to
-    * confirm or refute from the artifact alone).
+  /** Block-manager storage memory in use (MB) across executors, read
+    * after each query's sweep: a rising series across the suite means
+    * pinned blocks are accumulating.
     */
-  private def storageUsedMb(
-      spark: org.apache.spark.sql.SparkSession): Long =
+  private def storageUsedMb(spark: SparkSession): Long =
     spark.sparkContext.getExecutorMemoryStatus.values
       .map { case (max, remaining) => max - remaining }.sum / (1024 * 1024)
+
+  /** Absorb JVM, codegen and session warm-up outside the timed loop:
+    * one batch job, one untimed canary (so the timed canaries differ
+    * only by machine load), and one streaming query — the first
+    * streaming query in a JVM pays ~3 s of one-time cost (state-store
+    * coordinator, RocksDB JNI load, streaming codegen).
+    */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000).selectExpr("sum(id)").collect()
+    canaryProbe(spark, sfDir)
+    val ss = graft.streaming.EventsStream.streamSession(spark)
+    implicit val sql: org.apache.spark.sql.SQLContext = ss.sqlContext
+    import ss.implicits._
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    val q = in.toDF().selectExpr("value % 2 AS k").groupBy("k").count()
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("graft_bench_stream_warmup").start()
+    try { in.addData(1L to 100L); q.processAllAvailable() } finally q.stop()
+    graft.streaming.EventsStream.drainStateMetrics(): Unit
+  }
+
+  /** Runs every query `repeats` times (see the object doc) and returns
+    * the artifact. Each query's formatted plan, with whatever
+    * [[PlanCapture]] recorded during its first run, is written to
+    * `plansDir/<name>.txt` after that run, untimed.
+    */
+  def run(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      repeats: Int, plansDir: java.io.File): ObjectNode = {
+    plansDir.mkdirs()
+    val captureWas = PlanCapture.enabled
+    PlanCapture.enabled = true
+    try {
+      warmUp(spark, sfDir)
+      val out = json.createObjectNode()
+      val published = json.createObjectNode()
+      val failed = json.createObjectNode()
+      val runs = json.createObjectNode()
+      val offsets = json.createObjectNode()
+      val gcs = json.createObjectNode()
+      val storage = json.createObjectNode()
+      val stateRows = json.createObjectNode()
+      val stateBytes = json.createObjectNode()
+      val canary = json.createArrayNode()
+      def stampCanary(at: String): Unit = {
+        val c = canaryProbe(spark, sfDir)
+        canary.add(c)
+        System.err.println(f"BENCH canary[$at] $c%8.2f s")
+      }
+      stampCanary("start")
+      val benchT0 = System.nanoTime()
+      queries.zipWithIndex.foreach { case ((name, fn), idx) =>
+        if (idx == queries.size / 2 && idx > 0) stampCanary("middle")
+        offsets.put(name, seconds(benchT0))
+        val gc0 = gcMillis()
+        val times = Seq.newBuilder[Double]
+        var error: Option[Throwable] = None
+        var rep = 0
+        while (rep < repeats && error.isEmpty) {
+          SparkEntry.evictMemos(spark)
+          PlanCapture.drain()
+          val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+          try {
+            val t0 = System.nanoTime()
+            val df = fn(spark, sfDir)
+            df.write.format("noop").mode("overwrite").save()
+            times += seconds(t0)
+            if (rep == 0) writePlan(plansDir, name, df)
+          } catch {
+            case e: InterruptedException =>
+              Thread.currentThread().interrupt() // and end the run
+              throw e
+            case NonFatal(e) => error = Some(e)
+          }
+          SparkEntry.sweepLeakedBlocks(spark, persistedBefore)
+          rep += 1
+        }
+        gcs.put(name, gcMillis() - gc0)
+        storage.put(name, storageUsedMb(spark))
+        val sm = graft.streaming.EventsStream.drainStateMetrics()
+        if (sm.nonEmpty) {
+          stateRows.put(name, sm.values.map(_._1).sum)
+          stateBytes.put(name, sm.values.map(_._2).sum)
+        }
+        val ts = times.result()
+        val samples = runs.putArray(name)
+        ts.foreach(t => samples.add(t))
+        error match {
+          case Some(e) =>
+            val cause = s"${e.getClass.getName}: ${e.getMessage}"
+            failed.put(name, cause)
+            System.err.println(s"BENCH FAIL $name: $cause")
+          case None =>
+            published.put(name, median(ts))
+            System.err.println(
+              f"BENCH $name%-28s ${median(ts)}%8.2f s  (median of ${ts.size})")
+        }
+      }
+      stampCanary("end")
+      val total = published.elements().asScala.map(_.asDouble).sum
+      out.put("metric", "total").put("value", total).put("unit", "sec")
+      out.put("n_queries", published.size)
+      out.set[ObjectNode]("queries", published)
+      out.set[ObjectNode]("failed", failed)
+      out.set[ObjectNode]("queries_runs", runs)
+      out.set[ObjectNode]("query_start_offsets_s", offsets)
+      out.set[ObjectNode]("queries_gc_ms", gcs)
+      out.set[ObjectNode]("queries_storage_mb", storage)
+      out.set[ObjectNode]("queries_state_rows", stateRows)
+      out.set[ObjectNode]("queries_state_bytes", stateBytes)
+      planCensus(out, plansDir, queries.map(_._1).filter(published.has))
+      out.put("repeats", repeats).put("sf", sfDir)
+        .put("plans_dir", plansDir.getPath)
+      out.set[JsonNode]("canary", canary)
+      scaleProbe(out)
+      out
+    } finally PlanCapture.enabled = captureWas
+  }
+
+  private def writePlan(plansDir: java.io.File, name: String,
+      df: DataFrame): Unit = {
+    val captured = PlanCapture.drain().map { case (label, text) =>
+      s"\n==== captured: $label ====\n$text"
+    }.mkString
+    Files.writeString(new java.io.File(plansDir, s"$name.txt").toPath,
+      df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) +
+        captured)
+  }
+
+  /** Anti-pattern census over the named queries' plan dumps:
+    * CartesianProduct and single-partition exchanges are red, and
+    * anything outside [[PlanAudit]]'s adjudicated shapes is named.
+    */
+  private def planCensus(out: ObjectNode, plansDir: java.io.File,
+      names: Seq[String]): Unit = {
+    val plans = names.map(n => n -> Files.readString(
+      new java.io.File(plansDir, s"$n.txt").toPath))
+    val bnlj = plans.collect {
+      case (n, t) if t.contains("BroadcastNestedLoopJoin") => n
+    }.sorted
+    val violations =
+      plans.flatMap { case (n, t) => PlanAudit.allViolations(n, t) }.sorted
+    out.putObject("plan_flags")
+      .put("plan_files", plans.size)
+      .put("cartesian_files", plans.count(_._2.contains("CartesianProduct")))
+      .put("single_partition_exchange_files",
+        plans.count(_._2.contains("Exchange SinglePartition")))
+      .put("bnlj_files", bnlj.size)
+      .put("bnlj_unadjudicated", violations.count(_.contains("BNLJ(")))
+      .put("plan_unadjudicated", violations.size)
+    val bnljNames = out.putArray("bnlj_names")
+    bnlj.foreach(n => bnljNames.add(n))
+    val unadjudicated = out.putArray("bnlj_unadjudicated_names")
+    violations.foreach(v => unadjudicated.add(v))
+  }
+
+  /** Embeds `target/scale_probe.json` (written by `tools.ScaleProbe`)
+    * with its mtime, so a stale probe is visible as such; a missing,
+    * empty or clipped file embeds as null.
+    */
+  private def scaleProbe(out: ObjectNode): Unit = {
+    val p = Paths.get("target/scale_probe.json")
+    val probe =
+      try Some(json.readTree(p.toFile)).filter(n => n != null && n.isObject)
+      catch { case _: java.io.IOException => None }
+    out.set[JsonNode]("scale_probe", probe.orNull)
+    probe match {
+      case Some(_) => out.put("scale_probe_mtime_utc",
+        Files.getLastModifiedTime(p).toInstant.toString)
+      case None => out.putNull("scale_probe_mtime_utc")
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     Scratch.redirectTmpdir() // ephemeral IO on tmpfs (see Scratch doc)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Repeated-measure mode: run each query up to REPEATS times and
-    // report the MEDIAN (plus min) per query, so a transient load spike
-    // on the host skews at most one sample instead of the published
-    // number (the r4 and r7 driver artifacts were both load-skewed —
-    // 17 carried queries at 6-17x — and cost a round of triage each).
-    // Queries whose FIRST run exceeds REPEAT_CAP seconds get exactly
-    // ONE confirmation pass (publishing the min of the two) instead of
-    // the full repeat budget — a cost bound so a genuinely heavy query
-    // doesn't multiply, while a load-burst first sample can no longer
-    // stand unconfirmed (r8's 23.8 s events_stream_sliding was exactly
-    // that: a single over-cap sample with a quiet-run cost of ~5 s).
-    // Note the cap does NOT shield queries just under it: an ~8 s
-    // first run still re-runs repeats-1 times; only runs OVER the cap
-    // switch to the single-confirmation path.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3")
       .toInt.max(1)
-    val repeatCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT_CAP", "10.0")
-      .toDouble
+    // comma-separated name filter for local iteration (same shape as
+    // Verify's 3rd arg); unset = the full suite
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // a filtered run writes off to target/, so a local iteration pass
+    // never overwrites the committed full-suite BENCH_FULL.json
+    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
+      if (only.isDefined) "target/bench_subset.json" else "BENCH_FULL.json")
+    val plansDir = new java.io.File(
+      sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "target/bench-plans"))
     val spark = Sessions.builder("graft-bench", s"local[$cpus]", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // absorb JVM/codegen/session warm-up outside the timed loop —
-    // including one untimed canary probe, so the three timed probes
-    // below differ only by machine load, not JIT state
-    spark.range(1000).selectExpr("sum(id)").collect()
-    Tables.load(spark, sfDir, "nation").count()
-    canaryProbe(spark, sfDir)
-    // streaming machinery warm-up: the FIRST streaming query in a JVM
-    // pays ~3 s of one-time cost (state-store coordinator, RocksDB
-    // JNI load, streaming codegen paths — measured cold 4.6 s vs warm
-    // 1.3 s for the same twin). Absorb it here exactly like the batch
-    // warm-up above, so whichever streaming twin runs first is timed
-    // at steady state.
-    locally {
-      val ss = graft.streaming.EventsStream.streamSession(spark)
-      implicit val sql: org.apache.spark.sql.SQLContext = ss.sqlContext
-      import ss.implicits._
-      val in =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = in.toDF().selectExpr("value % 2 AS k").groupBy("k").count()
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_bench_stream_warmup").start()
-      try { in.addData(1L to 100L); q.processAllAvailable() } finally q.stop()
-    }
-    // per-query formatted plans, diffable round-over-round (written
-    // after each timed run so plan capture never skews the timing)
-    val plansDir = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "target/bench-plans"))
-    plansDir.mkdirs()
-    // operators that materialize through localCheckpoint record their
-    // pre-checkpoint plans + stage breadcrumbs here; appended to the
-    // query's dump below so checkpoints don't blind the plan audit
-    PlanCapture.enabled = true
-    // comma-separated name filter for local iteration (same shape as
-    // Verify's 3rd arg); unset = full suite, which is what the driver runs
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queries = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Prior round's committed per-query map: the full-artifact file on
-    // disk at startup IS last round's committed BENCH_FULL.json (this
-    // run overwrites it only at exit). Used by the requeue pass below:
-    // within-run `isSuspect` keys on published/min and cannot see a
-    // query that was slow in ALL repeats of THIS run but fast in every
-    // prior run (r14's corpus_pipeline published 6.76 s with a ~3 s
-    // cross-run truth); comparing against the committed predecessor
-    // closes that blind spot at one extra run per >2.5x mover.
-    // Subset runs write their artifact OFF to target/ — a local
-    // iteration pass must never clobber the committed repo-root
-    // BENCH_FULL.json in the working tree (an ONLY-filtered 3-query
-    // artifact posing as the 422-query close is exactly the kind of
-    // silent corruption the mtime stamp can't catch). The committed
-    // full artifact stays the cross-run comparison baseline either
-    // way; an explicit SPARK_GRAFT_BENCH_FULL overrides both.
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-      if (only.isDefined) "target/bench_subset.json"
-      else "BENCH_FULL.json")
-    val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-      "BENCH_FULL.json")
-    val priorQueries: Map[String, Double] = try {
-      val txt = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(priorPath))
-      // only a SAME-SF predecessor is comparable: a committed sf0.1
-      // artifact must not mark every query of an sf0.001 run (or vice
-      // versa) as a "regression"
-      val sfm = java.util.regex.Pattern
-        .compile("\"sf\"\\s*:\\s*\"([^\"]*)\"").matcher(txt)
-      if (!sfm.find() || sfm.group(1) != sfDir) Map.empty
-      else {
-        val m = java.util.regex.Pattern
-          .compile("\"queries\"\\s*:\\s*\\{([^}]*)\\}").matcher(txt)
-        if (!m.find()) Map.empty
-        else m.group(1).split(",").iterator.flatMap { kv =>
-          val i = kv.lastIndexOf(':')
-          if (i < 0) None
-          else try Some(kv.substring(0, i).trim
-            .stripPrefix("\"").stripSuffix("\"") ->
-            kv.substring(i + 1).trim.toDouble)
-          catch { case _: Throwable => None }
-        }.toMap
-      }
-    } catch { case _: Throwable => Map.empty }
-    // discard whatever state metrics the streaming warm-up recorded
-    graft.streaming.EventsStream.drainStateMetrics()
-    val midpoint = queries.size / 2
-    val canaries = scala.collection.mutable.ArrayBuffer.empty[Double]
-    canaries += canaryProbe(spark, sfDir)
-    System.err.println(f"BENCH canary[start] ${canaries.last}%8.2f s")
-    // wall-clock zero for the per-query start offsets stamped into the
-    // JSON: a load window on the host (visible as a canary bump) can be
-    // mapped back to exactly the queries that ran inside it post-hoc
-    val benchT0 = System.nanoTime()
-    val results = queries.zipWithIndex.map { case ((name, fn), idx) =>
-      if (idx == midpoint) {
-        canaries += canaryProbe(spark, sfDir)
-        System.err.println(f"BENCH canary[middle] ${canaries.last}%8.2f s")
-      }
-      PlanCapture.drain() // discard anything left by a previous query
-      // blocks persisted before this query (the cross-query memos and
-      // anything the warm-up left) are protected; everything NEW that
-      // is still persisted after a run is a leak to this 200+-query
-      // marathon — localCheckpoint blocks normally freed by
-      // GC+ContextCleaner pile up 3x faster under repeats and tax
-      // later queries (measured as in-suite vs isolated inflation), so
-      // the sweep runs after EVERY timed run, not just the last: each
-      // repeat then measures the same memory state as run 1.
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val startOffset = (System.nanoTime() - benchT0) / 1e9
-      val gcBefore = gcMillis()
-      // one timed run: build + count. A failed query must be VISIBLE
-      // (name + reason), not a silent ~0s entry — the run continues so
-      // one bad query can't hide the rest of the numbers.
-      def timedRun(): (Double, Option[org.apache.spark.sql.DataFrame]) = {
-        val t0 = System.nanoTime()
-        val df = try {
-          val d = fn(spark, sfDir); d.count(); Some(d)
-        } catch {
-          case e: Throwable =>
-            System.err.println(
-              s"BENCH FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            None
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        // untimed: drop blocks this run leaked before the next sample
-        SparkEntry.sweepLeakedBlocks(spark, persistedBefore)
-        (t, df)
-      }
-      val (first, df) = timedRun()
-      // plan dump from the FIRST run, before any re-runs drain capture
-      df.foreach { d =>
-        try {
-          val captured = PlanCapture.drain().map { case (label, text) =>
-            s"\n==== captured: $label ====\n$text"
-          }.mkString
-          java.nio.file.Files.writeString(
-            new java.io.File(plansDir, s"$name.txt").toPath,
-            d.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted")) + captured)
-        } catch { case _: Throwable => () }
-      }
-      // only SUCCESSFUL runs contribute to the published numbers: a
-      // re-run that fails (transient flake) would otherwise inject its
-      // short abort time into the median/min and silently deflate the
-      // artifact the repeats feature exists to protect
-      val overCap = df.isDefined && repeats > 1 && first >= repeatCap
-      if (overCap) {
-        // a first run over the cap is exactly where load windows do
-        // their damage (r13: three capped entries inflated 16-53x) —
-        // stamp a canary RIGHT HERE so the artifact shows machine
-        // load at the point of the suspect measurement, then take the
-        // confirmation pass
-        canaries += canaryProbe(spark, sfDir)
-        System.err.println(
-          f"BENCH canary[cap:$name] ${canaries.last}%8.2f s")
-      }
-      val times =
-        if (df.isEmpty || repeats == 1) Seq(first)
-        else if (overCap) {
-          // over-cap: one confirmation pass. Publishing the MIN is the
-          // right statistic here — a load burst only ever inflates a
-          // sample, so the smaller of two is strictly closer to truth.
-          PlanCapture.drain()
-          val (t, ok) = timedRun()
-          if (ok.isDefined) Seq(first, t) else Seq(first)
-        } else first +: (2 to repeats).flatMap { _ =>
-          PlanCapture.drain()
-          val (t, ok) = timedRun()
-          if (ok.isDefined) Some(t) else None
-        }
-      val published = if (overCap) times.min else median(times)
-      val gcMs = gcMillis() - gcBefore
-      val storMb = storageUsedMb(spark)
-      // streaming entries: peak state-store footprint across the
-      // entry's streaming queries (max per query name over the
-      // repeats, summed across queries) — -1 marks a batch entry
-      val sm = graft.streaming.EventsStream.drainStateMetrics()
-      val stRows = if (sm.isEmpty) -1L else sm.values.map(_._1).sum
-      val stBytes = if (sm.isEmpty) -1L else sm.values.map(_._2).sum
-      System.err.println(
-        f"BENCH $name%-28s $published%8.2f s" + (if (times.size > 1)
-          f"  (${if (overCap) "capped-min" else "median"} of ${times.size}, min ${times.min}%.2f)"
-        else ""))
-      BenchResult(name, published, times.min, startOffset, overCap,
-        gcMs, storMb, stRows, stBytes, median(times))
-    }
-    canaries += canaryProbe(spark, sfDir)
-    System.err.println(f"BENCH canary[end] ${canaries.last}%8.2f s")
-    // REQUEUE pass: any query whose published/min ratio marks it as
-    // canary-inflated (the `suspect` predicate below) gets exactly one
-    // more run AFTER the sweep, when whatever load window hit it has
-    // had the whole remaining suite to pass. Both samples are reported
-    // (`requeued`: name → [swept-run published, requeue run]) and the
-    // published number becomes the min of the two — a load burst only
-    // ever inflates a sample (the over-cap rationale above), so the
-    // artifact self-adjudicates instead of costing a triage round
-    // (r12's driver run flagged 3 suspects that quiet re-runs later
-    // disproved; this pass is that re-run, automated and in-artifact).
-    def isSuspect(r: BenchResult): Boolean =
-      r.min > 0 && r.published / r.min > 2.0 && r.published - r.min > 0.5
-    // cross-ROUND regression: published >2x the prior committed
-    // run's number for the same query (absolute floor so sub-second
-    // entries don't churn) — the one drift class neither isSuspect
-    // nor the cap can see (all repeats slow in this run only).
-    // Threshold 2.0 (was 2.5): the r16 judge found a 2.2x mover
-    // sailing into the committed artifact un-requeued; a >2x move
-    // that persists through its requeue is exactly what the
-    // adjudication machinery exists to name, at one extra run each.
-    def isRegression(r: BenchResult): Boolean =
-      priorQueries.get(r.name).exists(p =>
-        p > 0 && r.published / p > 2.0 && r.published - p > 0.5)
-    val fnByName = queries.toMap
-    // capped entries are requeued UNCONDITIONALLY: their published
-    // number is already min-of-2, so the published/min ratio can never
-    // mark them suspect — yet both samples were taken back-to-back and
-    // a load window covers both (r13: multimodal_audio_meta published
-    // 36.4 s capped-min with an isolated truth of 0.68 s). One
-    // end-of-suite re-run per capped entry closes that blind spot at
-    // bounded cost.
-    val regressionNames = results
-      .filter(r => isRegression(r) && !isSuspect(r) && !r.overCap)
-      .map(_.name)
-    if (regressionNames.nonEmpty) System.err.println(
-      s"BENCH regression-vs-prior requeue: ${regressionNames.mkString(",")}")
-    val requeued = results
-      .filter(r => isSuspect(r) || r.overCap || isRegression(r)).map { r =>
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      PlanCapture.drain()
-      val t0 = System.nanoTime()
-      val ok = try { fnByName(r.name)(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"BENCH requeue FAIL ${r.name}: $e"); false }
-      val t = (System.nanoTime() - t0) / 1e9
-      SparkEntry.sweepLeakedBlocks(spark, persistedBefore)
-      System.err.println(
-        f"BENCH requeue ${r.name}%-28s $t%8.2f s (was ${r.published}%.2f)")
-      r.name -> (if (ok) Some(t) else None)
-    }.toMap
-    val adjudicated0 = results.map { r =>
-      requeued.get(r.name).flatten match {
-        case Some(t) => r.copy(published = math.min(r.published, t),
-          min = math.min(r.min, t))
-        case _ => r
-      }
-    }
-    // self-audit AFTER the requeue pass: anything still suspect here
-    // was >2x its own min twice in a row — a sustained load window
-    // (cross-check the canary series) or genuine bimodality.
-    val stillSuspect = adjudicated0.filter(isSuspect)
-    // A surviving suspect publishes its MIN, not the swept median: a
-    // load burst only ever inflates a sample (the over-cap rationale
-    // above), so when the median is >2x the min the min is strictly
-    // closer to truth — the r17 driver window published dedup_spans
-    // at 6.80 s with a min-of-repeats of 3.33 and a same-code quiet
-    // truth of 0.86, and the judge had to cross-reference the
-    // builder's close to see it. The swept median is preserved in
-    // `queries_swept_median` so the adjudication trail stays in the
-    // artifact; `suspect` still names these entries.
-    val adjudicated = adjudicated0.map(r =>
-      if (isSuspect(r)) r.copy(published = r.min) else r)
-    // "queries" stays a flat name→seconds map (the published number) so
-    // existing consumers parse it unchanged; mins, start offsets and
-    // the capped/suspect markers ride in sibling fields.
-    val qs = adjudicated.map(r => s"\"" + r.name + "\":" + r.published)
-      .mkString("{", ",", "}")
-    val qsMin = adjudicated.map(r => s"\"" + r.name + "\":" + r.min)
-      .mkString("{", ",", "}")
-    val qsOff = adjudicated
-      .map(r => f"""\"${r.name}\":${r.startOffset}%.1f""")
-      .mkString("{", ",", "}")
-    val capped = adjudicated.filter(_.overCap).map("\"" + _.name + "\"")
-      .mkString("[", ",", "]")
-    val suspect = stillSuspect
-      .map("\"" + _.name + "\"").mkString("[", ",", "]")
-    // the pre-requeue swept median for EVERY entry (full artifact
-    // only): median-of-repeats as measured in the main loop, carried
-    // on BenchResult BEFORE any requeue or min-clamp touches
-    // `published` — so for a requeued suspect this is the original
-    // swept value, never the post-requeue min (the r18 ADVICE found
-    // the old stillSuspect-only field leaking the clamped value), and
-    // being non-null for all entries gives future judges a cross-
-    // round per-query median series without a second source (r18
-    // Next #7). Over-cap entries carry the median of their two
-    // back-to-back samples.
-    val sweptMedian = adjudicated
-      .map(r => s"\"" + r.name + "\":" + r.sweptMedian)
-      .mkString("{", ",", "}")
-    // both samples per requeued query: [published-before, requeue-run]
-    // (requeue null = the re-run itself failed; original stands)
-    val origPublished = results.map(r => r.name -> r.published).toMap
-    val requeuedJson = requeued.toSeq.sortBy(_._1).map { case (n, t) =>
-      "\"" + n + "\":[" + origPublished(n) + "," +
-        t.map(_.toString).getOrElse("null") + "]"
-    }.mkString("{", ",", "}")
-    val total = if (adjudicated.nonEmpty) adjudicated.map(_.published).sum
-      else 0.0
-    val canaryJson = canaries.mkString("[", ",", "]")
-    // FULL artifact — every query's median, min and start offset at full
-    // precision — goes to a FILE in the repo (committed each round, so
-    // the per-query history stays diffable and the judge reads it
-    // directly). The stdout line carries only what fits.
-    // per-query GC-time and post-sweep storage columns (full artifact
-    // only): a load/GC window is then visible at the point of damage,
-    // and a rising storage series across the suite exposes pinned-
-    // block accumulation without a judge-side re-bench (r13 Next #3)
-    val qsGc = adjudicated.map(r => s"\"" + r.name + "\":" + r.gcMs)
-      .mkString("{", ",", "}")
-    val qsStor = adjudicated.map(r => s"\"" + r.name + "\":" + r.storageMb)
-      .mkString("{", ",", "}")
-    // streaming-only columns: final state-store rows/bytes per entry
-    // (absent for batch entries) — flat across rounds = state bounded
-    val qsStateRows = adjudicated.filter(_.stateRows >= 0)
-      .map(r => s"\"" + r.name + "\":" + r.stateRows)
-      .mkString("{", ",", "}")
-    val qsStateBytes = adjudicated.filter(_.stateRows >= 0)
-      .map(r => s"\"" + r.name + "\":" + r.stateBytes)
-      .mkString("{", ",", "}")
-    val regressionJson = regressionNames.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    // anti-pattern census over THIS run's plan dumps — the sweep the
-    // plan audit runs by hand (CartesianProduct / single-partition
-    // exchange = red; BNLJ files need inspection, the adjudicated
-    // shapes being 1-row scalar broadcasts and capped-truth topK).
-    // Scoped to this run's query names so stale dumps from filtered
-    // local runs can't inflate the counts.
-    val (planFlags, bnljNames, bnljViolations) = {
-      var cart = 0; var sp = 0; var nFiles = 0
-      val bnlj = Seq.newBuilder[String]
-      val viol = Seq.newBuilder[String]
-      adjudicated.foreach { r =>
-        val f = new java.io.File(plansDir, s"${r.name}.txt")
-        if (f.isFile) {
-          nFiles += 1
-          val txt = try new String(
-            java.nio.file.Files.readAllBytes(f.toPath),
-            java.nio.charset.StandardCharsets.UTF_8)
-          catch { case _: Throwable => "" }
-          if (txt.contains("CartesianProduct")) cart += 1
-          if (txt.contains("Exchange SinglePartition")) sp += 1
-          if (txt.contains("BroadcastNestedLoopJoin")) bnlj += r.name
-          // self-policing plan adjudication (PlanAudit): a BNLJ
-          // build, cartesian, or single-partition collapse outside
-          // the adjudicated shapes/roster is named here AND fails
-          // PlanAuditSpec — the census the judge ran by hand through
-          // r16, as an invariant
-          viol ++= PlanAudit.allViolations(r.name, txt)
-        }
-      }
-      val names = bnlj.result()
-      val vs = viol.result()
-      val bnljVs = vs.count(_.contains("BNLJ("))
-      (s"""{"plan_files":$nFiles,"cartesian_files":$cart,""" +
-        s""""single_partition_exchange_files":$sp,""" +
-        s""""bnlj_files":${names.size},""" +
-        s""""bnlj_unadjudicated":$bnljVs,""" +
-        s""""plan_unadjudicated":${vs.size}}""",
-        // full artifact only: the named roster, so a round-over-round
-        // diff shows exactly which queries ADDED a nested-loop join
-        names.sorted.map("\"" + _ + "\"").mkString("[", ",", "]"),
-        // violations carry raw plan-node headers — full JSON string
-        // escaping (not just quote rewriting): a backslash or control
-        // char in a header must not invalidate the committed artifact
-        vs.sorted.map(v => "\"" + jsonEsc(v) + "\"")
-          .mkString("[", ",", "]"))
-    }
-    // multi-decade scaling evidence (tools.ScaleProbe writes the file;
-    // embedding it here puts the per-family 10x/100x ratios in the
-    // same artifact the round judge reads). Embedded only after a
-    // validity gate — an empty or clipped leftover file must embed as
-    // null, not corrupt the artifact JSON — and alongside the file's
-    // mtime, so a stale probe from an older run/code version is
-    // visible in the artifact instead of silently posing as current.
-    val (scaleProbe, scaleProbeMtime) = {
-      val p = java.nio.file.Paths.get("target/scale_probe.json")
-      if (java.nio.file.Files.isRegularFile(p))
-        try {
-          val txt = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8).trim
-          val parsed =
-            new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-          val mtime = java.nio.file.Files.getLastModifiedTime(p)
-            .toInstant.toString
-          if (parsed != null && parsed.isObject && txt.nonEmpty)
-            (txt, "\"" + mtime + "\"")
-          else ("null", "null")
-        } catch { case _: Throwable => ("null", "null") }
-      else ("null", "null")
-    }
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","scale_probe":$scaleProbe,"scale_probe_mtime_utc":$scaleProbeMtime,"queries":$qs,"queries_min":$qsMin,"queries_swept_median":$sweptMedian,"query_start_offsets_s":$qsOff,"queries_gc_ms":$qsGc,"queries_storage_mb":$qsStor,"queries_state_rows":$qsStateRows,"queries_state_bytes":$qsStateBytes,"capped":$capped,"suspect":$suspect,"requeued":$requeuedJson,"requeue_regression":$regressionJson,"plan_flags":$planFlags,"bnlj_names":$bnljNames,"bnlj_unadjudicated_names":$bnljViolations,"repeats":$repeats,"repeat_cap_s":$repeatCap,"sf":"$sfDir","plans_dir":"${plansDir.getPath}","canary":$canaryJson,"n_queries":${adjudicated.size},"total_s":$total}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(fullPath), fullJson + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"BENCH full-artifact write failed: $e") }
-    // The driver captures only the last ~2000 chars of sbt stdout and
-    // parses the JSON line out of that tail. The full per-query map
-    // outgrew that budget around round 3 (186 queries x full-precision
-    // doubles ~= 10 KB), so every published BENCH_r*.json since carried
-    // parsed:null — the one artifact the judge machine-reads was
-    // unparseable. The stdout line is therefore BUDGETED: headline
-    // totals + canary + capped/suspect always fit; the "queries" map is
-    // filled greedily with the most expensive queries (3-decimal
-    // precision) until the line would exceed the tail budget, and
-    // "queries_elided" names how many were cut. Full precision and the
-    // complete map live in BENCH_FULL.json (path in "full").
-    def j3(x: Double): String =
-      java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
-    val lineBudget = 1700 // tail is 2000; leave room for sbt's [success] line
-    // capped/suspect can themselves grow on a loaded host; cap each at 8
-    // names on the line (full lists in the file) so they can't starve
-    // the queries map or blow the budget outright
-    def capList(names: Seq[String]): String = {
-      val shown = names.take(8).map("\"" + _ + "\"")
-      val extra = if (names.size > 8) Seq("\"+" + (names.size - 8) + "\"")
-        else Nil
-      (shown ++ extra).mkString("[", ",", "]")
-    }
-    val cappedLine = capList(adjudicated.filter(_.overCap).map(_.name))
-    val suspectLine = capList(stillSuspect.map(_.name))
-    // requeued on the line: name:[orig,rerun] with 3-decimal samples —
-    // the FULL list, never elided (an r15 "+3":[] bucket hid a 2.72x
-    // mover from the artifact; every >2.5x adjudication must be
-    // readable from the line alone). The greedy queries map below
-    // absorbs the length: a large requeue list shrinks the per-query
-    // section, never the adjudications.
-    val requeuedLine = requeued.toSeq.sortBy(_._1).map { case (n, t) =>
-      "\"" + n + "\":[" + j3(origPublished(n)) + "," +
-        t.map(j3).getOrElse("null") + "]"
-    }.mkString("{", ",", "}")
-    val fixedTail = s""","repeats":$repeats,"repeat_cap_s":$repeatCap,"sf":"$sfDir","full":"$fullPath","plans_dir":"${plansDir.getPath}","canary":$canaryJson,"capped":$cappedLine,"suspect":$suspectLine,"requeued":$requeuedLine,"plan_flags":$planFlags,"n_queries":${adjudicated.size},"total_s":${j3(total)}}"""
-    val fixedHead = s"""{"metric":"total","value":${j3(total)},"unit":"sec","queries":{"""
-    var room = lineBudget - fixedHead.length - fixedTail.length -
-      """},"queries_elided":000""".length
-    val byCost = adjudicated.sortBy(-_.published)
-    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-    byCost.foreach { r =>
-      val entry = "\"" + r.name + "\":" + j3(r.published)
-      if (entry.length + 1 <= room) { kept += entry; room -= entry.length + 1 }
-    }
-    val elided = adjudicated.size - kept.size
-    // teardown hygiene BEFORE the metric line prints: evicting the
-    // cross-query memoized frames unpersists dozens of
-    // localCheckpointed RDDs, and Spark WARNs once per truncated
-    // lineage — in r14 that flood landed AFTER the metric line and
-    // pushed it out of the driver's 2000-char tail capture
-    // (BENCH_r14.json parsed:null). Quieting the logger AND printing
-    // last makes the metric line the final stdout regardless of what
-    // teardown emits. The memo is JVM-lifetime by design (SparkEntry
-    // scaladoc); a long-lived host cycling sessions still needs this
-    // call at every teardown (r13 finding #4).
+    val artifact = run(spark, sfDir, queries, repeats, plansDir)
+    Files.writeString(Paths.get(fullPath),
+      json.writeValueAsString(artifact) + "\n")
+    // headline line; the per-query columns live in the full artifact
+    val line = json.createObjectNode()
+    Seq("metric", "value", "unit", "n_queries", "failed", "canary",
+      "plan_flags").foreach(k => line.set[JsonNode](k, artifact.get(k)))
+    line.put("full", fullPath)
+    // quiet the logger before teardown: every localCheckpoint RDD the
+    // memo eviction unpersists WARNs, and the metric line prints last
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.evictMemos(spark)
-    println(fixedHead + kept.mkString(",") +
-      s"""},"queries_elided":$elided""" + fixedTail)
+    println(json.writeValueAsString(line))
     spark.stop()
   }
-
-  /** One query's published sample set: `published` is the median (or
-    * the min of first+confirmation when the first run exceeded the
-    * repeat cap, flagged by `overCap`); `startOffset` is seconds since
-    * the first timed query began, for post-hoc load-window mapping;
-    * `sweptMedian` is the main-loop median-of-repeats, immutable
-    * through requeue/clamp adjudication (the trail field).
-    */
-  private final case class BenchResult(name: String, published: Double,
-      min: Double, startOffset: Double, overCap: Boolean,
-      gcMs: Long = 0L, storageMb: Long = 0L,
-      stateRows: Long = -1L, stateBytes: Long = -1L,
-      sweptMedian: Double = 0.0)
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Opt-in capture of query plans that are invisible to after-the-fact
@@ -25,7 +27,7 @@ object PlanCapture {
     try
       buf.add(label -> df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    catch { case e: Throwable => buf.add(label -> s"<explain failed: $e>") }
+    catch { case NonFatal(e) => buf.add(label -> s"<explain failed: $e>") }
   }
 
   /** Record a free-text breadcrumb, e.g. a stage timing (no-op unless

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -40,25 +43,13 @@ object Verify {
       }
       SparkEntry.sweepLeakedBlocks(spark, persistedBefore)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // the recall-gate oracles read the sketch outputs the queries above
     // materialized for THIS sfDir — resolve the path placeholder now so
     // the dumped SQL is directly runnable by the driver's DuckDB
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace(
-        SparkEntry.RecallDirToken, SparkEntry.recallDumpDir(sfDir)))}" }
-      .mkString("{", ",", "}")
+    val oracle = SparkEntry.oracleSql.map { case (k, v) =>
+      k -> v.replace(SparkEntry.RecallDirToken, SparkEntry.recallDumpDir(sfDir))
+    }
+    val json = new ObjectMapper().writeValueAsString(oracle.asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // teardown hygiene: release the cross-query memoized frames'
     // pinned checkpoint blocks (see Bench — same rationale; the

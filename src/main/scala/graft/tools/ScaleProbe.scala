@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import graft.{Scratch, Sessions, SparkEntry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -139,7 +141,7 @@ object ScaleProbe {
           System.err.println(
             f"SCALE $name%-24s base $base%7.2f s  ${copies}x $big%7.2f s  ratio $ratio%5.2f")
           s""""$name":{"base_s":${f"$base%.3f"},"scaled_s":${f"$big%.3f"},"ratio":${f"$ratio%.2f"}$note}"""
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"SCALE $name FAILED: ${e.getClass.getName}")
           s""""$name":{"error":"${e.getClass.getName}"$note}"""
         }
@@ -257,7 +259,7 @@ object ScaleProbe {
       if (!neu.has("streaming") && old.has("streaming"))
         neu.set[ObjectNode]("streaming", old.get("streaming"))
       om.writeValueAsString(neu)
-    } catch { case _: Throwable => newJson }
+    } catch { case NonFatal(_) => newJson }
 
   private def runOnce(spark: SparkSession,
       fn: (SparkSession, String) => DataFrame, dir: String): Double = {

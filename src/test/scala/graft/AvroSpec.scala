@@ -11,14 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class AvroSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def withTmp[T](body: java.io.File => T): T = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-avro").toFile
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec))
-      f.delete()
-    }
-    try body(tmp) finally deleteRec(tmp)
-  }
+  private def withTmp[T](body: java.io.File => T): T =
+    Scratch.withDir("graft-avro")(body)
 
   test("typed round-trip: longs, doubles, strings, timestamps, " +
       "binary, nulls survive bit-exact") {

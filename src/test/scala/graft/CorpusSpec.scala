@@ -11,8 +11,7 @@ class CorpusSpec extends AnyFunSuite {
 
   test("end-to-end hygiene pipeline: stage counts consistent, JSONL " +
       "splits re-readable") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-corpus").toFile
-    try {
+    Scratch.withDir("graft-corpus") { tmp =>
       val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val r = Corpus.run(spark, docs, tmp.toString, shards = 2)
@@ -28,19 +27,15 @@ class CorpusSpec extends AnyFunSuite {
       }.sum
       assert(total == r.deduped)
       // determinism: a second run reports identical counts
-      val tmp2 = java.nio.file.Files.createTempDirectory("graft-corpus2")
-        .toFile
-      try assert(Corpus.run(spark, docs, tmp2.toString, shards = 2) == r)
-      finally SparkTestSession.deleteRecursively(tmp2)
-    } finally {
-      SparkTestSession.deleteRecursively(tmp)
+      Scratch.withDir("graft-corpus2") { tmp2 =>
+        assert(Corpus.run(spark, docs, tmp2.toString, shards = 2) == r)
+      }
     }
   }
 
   test("near-dup-safe split keeps LSH pair members in one split and " +
       "preserves the pipeline's row accounting") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-corpus-s").toFile
-    try {
+    Scratch.withDir("graft-corpus-s") { tmp =>
       val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val r = Corpus.run(spark, docs, tmp.toString, shards = 1,
@@ -64,13 +59,12 @@ class CorpusSpec extends AnyFunSuite {
           .filter(col("sa") =!= col("sb")).count()
         assert(straddling == 0, "near-dup pair straddles a split boundary")
       } finally all.unpersist()
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   test("span-scrub and decontamination stages engage and report counts") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-corpus4").toFile
-    try {
+    Scratch.withDir("graft-corpus4") { tmp =>
       val shared = "the a0 b1 and the c2 d3 and the e4 f5 and " +
         "the g6 h7 and the i8 j9 and the k10 l11 and"
       val other = "some people walk to town for fresh bread while " +
@@ -89,15 +83,12 @@ class CorpusSpec extends AnyFunSuite {
       // doc 3 overlaps the eval set: dropped after span removal
       assert(r.decontamDropped == 1)
       assert(r.train + r.valN + r.test == 2)
-    } finally {
-      SparkTestSession.deleteRecursively(tmp)
     }
   }
 
   test("pipeline dedup keeps the first id of duplicated content") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-corpus3").toFile
-    try {
+    Scratch.withDir("graft-corpus3") { tmp =>
       // two docs with identical content that passes the quality gate
       val good = "the a0 b1 and the c2 d3 and the e4 f5 and " +
         "the g6 h7 and the i8 j9 and the k10 l11 and"
@@ -105,8 +96,6 @@ class CorpusSpec extends AnyFunSuite {
         "doc_id", "source", "text")
       val r = Corpus.run(spark, docs, tmp.toString, shards = 1)
       assert(r.input == 2 && r.kept == 2 && r.deduped == 1)
-    } finally {
-      SparkTestSession.deleteRecursively(tmp)
     }
   }
 

@@ -12,15 +12,12 @@ class CsvSpec extends AnyFunSuite {
       Seq[(Long, Option[String])] = {
     import spark.implicits._
     val df = rows.toDF("id", "s")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-csv").toFile
-    try {
+    Scratch.withDir("graft-csv") { tmp =>
       CsvIO.writeShards(df, Seq("id", "s"), tmp.toString)
       CsvIO.read(spark, tmp.toString,
         StructType(Seq(StructField("id", LongType),
           StructField("s", StringType))))
         .orderBy("id").as[(Long, Option[String])].collect().toSeq
-    } finally {
-      SparkTestSession.deleteRecursively(tmp)
     }
   }
 
@@ -44,23 +41,19 @@ class CsvSpec extends AnyFunSuite {
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2024-01-01 12:34:56.123456")
     val df = Seq((1L, ts)).toDF("id", "ts")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-csvts").toFile
-    try {
+    Scratch.withDir("graft-csvts") { tmp =>
       CsvIO.writeShards(df, Seq("id", "ts"), tmp.toString)
       val got = CsvIO.read(spark, tmp.toString,
         StructType(Seq(StructField("id", LongType),
           StructField("ts", TimestampType))))
         .as[(Long, java.sql.Timestamp)].collect().head
       assert(got == ((1L, ts)))
-    } finally {
-      SparkTestSession.deleteRecursively(tmp)
     }
   }
 
   test("quarantine read captures malformed lines without failing") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-csvq").toFile
-    try {
+    Scratch.withDir("graft-csvq") { tmp =>
       CsvIO.writeShards(Seq((1L, "good")).toDF("id", "s").coalesce(1),
         Seq("id", "s"), tmp.toString)
       // append a shard whose id column is not a long
@@ -78,8 +71,6 @@ class CsvSpec extends AnyFunSuite {
           col("id") === 1L).count()
         assert(bad == 1 && good == 1)
       } finally got.unpersist()
-    } finally {
-      SparkTestSession.deleteRecursively(tmp)
     }
   }
 }

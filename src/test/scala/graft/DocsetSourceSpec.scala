@@ -14,16 +14,14 @@ class DocsetSourceSpec extends AnyFunSuite {
   private def withDocset[A](rows: Seq[(Long, String, String)])(
       f: String => A): A = {
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-dsv2").toFile
-    try {
+    Scratch.withDir("graft-dsv2") { tmp =>
       val out = new java.io.File(tmp, "ds").toString
       XmlPipe.writeShardedDocsets(
         XmlPipe.formatDocs(
           rows.toDF("doc_id", "text", "note").repartition(3),
           Seq("doc_id")), out)
       f(out)
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   private val rows = Seq(
@@ -156,9 +154,7 @@ class DocsetSourceSpec extends AnyFunSuite {
   test("write side: df.write.format(\"xmlpipe2\") lands well-formed " +
       "shards, overwrite truncates, and the read side round-trips it") {
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-dsv2w").toFile
-    try {
+    Scratch.withDir("graft-dsv2w") { tmp =>
       val out = new java.io.File(tmp, "ds").toString
       val docs = XmlPipe.formatDocs(
         rows.toDF("doc_id", "text", "note").repartition(2), Seq("doc_id"))
@@ -197,38 +193,35 @@ class DocsetSourceSpec extends AnyFunSuite {
         else Option(t.getMessage).toSeq ++ messages(t.getCause)
       assert(messages(e).exists(_.contains("(id, doc)")),
         messages(e).mkString(" | "))
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   test("streaming read: readStream.format(\"xmlpipe2\") ingests shards " +
       "incrementally and resumes after the name watermark on restart") {
     import spark.implicits._
     val ss = spark.newSession()
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-stream").toFile
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-ckpt").toFile
-    def landShard(rows: Seq[(Long, String)], name: String): Unit = {
-      val docs = XmlPipe.formatDocs(rows.toDF("doc_id", "text"),
-        Seq("doc_id"))
-      val tmp = new java.io.File(srcDir, s".stage_$name")
-      val fos = new java.io.FileOutputStream(tmp)
-      try XmlPipe.writeDocset(docs, fos) finally fos.close()
-      java.nio.file.Files.move(tmp.toPath,
-        new java.io.File(srcDir, name).toPath)
-    }
-    val sink = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-sink").toFile
-    // parquet sink: the memory sink cannot recover from a checkpoint,
-    // and the restart leg is the point of this test
-    def start() = ss.readStream.format("xmlpipe2")
-      .option("fields", "text").load(srcDir.toString)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("parquet").option("path", sink.toString).start()
-    def sunk(): Seq[Long] = spark.read.parquet(sink.toString)
-      .select("id").as[Long].collect().toSeq.sorted
-    try {
+    Scratch.withDir("graft-dsv2-stream") { root =>
+      val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
+      val ckpt = new java.io.File(root, "ckpt"); ckpt.mkdirs()
+      def landShard(rows: Seq[(Long, String)], name: String): Unit = {
+        val docs = XmlPipe.formatDocs(rows.toDF("doc_id", "text"),
+          Seq("doc_id"))
+        val tmp = new java.io.File(srcDir, s".stage_$name")
+        val fos = new java.io.FileOutputStream(tmp)
+        try XmlPipe.writeDocset(docs, fos) finally fos.close()
+        java.nio.file.Files.move(tmp.toPath,
+          new java.io.File(srcDir, name).toPath)
+      }
+      val sink = new java.io.File(root, "sink"); sink.mkdirs()
+      // parquet sink: the memory sink cannot recover from a checkpoint,
+      // and the restart leg is the point of this test
+      def start() = ss.readStream.format("xmlpipe2")
+        .option("fields", "text").load(srcDir.toString)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt.toString)
+        .format("parquet").option("path", sink.toString).start()
+      def sunk(): Seq[Long] = spark.read.parquet(sink.toString)
+        .select("id").as[Long].collect().toSeq.sorted
       landShard(Seq((1L, "one"), (2L, "two")), "s0001.xml")
       val q = start()
       try {
@@ -246,10 +239,6 @@ class DocsetSourceSpec extends AnyFunSuite {
         q2.processAllAvailable()
         assert(sunk() == Seq(1L, 2L, 3L, 4L), s"got ${sunk()}")
       } finally q2.stop()
-    } finally {
-      SparkTestSession.deleteRecursively(srcDir)
-      SparkTestSession.deleteRecursively(ckpt)
-      SparkTestSession.deleteRecursively(sink)
     }
   }
 
@@ -306,9 +295,8 @@ class DocsetSourceSpec extends AnyFunSuite {
     // a path that does not exist fails naming it — through a row scan,
     // the COUNT(*) pushdown and readDocset — rather than reading as an
     // empty docset
-    val missing = java.nio.file.Files.createTempDirectory("graft-dsv2-missing")
-      .resolve("no-such-docset").toString
-    try {
+    Scratch.withDir("graft-dsv2-missing") { root =>
+      val missing = new java.io.File(root, "no-such-docset").toString
       val reads: Seq[() => Any] = Seq(
         () => spark.read.format("xmlpipe2").option("fields", "x")
           .load(missing).collect(),
@@ -319,7 +307,7 @@ class DocsetSourceSpec extends AnyFunSuite {
         val m = messages(intercept[Exception](read()))
         assert(m.exists(_.contains(missing)), m.mkString(" | "))
       }
-    } finally new java.io.File(missing).getParentFile.delete()
+    }
   }
 
   test("a failed rewrite leaves the previous sharded docset " +
@@ -366,8 +354,7 @@ class DocsetSourceSpec extends AnyFunSuite {
     val want = docs.select("doc").rdd.mapPartitionsWithIndex { (p, it) =>
       Iterator(p -> it.map(_.getString(0)).mkString)
     }.collect().toMap
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-bytes").toFile
-    try {
+    Scratch.withDir("graft-dsv2-bytes") { tmp =>
       val out = new java.io.File(tmp, "ds")
       XmlPipe.writeShardedDocsets(docs, out.toString)
       val shards = out.listFiles().map(_.getName).sorted.toSeq
@@ -392,7 +379,7 @@ class DocsetSourceSpec extends AnyFunSuite {
           assert(documents == sizes(p), f.getName)
         } finally in.close()
       }
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   test("a shard several times the scanner buffer round-trips through " +
@@ -408,8 +395,7 @@ class DocsetSourceSpec extends AnyFunSuite {
       (i, (0 until rnd.nextInt(20))
         .map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsv2-big").toFile
-    try {
+    Scratch.withDir("graft-dsv2-big") { tmp =>
       val out = new java.io.File(tmp, "ds").toString
       XmlPipe.writeShardedDocsets(XmlPipe.formatDocs(
         rows.toDF("doc_id", "body").coalesce(1), Seq("doc_id")), out)
@@ -447,7 +433,7 @@ class DocsetSourceSpec extends AnyFunSuite {
       assert(counted.queryExecution.executedPlan.toString
         .contains("PushedAggregation: [COUNT(*)]"))
       assert(counted.collect().head.getLong(0) == rows.size)
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
 
@@ -489,29 +475,26 @@ class DocsetSourceSpec extends AnyFunSuite {
       "exactly-once through the file sink's batchId dedup") {
     import spark.implicits._
     val ss = spark.newSession()
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-crash-src").toFile
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-crash-ckpt").toFile
-    val sink = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-crash-sink").toFile
-    def landShard(rows: Seq[(Long, String)], name: String): Unit = {
-      val docs = XmlPipe.formatDocs(rows.toDF("doc_id", "text"),
-        Seq("doc_id"))
-      val tmp = new java.io.File(srcDir, s".stage_$name")
-      val fos = new java.io.FileOutputStream(tmp)
-      try XmlPipe.writeDocset(docs, fos) finally fos.close()
-      java.nio.file.Files.move(tmp.toPath,
-        new java.io.File(srcDir, name).toPath)
-    }
-    def start() = ss.readStream.format("xmlpipe2")
-      .option("fields", "text").load(srcDir.toString)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("parquet").option("path", sink.toString).start()
-    def sunk(): Seq[Long] = spark.read.parquet(sink.toString)
-      .select("id").as[Long].collect().toSeq.sorted
-    try {
+    Scratch.withDir("graft-dsv2-crash-src") { root =>
+      val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
+      val ckpt = new java.io.File(root, "ckpt"); ckpt.mkdirs()
+      val sink = new java.io.File(root, "sink"); sink.mkdirs()
+      def landShard(rows: Seq[(Long, String)], name: String): Unit = {
+        val docs = XmlPipe.formatDocs(rows.toDF("doc_id", "text"),
+          Seq("doc_id"))
+        val tmp = new java.io.File(srcDir, s".stage_$name")
+        val fos = new java.io.FileOutputStream(tmp)
+        try XmlPipe.writeDocset(docs, fos) finally fos.close()
+        java.nio.file.Files.move(tmp.toPath,
+          new java.io.File(srcDir, name).toPath)
+      }
+      def start() = ss.readStream.format("xmlpipe2")
+        .option("fields", "text").load(srcDir.toString)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt.toString)
+        .format("parquet").option("path", sink.toString).start()
+      def sunk(): Seq[Long] = spark.read.parquet(sink.toString)
+        .select("id").as[Long].collect().toSeq.sorted
       landShard(Seq((1L, "one")), "s0001.xml")
       val q = start()
       try {
@@ -542,10 +525,6 @@ class DocsetSourceSpec extends AnyFunSuite {
         q2.processAllAvailable()
         assert(sunk() == Seq(1L, 2L, 3L), s"got ${sunk()}")
       } finally q2.stop()
-    } finally {
-      SparkTestSession.deleteRecursively(srcDir)
-      SparkTestSession.deleteRecursively(ckpt)
-      SparkTestSession.deleteRecursively(sink)
     }
   }
 
@@ -554,32 +533,29 @@ class DocsetSourceSpec extends AnyFunSuite {
       "loud at replay instead of silently shrinking the batch") {
     import spark.implicits._
     val ss = spark.newSession()
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-del-src").toFile
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-del-ckpt").toFile
-    val sink = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-del-sink").toFile
-    def landShard(rows: Seq[(Long, String)], name: String): Unit = {
-      val docs = XmlPipe.formatDocs(rows.toDF("doc_id", "text"),
-        Seq("doc_id"))
-      val tmp = new java.io.File(srcDir, s".stage_$name")
-      val fos = new java.io.FileOutputStream(tmp)
-      try XmlPipe.writeDocset(docs, fos) finally fos.close()
-      java.nio.file.Files.move(tmp.toPath,
-        new java.io.File(srcDir, name).toPath)
-    }
-    def start() = ss.readStream.format("xmlpipe2")
-      .option("fields", "text").load(srcDir.toString)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("parquet").option("path", sink.toString).start()
-    def sunk(): Seq[Long] = spark.read.parquet(sink.toString)
-      .select("id").as[Long].collect().toSeq.sorted
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    try {
+    Scratch.withDir("graft-dsv2-del-src") { root =>
+      val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
+      val ckpt = new java.io.File(root, "ckpt"); ckpt.mkdirs()
+      val sink = new java.io.File(root, "sink"); sink.mkdirs()
+      def landShard(rows: Seq[(Long, String)], name: String): Unit = {
+        val docs = XmlPipe.formatDocs(rows.toDF("doc_id", "text"),
+          Seq("doc_id"))
+        val tmp = new java.io.File(srcDir, s".stage_$name")
+        val fos = new java.io.FileOutputStream(tmp)
+        try XmlPipe.writeDocset(docs, fos) finally fos.close()
+        java.nio.file.Files.move(tmp.toPath,
+          new java.io.File(srcDir, name).toPath)
+      }
+      def start() = ss.readStream.format("xmlpipe2")
+        .option("fields", "text").load(srcDir.toString)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt.toString)
+        .format("parquet").option("path", sink.toString).start()
+      def sunk(): Seq[Long] = spark.read.parquet(sink.toString)
+        .select("id").as[Long].collect().toSeq.sorted
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil
+        else Option(t.getMessage).toSeq ++ messages(t.getCause)
       landShard(Seq((1L, "one")), "s0001.xml")
       val q = start()
       try { q.processAllAvailable(); assert(sunk() == Seq(1L)) }
@@ -613,10 +589,6 @@ class DocsetSourceSpec extends AnyFunSuite {
       try q4.stop() catch { case _: Throwable => () }
       assert(messages(e).exists(_.contains("deleted before its " +
         "micro-batch committed")), messages(e).mkString(" | "))
-    } finally {
-      SparkTestSession.deleteRecursively(srcDir)
-      SparkTestSession.deleteRecursively(ckpt)
-      SparkTestSession.deleteRecursively(sink)
     }
   }
 }

@@ -143,8 +143,8 @@ class EdgeCasesSpec extends AnyFunSuite {
     val hist = Merge.scd2(
       Seq.empty[(Long, Long)].toDF("k", "version"), Seq("k"))
     assert(Merge.scd2AsOf(hist, lit(0L)).count() == 0)
-    assert(graft.streaming.EventsStream.attributionOuterToCompletion(
-      spark, emptyEventsDir()).count() == 0)
+    withEmptyEvents(dir => assert(graft.streaming.EventsStream
+      .attributionOuterToCompletion(spark, dir).count() == 0))
   }
 
   test("round-8 operators are total on empty input") {
@@ -173,39 +173,38 @@ class EdgeCasesSpec extends AnyFunSuite {
   test("late round-8 operators are total on empty input") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val empty = emptyEventsDir()
-    // streaming twins with replay short-circuits
-    assert(graft.streaming.EventsStream
-      .sessionizeWarmStartToCompletion(spark, empty).count() == 0)
-    assert(graft.streaming.EventsStream
-      .typeProfileToCompletion(spark, empty).count() == 0)
-    // state introspection over a checkpoint with zero state rows
-    assert(graft.streaming.EventsStream
-      .stateInspect(spark, empty).count() == 0)
-    // hybrid retrieval over empty corpus and empty embeddings
-    val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val emb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
-    assert(graft.operators.Retrieval
-      .hybridTopK(docs, emb, Seq("x"), 0L).count() == 0)
-    // sketch lake / overlap over empty events
-    val ev = Tables.load(spark, empty, "events")
-    assert(graft.operators.Profile.hllSketchLake(ev).count() == 0)
-    // overlap always answers: one row of zeros on empty input (and,
-    // by the same conditional-agg shape, when only ONE segment exists)
-    val ov = graft.operators.Profile
-      .audienceOverlap(ev, "click", "purchase").collect()
-    assert(ov.length == 1 && ov(0).getLong(0) == 0L && ov(0).getLong(1) == 0L)
-    // the UDTF on an empty frame
-    assert(docs.select(graft.functions.chunk_text(col("text"), 10, 2))
-      .count() == 0)
+    withEmptyEvents { empty =>
+      // streaming twins with replay short-circuits
+      assert(graft.streaming.EventsStream
+        .sessionizeWarmStartToCompletion(spark, empty).count() == 0)
+      assert(graft.streaming.EventsStream
+        .typeProfileToCompletion(spark, empty).count() == 0)
+      // state introspection over a checkpoint with zero state rows
+      assert(graft.streaming.EventsStream
+        .stateInspect(spark, empty).count() == 0)
+      // hybrid retrieval over empty corpus and empty embeddings
+      val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+      val emb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+      assert(graft.operators.Retrieval
+        .hybridTopK(docs, emb, Seq("x"), 0L).count() == 0)
+      // sketch lake / overlap over empty events
+      val ev = Tables.load(spark, empty, "events")
+      assert(graft.operators.Profile.hllSketchLake(ev).count() == 0)
+      // overlap always answers: one row of zeros on empty input (and,
+      // by the same conditional-agg shape, when only ONE segment exists)
+      val ov = graft.operators.Profile
+        .audienceOverlap(ev, "click", "purchase").collect()
+      assert(ov.length == 1 && ov(0).getLong(0) == 0L && ov(0).getLong(1) == 0L)
+      // the UDTF on an empty frame
+      assert(docs.select(graft.functions.chunk_text(col("text"), 10, 2))
+        .count() == 0)
+    }
   }
 
   test("docset reader and DSv2 source are total on empty docsets") {
     import spark.implicits._
     import graft.operators.XmlPipe
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-empty-ds").toFile
-    try {
+    Scratch.withDir("graft-empty-ds") { tmp =>
       val out = new java.io.File(tmp, "ds").toString
       // empty input → header-only shards, still well-formed docsets
       XmlPipe.writeShardedDocsets(
@@ -215,25 +214,24 @@ class EdgeCasesSpec extends AnyFunSuite {
       assert(XmlPipe.readDocset(spark, out, Seq("text")).count() == 0)
       assert(spark.read.format("xmlpipe2").option("fields", "text")
         .load(out).count() == 0)
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
-  /** A temp dir holding an empty events.parquet with the production
-    * schema, for streaming-twin totality checks. */
-  private def emptyEventsDir(): String = {
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-empty-ev").toFile
-    Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, String)]
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(dir, "stage").toString)
-    val part = new java.io.File(dir, "stage").listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath,
-      new java.io.File(dir, "events.parquet").toPath)
-    dir.toString
-  }
+  /** Runs `body` on a scratch dir holding an empty events.parquet with
+    * the production schema, for streaming-twin totality checks. */
+  private def withEmptyEvents[A](body: String => A): A =
+    Scratch.withDir("graft-empty-ev") { dir =>
+      import spark.implicits._
+      Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, String)]
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(new java.io.File(dir, "stage").toString)
+      val part = new java.io.File(dir, "stage").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath,
+        new java.io.File(dir, "events.parquet").toPath)
+      body(dir.toString)
+    }
 
   test("strict-parity paths are total on empty input") {
     import spark.implicits._

@@ -390,37 +390,35 @@ class EventsSpec extends AnyFunSuite {
     val ss = graft.streaming.EventsStream.streamSession(spark)
     import ss.implicits._
     val schema = StructType(Seq(StructField("id", LongType)))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-avnow-src").toFile
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-avnow-out").toFile
-    val ckpt = new java.io.File(outDir, "_ckpt").toString
-    val sink = new java.io.File(outDir, "data").toString
-    def land(ids: Seq[Long], name: String): Unit = {
-      val stage = new java.io.File(srcDir, s"_stage_$name")
-      ids.toDF("id").coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(srcDir, s"$name.parquet").toPath)
-      stage.listFiles().foreach(_.delete()); stage.delete()
-    }
-    // one incremental invocation: drain whatever is new, then STOP on
-    // its own — the nightly-batch-over-stream production pattern
-    // (processAllAvailable, by contrast, is a test-harness wait on a
-    // query that would otherwise keep running)
-    def runOnce(): Unit = {
-      val q = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(srcDir.toString)
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .format("parquet").option("path", sink)
-        .start()
-      q.awaitTermination(120000)
-      assert(!q.isActive, "AvailableNow query must stop by itself")
-    }
-    try {
+    Scratch.withDir("graft-avnow") { root =>
+      val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
+      val outDir = new java.io.File(root, "out"); outDir.mkdirs()
+      val ckpt = new java.io.File(outDir, "_ckpt").toString
+      val sink = new java.io.File(outDir, "data").toString
+      def land(ids: Seq[Long], name: String): Unit = {
+        val stage = new java.io.File(srcDir, s"_stage_$name")
+        ids.toDF("id").coalesce(1)
+          .write.mode("overwrite").parquet(stage.toString)
+        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          new java.io.File(srcDir, s"$name.parquet").toPath)
+        stage.listFiles().foreach(_.delete()); stage.delete()
+      }
+      // one incremental invocation: drain whatever is new, then STOP on
+      // its own — the nightly-batch-over-stream production pattern
+      // (processAllAvailable, by contrast, is a test-harness wait on a
+      // query that would otherwise keep running)
+      def runOnce(): Unit = {
+        val q = ss.readStream.schema(schema)
+          .option("pathGlobFilter", "*.parquet").parquet(srcDir.toString)
+          .writeStream
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .option("checkpointLocation", ckpt)
+          .format("parquet").option("path", sink)
+          .start()
+        q.awaitTermination(120000)
+        assert(!q.isActive, "AvailableNow query must stop by itself")
+      }
       land(1L to 50L, "backlog")
       runOnce()
       val after1 = spark.read.parquet(sink).as[Long].collect().sorted
@@ -430,9 +428,6 @@ class EventsSpec extends AnyFunSuite {
       val after2 = spark.read.parquet(sink).as[Long].collect().sorted
       // only the delta was appended — nothing reprocessed, nothing lost
       assert(after2.toSeq == (1L to 60L))
-    } finally {
-      SparkTestSession.deleteRecursively(srcDir)
-      SparkTestSession.deleteRecursively(outDir)
     }
   }
 
@@ -611,54 +606,47 @@ class EventsSpec extends AnyFunSuite {
       (1L, t(30), 11L, "purchase", 5.0),
       (2L, t(0), 20L, "click", 0.0))
       .toDF("user_id", "ts", "event_id", "event_type", "value")
-    val replayDir = java.nio.file.Files
-      .createTempDirectory("graft-attr-test").toFile
-    def writeChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(replayDir, s"_stage_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(replayDir, s"$name.parquet").toPath)
-      stage.listFiles().foreach(_.delete())
-      stage.delete()
-    }
-    val qname = "graft_attr_outer_timing_test"
-    val q = graft.streaming.EventsStream.attributionJoin(
-        spark.readStream.schema(ev.schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(replayDir.toString), "leftOuter")
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .start()
-    try {
-      writeChunk(ev, "chunk1")
-      q.processAllAvailable()
-      val before = spark.table(qname)
-        .select(col("click_id"), col("purchase_id"))
-        .as[(Long, Option[Long])].collect().toSet
-      // matched pair emits immediately; the unmatched click must NOT —
-      // its null row is gated on watermark eviction, which a single
-      // batch cannot trigger (watermark = max ts - 1 h < click + 1 h)
-      assert(before == Set((10L, Some(11L))))
-      // far-future rows on both streams push the global watermark past
-      // click_ts + 1 h; the no-data batch then evicts + emits the null
-      writeChunk(Seq(
-        (-1L, t(600), -1L, "click", 0.0),
-        (-2L, t(600), -2L, "purchase", 0.0))
-        .toDF("user_id", "ts", "event_id", "event_type", "value"), "sentinel")
-      q.processAllAvailable()
-      val after = spark.table(qname)
-        .filter(col("user_id") > 0)
-        .select(col("click_id"), col("purchase_id"))
-        .as[(Long, Option[Long])].collect().toSet
-      assert(after == Set((10L, Some(11L)), (20L, None)))
-    } finally {
-      q.stop()
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(deleteRec))
-        f.delete()
+    Scratch.withDir("graft-attr-test") { replayDir =>
+      def writeChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+        val stage = new java.io.File(replayDir, s"_stage_$name")
+        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          new java.io.File(replayDir, s"$name.parquet").toPath)
+        stage.listFiles().foreach(_.delete())
+        stage.delete()
       }
-      deleteRec(replayDir)
+      val qname = "graft_attr_outer_timing_test"
+      val q = graft.streaming.EventsStream.attributionJoin(
+          spark.readStream.schema(ev.schema)
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(replayDir.toString), "leftOuter")
+        .writeStream.outputMode("append").format("memory").queryName(qname)
+        .start()
+      try {
+        writeChunk(ev, "chunk1")
+        q.processAllAvailable()
+        val before = spark.table(qname)
+          .select(col("click_id"), col("purchase_id"))
+          .as[(Long, Option[Long])].collect().toSet
+        // matched pair emits immediately; the unmatched click must NOT —
+        // its null row is gated on watermark eviction, which a single
+        // batch cannot trigger (watermark = max ts - 1 h < click + 1 h)
+        assert(before == Set((10L, Some(11L))))
+        // far-future rows on both streams push the global watermark past
+        // click_ts + 1 h; the no-data batch then evicts + emits the null
+        writeChunk(Seq(
+          (-1L, t(600), -1L, "click", 0.0),
+          (-2L, t(600), -2L, "purchase", 0.0))
+          .toDF("user_id", "ts", "event_id", "event_type", "value"), "sentinel")
+        q.processAllAvailable()
+        val after = spark.table(qname)
+          .filter(col("user_id") > 0)
+          .select(col("click_id"), col("purchase_id"))
+          .as[(Long, Option[Long])].collect().toSet
+        assert(after == Set((10L, Some(11L)), (20L, None)))
+      } finally q.stop()
     }
   }
 
@@ -668,28 +656,26 @@ class EventsSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val ev = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-restart").toFile
-    val replay = new java.io.File(root, "in"); replay.mkdirs()
-    val out = new java.io.File(root, "out").toString
-    val ckpt = new java.io.File(root, "ckpt").toString
-    def writeChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(root, s"_stage_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(replay, s"$name.parquet").toPath)
-      stage.listFiles().foreach(_.delete()); stage.delete()
-    }
-    // the restarted query must resume from the CHECKPOINT, not rescan:
-    // same checkpoint dir across both query instances
-    def start() = spark.readStream.schema(ev.schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(replay.toString)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try {
+    Scratch.withDir("graft-restart") { root =>
+      val replay = new java.io.File(root, "in"); replay.mkdirs()
+      val out = new java.io.File(root, "out").toString
+      val ckpt = new java.io.File(root, "ckpt").toString
+      def writeChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+        val stage = new java.io.File(root, s"_stage_$name")
+        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          new java.io.File(replay, s"$name.parquet").toPath)
+        stage.listFiles().foreach(_.delete()); stage.delete()
+      }
+      // the restarted query must resume from the CHECKPOINT, not rescan:
+      // same checkpoint dir across both query instances
+      def start() = spark.readStream.schema(ev.schema)
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(replay.toString)
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
       writeChunk(ev.filter(col("event_id") % 2 === 0), "chunk1")
       val q1 = start()
       try q1.processAllAvailable() finally q1.stop() // "crash" after batch 1
@@ -702,12 +688,6 @@ class EventsSpec extends AnyFunSuite {
       val want = ev.select("event_id").as[Long].collect().toSeq
       assert(got.sorted == want.sorted,
         s"lost or duplicated rows: got ${got.size}, want ${want.size}")
-    } finally {
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(deleteRec))
-        f.delete()
-      }
-      deleteRec(root)
     }
   }
 

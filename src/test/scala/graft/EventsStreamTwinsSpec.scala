@@ -3,6 +3,7 @@ package graft
 import graft.operators.Events
 import graft.streaming.EventsStream
 import org.apache.spark.sql.functions._
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming twins that share an event stream shape — the three
@@ -11,16 +12,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * hand-built fixture with known sessions, a known type skew and
   * known click→purchase pairs.
   *
-  * Runs on a private fixture dir so chunk-cache keys cannot collide
-  * with other suites sharing the JVM-wide session.
+  * Each test runs on a fresh scratch copy of the fixture.
   */
 class EventsStreamTwinsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  /** 3 users x 2 sessions x 4 events (plus a type skew for the MG
-    * sketch), written as events.parquet in a dedicated temp dir.
+  /** The fixture dir of the running test: 3 users x 2 sessions x 4
+    * events (plus a type skew for the MG sketch) as events.parquet.
     */
-  private lazy val dir: String = {
+  private var dir: String = _
+
+  override def withFixture(test: NoArgTest): Outcome =
+    Scratch.withDir("graft-twins-fixture") { d =>
+      writeFixture(d.toString)
+      dir = d.toString
+      super.withFixture(test)
+    }
+
+  private def writeFixture(d: String): Unit = {
     import spark.implicits._
     val base = java.sql.Timestamp.valueOf("2026-01-05 08:00:00").getTime
     val rows = for {
@@ -34,11 +43,8 @@ class EventsStreamTwinsSpec extends AnyFunSuite {
       val tpe = if (k == 0) "click" else if (k == 1) "purchase" else "view"
       (id, u, ts, tpe, k * 1.5)
     }
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-twins-fixture").toString
     rows.toDF("event_id", "user_id", "ts", "event_type", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
-    d
   }
 
   private def sessionSet(df: org.apache.spark.sql.DataFrame) =

@@ -39,13 +39,15 @@ class JsonlSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "source", "text").repartition(3)
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
-    JsonlExport.writeShards(docs, Seq("doc_id", "source", "text"), dir)
-    val back = spark.read.json(dir)
-      .select("doc_id", "source", "text")
-      .as[(Long, String, String)].collect().toSet
-    assert(back == docs.as[(Long, String, String)].collect().toSet)
-    assert(back.nonEmpty)
+    Scratch.withDir("graft-jsonl") { d =>
+      val dir = d.toString
+      JsonlExport.writeShards(docs, Seq("doc_id", "source", "text"), dir)
+      val back = spark.read.json(dir)
+        .select("doc_id", "source", "text")
+        .as[(Long, String, String)].collect().toSet
+      assert(back == docs.as[(Long, String, String)].collect().toSet)
+      assert(back.nonEmpty)
+    }
   }
 
   test("timestamps and doubles emit canonical forms") {
@@ -67,29 +69,32 @@ class JsonlSpec extends AnyFunSuite {
       (5L, None),
       (6L, Some("control  chars")))
     val df = rows.toDF("id", "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-rt").toString
-    JsonlExport.writeShards(df, Seq("id", "s"), dir)
-    val back = JsonlSource.read(spark, dir, df.schema)
-      .as[(Long, Option[String])].collect().toSet
-    assert(back == rows.toSet)
+    Scratch.withDir("graft-jsonl-rt") { d =>
+      val dir = d.toString
+      JsonlExport.writeShards(df, Seq("id", "s"), dir)
+      val back = JsonlSource.read(spark, dir, df.schema)
+        .as[(Long, Option[String])].collect().toSet
+      assert(back == rows.toSet)
+    }
   }
 
   test("JsonlSource: FAILFAST dies on a malformed line, " +
       "readWithCorrupt quarantines it") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-bad")
-    java.nio.file.Files.writeString(dir.resolve("part-0.txt"),
-      "{\"id\":1,\"s\":\"good\"}\nNOT JSON AT ALL\n{\"id\":3,\"s\":\"also good\"}\n")
-    val schema = Seq((1L, "x")).toDF("id", "s").schema
-    intercept[org.apache.spark.SparkException] {
-      JsonlSource.read(spark, dir.toString, schema).collect()
+    Scratch.withDir("graft-jsonl-bad") { dir =>
+      java.nio.file.Files.writeString(new java.io.File(dir, "part-0.txt").toPath,
+        "{\"id\":1,\"s\":\"good\"}\nNOT JSON AT ALL\n{\"id\":3,\"s\":\"also good\"}\n")
+      val schema = Seq((1L, "x")).toDF("id", "s").schema
+      intercept[org.apache.spark.SparkException] {
+        JsonlSource.read(spark, dir.toString, schema).collect()
+      }
+      val got = JsonlSource.readWithCorrupt(spark, dir.toString, schema)
+        .select("id", "s", "_corrupt")
+        .as[(Option[Long], Option[String], Option[String])].collect().toSet
+      assert(got == Set(
+        (Some(1L), Some("good"), None),
+        (None, None, Some("NOT JSON AT ALL")),
+        (Some(3L), Some("also good"), None)))
     }
-    val got = JsonlSource.readWithCorrupt(spark, dir.toString, schema)
-      .select("id", "s", "_corrupt")
-      .as[(Option[Long], Option[String], Option[String])].collect().toSet
-    assert(got == Set(
-      (Some(1L), Some("good"), None),
-      (None, None, Some("NOT JSON AT ALL")),
-      (Some(3L), Some("also good"), None)))
   }
 }

@@ -24,8 +24,7 @@ class LayoutSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val ev = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-part").toFile
-    try {
+    Scratch.withDir("graft-part") { tmp =>
       val out = new java.io.File(tmp, "by_day").toString
       Layout.writeDatePartitioned(ev, "ts", out)
       // one directory per day on disk
@@ -41,7 +40,7 @@ class LayoutSpec extends AnyFunSuite {
         .filter(to_date(col("ts")) === lit("2024-01-10").cast("date"))
         .count()
       assert(read.count() == expect && expect > 0)
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   test("zorder2 reference check against bit-by-bit interleave") {
@@ -82,8 +81,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("min/max manifest skip-scan prunes files and loses no rows") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-skip-t").toFile
-    try {
+    Scratch.withDir("graft-skip-t") { tmp =>
       val df = (0L until 10000L).toDF("k")
         .withColumn("payload", col("k") * 7)
       df.repartitionByRange(10, col("k")).sortWithinPartitions(col("k"))
@@ -105,15 +103,15 @@ class LayoutSpec extends AnyFunSuite {
       // empty range: no file survives, schema-only scan, zero rows
       assert(Layout.skipScan(spark, tmp.toString, man, "k",
         50000L, 60000L).count() == 0L)
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   test("compact rewrites many small files into ceil(rows/target) " +
       "sorted files with content intact") {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft-cmp-a").toFile
-    val out = java.nio.file.Files.createTempDirectory("graft-cmp-b").toFile
-    try {
+    Scratch.withDir("graft-cmp-a") { root =>
+      val in = new java.io.File(root, "in"); in.mkdirs()
+      val out = new java.io.File(root, "out"); out.mkdirs()
       (0L until 5000L).toDF("k").withColumn("v", col("k") % 97)
         .repartition(32).write.mode("overwrite").parquet(in.toString)
       val stats = Layout.compact(spark, in.toString, out.toString, "k", 1000L)
@@ -131,18 +129,15 @@ class LayoutSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
       for (Seq((_, hi), (lo2, _)) <- ranges.toSeq.sliding(2))
         assert(hi < lo2, "compacted files overlap in key space")
-    } finally {
-      SparkTestSession.deleteRecursively(in)
-      SparkTestSession.deleteRecursively(out)
     }
   }
 
   test("compact fails loud when the key cannot fill the requested " +
       "file count (empty range partitions), naming the cause") {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft-cmp-c").toFile
-    val out = java.nio.file.Files.createTempDirectory("graft-cmp-d").toFile
-    try {
+    Scratch.withDir("graft-cmp-c") { root =>
+      val in = new java.io.File(root, "in"); in.mkdirs()
+      val out = new java.io.File(root, "out"); out.mkdirs()
       // one distinct key, 4000 rows, target 1000 → nOut=4 but the
       // RangePartitioner can only fill one partition
       Seq.fill(4000)(7L).toDF("k")
@@ -151,18 +146,13 @@ class LayoutSpec extends AnyFunSuite {
         Layout.compact(spark, in.toString, out.toString, "k", 1000L)
       }
       assert(e.getMessage.contains("distinct"), e.getMessage)
-    } finally {
-      SparkTestSession.deleteRecursively(in)
-      SparkTestSession.deleteRecursively(out)
     }
   }
 
   test("overwritePartitionsDynamic rewrites only the partitions " +
       "present in the frame; untouched partition files survive") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dyn-spec")
-      .toFile
-    try {
+    Scratch.withDir("graft-dyn-spec") { dir =>
       val out = new java.io.File(dir, "t").toString
       Layout.overwritePartitionsDynamic(
         Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "p", "v"),
@@ -180,7 +170,7 @@ class LayoutSpec extends AnyFunSuite {
         .listFiles().map(f => f.getName -> f.lastModified()).toMap
       assert(bFilesAfter == bFilesBefore,
         "untouched partition's files were rewritten")
-    } finally SparkTestSession.deleteRecursively(dir)
+    }
   }
 
   test("balancedShards: hand-traced band round-robin with rotation, " +

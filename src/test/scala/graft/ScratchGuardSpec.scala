@@ -5,9 +5,10 @@ import scala.jdk.CollectionConverters._
 
 /** One lifecycle for scratch data: [[Scratch.landed]] and
   * [[Scratch.withDir]] create, materialize and delete every scratch
-  * directory, so `Scratch.scala` is the only file in `src/main` that
-  * creates a temp directory or deletes a tree. Sixteen hand-written
-  * create / try / finally-delete blocks and three copies of the
+  * directory, so `Scratch.scala` is the only file in `src/main` or
+  * `src/test` that creates a temp directory or deletes a tree. Sixteen
+  * hand-written create / try / finally-delete blocks in `src/main`,
+  * fifty temp directories in `src/test`, and nine copies of the
   * recursive delete once sat beside it — scan the sources so a new
   * copy fails the build instead of a later review.
   */
@@ -49,25 +50,43 @@ class ScratchGuardSpec extends AnyFunSuite {
         |""".stripMargin).isEmpty)
   }
 
-  test("no file in src/main outside Scratch.scala creates a temp " +
-      "directory or deletes a tree — one scratch lifecycle") {
-    val root = java.nio.file.Paths.get("src/main")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    def read(p: java.nio.file.Path): String =
-      new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-    val scratch = files.find(_.getFileName.toString == owner)
-    assert(scratch.nonEmpty, s"scanned the wrong tree: ${root.toAbsolutePath}")
-    val offenders = files
-      .filterNot(_.getFileName.toString == owner)
-      .flatMap(p => scratchCopies(read(p)).map(w => s"$p: $w"))
+  private def scalaFiles(root: String): Seq[java.nio.file.Path] =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator()
+      .asScala.filter(_.toString.endsWith(".scala")).toSeq
+
+  private def read(p: java.nio.file.Path): String =
+    new String(java.nio.file.Files.readAllBytes(p),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  private def assertNoCopies(files: Seq[java.nio.file.Path]): Unit = {
+    val offenders =
+      files.flatMap(p => scratchCopies(read(p)).map(w => s"$p: $w"))
     assert(offenders.isEmpty,
       "use Scratch.landed / Scratch.withDir instead of a hand-written " +
         "scratch block:\n" + offenders.mkString("\n"))
+  }
+
+  test("no file in src/main outside Scratch.scala creates a temp " +
+      "directory or deletes a tree — one scratch lifecycle") {
+    val files = scalaFiles("src/main")
+    val scratch = files.find(_.getFileName.toString == owner)
+    assert(scratch.nonEmpty, "scanned the wrong tree: " +
+      java.nio.file.Paths.get("src/main").toAbsolutePath)
+    assertNoCopies(files.filterNot(_ == scratch.get))
     // inside Scratch: one recursive delete, behind the private allocator
     // and the disk-backed lifecycle
     assert(scratchCopies(read(scratch.get)).sorted ==
       Seq("recursive delete", "temp directory", "temp directory"))
+  }
+
+  test("no file in src/test creates a temp directory or deletes a " +
+      "tree — the tests use the same scratch lifecycle") {
+    val self = "ScratchGuardSpec.scala"
+    val files = scalaFiles("src/test")
+    assert(files.exists(_.getFileName.toString == self),
+      "scanned the wrong tree: " +
+        java.nio.file.Paths.get("src/test").toAbsolutePath)
+    // this spec's own planted copies are the scanner's fixture
+    assertNoCopies(files.filterNot(_.getFileName.toString == self))
   }
 }

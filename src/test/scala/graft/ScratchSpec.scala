@@ -73,41 +73,35 @@ class ScratchSpec extends AnyFunSuite {
   }
 
   test("scopedRoot nests under graft-scratch and sweeps by liveness") {
-    val parent = java.nio.file.Files
-      .createTempDirectory("graft-scratch-spec").toFile
-    val root = Scratch.scopedRoot(parent).get
-    assert(root.getName == "graft-scratch",
-      "run dirs must not sit unscoped in a shared tmpdir")
+    Scratch.withDir("graft-scratch-spec") { parent =>
+      val root = Scratch.scopedRoot(parent).get
+      assert(root.getName == "graft-scratch",
+        "run dirs must not sit unscoped in a shared tmpdir")
 
-    // a dead run (no such pid), a live run (our own pid), a fresh
-    // unparseable leftover, and a stale unparseable leftover
-    val dead = new java.io.File(root, "run-999999999")
-    dead.mkdirs()
-    new java.io.File(dead, "chunk.parquet").createNewFile()
-    val live = new java.io.File(root,
-      s"run-${ProcessHandle.current().pid()}")
-    live.mkdirs()
-    new java.io.File(live, "inflight").createNewFile()
-    val fresh = new java.io.File(root, "legacy-layout")
-    fresh.mkdirs()
-    val stale = new java.io.File(root, "crashed-mkdir")
-    stale.mkdirs()
-    stale.setLastModified(
-      System.currentTimeMillis() - 7L * 3600 * 1000)
+      // a dead run (no such pid), a live run (our own pid), a fresh
+      // unparseable leftover, and a stale unparseable leftover
+      val dead = new java.io.File(root, "run-999999999")
+      dead.mkdirs()
+      new java.io.File(dead, "chunk.parquet").createNewFile()
+      val live = new java.io.File(root,
+        s"run-${ProcessHandle.current().pid()}")
+      live.mkdirs()
+      new java.io.File(live, "inflight").createNewFile()
+      val fresh = new java.io.File(root, "legacy-layout")
+      fresh.mkdirs()
+      val stale = new java.io.File(root, "crashed-mkdir")
+      stale.mkdirs()
+      stale.setLastModified(
+        System.currentTimeMillis() - 7L * 3600 * 1000)
 
-    // second call re-sweeps the same root
-    assert(Scratch.scopedRoot(parent).get == root)
-    assert(!dead.exists(), "dead run's scratch must be swept")
-    assert(live.exists() &&
-      new java.io.File(live, "inflight").exists(),
-      "a live run's scratch must never be touched")
-    assert(fresh.exists(), "fresh unparseable entries survive")
-    assert(!stale.exists(), "stale unparseable entries age out")
-
-    // cleanup
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+      // second call re-sweeps the same root
+      assert(Scratch.scopedRoot(parent).get == root)
+      assert(!dead.exists(), "dead run's scratch must be swept")
+      assert(live.exists() &&
+        new java.io.File(live, "inflight").exists(),
+        "a live run's scratch must never be touched")
+      assert(fresh.exists(), "fresh unparseable entries survive")
+      assert(!stale.exists(), "stale unparseable entries age out")
     }
-    rm(parent)
   }
 }

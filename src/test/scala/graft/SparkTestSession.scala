@@ -4,12 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (JVM-wide, forked test run). */
 object SparkTestSession {
-  /** Recursive temp-dir cleanup shared by the I/O suites. */
-  def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
-
   /** Run `f`, counting the streaming queries started on the stream
     * session meanwhile. `onQueryStarted` runs before `start()` returns,
     * so the count is complete when `f` returns.
@@ -32,8 +26,10 @@ object SparkTestSession {
 
   lazy val spark: SparkSession = {
     val s = Sessions.builder("graft-test", "local[4]", "4")
+      // session-lifetime, so inside this JVM's scratch run dir rather
+      // than a Scratch.withDir scope: the next run's sweep deletes it
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        new java.io.File(Scratch.base.toFile, "warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -150,9 +150,7 @@ class XmlPipeSpec extends AnyFunSuite {
     val src = graft.streaming.EventsStream.source(ss, dir)
       .select(col("event_id"), col("event_type"))
     val docs = XmlPipe.formatDocs(src, Seq("event_id"))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-stream-docset").toFile
-    try {
+    Scratch.withDir("graft-stream-docset") { tmp =>
       val q = XmlPipe.writeStreamingDocsets(docs, tmp.toString)
       try q.processAllAvailable() finally q.stop()
       val shards = java.nio.file.Files.walk(tmp.toPath).iterator().asScala
@@ -172,7 +170,7 @@ class XmlPipeSpec extends AnyFunSuite {
       }
       val want = Tables.load(spark, dir, "events").count()
       assert(nDocs == want, s"docs across shards $nDocs != events $want")
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   test("readDocset inverts the export exactly, including entity-laden " +
@@ -184,9 +182,7 @@ class XmlPipeSpec extends AnyFunSuite {
       (3L, "line one\nline two", ""),
       (4L, null.asInstanceOf[String], "tail"))
     val docs = rows.toDF("doc_id", "text", "note")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-readback").toFile
-    try {
+    Scratch.withDir("graft-readback") { tmp =>
       val out = new java.io.File(tmp, "ds").toString
       XmlPipe.writeShardedDocsets(
         XmlPipe.formatDocs(docs, Seq("doc_id")), out)
@@ -197,7 +193,7 @@ class XmlPipeSpec extends AnyFunSuite {
         (id, Option(t).getOrElse(""), Option(n).getOrElse(""))
       }
       assert(back == want)
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   test("readDocset round-trips 300 randomized values: entities, " +
@@ -212,16 +208,14 @@ class XmlPipeSpec extends AnyFunSuite {
         .map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
       (i, s)
     }
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-fuzz-rt").toFile
-    try {
+    Scratch.withDir("graft-fuzz-rt") { tmp =>
       val out = new java.io.File(tmp, "ds").toString
       XmlPipe.writeShardedDocsets(
         XmlPipe.formatDocs(rows.toDF("doc_id", "body"), Seq("doc_id")), out)
       val back = XmlPipe.readDocset(spark, out, Seq("body"))
         .orderBy("id").as[(Long, String)].collect().toSeq
       assert(back == rows)
-    } finally SparkTestSession.deleteRecursively(tmp)
+    }
   }
 
   test("streaming docset sink is exactly-once across stop/restart: " +
@@ -232,26 +226,24 @@ class XmlPipeSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("body", StringType)))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-docset-src").toFile
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-docset-out").toFile
-    def docsStream = {
-      val raw = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      XmlPipe.formatDocs(raw, Seq("doc_id"))
-    }
-    def land(rows: Seq[(Long, String)], name: String): Unit = {
-      val stage = new java.io.File(srcDir, s"_stage_$name")
-      rows.toDF("doc_id", "body").coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(srcDir, s"$name.parquet").toPath)
-      stage.listFiles().foreach(_.delete()); stage.delete()
-    }
-    try {
+    Scratch.withDir("graft-docset") { root =>
+      val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
+      val outDir = new java.io.File(root, "out"); outDir.mkdirs()
+      def docsStream = {
+        val raw = ss.readStream.schema(schema)
+          .option("pathGlobFilter", "*.parquet")
+          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+        XmlPipe.formatDocs(raw, Seq("doc_id"))
+      }
+      def land(rows: Seq[(Long, String)], name: String): Unit = {
+        val stage = new java.io.File(srcDir, s"_stage_$name")
+        rows.toDF("doc_id", "body").coalesce(1)
+          .write.mode("overwrite").parquet(stage.toString)
+        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          new java.io.File(srcDir, s"$name.parquet").toPath)
+        stage.listFiles().foreach(_.delete()); stage.delete()
+      }
       land((1L to 5L).map(i => (i, s"first $i")), "chunk1")
       val q1 = XmlPipe.writeStreamingDocsets(docsStream, outDir.toString)
       try q1.processAllAvailable() finally q1.stop()
@@ -270,24 +262,23 @@ class XmlPipeSpec extends AnyFunSuite {
             .findAllMatchIn(text).map(_.group(1).toLong)
         }.toSeq
       assert(ids.sorted == (1L to 9L), s"got $ids")
-    } finally {
-      SparkTestSession.deleteRecursively(srcDir)
-      SparkTestSession.deleteRecursively(outDir)
     }
   }
 
   test("sharded docsets: each shard is a complete docset") {
-    val tmp = java.nio.file.Files.createTempDirectory("xmlshard").toString
-    val docs = XmlPipe.formatDocs(docsDf.repartition(2), Seq("doc_id"))
-    XmlPipe.writeShardedDocsets(docs, tmp)
-    val files = new java.io.File(tmp).listFiles()
-      .filter(_.getName.startsWith("part-")).toSeq
-    assert(files.size == 2)
-    for (f <- files) {
-      val content = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      assert(content.startsWith(XmlPipe.Header))
-      assert(content.trim.endsWith("</sphinx:docset>"))
+    Scratch.withDir("xmlshard") { d =>
+      val tmp = d.toString
+      val docs = XmlPipe.formatDocs(docsDf.repartition(2), Seq("doc_id"))
+      XmlPipe.writeShardedDocsets(docs, tmp)
+      val files = new java.io.File(tmp).listFiles()
+        .filter(_.getName.startsWith("part-")).toSeq
+      assert(files.size == 2)
+      for (f <- files) {
+        val content = new String(
+          java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
+        assert(content.startsWith(XmlPipe.Header))
+        assert(content.trim.endsWith("</sphinx:docset>"))
+      }
     }
   }
 
@@ -489,9 +480,9 @@ class XmlPipeSpec extends AnyFunSuite {
   test("writeDocsetFile is all or nothing: a failing partition leaves " +
       "neither the target nor a temp; a success lands the whole docset") {
     val n = 6
-    val dir = java.nio.file.Files.createTempDirectory("graft-docset-file")
-    val target = dir.resolve("docset.xml").toString
-    try {
+    Scratch.withDir("graft-docset-file") { d =>
+      val dir = d.toPath
+      val target = dir.resolve("docset.xml").toString
       val bad = gatedDocs(n, per = 20, bodyLen = 10, gate = n, throwIn = 3)
       val err = intercept[SparkException](XmlPipe.writeDocsetFile(bad, target))
       assert(err.getMessage.startsWith("writeDocset: partition 3 of 6 failed"),
@@ -505,6 +496,6 @@ class XmlPipeSpec extends AnyFunSuite {
       XmlPipe.writeDocset(good, want)
       assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(target))
         .sameElements(want.toByteArray))
-    } finally SparkTestSession.deleteRecursively(dir.toFile)
+    }
   }
 }
