@@ -8,6 +8,11 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The repeated-measure bench over the registered queries.
   *
@@ -65,13 +70,13 @@ object Bench {
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
 
-  /** Block-manager storage memory in use (MB) across executors, read
-    * after each query's sweep: a rising series across the suite means
-    * pinned blocks are accumulating.
+  /** Block-manager storage memory in use (fractional MB) across
+    * executors, read after each query's sweep: a rising series across
+    * the suite means pinned blocks are accumulating.
     */
-  private def storageUsedMb(spark: SparkSession): Long =
+  private def storageUsedMb(spark: SparkSession): Double =
     spark.sparkContext.getExecutorMemoryStatus.values
-      .map { case (max, remaining) => max - remaining }.sum / (1024 * 1024)
+      .map { case (max, remaining) => max - remaining }.sum / (1024.0 * 1024)
 
   /** Absorb JVM, codegen and session warm-up outside the timed loop:
     * one batch job, one untimed canary (so the timed canaries differ
@@ -94,9 +99,10 @@ object Bench {
   }
 
   /** Runs every query `repeats` times (see the object doc) and returns
-    * the artifact. Each query's formatted plan, with whatever
-    * [[PlanCapture]] recorded during its first run, is written to
-    * `plansDir/<name>.txt` after that run, untimed.
+    * the artifact. Each query's formatted plan as its first run's `noop`
+    * write executed it (AQE's final plan), with whatever [[PlanCapture]]
+    * recorded during that run, is written to `plansDir/<name>.txt`
+    * after the run, untimed.
     */
   def run(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
@@ -134,18 +140,22 @@ object Bench {
           SparkEntry.evictMemos(spark)
           PlanCapture.drain()
           val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+          // an earlier write's late event must not pass for this one's
+          if (rep == 0) Bridge.drainListenerBus(spark.sparkContext)
+          var writes: Option[NoopWrites] = None
           try {
             val t0 = System.nanoTime()
             val df = fn(spark, sfDir)
+            if (rep == 0) writes = Some(new NoopWrites(df.sparkSession))
             df.write.format("noop").mode("overwrite").save()
             times += seconds(t0)
-            if (rep == 0) writePlan(plansDir, name, df)
+            writes.foreach(w => writePlan(plansDir, name, w.last()))
           } catch {
             case e: InterruptedException =>
               Thread.currentThread().interrupt() // and end the run
               throw e
             case NonFatal(e) => error = Some(e)
-          }
+          } finally writes.foreach(_.close())
           SparkEntry.sweepLeakedBlocks(spark, persistedBefore)
           rep += 1
         }
@@ -191,13 +201,43 @@ object Bench {
     } finally PlanCapture.enabled = captureWas
   }
 
+  /** Records the query executions of the `noop` writes on `spark` from
+    * its construction until [[close]].
+    */
+  private final class NoopWrites(spark: SparkSession)
+      extends QueryExecutionListener {
+    @volatile private var latest: Option[QueryExecution] = None
+    spark.listenerManager.register(this)
+
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit = qe.analyzed match {
+      case w: V2WriteCommand => w.table match {
+        case r: DataSourceV2Relation if r.table.name == "noop-table" =>
+          latest = Some(qe)
+        case _ => ()
+      }
+      case _ => ()
+    }
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+
+    /** The latest `noop` write's execution, once its event is in. */
+    def last(): QueryExecution = {
+      Bridge.drainListenerBus(spark.sparkContext)
+      latest.getOrElse(
+        throw new IllegalStateException("no noop write was reported"))
+    }
+
+    def close(): Unit = spark.listenerManager.unregister(this)
+  }
+
   private def writePlan(plansDir: java.io.File, name: String,
-      df: DataFrame): Unit = {
+      qe: QueryExecution): Unit = {
     val captured = PlanCapture.drain().map { case (label, text) =>
       s"\n==== captured: $label ====\n$text"
     }.mkString
     Files.writeString(new java.io.File(plansDir, s"$name.txt").toPath,
-      df.queryExecution.explainString(
+      qe.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) +
         captured)
   }

@@ -63,12 +63,18 @@ object PlanAudit {
   private case class Node(depth: Int, header: String, id: Int)
 
   private val DetailHead = """^\((\d+)\) (\S.*)$""".r
-  private val TreeId = """\((\d+)\)\s*$""".r
+  // a query stage of an executed AQE plan carries its runtime statistics
+  private val TreeId = """\((\d+)\)(?:, Statistics\(.*\))?\s*$""".r
+  private val ReusesId = """Reuses operator id: (\d+)""".r
 
   /** One formatted-explain section: the numbered tree plus a detail
     * map keyed by node id (PlanCapture appends extra sections to the
     * same file; each re-numbers from (1), so sections must be parsed
-    * independently or detail lookups cross wires).
+    * independently or detail lookups cross wires). An executed AQE
+    * plan lists its final plan and its initial plan under unnumbered
+    * `== Final Plan ==` / `== Initial Plan ==` lines; a line without a
+    * `+- ` marker sits where its marker would be, and the `* ` of a
+    * whole-stage-codegen'd node is not part of its name.
     */
   private def parseSection(s: String): (Vector[Node], Map[Int, String]) = {
     val tree = Vector.newBuilder[Node]
@@ -86,7 +92,9 @@ object PlanAudit {
           else TreeId.findFirstMatchIn(ln).foreach { m =>
             val p = math.max(ln.indexOf("+- "), ln.indexOf(":- "))
             val header = (if (p >= 0) ln.substring(p + 3) else ln).trim
-            tree += Node(if (p >= 0) p else -3, header, m.group(1).toInt)
+              .stripPrefix("* ")
+            val depth = if (p >= 0) p else ln.indexWhere(_ != ' ') - 3
+            tree += Node(depth, header, m.group(1).toInt)
           }
       }
     }
@@ -111,6 +119,16 @@ object PlanAudit {
 
   private def name(n: Node): String = n.header.takeWhile(_ != ' ')
 
+  /** Query stages of an executed AQE plan wrap the exchange below. */
+  private def passThrough(nm: String): Boolean =
+    PassThrough(nm) || nm.endsWith("QueryStage")
+
+  /** The node a ReusedExchange reuses. */
+  private def reused(tree: Vector[Node], details: Map[Int, String],
+      n: Node): Option[Int] =
+    details.get(n.id).flatMap(ReusesId.findFirstMatchIn).map(_.group(1).toInt)
+      .map(id => tree.indexWhere(_.id == id)).filter(_ >= 0)
+
   /** Is the subtree rooted at `i` bounded-cardinality under the
     * adjudication rules? `q` is the query name (for roster lookups).
     */
@@ -118,11 +136,15 @@ object PlanAudit {
       q: String, i: Int): Either[String, Unit] = {
     val n = tree(i)
     name(n) match {
-      case nm if PassThrough(nm) =>
+      case nm if passThrough(nm) =>
         children(tree, i).headOption match {
           case Some(c) => benignCard(tree, details, q, c)
           case None => Left(s"$nm with no child")
         }
+      case "ReusedExchange" => reused(tree, details, n) match {
+        case Some(r) => benignCard(tree, details, q, r)
+        case None => Left("ReusedExchange of an unlisted node")
+      }
       case "BroadcastExchange" =>
         if (!details.get(n.id).exists(_.contains("IdentityBroadcastMode")))
           Left("BroadcastExchange without IdentityBroadcastMode")
@@ -163,23 +185,27 @@ object PlanAudit {
     * through (they expand or shrink a frame that is already bounded
     * by its source).
     */
-  private def reduced(tree: Vector[Node], i: Int): Boolean = {
+  private def reduced(tree: Vector[Node], details: Map[Int, String],
+      i: Int): Boolean = {
     val n = tree(i)
     name(n) match {
+      case "ReusedExchange" =>
+        reused(tree, details, n).exists(reduced(tree, details, _))
       case "HashAggregate" | "SortAggregate" | "ObjectHashAggregate" => true
       case "GlobalLimit" | "CollectLimit" | "LocalLimit" |
           "TakeOrderedAndProject" => true
       case "Range" => true
       case "Scan" => n.header.contains("ExistingRDD")
       case nm if nm.endsWith("Join") =>
-        children(tree, i).forall(c => reduced(tree, c))
-      case "Union" => children(tree, i).forall(c => reduced(tree, c))
+        children(tree, i).forall(c => reduced(tree, details, c))
+      case "Union" =>
+        children(tree, i).forall(c => reduced(tree, details, c))
       case _ =>
         // pass-through (Project/Filter/Exchange/Sort/Window/Generate/
         // BroadcastExchange/AQEShuffleRead/...): cardinality class
         // comes from below; unknown leaves fail loud
         val cs = children(tree, i)
-        cs.nonEmpty && cs.forall(c => reduced(tree, c))
+        cs.nonEmpty && cs.forall(c => reduced(tree, details, c))
     }
   }
 
@@ -198,7 +224,7 @@ object PlanAudit {
           details.get(n.id).exists(_.contains("SinglePartition"))
       }.flatMap { i =>
         children(tree, i).headOption match {
-          case Some(c) if reduced(tree, c) => Nil
+          case Some(c) if reduced(tree, details, c) => Nil
           case Some(c) => Seq(s"$queryName: Exchange SinglePartition(" +
             s"${tree(i).id}) over unreduced ${name(tree(c))}")
           case None => Nil // captured fragment roots: nothing to judge

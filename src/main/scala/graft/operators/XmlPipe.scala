@@ -62,9 +62,9 @@ object XmlPipe {
       strictParity: Boolean = false): Column = dt match {
     case StringType =>
       // parseString (Query.java:279-301): parsed matrix → CDATA'd
-      // <mem> markup; otherwise escaped raw text.
-      when(MemMarkup.isMem(c), cdata(MemMarkup.memMarkup(c)))
-        .otherwise(escapeText(coalesce(c, lit(""))))
+      // <mem> markup; otherwise escaped raw text. One kernel pass per
+      // value: a non-matrix's null markup makes the CDATA null too.
+      coalesce(cdata(MemMarkup.markup(c)), escapeText(coalesce(c, lit(""))))
     case BinaryType =>
       cdata(if (strictParity) Render.renderStrict(c, dt)
       else Render.render(c, dt))

@@ -1,15 +1,19 @@
 package org.apache.spark.sql.graftshim
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Compile-time bridge into Spark's `private[sql]` Column ↔ Expression
-  * converters. Spark 4 removed the public `Column(expr)` constructor
+/** Compile-time bridge into Spark's `private[sql]` and `private[spark]`
+  * internals. Spark 4 removed the public `Column(expr)` constructor
   * (Column is now backed by a `ColumnNode`); the supported internal
   * path is `org.apache.spark.sql.classic.ExpressionUtils`. This object
-  * lives under `org.apache.spark.sql` purely to satisfy the
-  * `private[sql]` qualifier — it contains no Spark code.
+  * lives under `org.apache.spark.sql` purely to satisfy those access
+  * qualifiers — it contains no Spark code.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -23,4 +27,16 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** The JSON factory `from_json` builds under its default options. */
+  def jsonFactory(): JsonFactory =
+    new JSONOptions(Map.empty[String, String], "UTC", "_corrupt_record")
+      .buildJsonFactory()
+
+  /** The parser `from_json` opens over a string value. */
+  def jsonParser(factory: JsonFactory, s: UTF8String): JsonParser =
+    CreateJacksonParser.utf8String(factory, s)
+
+  /** Block until every listener event posted so far is delivered. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

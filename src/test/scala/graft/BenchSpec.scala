@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -9,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[Bench.run]] at sf0.001 over a registered memo-building query, a
   * stub that records the memos it finds on entry, and a stub that
   * throws: the artifact's keys, a total that is the sum of what it
-  * publishes, a failure that is named and not published, and memos
-  * evicted before every timed run.
+  * publishes, a failure that is named and not published, memos
+  * evicted before every timed run, plan dumps of the executed plan,
+  * and sub-MiB storage.
   */
 class BenchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -34,9 +37,10 @@ class BenchSpec extends AnyFunSuite {
       "dedup_minhash no longer builds a memo; pick another builder")
 
     val repeats = 2
-    val art = Scratch.withDir("graft-bench-plans") { plans =>
-      Bench.run(spark, sf, Seq("dedup_minhash" -> memoBuilder,
-        "memo_probe" -> memoProbe, "boom" -> boom), repeats, plans)
+    val (art, dump) = Scratch.withDir("graft-bench-plans") { plans =>
+      (Bench.run(spark, sf, Seq("dedup_minhash" -> memoBuilder,
+        "memo_probe" -> memoProbe, "boom" -> boom), repeats, plans),
+        Files.readString(new java.io.File(plans, "dedup_minhash.txt").toPath))
     }
 
     assert(art.fieldNames().asScala.toSet == Set("metric", "value", "unit",
@@ -71,6 +75,11 @@ class BenchSpec extends AnyFunSuite {
     assert(memosSeen.forall(_.isEmpty),
       s"memo_probe found memos on entry: $memosSeen")
     assert(art.get("plan_flags").get("plan_files").asInt == 2)
+    // the dump is the plan the noop write ran: AQE's final plan
+    assert(dump.contains("isFinalPlan=true"), dump.take(400))
+    // dedup_minhash's memo is still cached after its runs; at sf0.001
+    // it is well under 1 MiB
+    assert(art.get("queries_storage_mb").get("dedup_minhash").asDouble > 0)
     assert(art.get("canary").size == 3)
   }
 }

@@ -159,6 +159,42 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(v.size == 1 && v.head.contains("CartesianProduct"), v)
   }
 
+  private def executedPlan(keys: String): String =
+    s"""== Physical Plan ==
+       |OverwriteByExpression (11)
+       |+- AdaptiveSparkPlan (10)
+       |   +- == Final Plan ==
+       |      ResultQueryStage (9)
+       |      +- * BroadcastNestedLoopJoin Cross BuildRight (8)
+       |         :- ShuffleQueryStage (4), Statistics(sizeInBytes=16.0 B, rowCount=1)
+       |         :  +- Exchange (3)
+       |         :     +- * HashAggregate (2)
+       |         :        +- Scan parquet  (1)
+       |         +- BroadcastQueryStage (7), Statistics(sizeInBytes=16.0 B, rowCount=1)
+       |            +- BroadcastExchange (6)
+       |               +- ShuffleQueryStage (5), Statistics(sizeInBytes=16.0 B, rowCount=1)
+       |                  +- ReusedExchange (12)
+       |
+       |(2) HashAggregate [codegen id : 1]
+       |Keys: $keys
+       |
+       |(3) Exchange
+       |Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=1]
+       |
+       |(6) BroadcastExchange
+       |Arguments: IdentityBroadcastMode, [plan_id=2]
+       |
+       |(12) ReusedExchange [Reuses operator id: 3]
+       |""".stripMargin
+
+  test("executed AQE plans: query stages, codegen stars and reused " +
+      "exchanges are seen through") {
+    assert(PlanAudit.allViolations("anything", executedPlan("[]")).isEmpty)
+    // the build side is judged at the reused exchange's source
+    val v = PlanAudit.allViolations("anything", executedPlan("[k#1]"))
+    assert(v.size == 1 && v.head.contains("keyed HashAggregate"), v)
+  }
+
   test("sweep: every BNLJ in the current bench plan dumps is " +
       "adjudicated (bnlj_unadjudicated = 0)") {
     val dir = new java.io.File("target/bench-plans")

@@ -48,6 +48,29 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("*(1)"), p)
   }
 
+  test("string fields are formatted by the mem_markup kernel — no " +
+      "from_json, no interpreted higher-order functions") {
+    import org.apache.spark.sql.catalyst.expressions.{
+      HigherOrderFunction, JsonToStructs}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val docs = Tables.load(spark, dir, "documents")
+    val strings = docs.schema.fields.collect {
+      case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
+    }.toSeq
+    assert(strings.size >= 2, docs.schema)
+    val qe = XmlPipe.formatDocs(docs.select(strings.map(docs(_)): _*),
+      strings.take(1)).queryExecution
+    val exprs = new AdaptiveSparkPlanHelper {}
+      .flatMap(qe.executedPlan)(_.expressions.flatMap(_.collect { case e => e }))
+    val interpreted = exprs.filter {
+      case _: JsonToStructs | _: HigherOrderFunction => true
+      case _ => false
+    }
+    assert(interpreted.isEmpty, qe.executedPlan)
+    assert(exprs.count(_.isInstanceOf[graft.functions.MemMarkupExpr]) ==
+      strings.size, qe.executedPlan)
+  }
+
   test("custom expressions stay inside whole-stage codegen") {
     // sdbm hash + minhash + dot product all implement doGenCode; the
     // projection over them must be a WholeStageCodegen stage, not an
