@@ -91,114 +91,112 @@ object Bench {
     implicit val sql: org.apache.spark.sql.SQLContext = ss.sqlContext
     import ss.implicits._
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-    val q = in.toDF().selectExpr("value % 2 AS k").groupBy("k").count()
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("graft_bench_stream_warmup").start()
-    try { in.addData(1L to 100L); q.processAllAvailable() } finally q.stop()
+    in.addData(1L to 100L)
+    graft.streaming.EventsStream.drained(
+      in.toDF().selectExpr("value % 2 AS k").groupBy("k").count()
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("graft_bench_stream_warmup"))
     graft.streaming.EventsStream.drainStateMetrics(): Unit
   }
 
   /** Runs every query `repeats` times (see the object doc) and returns
     * the artifact. Each query's formatted plan as its first run's `noop`
-    * write executed it (AQE's final plan), with whatever [[PlanCapture]]
-    * recorded during that run, is written to `plansDir/<name>.txt`
-    * after the run, untimed.
+    * write executed it (AQE's final plan), followed by every frame that
+    * run logged ([[Scratch.logged]]: its barriers and notes), is
+    * written to `plansDir/<name>.txt` after the run, untimed.
     */
   def run(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
       repeats: Int, plansDir: java.io.File): ObjectNode = {
     plansDir.mkdirs()
-    val captureWas = PlanCapture.enabled
-    PlanCapture.enabled = true
-    try {
-      warmUp(spark, sfDir)
-      val out = json.createObjectNode()
-      val published = json.createObjectNode()
-      val failed = json.createObjectNode()
-      val runs = json.createObjectNode()
-      val offsets = json.createObjectNode()
-      val gcs = json.createObjectNode()
-      val storage = json.createObjectNode()
-      val stateRows = json.createObjectNode()
-      val stateBytes = json.createObjectNode()
-      val canary = json.createArrayNode()
-      def stampCanary(at: String): Unit = {
-        val c = canaryProbe(spark, sfDir)
-        canary.add(c)
-        System.err.println(f"BENCH canary[$at] $c%8.2f s")
-      }
-      stampCanary("start")
-      val benchT0 = System.nanoTime()
-      queries.zipWithIndex.foreach { case ((name, fn), idx) =>
-        if (idx == queries.size / 2 && idx > 0) stampCanary("middle")
-        offsets.put(name, seconds(benchT0))
-        val gc0 = gcMillis()
-        val times = Seq.newBuilder[Double]
-        var error: Option[Throwable] = None
-        var rep = 0
-        while (rep < repeats && error.isEmpty) {
-          SparkEntry.evictMemos(spark)
-          PlanCapture.drain()
-          val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-          // an earlier write's late event must not pass for this one's
-          if (rep == 0) Bridge.drainListenerBus(spark.sparkContext)
-          var writes: Option[NoopWrites] = None
-          try {
-            val t0 = System.nanoTime()
+    warmUp(spark, sfDir)
+    val out = json.createObjectNode()
+    val published = json.createObjectNode()
+    val failed = json.createObjectNode()
+    val runs = json.createObjectNode()
+    val offsets = json.createObjectNode()
+    val gcs = json.createObjectNode()
+    val storage = json.createObjectNode()
+    val stateRows = json.createObjectNode()
+    val stateBytes = json.createObjectNode()
+    val canary = json.createArrayNode()
+    def stampCanary(at: String): Unit = {
+      val c = canaryProbe(spark, sfDir)
+      canary.add(c)
+      System.err.println(f"BENCH canary[$at] $c%8.2f s")
+    }
+    stampCanary("start")
+    val benchT0 = System.nanoTime()
+    queries.zipWithIndex.foreach { case ((name, fn), idx) =>
+      if (idx == queries.size / 2 && idx > 0) stampCanary("middle")
+      offsets.put(name, seconds(benchT0))
+      val gc0 = gcMillis()
+      val times = Seq.newBuilder[Double]
+      var error: Option[Throwable] = None
+      var rep = 0
+      while (rep < repeats && error.isEmpty) {
+        SparkEntry.evictMemos(spark)
+        val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+        // an earlier write's late event must not pass for this one's
+        if (rep == 0) Bridge.drainListenerBus(spark.sparkContext)
+        var writes: Option[NoopWrites] = None
+        try {
+          val t0 = System.nanoTime()
+          val (_, logged) = Scratch.logged {
             val df = fn(spark, sfDir)
             if (rep == 0) writes = Some(new NoopWrites(df.sparkSession))
             df.write.format("noop").mode("overwrite").save()
-            times += seconds(t0)
-            writes.foreach(w => writePlan(plansDir, name, w.last()))
-          } catch {
-            case e: InterruptedException =>
-              Thread.currentThread().interrupt() // and end the run
-              throw e
-            case NonFatal(e) => error = Some(e)
-          } finally writes.foreach(_.close())
-          SparkEntry.sweepLeakedBlocks(spark, persistedBefore)
-          rep += 1
-        }
-        gcs.put(name, gcMillis() - gc0)
-        storage.put(name, storageUsedMb(spark))
-        val sm = graft.streaming.EventsStream.drainStateMetrics()
-        if (sm.nonEmpty) {
-          stateRows.put(name, sm.values.map(_._1).sum)
-          stateBytes.put(name, sm.values.map(_._2).sum)
-        }
-        val ts = times.result()
-        val samples = runs.putArray(name)
-        ts.foreach(t => samples.add(t))
-        error match {
-          case Some(e) =>
-            val cause = s"${e.getClass.getName}: ${e.getMessage}"
-            failed.put(name, cause)
-            System.err.println(s"BENCH FAIL $name: $cause")
-          case None =>
-            published.put(name, median(ts))
-            System.err.println(
-              f"BENCH $name%-28s ${median(ts)}%8.2f s  (median of ${ts.size})")
-        }
+          }
+          times += seconds(t0)
+          writes.foreach(w => writePlan(plansDir, name, w.last(), logged))
+        } catch {
+          case e: InterruptedException =>
+            Thread.currentThread().interrupt() // and end the run
+            throw e
+          case NonFatal(e) => error = Some(e)
+        } finally writes.foreach(_.close())
+        SparkEntry.sweepLeakedBlocks(spark, persistedBefore)
+        rep += 1
       }
-      stampCanary("end")
-      val total = published.elements().asScala.map(_.asDouble).sum
-      out.put("metric", "total").put("value", total).put("unit", "sec")
-      out.put("n_queries", published.size)
-      out.set[ObjectNode]("queries", published)
-      out.set[ObjectNode]("failed", failed)
-      out.set[ObjectNode]("queries_runs", runs)
-      out.set[ObjectNode]("query_start_offsets_s", offsets)
-      out.set[ObjectNode]("queries_gc_ms", gcs)
-      out.set[ObjectNode]("queries_storage_mb", storage)
-      out.set[ObjectNode]("queries_state_rows", stateRows)
-      out.set[ObjectNode]("queries_state_bytes", stateBytes)
-      planCensus(out, plansDir, queries.map(_._1).filter(published.has))
-      out.put("repeats", repeats).put("sf", sfDir)
-        .put("plans_dir", plansDir.getPath)
-      out.set[JsonNode]("canary", canary)
-      scaleProbe(out)
-      out
-    } finally PlanCapture.enabled = captureWas
+      gcs.put(name, gcMillis() - gc0)
+      storage.put(name, storageUsedMb(spark))
+      val sm = graft.streaming.EventsStream.drainStateMetrics()
+      if (sm.nonEmpty) {
+        stateRows.put(name, sm.values.map(_._1).sum)
+        stateBytes.put(name, sm.values.map(_._2).sum)
+      }
+      val ts = times.result()
+      val samples = runs.putArray(name)
+      ts.foreach(t => samples.add(t))
+      error match {
+        case Some(e) =>
+          val cause = s"${e.getClass.getName}: ${e.getMessage}"
+          failed.put(name, cause)
+          System.err.println(s"BENCH FAIL $name: $cause")
+        case None =>
+          published.put(name, median(ts))
+          System.err.println(
+            f"BENCH $name%-28s ${median(ts)}%8.2f s  (median of ${ts.size})")
+      }
+    }
+    stampCanary("end")
+    val total = published.elements().asScala.map(_.asDouble).sum
+    out.put("metric", "total").put("value", total).put("unit", "sec")
+    out.put("n_queries", published.size)
+    out.set[ObjectNode]("queries", published)
+    out.set[ObjectNode]("failed", failed)
+    out.set[ObjectNode]("queries_runs", runs)
+    out.set[ObjectNode]("query_start_offsets_s", offsets)
+    out.set[ObjectNode]("queries_gc_ms", gcs)
+    out.set[ObjectNode]("queries_storage_mb", storage)
+    out.set[ObjectNode]("queries_state_rows", stateRows)
+    out.set[ObjectNode]("queries_state_bytes", stateBytes)
+    planCensus(out, plansDir, queries.map(_._1).filter(published.has))
+    out.put("repeats", repeats).put("sf", sfDir)
+      .put("plans_dir", plansDir.getPath)
+    out.set[JsonNode]("canary", canary)
+    scaleProbe(out)
+    out
   }
 
   /** Records the query executions of the `noop` writes on `spark` from
@@ -232,15 +230,26 @@ object Bench {
   }
 
   private def writePlan(plansDir: java.io.File, name: String,
-      qe: QueryExecution): Unit = {
-    val captured = PlanCapture.drain().map { case (label, text) =>
-      s"\n==== captured: $label ====\n$text"
-    }.mkString
+      qe: QueryExecution, logged: Seq[Scratch.Logged]): Unit =
     Files.writeString(new java.io.File(plansDir, s"$name.txt").toPath,
-      qe.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) +
-        captured)
-  }
+      explain(qe) + logged.map { l =>
+        // a logged frame's plan is evidence, not the query's result
+        val plan = try explain(l.plan)
+          catch { case NonFatal(e) => s"<explain failed: $e>" }
+        section(l.label, l.ms, plan)
+      }.mkString)
+
+  private def explain(qe: QueryExecution): String =
+    qe.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** One logged frame's section of a plan dump: the header [[PlanAudit]]
+    * splits on (with a pin's wall time), then the frame's plan.
+    */
+  private[graft] def section(label: String, ms: Option[Double],
+      plan: String): String =
+    s"\n==== captured: $label${ms.fold("")(m => f" (pin $m%.0f ms)")} ====\n" +
+      plan
 
   /** Anti-pattern census over the named queries' plan dumps:
     * CartesianProduct and single-partition exchanges are red, and

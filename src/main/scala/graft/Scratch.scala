@@ -1,6 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.graftshim.Bridge
 
 /** The one lifecycle for harness-ephemeral data: streaming replay
   * chunks and checkpoints, lake-layout and interchange round-trip
@@ -11,6 +20,11 @@ import org.apache.spark.sql.DataFrame
   * files that are gone. The allocator itself ([[dir]]) is private, and
   * `ScratchGuardSpec` keeps temp-directory creation and recursive
   * deletes out of the rest of `src/main`.
+  *
+  * It is also the one materialization barrier: [[pin]] is the only
+  * `localCheckpoint` in `src/main`, [[pinnedRdds]] the only walk for
+  * the blocks behind a pinned frame ([[unpin]] releases them), and
+  * [[logged]] the record of every barrier a run passed.
   *
   * On hosts with a writable /dev/shm (and headroom — below) the
   * scratch lives on tmpfs; otherwise it falls back to the JVM's
@@ -127,13 +141,13 @@ object Scratch {
     java.nio.file.Files.createTempDirectory(base, prefix)
 
   /** Runs `body` in a fresh scratch directory and returns its frame
-    * materialized (see [[materialized]]), so the rows stay readable
+    * pinned under `prefix` (see [[pin]]), so the rows stay readable
     * after the directory is deleted — also when `body` returns a lazy
     * read of the files it wrote. The directory is deleted on success
     * and on failure.
     */
   def landed(prefix: String)(body: java.io.File => DataFrame): DataFrame =
-    withDir(prefix)(d => materialized(body(d)))
+    withDir(prefix)(d => pin(prefix, body(d)))
 
   /** [[landed]]'s lifecycle without the materialization, for a result
     * that never reads the directory (a memory-sink table).
@@ -155,23 +169,73 @@ object Scratch {
     try body(f) finally deleteRec(f)
   }
 
-  /** `df` as an eager `localCheckpoint`, or as it is when its plan
-    * already is one (a `LogicalRDD` leaf over a checkpointed RDD):
-    * re-checkpointing would only duplicate the cached blocks. A
-    * `LogicalRDD` over a plain RDD (`createDataFrame(rdd, schema)`)
-    * still reads its input lazily, so it is checkpointed.
+  /** One entry of the barrier log: a frame's label, its
+    * `QueryExecution` and, for a [[pin]], the pin's wall milliseconds
+    * (None for a [[note]]).
     */
-  private[graft] def materialized(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD
-          if lr.rdd.isCheckpointed => df
-      case _ => df.localCheckpoint()
-    }
+  final case class Logged(label: String, plan: QueryExecution,
+      ms: Option[Double])
+
+  private val log =
+    new AtomicReference[Option[ConcurrentLinkedQueue[Logged]]](None)
+
+  /** Runs `body` with the barrier log on and returns what it logged, in
+    * order. Nothing is formatted here: a `QueryExecution` is explained
+    * later, outside whatever `body` timed.
+    */
+  def logged[A](body: => A): (A, Seq[Logged]) = {
+    val q = new ConcurrentLinkedQueue[Logged]()
+    val was = log.getAndSet(Some(q))
+    try { val a = body; (a, q.asScala.toSeq) } finally log.set(was)
+  }
+
+  private def append(e: => Logged): Unit = log.get.foreach(_.add(e))
+
+  /** Logs `df`'s plan under `label` without pinning it: a frame a loop
+    * only `head()`s or `collect()`s, whose shape the plan audit reads.
+    */
+  def note(label: String, df: DataFrame): Unit =
+    append(Logged(label, df.queryExecution, None))
+
+  /** The one materialization barrier: `df` as a `localCheckpoint`
+    * (eager unless `eager = false`), or as it is when it is pinned
+    * already, so a second pin never duplicates cached blocks. A frame
+    * is pinned when its plan is a `LogicalRDD` over a checkpointed RDD
+    * (materialized), or, for a lazy pin, over one that is only marked
+    * for a local checkpoint. A `LogicalRDD` over a plain RDD
+    * (`createDataFrame(rdd, schema)`) reads its input again on every
+    * action, so it is pinned in both cases. While [[logged]] runs, the
+    * pin is logged under `label` with `df`'s execution and wall time.
+    */
+  def pin(label: String, df: DataFrame, eager: Boolean = true): DataFrame = {
+    val t0 = System.nanoTime()
+    val pinned = rddOf(df.queryExecution.logical).exists(rdd =>
+      rdd.isCheckpointed || (!eager && Bridge.isLocallyCheckpointed(rdd)))
+    val out = if (pinned) df else df.localCheckpoint(eager)
+    append(Logged(label, df.queryExecution,
+      Some((System.nanoTime() - t0) / 1e6)))
+    out
+  }
+
+  /** The RDDs behind `df`'s `LogicalRDD` leaves: the blocks its pins
+    * hold (`df.rdd` would derive a fresh RDD from the plan instead).
+    */
+  private[graft] def pinnedRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves().flatMap(rddOf)
+
+  /** Releases the blocks behind `df`'s pins ([[pinnedRdds]]). */
+  private[graft] def unpin(df: DataFrame): Unit =
+    pinnedRdds(df).foreach(_.unpersist(blocking = false))
+
+  private def rddOf(plan: LogicalPlan): Option[RDD[_]] = plan match {
+    case lr: LogicalRDD => Some(lr.rdd)
+    case _ => None
+  }
 
   /** Point the JVM's java.io.tmpdir at the tmpfs scratch root, so
-    * the IMPLICIT ephemeral paths follow too: Spark's auto-created
-    * temporary streaming checkpoints and RocksDB state-store working
-    * dirs. Shuffle spill does NOT follow: `spark.local.dir` is pinned
+    * the IMPLICIT ephemeral paths follow too: RocksDB state-store
+    * working dirs, and the temporary checkpoint Spark creates for a
+    * streaming query started without one (the registry's never are). Shuffle spill does NOT follow: `spark.local.dir` is pinned
     * first (via system property, read by SparkConf at session build)
     * to the original disk tmpdir — see the class doc for why spill
     * must stay off RAM. Called by the Bench and Verify mains BEFORE

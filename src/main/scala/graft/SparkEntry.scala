@@ -49,7 +49,7 @@ object SparkEntry {
     * analytic off the materialization (at 100 TB: write the edge list
     * to storage once; never re-run the upstream joins per analytic) —
     * model that here with a per-(session, dir, name) memo of the
-    * localCheckpoint'd frame.
+    * pinned frame.
     *
     * Lifecycle: entries are bounded (one checkpointed frame per memo
     * name per (session, dir) actually queried) and live until
@@ -64,8 +64,8 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, String), DataFrame]()
 
-  /** Memoize `build` under (s, dir, name), materialized through
-    * [[Scratch.materialized]] (an operator may hand back an
+  /** Memoize `build` under (s, dir, name), pinned under the memo name
+    * through [[Scratch.pin]] (an operator may hand back an
     * already-pinned frame, which is kept as it is).
     */
   private[graft] def memoFrame(s: SparkSession, dir: String,
@@ -73,12 +73,12 @@ object SparkEntry {
     val key = (s, dir, name)
     val hit = frameMemo.get(key)
     if (hit != null) return hit
-    val frame = Scratch.materialized(build)
+    val frame = Scratch.pin(name, build)
     val prev = frameMemo.putIfAbsent(key, frame)
     if (prev != null) {
       // lost the race: free the redundant checkpoint's blocks now —
       // otherwise they stay pinned for the session lifetime
-      unpersistCheckpoint(frame)
+      Scratch.unpin(frame)
       prev
     } else frame
   }
@@ -107,18 +107,6 @@ object SparkEntry {
       t(s, dir, "documents").filter(col("doc_id") < 500),
       n = 3, minJaccard = 0.8)
 
-  /** Unpersist the block-manager storage behind a `localCheckpoint`'d
-    * frame. `df.rdd` would NOT do this — it derives a fresh RDD from
-    * the plan; the checkpoint blocks belong to the RDD captured inside
-    * the plan's `LogicalRDD` leaf.
-    */
-  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** RDD ids backing the cross-query memoized frames for `s` — a
     * long-lived harness that sweeps leaked checkpoint blocks between
     * queries (graft.Bench) must exempt these; everything else a query
@@ -128,9 +116,7 @@ object SparkEntry {
     import scala.jdk.CollectionConverters._
     frameMemo.asScala.iterator
       .collect { case ((sess, _, _), df) if sess eq s => df }
-      .flatMap(_.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      })
+      .flatMap(Scratch.pinnedRdds(_).map(_.id))
       .toSet
   }
 
@@ -161,7 +147,7 @@ object SparkEntry {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 eq s) {
-        try unpersistCheckpoint(e.getValue)
+        try Scratch.unpin(e.getValue)
         catch { case NonFatal(_) => () } // stopped session: blocks already gone
         it.remove()
       }
@@ -192,16 +178,6 @@ object SparkEntry {
   /** Placeholder in [[oracleSql]] for the recall dump dir. */
   val RecallDirToken = "__RECALL_DIR__"
 
-  /** One-row recall gate (n_exact, n_hit, recall_bp, meets_floor):
-    * write the approximate pair/neighbor keys to [[recallDumpDir]],
-    * read them back (so Spark and the oracle score byte-identical
-    * rows), and score them against the exact twin. `recall_bp` is
-    * integer basis points — `(10000 * n_hit) DIV n_exact`, truncating
-    * in both engines for non-negative counts — so the hash compare
-    * never rides on double formatting. Floors are pinned comfortably
-    * below the observed fixture minimum (measured across sf0.001/0.01/
-    * 0.1 by [[graft.tools.RecallProbe]]), not at it.
-    */
   /** Materialize a frame under [[recallDumpDir]] and read it back —
     * the shared move behind every `*_recall` / `*_bounds` gate: Spark
     * and the DuckDB oracle then score byte-identical rows.
@@ -213,6 +189,16 @@ object SparkEntry {
     s.read.parquet(path)
   }
 
+  /** One-row recall gate (n_exact, n_hit, recall_bp, meets_floor):
+    * write the approximate pair/neighbor keys to [[recallDumpDir]],
+    * read them back (so Spark and the oracle score byte-identical
+    * rows), and score them against the exact twin. `recall_bp` is
+    * integer basis points — `(10000 * n_hit) DIV n_exact`, truncating
+    * in both engines for non-negative counts — so the hash compare
+    * never rides on double formatting. Floors are pinned comfortably
+    * below the observed fixture minimum (measured across sf0.001/0.01/
+    * 0.1 by [[graft.tools.RecallProbe]]), not at it.
+    */
   private[graft] def recallGate(s: SparkSession, dir: String, name: String,
       exact: DataFrame, approx: DataFrame, keys: Seq[String],
       floorBp: Int): DataFrame = {

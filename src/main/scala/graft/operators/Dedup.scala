@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch.pin
 import graft.Tables
 import graft.functions.{minhash_shingled, shared_count, shingle_hashes, simhash64}
 import org.apache.spark.sql.{Column, DataFrame}
@@ -394,14 +395,10 @@ object Dedup {
     // isolation, and a full 57-query bench run timed this query at
     // 2.7 s with this exact code. The checkpoint itself costs ~0.4 s.
     // Conclusion: the slow driver-side runs were machine load, not
-    // plan shape. The PlanCapture hooks below put the pre-checkpoint
-    // plan and the materialization wall-clock into the bench artifacts
-    // so any recurrence is attributable from the dump alone.
-    graft.PlanCapture.record("minhashPairs verified (pre-checkpoint)", verified)
-    val t0 = System.nanoTime()
-    val out = verified.localCheckpoint()
-    graft.PlanCapture.note("minhashPairs checkpoint materialization",
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+    // plan shape. The barrier log puts the pre-checkpoint plan and the
+    // materialization wall-clock into the bench artifacts so any
+    // recurrence is attributable from the dump alone.
+    val out = pin("minhashPairs verified", verified)
     base.unpersist()
     out
   }
@@ -441,10 +438,10 @@ object Dedup {
     *
     * Output: (doc_id, cluster_id) for every node that appears in a
     * pair, cluster_id = min doc_id of its component.
-    */
-  /** @param checkpointEvery truncate lineage with a localCheckpoint
-    *   every this many rounds — without it the logical plan deepens by
-    *   one join+union+agg per round, and plan optimization / DAG
+    *
+    * @param checkpointEvery truncate lineage with a pin every this
+    *   many rounds — without it the logical plan deepens by one
+    *   join+union+agg per round, and plan optimization / DAG
     *   bookkeeping (plus full-lineage recompute on cache eviction)
     *   becomes the bottleneck at large diameters. (On a real cluster,
     *   prefer reliable `checkpoint()` to survive executor loss.)
@@ -477,11 +474,11 @@ object Dedup {
       val next = self.union(neighborLabels)
         .groupBy(col("node"))
         .agg(min(col("label")).as("label"), max(col("old")).as("old"))
-      // lazy localCheckpoint: materialized by the convergence job below
-      if (iter == 0)
-        graft.PlanCapture.record("clusters per-round label update", next)
+      // lazy pin: materialized by the convergence job below
+      if (iter == 0) graft.Scratch.note("clusters round 0", next)
       val nextCached =
-        if ((iter + 1) % checkpointEvery == 0) next.localCheckpoint(false)
+        if ((iter + 1) % checkpointEvery == 0)
+          pin(s"clusters round $iter", next, eager = false)
         else next.persist(StorageLevel.MEMORY_AND_DISK)
       val changed = nextCached
         .agg(count(when(col("label") =!= col("old"), 1)).as("n_changed"))
@@ -500,12 +497,9 @@ object Dedup {
           "component diameter exceeds the iteration cap")
     }
     sym.unpersist()
-    graft.PlanCapture.note("clusters convergence",
-      s"$iter label-propagation rounds")
     // materialize the (small) result so the loop caches can be freed
-    val out = labels
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-      .localCheckpoint()
+    val out = pin(s"clusters converged after $iter rounds", labels
+      .select(col("node").as("doc_id"), col("label").as("cluster_id")))
     cached.unpersist()
     out
   }
@@ -911,9 +905,10 @@ object Dedup {
     // spans fans out 3 ways below (gaps, tails, affected-doc set);
     // without materialization the whole gram pipeline would recompute
     // per branch. The span set is tiny (duplicated regions only), so
-    // an eager localCheckpoint is cheap and truncates the lineage.
+    // an eager pin is cheap and truncates the lineage.
     removeDuplicatedSpansFrom(docs,
-      duplicatedSpans(docs, n, idCol, textCol).localCheckpoint(),
+      pin("removeDuplicatedSpans spans",
+        duplicatedSpans(docs, n, idCol, textCol)),
       idCol, textCol)
 
   /** [[removeDuplicatedSpans]] over an already-built (and pinned)

@@ -489,10 +489,11 @@ object Events {
     */
   private[graft] def acfFromDaily(d: DataFrame, maxLag: Int): DataFrame = {
     val st = d.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
-    val y = d.crossJoin(st) // 1-row broadcast
-      .select(row_number().over(Window.orderBy(col("day"))).as("i"),
-        (col("n") * col("x") - col("sx")).as("y"))
-      .localCheckpoint() // tiny; reused three times below
+    // tiny; reused three times below
+    val y = graft.Scratch.pin("acf centered series",
+      d.crossJoin(st) // 1-row broadcast
+        .select(row_number().over(Window.orderBy(col("day"))).as("i"),
+          (col("n") * col("x") - col("sx")).as("y")))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val den = y.agg(sum(dec(col("y")) * col("y")).as("dd"))
     val lags = y.sparkSession.range(1, maxLag + 1)
@@ -1332,9 +1333,9 @@ object Events {
       count(lit(1)).as("f"),
       sum(round(col("value") * 10000).cast("long")).as("mq"))
     val mx = events.agg(max(day).as("dmax"))
-    val ur = u.crossJoin(broadcast(mx)).select(col("user_id"),
-      (col("dmax") - col("last_day")).as("r"), col("f"), col("mq"))
-      .localCheckpoint()
+    val ur = graft.Scratch.pin("rfm user rows",
+      u.crossJoin(broadcast(mx)).select(col("user_id"),
+        (col("dmax") - col("last_day")).as("r"), col("f"), col("mq")))
     def bounds(dim: String): DataFrame = {
       val cc = ur.groupBy(col(dim).as("v")).agg(count(lit(1)).as("m"))
       val w = Window.orderBy(col("v"))

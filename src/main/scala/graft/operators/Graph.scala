@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.Scratch.pin
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics on edge DataFrames — the category beyond
@@ -19,8 +19,17 @@ import org.apache.spark.sql.functions._
   * both shuffles on node keys (co-partitioned round over round),
   * nothing broadcast except Catalyst's own choice for the
   * (node-count-sized) rank frame when it is small. Lineage is cut
-  * with a localCheckpoint per round, the same bounded-iteration
-  * discipline as [[Dedup.clusters]].
+  * with a pin ([[graft.Scratch.pin]]) per round, the same
+  * bounded-iteration discipline as [[Dedup.clusters]].
+  *
+  * Every operator pins the edge frame it re-reads each round with one
+  * LAZY pin, materialized by the first round's job and cached
+  * MEMORY_AND_DISK — the GraphX edge-cache discipline. Without it,
+  * every round re-runs the caller's upstream joins that built the
+  * edge list (at 100 TB that upstream scan dominates the iteration
+  * itself). A frame the caller pinned already is kept as it is, so
+  * composed queries like graph_modularity pin ONCE and share across
+  * LPA + the modularity joins.
   *
   * Deliberate simplifications, documented: dangling-node mass is NOT
   * redistributed (their outflow vanishes — total mass decays, ranking
@@ -30,21 +39,15 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Pin a frame that an iteration re-reads every round: one LAZY
-    * localCheckpoint, materialized by the first round's job and cached
-    * MEMORY_AND_DISK — the GraphX edge-cache discipline. Without it,
-    * every round re-runs the caller's upstream joins that built the
-    * edge list (at 100 TB that upstream scan dominates the iteration
-    * itself). Skipped when the caller already checkpointed the frame
-    * (plan is a LogicalRDD) — re-pinning would only duplicate the
-    * cache, and composed queries like graph_modularity pin ONCE and
-    * share across LPA + the modularity joins.
+  /** Round `i` of `n`'s iterate, pinned every 2nd round and the last.
+    * Lineage stays bounded (≤2 rounds deep) and the join/agg shape per
+    * round is unchanged, but half the rounds stop paying an
+    * eager-checkpoint job + a node-sized cache write — the unpinned
+    * round fuses into the next round's job as ordinary stages.
     */
-  private[graft] def pinned(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case _: LogicalRDD => df
-      case _ => df.localCheckpoint(eager = false)
-    }
+  private def pinEveryOther(label: String, i: Int, n: Int,
+      next: DataFrame): DataFrame =
+    if (i % 2 == 1 || i == n - 1) pin(s"$label round $i", next) else next
 
   /** One PageRank round's contribution frame — the hot join of the
     * whole family, shared by [[pageRank]] and [[pageRankConverged]]
@@ -83,8 +86,7 @@ object Graph {
     val state = outdeg
       .join(r.withColumnRenamed("node", "src"), "src")
       .select(col("src"), expr("rank_micro div deg").as("c"))
-      .localCheckpoint(eager = false)
-    edges.join(state, "src")
+    edges.join(pin("pageRank state", state, eager = false), "src")
       .groupBy(col("dst").as("node")).agg(sum(col("c")).as("sc"))
   }
 
@@ -95,14 +97,13 @@ object Graph {
   def pageRank(edges: DataFrame, iters: Int = 3, dampingPct: Int = 85,
       unit: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = pinned(edges)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val e = pin("pageRank edges", edges, eager = false)
+    val nodes = pin("pageRank nodes", e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     if (n == 0) return nodes.withColumn("rank_micro", lit(0L))
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val outdeg = pin("pageRank outdeg",
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val init = unit / n
     val base = (init * (100 - dampingPct)) / 100
     var r = nodes.withColumn("rank_micro", lit(init))
@@ -113,15 +114,7 @@ object Graph {
         .select(col("node"),
           (lit(base) + expr(s"(coalesce(sc, 0L) * $dampingPct) div 100"))
             .as("rank_micro"))
-      if (i == 0)
-        graft.PlanCapture.record("pageRank per-iteration plan", next)
-      // checkpoint CADENCE: every 2nd round + the last. Lineage stays
-      // bounded (≤2 rounds deep), the join/agg shape per round is
-      // unchanged, but half the rounds stop paying an eager-checkpoint
-      // job + a node-sized cache write — the un-checkpointed round
-      // fuses into the next round's job as ordinary stages.
-      r = if (i % 2 == 1 || i == iters - 1) next.localCheckpoint()
-          else next
+      r = pinEveryOther("pageRank", i, iters, next)
     }
     r
   }
@@ -143,15 +136,15 @@ object Graph {
       iters: Int = 3, dampingPct: Int = 85,
       unit: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = pinned(edges)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val e = pin("personalizedPageRank edges", edges, eager = false)
+    val nodes = pin("personalizedPageRank nodes",
+      e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
     val seeds = nodes.filter(col("node") < seedMax)
     val nSeeds = seeds.count()
     require(nSeeds > 0, s"no seed nodes below $seedMax")
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val outdeg = pin("personalizedPageRank outdeg",
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val init = unit / nSeeds
     val base = (init * (100 - dampingPct)) / 100
     val isSeed = when(col("node") < seedMax, 1L).otherwise(0L)
@@ -164,8 +157,7 @@ object Graph {
           (isSeed * base +
             expr(s"(coalesce(sc, 0L) * $dampingPct) div 100"))
             .as("rank_micro"))
-      r = if (i % 2 == 1 || i == iters - 1) next.localCheckpoint()
-          else next
+      r = pinEveryOther("personalizedPageRank", i, iters, next)
     }
     r
   }
@@ -185,27 +177,27 @@ object Graph {
       unit: Long = 1000000000000L): (DataFrame, Int) = {
     require(maxIters >= 1 && tolMicro >= 0 &&
       dampingPct >= 0 && dampingPct <= 100)
-    val e = pinned(edges)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val e = pin("pageRankConverged edges", edges, eager = false)
+    val nodes = pin("pageRankConverged nodes",
+      e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     if (n == 0) return (nodes.withColumn("rank_micro", lit(0L)), 0)
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val outdeg = pin("pageRankConverged outdeg",
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val init = unit / n
     val base = (init * (100 - dampingPct)) / 100
-    var r = nodes.withColumn("rank_micro", lit(init)).localCheckpoint()
+    var r = pin("pageRankConverged init",
+      nodes.withColumn("rank_micro", lit(init)))
     var iters = 0
     var moved = Long.MaxValue
     while (iters < maxIters && moved > tolMicro) {
       val contrib = pageRankContrib(e, outdeg, r)
-      val next = nodes
+      val next = pin(s"pageRankConverged round $iters", nodes
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + expr(s"(coalesce(sc, 0L) * $dampingPct) div 100"))
-            .as("rank_micro"))
-        .localCheckpoint()
+            .as("rank_micro")))
       moved = next
         .join(r.withColumnRenamed("rank_micro", "prev"), "node")
         .agg(sum(abs(col("rank_micro") - col("prev"))).as("d"))
@@ -241,14 +233,13 @@ object Graph {
     */
   def bfsLevels(edges: DataFrame, maxHops: Int = 3): DataFrame = {
     require(maxHops >= 1, "bfsLevels needs at least one round")
-    val e = pinned(edges)
+    val e = pin("bfsLevels edges", edges, eager = false)
     val srcRow = e.agg(min(col("src"))).head()
     require(!srcRow.isNullAt(0), "bfsLevels needs a non-empty edge set")
     val src0 = srcRow.getLong(0)
     val spark = e.sparkSession
-    var dist = spark.range(1)
-      .select(lit(src0).as("node"), lit(0L).as("hop"))
-      .localCheckpoint()
+    var dist = pin("bfsLevels source", spark.range(1)
+      .select(lit(src0).as("node"), lit(0L).as("hop")))
     var frontier = dist
     for (h <- 1 to maxHops) {
       val next = frontier.select(col("node").as("src"))
@@ -256,9 +247,7 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
         .select(col("node"), lit(h.toLong).as("hop"))
-      if (h == 1)
-        graft.PlanCapture.record("bfsLevels per-round plan", next)
-      frontier = next.localCheckpoint()
+      frontier = pin(s"bfsLevels round $h", next)
       // the settled set is a UNION OF CHECKPOINTED FRONTIERS — lineage
       // depth 1 by construction, so checkpointing the union itself
       // would only pay an extra job + cache write per hop.
@@ -280,13 +269,13 @@ object Graph {
   def multiSourceBfsLevels(edges: DataFrame, nSources: Int = 3,
       maxHops: Int = 3): DataFrame = {
     require(nSources >= 1 && maxHops >= 1)
-    val e = pinned(edges)
+    val e = pin("multiSourceBfsLevels edges", edges, eager = false)
     val spark = e.sparkSession
     import spark.implicits._
     val srcs = e.select(col("src")).distinct().orderBy(col("src"))
       .limit(nSources).as[Long].collect().toSeq
-    var dist = srcs.map(s => (s, s, 0L))
-      .toDF("source", "node", "hop").localCheckpoint()
+    var dist = pin("multiSourceBfsLevels sources",
+      srcs.map(s => (s, s, 0L)).toDF("source", "node", "hop"))
     var frontier = dist
     for (h <- 1 to maxHops) {
       val next = frontier.select(col("source"), col("node").as("src"))
@@ -294,7 +283,7 @@ object Graph {
         .select(col("source"), col("dst").as("node")).distinct()
         .join(dist, Seq("source", "node"), "left_anti")
         .select(col("source"), col("node"), lit(h.toLong).as("hop"))
-      frontier = next.localCheckpoint()
+      frontier = pin(s"multiSourceBfsLevels round $h", next)
       dist = dist.union(frontier) // union of checkpointed frontiers
     }
     dist
@@ -320,13 +309,12 @@ object Graph {
     */
   def sssp(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1)
-    val e = pinned(edges)
+    val e = pin("sssp edges", edges, eager = false)
     val srcRow = e.agg(min(col("src"))).head()
     require(!srcRow.isNullAt(0), "sssp needs a non-empty edge set")
     val src0 = srcRow.getLong(0)
-    var dist = e.sparkSession.range(1)
-      .select(lit(src0).as("node"), lit(0L).as("dist"))
-      .localCheckpoint()
+    var dist = pin("sssp source", e.sparkSession.range(1)
+      .select(lit(src0).as("node"), lit(0L).as("dist")))
     for (r <- 0 until rounds) {
       val relaxed = dist.select(col("node").as("src"), col("dist"))
         .join(e, "src")
@@ -334,11 +322,7 @@ object Graph {
       val next = dist.select(col("node"), col("dist").as("d"))
         .unionByName(relaxed)
         .groupBy(col("node")).agg(min(col("d")).as("dist"))
-      if (r == 0)
-        graft.PlanCapture.record("sssp per-round plan", next)
-      // same cadence as pageRank: checkpoint every 2nd round + last
-      dist = if (r % 2 == 1 || r == rounds - 1) next.localCheckpoint()
-             else next
+      dist = pinEveryOther("sssp", r, rounds, next)
     }
     dist
   }
@@ -435,10 +419,9 @@ object Graph {
     */
   def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 3): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    val e0 = pinned(edges)
-    var alive = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val e0 = pin("kCore edges", edges, eager = false)
+    var alive = pin("kCore nodes", e0.select(col("src").as("node"))
+      .union(e0.select(col("dst").as("node"))).distinct())
     var deg: DataFrame = null
     for (r <- 0 until rounds) {
       val e = e0
@@ -448,12 +431,10 @@ object Graph {
       // materializes deg's cache in the same pass, so each round costs
       // ONE job instead of two; the final round's deg is then read
       // from cache by the closing join.
-      deg = e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("deg")).localCheckpoint(eager = false)
-      if (r == 0)
-        graft.PlanCapture.record("kCore per-round plan", deg)
-      alive = deg.filter(col("deg") >= k).select(col("node"))
-        .localCheckpoint()
+      deg = pin(s"kCore round $r degrees", e.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("deg")), eager = false)
+      alive = pin(s"kCore round $r alive",
+        deg.filter(col("deg") >= k).select(col("node")))
     }
     deg.join(alive, "node").select(col("node"), col("deg"))
   }
@@ -526,10 +507,10 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, iters: Int = 2): DataFrame = {
     require(iters >= 1, "labelPropagation needs at least one round")
-    val e = pinned(edges)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val e = pin("labelPropagation edges", edges, eager = false)
+    val nodes = pin("labelPropagation nodes",
+      e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
     var labels = nodes.withColumn("label", col("node"))
     for (i <- 0 until iters) {
       val votes = e
@@ -544,12 +525,8 @@ object Graph {
       val next = labels.join(winner, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("new_label"), col("label")).as("label"))
-      if (i == 0)
-        graft.PlanCapture.record("labelPropagation per-round plan", next)
-      // pageRank cadence: checkpoint every 2nd round + the last (the
-      // final frame is what callers like [[modularity]] re-read 3×)
-      labels = if (i % 2 == 1 || i == iters - 1) next.localCheckpoint()
-               else next
+      // the final frame is what callers like [[modularity]] re-read 3×
+      labels = pinEveryOther("labelPropagation", i, iters, next)
     }
     labels
   }
@@ -573,7 +550,8 @@ object Graph {
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val e = pinned(edges) // read 3× below (m2f, deg, intra)
+    // read 3× below (m2f, deg, intra)
+    val e = pin("modularity edges", edges, eager = false)
     val m2f = e.agg(count(lit(1)).as("m2"))
     val deg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -659,9 +637,9 @@ object Graph {
     // at the same constant that bounds the wedge count), and the
     // i<j pairs explode out of the array map-side. Wedge mass is
     // unchanged: sum_via vd*(vd-1)/2.
-    val grouped = pinned(p.join(keptVia, "via")
+    val grouped = pin("linkPrediction adjacency", p.join(keptVia, "via")
       .groupBy(col("via"))
-      .agg(sort_array(collect_list(col("node"))).as("ns")))
+      .agg(sort_array(collect_list(col("node"))).as("ns")), eager = false)
     // degrees in the capped universe, from the same pinned arrays —
     // node = the LEFT entity (a dimension: customers in the
     // registered query), so the frame is dimension-sized and rides a
@@ -669,9 +647,9 @@ object Graph {
     // Pinned because it feeds BOTH side-joins below: unpinned, the
     // explode+aggregate over the grouped arrays runs once per
     // broadcast (the r19 plan dump showed the duplicated subtree).
-    val deg = pinned(grouped
+    val deg = pin("linkPrediction degrees", grouped
       .select(explode(col("ns")).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")), eager = false)
     // pair explode as TWO chained generates (posexplode anchors, then
     // a slice explode per anchor) rather than one nested
     // flatten(transform(transform(slice(...)))): the nested form
@@ -736,7 +714,8 @@ object Graph {
   def walkSkipGrams(edges: DataFrame, maxStartId: Long = 20L,
       steps: Int = 3, window: Int = 2): DataFrame =
     skipGramsFromWalks(
-      randomWalks(edges, maxStartId, steps).localCheckpoint(), window)
+      pin("walkSkipGrams walks", randomWalks(edges, maxStartId, steps)),
+      window)
 
   /** [[walkSkipGrams]] over an already-built walk frame — split out
     * so the registry shares ONE memoized walk corpus between the
@@ -760,7 +739,8 @@ object Graph {
       steps: Int = 3): DataFrame = {
     require(steps >= 1)
     val m = 2147483647L
-    val e = pinned(edges.select(col("src"), col("dst")))
+    val e = pin("randomWalks edges", edges.select(col("src"), col("dst")),
+      eager = false)
     val adj = e.withColumn("rk",
       row_number().over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("src")).orderBy(col("dst"))))
@@ -810,7 +790,7 @@ object Graph {
   def hits(edges: DataFrame, iters: Int = 2,
       unit: Long = 1000L): DataFrame = {
     require(iters >= 1 && unit > 0)
-    val e = pinned(edges)
+    val e = pin("hits edges", edges, eager = false)
     def renorm(raw: DataFrame): DataFrame = {
       val mx = raw.agg(max(col("raw")).as("mx"))
       // unit·raw overflows int64 once a node's summed in-score passes
@@ -821,20 +801,18 @@ object Graph {
           expr(s"CAST(($unit * CAST(raw AS DECIMAL(38,0))) div mx" +
             " AS BIGINT)").as("s"))
     }
-    var hub = e.select(col("src").as("node")).distinct()
-      .withColumn("s", lit(unit)).localCheckpoint()
+    var hub = pin("hits init", e.select(col("src").as("node")).distinct()
+      .withColumn("s", lit(unit)))
     var auth = hub.limit(0)
     for (i <- 1 to iters) {
       val araw = e
         .join(hub.select(col("node").as("src"), col("s")), Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum(col("s")).as("raw"))
-      auth = renorm(araw).localCheckpoint()
+      auth = pin(s"hits round $i authorities", renorm(araw))
       val hraw = e
         .join(auth.select(col("node").as("dst"), col("s")), Seq("dst"))
         .groupBy(col("src").as("node")).agg(sum(col("s")).as("raw"))
-      val hn = renorm(hraw)
-      if (i == 1) graft.PlanCapture.record("hits per-round plan", hn)
-      hub = hn.localCheckpoint()
+      hub = pin(s"hits round $i hubs", renorm(hraw))
     }
     hub.select(col("node"), lit("hub").as("kind"),
         col("s").as("score_milli"))

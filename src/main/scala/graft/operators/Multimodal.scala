@@ -258,7 +258,8 @@ object Multimodal {
     // the pair pipeline reads the hash frame from several sides —
     // pin the (narrow) hashes so the ImageIO decode runs once
     aHashNearFromHashes(
-      aHash(docs).select(col("doc_id"), col("ahash")).localCheckpoint(),
+      graft.Scratch.pin("aHashNearPairs hashes",
+        aHash(docs).select(col("doc_id"), col("ahash"))),
       maxHamming)
 
   /** Band-join stage of [[aHashNearPairs]] over an already-built
@@ -627,8 +628,10 @@ object Multimodal {
     * hamming).
     */
   def audioFpNearPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    bandedHammingPairs(audioFingerprint(docs).localCheckpoint(), "fp",
-      Seq("n_blocks"), maxHamming)
+    bandedHammingPairs(
+      graft.Scratch.pin("audioFpNearPairs fingerprints",
+        audioFingerprint(docs)),
+      "fp", Seq("n_blocks"), maxHamming)
 
   /** Audio segmentation by fingerprint delta — the audio twin of
     * [[sceneCuts]], completing the modality matrix: order each

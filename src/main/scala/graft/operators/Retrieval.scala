@@ -176,19 +176,18 @@ object Retrieval {
       .withColumn("ng", size(col("gs")).cast("long"))
       .filter(col("ng") > 0)
     val mx = g.agg(max(col("rel")).as("mr"))
-    val base = g.crossJoin(mx) // 1-row broadcast
-      .withColumn("rel_bp", expr("(10000 * rel) div mr"))
-      .select(col("id"), col("rel_bp"), col("gs"), col("ng"))
-      .localCheckpoint()
+    val base = graft.Scratch.pin("mmr candidates",
+      g.crossJoin(mx) // 1-row broadcast
+        .withColumn("rel_bp", expr("(10000 * rel) div mr"))
+        .select(col("id"), col("rel_bp"), col("gs"), col("ng")))
     // m²-bounded pairwise similarity table
-    val sims = base.as("a").join(base.as("b"),
-        col("a.id") =!= col("b.id"))
-      .withColumn("shared",
-        size(array_intersect(col("a.gs"), col("b.gs"))).cast("long"))
-      .select(col("a.id").as("ia"), col("b.id").as("ib"),
-        expr("(10000 * shared) div (a.ng + b.ng - shared)")
-          .as("sim_bp"))
-      .localCheckpoint()
+    val sims = graft.Scratch.pin("mmr similarities",
+      base.as("a").join(base.as("b"), col("a.id") =!= col("b.id"))
+        .withColumn("shared",
+          size(array_intersect(col("a.gs"), col("b.gs"))).cast("long"))
+        .select(col("a.id").as("ia"), col("b.id").as("ib"),
+          expr("(10000 * shared) div (a.ng + b.ng - shared)")
+            .as("sim_bp")))
     var picked = Vector.empty[(Long, Long)]
     for (r <- 1 to k) {
       val rest = base.filter(!col("id")

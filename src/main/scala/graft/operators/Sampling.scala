@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch.pin
 import graft.functions.{idiv, sdbm_hash, Dec38}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -742,10 +743,10 @@ object Sampling {
     // own exchange (subset bench 3.4 s -> 4.1 s for the persist
     // spelling; interleaved A/B a wash). The k round shuffles of the
     // deduped gram frame are the honest cost here.
-    val g = docs.select(col("doc_id"),
+    val g = pin("greedyCoverage grams", docs.select(col("doc_id"),
         explode(graft.functions.word_shingles(
           Dedup.tokens(col("text")), 3)).as("g"))
-      .distinct().localCheckpoint()
+      .distinct())
     // accumulator shape DELIBERATE (r19 optimization round measured
     // the alternative): deriving covered per round from the pinned g
     // (filter picked + distinct) re-scans the 490k-row gram frame
@@ -753,9 +754,8 @@ object Sampling {
     // 2.41 s for this accumulate-and-checkpoint shape (the covered
     // frame is ≤ k docs' grams, so each checkpoint is a tiny job and
     // the anti-join's right side stays broadcast-sized).
-    var covered = g.sparkSession.emptyDataFrame
-      .withColumn("g", lit("")).select(col("g")).limit(0)
-      .localCheckpoint()
+    var covered = pin("greedyCoverage covered", g.sparkSession.emptyDataFrame
+      .withColumn("g", lit("")).select(col("g")).limit(0))
     var picked = Vector.empty[(Long, Long)]
     for (r <- 1 to k) {
       val gains = g
@@ -763,8 +763,7 @@ object Sampling {
           .isInCollection(picked.map(_._1) :+ -1L))
         .join(covered, Seq("g"), "left_anti")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("gain"))
-      if (r == 1)
-        graft.PlanCapture.record("greedyCoverage per-round plan", gains)
+      if (r == 1) graft.Scratch.note("greedyCoverage round 1", gains)
       val top = gains
         .agg(max(struct(col("gain"), (-col("doc_id")).as("ni"))))
         .head().getStruct(0)
@@ -774,9 +773,9 @@ object Sampling {
       }
       val id = -top.getLong(1)
       picked = picked :+ (id, top.getLong(0))
-      covered = covered
+      covered = pin(s"greedyCoverage round $r covered", covered
         .unionByName(g.filter(col("doc_id") === id).select(col("g")))
-        .distinct().localCheckpoint()
+        .distinct())
     }
     toPickedDf(docs.sparkSession, picked)
   }

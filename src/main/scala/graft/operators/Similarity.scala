@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch.pin
 import graft.functions.{dot_long, idiv, sign_lsh}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -95,13 +96,9 @@ object Similarity {
     // partition so each of those is a one-task job — at eval sizes
     // (10²-10⁵ rows) the scan+quantize cost is trivial but the
     // 32-task-per-pass scheduling overhead is not
-    val ePre = withQuantized(evalSet, idCol, vecCol).filter(col("norm") > 0)
-      .coalesce(1)
-    // checkpointing blinds after-the-fact explain to the eval-side
-    // derivation — record it for the bench plan audit
-    graft.PlanCapture.record("semanticDecontaminate eval side " +
-      "(pre-checkpoint)", ePre)
-    val e = ePre.localCheckpoint()
+    val e = pin("semanticDecontaminate eval side",
+      withQuantized(evalSet, idCol, vecCol).filter(col("norm") > 0)
+        .coalesce(1))
     // a Lloyd-updated centroid can in principle cancel to the zero
     // vector, whose angles are undefined — that would void the pruning
     // theorem for its whole cell. Fall back to the raw lowest-id init
@@ -548,7 +545,8 @@ object Similarity {
     // unbounded at 100 TB, where sample-trained codebooks are
     // standard FAISS practice). Assignment/encoding below still runs
     // over the FULL corpus with the trained literals.
-    val sample = q.orderBy(col("id")).limit(trainSample).localCheckpoint()
+    val sample = pin("ivfPq training sample",
+      q.orderBy(col("id")).limit(trainSample))
     val coarse = trainCentroids(sample, nCells, trainIters)
     if (coarse.isEmpty) {
       return q.limit(0).select(col("id").as("query_id"),
@@ -739,7 +737,8 @@ object Similarity {
   def farthestPointSample(emb: DataFrame, k: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1)
-    val q = withQuantized(emb, idCol, vecCol).localCheckpoint()
+    val q = pin("farthestPointSample vectors",
+      withQuantized(emb, idCol, vecCol))
     val seedRow = q.agg(min(col("id"))).head()
     require(!seedRow.isNullAt(0),
       "farthestPointSample needs a non-empty embedding set")
@@ -756,9 +755,7 @@ object Similarity {
           (col("norm") + col("cnorm") -
             lit(2L) * qdot(col("qv"), col("cqv"))).as("d2"))
         .groupBy(col("id")).agg(min(col("d2")).as("mind"))
-      if (r == 2)
-        graft.PlanCapture.record("farthestPointSample per-round plan",
-          mind)
+      if (r == 2) graft.Scratch.note("farthestPointSample round 2", mind)
       val far = mind.agg(max(struct(col("mind"), (-col("id")).as("ni"))))
         .head().getStruct(0)
       chosen = chosen :+ (-far.getLong(1), far.getLong(0))
@@ -926,7 +923,8 @@ object Similarity {
   def powerIterationPC(emb: DataFrame, rounds: Int = 3,
       scale: Long = 1048576L, vecCol: String = "embedding"): DataFrame = {
     require(rounds >= 1 && scale >= 2)
-    val q = emb.select(quantize(col(vecCol)).as("q")).localCheckpoint()
+    val q = pin("powerIterationPC vectors",
+      emb.select(quantize(col(vecCol)).as("q")))
     val dRow = q.select(size(col("q"))).take(1)
     require(dRow.nonEmpty,
       "powerIterationPC needs a non-empty embedding set")
@@ -939,8 +937,7 @@ object Similarity {
         .select(posexplode(col("q")).as(Seq("j0", "x")), col("s"))
         .groupBy((col("j0") + 1).cast("long").as("j"))
         .agg(sum(col("s").cast("decimal(38,0)") * col("x")).as("w"))
-      if (r == 0)
-        graft.PlanCapture.record("powerIterationPC per-round plan", w)
+      if (r == 0) graft.Scratch.note("powerIterationPC round 0", w)
       val rows = w.collect().map(row =>
         (row.getLong(0), BigInt(row.getDecimal(1).toBigInteger)))
       val m = rows.map(_._2.abs).max

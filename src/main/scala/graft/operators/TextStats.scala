@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch.pin
 import graft.functions.{idiv, sdbm_hash, Dec38}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -548,11 +549,8 @@ object TextStats {
     // grams→window lineage. Checkpoint it once (≈ n/w rows, the
     // selected grams only) so the plan holds ONE winnowing pass, not
     // four re-derivations each re-scanning the corpus.
-    val fpFull = winnowFingerprints(docs, k, w)
-      .select(col("doc_id"), col("gram")).distinct()
-    graft.PlanCapture.record("winnowPairs fingerprints (pre-checkpoint)",
-      fpFull)
-    val fp = fpFull.localCheckpoint()
+    val fp = pin("winnowPairs fingerprints", winnowFingerprints(docs, k, w)
+      .select(col("doc_id"), col("gram")).distinct())
     val rare = fp.groupBy(col("gram"))
       .agg(count(lit(1)).as("df")).filter(col("df") <= maxDf)
       .select(col("gram"))
@@ -799,38 +797,34 @@ object TextStats {
     * vocabulary-bounded table, (b) take the 1-row argmax with the
     * deterministic (count desc, pair asc) tie-break, (c) rewrite the
     * symbol sequences with the winning merge via a broadcast-scalar
-    * cross join. Each round's rewrite is localCheckpointed so round
-    * r+1's plan doesn't replay rounds 1..r (the kmeans/pagerank
-    * bounded-iteration discipline); the pre-checkpoint plan is
-    * PlanCapture'd so the plan audit still sees the per-round shape.
+    * cross join. Each round's rewrite is pinned so round r+1's plan
+    * doesn't replay rounds 1..r (the kmeans/pagerank bounded-iteration
+    * discipline); the pin logs the pre-checkpoint plan, so the plan
+    * audit still sees the per-round shape.
     * Returns (one 1-row frame per merge, the final rewritten table).
     */
   private def bpeLoop(docs: DataFrame,
       rounds: Int): (Seq[DataFrame], DataFrame) = {
-    var cur = docs
+    var cur = pin("bpe vocabulary", docs
       .select(explode(Dedup.tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .select(col("w"), concat(lit(" "),
         regexp_replace(col("w"), "(.)", "$1 "), lit("_ ")).as("seq"),
-        col("cnt"))
-      .localCheckpoint()
+        col("cnt")))
     val merges = Seq.newBuilder[DataFrame]
     for (r <- 1 to rounds) {
-      val best = cur
+      val best = pin(s"bpe round $r best pair", cur
         .select(explode(graft.functions.word_shingles(
           Dedup.tokens(col("seq")), 2)).as("pr"), col("cnt"))
         .groupBy(col("pr")).agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("pr")).limit(1)
-        .localCheckpoint()
+        .orderBy(col("n").desc, col("pr")).limit(1))
       merges += best.select(lit(r.toLong).as("round"),
         col("pr").as("pair"), col("n").as("pair_cnt"))
-      val rewritten = cur.crossJoin(broadcast(best.select(col("pr"))))
-        .select(col("w"), expr("""replace(seq, ' ' || pr || ' ',
-            ' ' || replace(pr, ' ', '') || ' ')""").as("seq"),
-          col("cnt"))
-      graft.PlanCapture.record(s"bpe round $r rewrite (pre-checkpoint)",
-        rewritten)
-      cur = rewritten.localCheckpoint()
+      cur = pin(s"bpe round $r rewrite",
+        cur.crossJoin(broadcast(best.select(col("pr"))))
+          .select(col("w"), expr("""replace(seq, ' ' || pr || ' ',
+              ' ' || replace(pr, ' ', '') || ' ')""").as("seq"),
+            col("cnt")))
     }
     (merges.result(), cur)
   }
@@ -1103,7 +1097,8 @@ object TextStats {
     // spelling re-ran the full three-pass lmScore pipeline twice; at
     // 100 TB that is two extra corpus passes, r13 finding #3)
     lmBucketsFromScored(
-      lmScore(docs.select(col("doc_id"), col("text"))).localCheckpoint(),
+      pin("lmBuckets scores",
+        lmScore(docs.select(col("doc_id"), col("text")))),
       docs)
 
   /** Bucket-assignment stage of [[lmBuckets]] over an already-scored
@@ -1651,9 +1646,7 @@ object TextStats {
           .cast("long").as(wc)
       val next = grad.select(lit(r.toLong).as("r"), step("w0", "g0"),
         step("w1", "g1"), step("w2", "g2"), step("w3", "g3"))
-      if (r == 1)
-        graft.PlanCapture.record("lr GD round 1 step (pre-checkpoint)", next)
-      w = next.localCheckpoint()
+      w = pin(s"lr GD round $r step", next)
       traj += w
     }
     traj.result()
@@ -1672,7 +1665,7 @@ object TextStats {
     */
   def lrQualityTrainFromStd(std: DataFrame, rounds: Int = 12,
       lrNum: Long = 20L): DataFrame =
-    lrFit(lrQualityFeaturesFromStd(std).localCheckpoint(), rounds, lrNum)
+    lrFit(pin("lr features", lrQualityFeaturesFromStd(std)), rounds, lrNum)
       .reduce(_ unionByName _).orderBy(col("r"))
 
   /** Apply a trained 1-row weight frame (w0..w3) to the standardized
@@ -1696,7 +1689,7 @@ object TextStats {
   def lrQualityScore(docs: DataFrame, rounds: Int = 12,
       lrNum: Long = 20L): DataFrame = {
     val std = lrQualityStd(docs)
-    val fin = lrFit(lrQualityFeaturesFromStd(std).localCheckpoint(),
+    val fin = lrFit(pin("lr features", lrQualityFeaturesFromStd(std)),
       rounds, lrNum).last
     lrQualityScoreFromWeights(std, fin).orderBy(col("doc_id"))
   }

@@ -81,15 +81,32 @@ object XmlPipe {
       escapeText(Render.render(c, other))
   }
 
+  /** An XML name without a colon (XML 1.0 productions [4]/[4a], less
+    * `:`, which would make the tag an undeclared namespace prefix).
+    */
+  private val TagName = {
+    val start = "A-Z_a-z\\x{C0}-\\x{D6}\\x{D8}-\\x{F6}\\x{F8}-\\x{2FF}" +
+      "\\x{370}-\\x{37D}\\x{37F}-\\x{1FFF}\\x{200C}-\\x{200D}" +
+      "\\x{2070}-\\x{218F}\\x{2C00}-\\x{2FEF}\\x{3001}-\\x{D7FF}" +
+      "\\x{F900}-\\x{FDCF}\\x{FDF0}-\\x{FFFD}\\x{10000}-\\x{EFFFF}"
+    s"[$start][$start\\-.0-9\\x{B7}\\x{300}-\\x{36F}\\x{203F}-\\x{2040}]*".r
+  }
+
   /** One `<sphinx:document>` string per row, plus the derived id.
-    * Output columns: `id` (long), `doc` (string). `strictParity`
-    * makes ids and field bodies bug-for-bug with the reference
-    * ([[DocId.docId]]'s seed scan + `getInt` truncation,
+    * Output columns: `id` (long), `doc` (string). Every column name
+    * becomes an element tag, so a name that is not an XML name
+    * (`sum(v)`, `a b`, `1x`, `a:b`) fails here, before any job runs.
+    * `strictParity` makes ids and field bodies bug-for-bug with the
+    * reference ([[DocId.docId]]'s seed scan + `getInt` truncation,
     * [[fieldContent]]'s defective renderings) for migrations pinned
     * to a reference-built index.
     */
   def formatDocs(df: DataFrame, keys: Seq[String],
       strictParity: Boolean = false): DataFrame = {
+    df.schema.fieldNames.filterNot(TagName.matches).foreach { n =>
+      throw new IllegalArgumentException(s"formatDocs: column `$n` is " +
+        "not an XML element name; rename it before the export")
+    }
     val id = DocId.docId(df.schema, keys, strictParity)
     val fields = df.schema.fields.toSeq.map { f =>
       concat(lit(s"<${f.name}>"),

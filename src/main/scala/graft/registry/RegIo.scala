@@ -317,25 +317,22 @@ private[graft] object RegIo {
       // hive-partitioned lake layout: write events partitioned by day
       // (Layout.writeDatePartitioned), read back a 5-day window — the
       // date filter prunes whole partition DIRECTORIES at listing
-      // time (PartitionFilters in the scan; plan recorded via
-      // PlanCapture because the materialized result hides the read
-      // plan behind the checkpoint leaf). Oracle: the same window
+      // time (PartitionFilters in the scan; Scratch.landed logs the
+      // read plan under its prefix, because the materialized result
+      // hides it behind the checkpoint leaf). Oracle: the same window
       // aggregated from the unpartitioned original.
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"), col("ts"))
       Scratch.landed("graft-part") { tmp =>
         val out = new java.io.File(tmp, "events_by_day").toString
         Layout.writeDatePartitioned(ev, "ts", out)
-        val read = s.read.parquet(out)
+        s.read.parquet(out)
           .filter(col("event_date") >= lit("2024-01-10").cast("date") &&
             col("event_date") <= lit("2024-01-14").cast("date"))
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(18,4)"))
               .cast("double").as("sum_value"))
-        graft.PlanCapture.record(
-          "partition-pruned read (pre-materialize)", read)
-        read
       }.orderBy(col("event_type"))
     }),
     "io_dpp" -> ((s, dir) => {
@@ -348,7 +345,7 @@ private[graft] object RegIo {
       // broadcast dim keys are re-used as a partition filter before
       // a single fact file is opened. At 100 TB this is the
       // fact-side scan shrinking from 3 years to the dim's surviving
-      // days at RUNTIME. PlanCapture records the pre-materialize
+      // days at RUNTIME. Scratch.landed logs the pre-materialize
       // plan; PlanSpec pins dynamicpruning# in PartitionFilters.
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"),
@@ -364,15 +361,11 @@ private[graft] object RegIo {
           .write.mode("overwrite").parquet(outD)
         val fact = s.read.parquet(outF)
         val dim = s.read.parquet(outD).filter(col("g") === 2)
-        val read = fact.join(broadcast(dim),
-            fact("event_date") === dim("d"))
+        fact.join(broadcast(dim), fact("event_date") === dim("d"))
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(18,4)"))
               .cast("double").as("sum_value"))
-        graft.PlanCapture.record(
-          "dpp-pruned read (pre-materialize)", read)
-        read
       }.orderBy(col("event_type"))
     }),
     "io_dynamic_overwrite" -> ((s, dir) => {

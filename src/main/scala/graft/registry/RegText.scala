@@ -195,9 +195,8 @@ private[graft] object RegText {
       // prior shape re-ran scan+explode per marginal (8 scans in the
       // baseline plan dump); A/B'd in one JVM, interleaved reps:
       // 1.16-1.53 s -> 0.94-0.98 s warm.
-      val pairCounts = bg.groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("n_ab"))
-        .localCheckpoint()
+      val pairCounts = Scratch.pin("bigram pair census",
+        bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab")))
       val firstCounts = pairCounts.groupBy(col("w1"))
         .agg(sum(col("n_ab")).as("n_a"))
       val secondCounts = pairCounts.groupBy(col("w2"))

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, TimeMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, TimeMode}
 import org.apache.spark.sql.types._
 
 import scala.util.control.NonFatal
@@ -252,14 +252,26 @@ object EventsStream {
     q.stop()
   }
 
+  /** Start `w` on a fresh [[graft.Scratch]] checkpoint directory,
+    * [[drain]] it and return the stopped query; the directory is
+    * deleted after, also when the drain fails (Spark's own temporary
+    * checkpoint would be kept then).
+    */
+  private[graft] def drained(w: DataStreamWriter[Row]): StreamingQuery =
+    graft.Scratch.withDir("graft-stream-ckpt") { ckpt =>
+      val q = w.option("checkpointLocation", ckpt.toString).start()
+      drain(q)
+      q
+    }
+
   /** Run `df` as one query into the memory sink `qname` and return the
     * sink table. Sink names are fixed per entry, so a re-run replaces
     * the temp view on the stream session instead of adding one.
     */
   private def toMemory(df: DataFrame, mode: String,
       qname: String): DataFrame = {
-    drain(df.writeStream.outputMode(mode).format("memory")
-      .queryName(qname).start())
+    drained(df.writeStream.outputMode(mode).format("memory")
+      .queryName(qname))
     df.sparkSession.table(qname)
   }
 
@@ -692,19 +704,19 @@ object EventsStream {
         writeChunk(replayDir, delta.filter(col("o_orderkey") % 3 === i),
           s"chunk$i")
       }
-      var state = state0.localCheckpoint()
+      var state = graft.Scratch.pin("ivm state", state0)
       val schema = spark.read
         .parquet(new java.io.File(replayDir, "chunk0.parquet").toString)
         .schema
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-      drain(src.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          state = graft.operators.Merge.incrementalAgg(state,
-            batch.select(col("o_custkey"), col("cents"), col("op")),
-            "o_custkey", "cents").localCheckpoint()
-        }
-        .start())
+      drained(src.writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          state = graft.Scratch.pin(s"ivm state after batch $batchId",
+            graft.operators.Merge.incrementalAgg(state,
+              batch.select(col("o_custkey"), col("cents"), col("op")),
+              "o_custkey", "cents"))
+        })
       state
     }
   }
@@ -720,11 +732,10 @@ object EventsStream {
   def foreachBatchToParquet(spark0: SparkSession, dir: String,
       outDir: String): DataFrame = {
     val spark = streamSession(spark0)
-    drain(source(spark, dir).writeStream
+    drained(source(spark, dir).writeStream
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         df.write.mode("append").parquet(outDir)
-      }
-      .start())
+      })
     spark.read.parquet(outDir)
   }
 
@@ -754,16 +765,14 @@ object EventsStream {
     val norm = trim(regexp_replace(lower(coalesce(col("props"), lit(""))),
       "\\s+", " "))
     val qname = "graft_events_fp_dedup"
-    val q = source(spark, dir)
+    val q = drained(source(spark, dir)
       .withColumn("norm", norm)
       .withColumn("fingerprint",
         graft.functions.sdbm_hash(lit(0L), col("norm")))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("fingerprint")
       .select(col("fingerprint"), col("norm"))
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .start()
-    drain(q)
+      .writeStream.outputMode("append").format("memory").queryName(qname))
     val dataBatches = q.recentProgress.count(_.numInputRows > 0)
     require(dataBatches == 1,
       s"fingerprint-dedup oracle assumes ONE data micro-batch " +
@@ -1241,12 +1250,12 @@ object EventsStream {
             // cutover); materialized now: the union at the end runs after
             // the caches are released, and the finals must not recompute
             // the batch sessionize
-            val finals = ranked.filter(col("rn") > 1)
-              .select(col("user_id"),
-                unix_micros(col("session_start")).as("start_us"),
-                unix_micros(col("session_end")).as("end_us"),
-                col("n_events"))
-              .localCheckpoint()
+            val finals = graft.Scratch.pin("sessionize_warm finals",
+              ranked.filter(col("rn") > 1)
+                .select(col("user_id"),
+                  unix_micros(col("session_start")).as("start_us"),
+                  unix_micros(col("session_end")).as("end_us"),
+                  col("n_events")))
             val initState = ranked.filter(col("rn") === 1)
               .select(col("user_id"), unix_micros(col("session_start")),
                 unix_micros(col("session_end")), col("n_events"))

@@ -53,17 +53,18 @@ object StatelessPipe {
     (out, row)
   }
 
-  /** Start the one append query, drain it and stop it
-    * ([[EventsStream.drain]]: a failed drain rethrows the query's own
-    * failure, with any stop failure attached as suppressed).
+  /** Start the one append query on a scratch checkpoint, drain it and
+    * stop it ([[EventsStream.drained]]: a failed drain rethrows the
+    * query's own failure, with any stop failure attached as
+    * suppressed).
     */
   private def run(spark0: SparkSession, dir: String, table: String,
       name: String, transform: DataFrame => DataFrame)
       : (DataFrame, StreamingQuery) = {
     val spark = EventsStream.streamSession(spark0)
-    val q = transform(EventsStream.source(spark, dir, table)).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    EventsStream.drain(q)
+    val q = EventsStream.drained(
+      transform(EventsStream.source(spark, dir, table)).writeStream
+        .outputMode("append").format("memory").queryName(name))
     (spark.table(name), q)
   }
 }

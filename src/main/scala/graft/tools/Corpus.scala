@@ -98,7 +98,7 @@ object Corpus {
     * the same stage functions with the persists and per-stage
     * counters a production launch wants.
     *
-    * The scored frame is materialized (localCheckpoint — the same
+    * The scored frame is materialized (a pin — the same
     * barrier [[run]] gets from its persist): without it, predicate
     * pushdown substitutes the FULL 16-regex clean+scrub chain into
     * every `txt` reference of the pushed `keep` condition, and the
@@ -108,9 +108,8 @@ object Corpus {
     * computed rows.
     */
   def pipelineFrame(docs: DataFrame): DataFrame = {
-    val scored = scoreDocs(docs)
-    graft.PlanCapture.record("corpus_pipeline:scored", scored)
-    val kept = scored.localCheckpoint().filter(col("keep"))
+    val kept = graft.Scratch.pin("corpus_pipeline:scored", scoreDocs(docs))
+      .filter(col("keep"))
     val deduped = dedupFirstWins(kept)
     val fixed = applySpanFixes(deduped, spanFixes(deduped))
     Sampling.hashSplit(fixed)

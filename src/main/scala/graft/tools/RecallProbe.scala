@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Sessions, Tables}
+import graft.{Scratch, Sessions, Tables}
 import graft.operators.{Dedup, Similarity}
 
 /** Measure the observed recall of every approximate (sketch/LSH/IVF)
@@ -34,12 +34,12 @@ object RecallProbe {
     spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.load(spark, dir, "documents")
     val emb = Tables.load(spark, dir, "embeddings")
-    val gt = Dedup.ngramJaccardPairs(docs.filter(col("doc_id") < 500),
-      n = 3, minJaccard = 0.8).localCheckpoint()
-    val exactTop5 = Similarity.topK(emb.filter(col("vec_id") < 10), emb,
-      k = 5).localCheckpoint()
-    val exactPairs = Similarity.cosinePairs(emb, minCosine = 0.45)
-      .localCheckpoint()
+    val gt = Scratch.pin("gt_pairs", Dedup.ngramJaccardPairs(
+      docs.filter(col("doc_id") < 500), n = 3, minJaccard = 0.8))
+    val exactTop5 = Scratch.pin("exact top5", Similarity.topK(
+      emb.filter(col("vec_id") < 10), emb, k = 5))
+    val exactPairs = Scratch.pin("exact cosine pairs",
+      Similarity.cosinePairs(emb, minCosine = 0.45))
     val probes: Seq[(String, () => (Long, Long))] = Seq(
       "minhash" -> (() => recallOf(gt,
         Dedup.minhashPairs(docs, k = 16, bands = 4, minJaccard = 0.7),

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graftshim
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions}
@@ -36,6 +37,12 @@ object Bridge {
   /** The parser `from_json` opens over a string value. */
   def jsonParser(factory: JsonFactory, s: UTF8String): JsonParser =
     CreateJacksonParser.utf8String(factory, s)
+
+  /** Whether `rdd` is marked for a local checkpoint, materialized or
+    * not (`RDD.isCheckpointed` turns true only once it is computed).
+    */
+  def isLocallyCheckpointed(rdd: RDD[_]): Boolean =
+    rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
 
   /** Block until every listener event posted so far is delivered. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

@@ -305,18 +305,21 @@ class EventsSpec extends AnyFunSuite {
     implicit val sql: org.apache.spark.sql.SQLContext = ss.sqlContext
     val in =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-    val q = in.toDF().groupBy(col("value") % 3).count()
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("graft_rocksdb_probe").start()
-    try {
-      in.addData(1L to 100L)
-      q.processAllAvailable()
-      val metrics = q.lastProgress.stateOperators
-      assert(metrics.nonEmpty)
-      assert(metrics.head.customMetrics.keySet.asScala
-        .exists(_.toLowerCase.contains("rocksdb")),
-        s"no rocksdb metrics: ${metrics.head.customMetrics.keySet}")
-    } finally q.stop()
+    Scratch.withDir("graft-rocksdb-probe") { ckpt =>
+      val q = in.toDF().groupBy(col("value") % 3).count()
+        .writeStream.outputMode("complete").format("memory")
+        .option("checkpointLocation", ckpt.toString)
+        .queryName("graft_rocksdb_probe").start()
+      try {
+        in.addData(1L to 100L)
+        q.processAllAvailable()
+        val metrics = q.lastProgress.stateOperators
+        assert(metrics.nonEmpty)
+        assert(metrics.head.customMetrics.keySet.asScala
+          .exists(_.toLowerCase.contains("rocksdb")),
+          s"no rocksdb metrics: ${metrics.head.customMetrics.keySet}")
+      } finally q.stop()
+    }
   }
 
   test("state data source reads a stopped query's aggregation state " +
@@ -623,6 +626,9 @@ class EventsSpec extends AnyFunSuite {
             .option("maxFilesPerTrigger", "1")
             .parquet(replayDir.toString), "leftOuter")
         .writeStream.outputMode("append").format("memory").queryName(qname)
+        // `_`-prefixed like the staging dirs, so the file source skips it
+        .option("checkpointLocation",
+          new java.io.File(replayDir, "_ckpt").toString)
         .start()
       try {
         writeChunk(ev, "chunk1")

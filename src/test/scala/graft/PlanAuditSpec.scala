@@ -120,10 +120,9 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(v.size == 1 && v.head.contains("ProbeScanAdjudicated"), v)
   }
 
-  test("PlanCapture sections are parsed independently (ids restart)") {
+  test("logged barrier sections are parsed independently (ids restart)") {
     val multi = scalarPlan("IdentityBroadcastMode") +
-      "\n==== captured: some intermediate step ====\n" +
-      keyedPlan
+      Bench.section("some intermediate step", Some(12.0), keyedPlan)
     val v = PlanAudit.violations("not_in_roster", multi)
     assert(v.size == 1 && v.head.contains("KeyedAggAdjudicated"), v)
   }

@@ -539,14 +539,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("winnow pair join runs ONE winnowing pass: the checkpoint " +
       "leaves no vocab re-derivation in the pair plan") {
-    graft.PlanCapture.enabled = true
-    graft.PlanCapture.drain()
-    val p = plan("dedup_winnow_pairs")
+    val (p, logged) = Scratch.logged(plan("dedup_winnow_pairs"))
     // post-checkpoint plan: the self-join reads the checkpointed
     // fingerprint scan, not four re-derivations of the corpus scan
     assert(!p.contains("dense_rank"), "vocab ranking re-derived:\n" + p)
-    val captured = graft.PlanCapture.drain()
-    assert(captured.exists(_._1.contains("winnowPairs fingerprints")),
+    assert(logged.exists(_.label.contains("winnowPairs fingerprints")),
       "pre-checkpoint fingerprint plan not recorded")
   }
 

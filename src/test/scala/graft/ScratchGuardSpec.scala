@@ -11,6 +11,13 @@ import scala.jdk.CollectionConverters._
   * fifty temp directories in `src/test`, and nine copies of the
   * recursive delete once sat beside it — scan the sources so a new
   * copy fails the build instead of a later review.
+  *
+  * One materialization barrier: [[Scratch.pin]] is the only
+  * `localCheckpoint` call and [[Scratch.pinnedRdds]] the only match on
+  * a `LogicalRDD` in `src/main`. Sixty-one hand-written
+  * `localCheckpoint` calls in thirteen files and four separate "is it
+  * pinned already" walks once sat beside them. The tests may pin by
+  * hand, so this half of the scan covers `src/main` only.
   */
 class ScratchGuardSpec extends AnyFunSuite {
   private val owner = "Scratch.scala"
@@ -24,9 +31,29 @@ class ScratchGuardSpec extends AnyFunSuite {
     "library delete" ->
       """\b(?:Utils\.deleteRecursively|FileUtils\.delete(?:Directory|Quietly))\b""".r)
 
+  private val barrierShapes: Seq[(String, scala.util.matching.Regex)] = Seq(
+    "localCheckpoint" -> """\blocalCheckpoint\s*\(""".r,
+    "LogicalRDD match" ->
+      """\bcase\s+[^=\n]*?:\s*(?:[\w.]+\.)?LogicalRDD\b""".r)
+
+  /** `src` without its comments (a quote holding `//` or a comment
+    * opener ends the line early: a miss, never a false find).
+    */
+  private def code(src: String): String =
+    src.replaceAll("""(?s)/\*.*?\*/""", " ").replaceAll("//[^\n]*", "")
+
+  private def found(shapes: Seq[(String, scala.util.matching.Regex)],
+      src: String): Seq[String] = {
+    val c = code(src)
+    shapes.flatMap { case (what, re) => re.findAllIn(c).map(_ => what) }
+  }
+
   /** The scratch shapes `src` contains, one entry per occurrence. */
-  private def scratchCopies(src: String): Seq[String] =
-    shapes.flatMap { case (what, re) => re.findAllIn(src).map(_ => what) }
+  private def scratchCopies(src: String): Seq[String] = found(shapes, src)
+
+  /** The scratch and barrier shapes `src` contains. */
+  private def mainCopies(src: String): Seq[String] =
+    found(shapes ++ barrierShapes, src)
 
   test("the scanner finds a planted copy of each shape and ignores " +
       "near misses") {
@@ -48,6 +75,25 @@ class ScratchGuardSpec extends AnyFunSuite {
         |Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
         |Files.createTempFile("x", ".xml")
         |""".stripMargin).isEmpty)
+    val barriers =
+      """val pinned = next.localCheckpoint()
+        |val lazyPin = next.localCheckpoint (eager = false)
+        |df.queryExecution.logical match {
+        |  case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+        |  case _: LogicalRDD if eager => df
+        |}
+        |""".stripMargin
+    assert(mainCopies(barriers).sorted == Seq("LogicalRDD match",
+      "LogicalRDD match", "localCheckpoint", "localCheckpoint"))
+    assert(scratchCopies(barriers).isEmpty)
+    assert(mainCopies(
+      """// an eager localCheckpoint() of the gram frame measured a wash
+        |/** a `case lr: LogicalRDD` walk, and
+        |  * rounds are localCheckpoint(eager = false)ed */
+        |val pinnedAlready = isLocallyCheckpointed(rdd)
+        |import org.apache.spark.sql.execution.LogicalRDD
+        |val leaf: LogicalRDD = null
+        |""".stripMargin).isEmpty)
   }
 
   private def scalaFiles(root: String): Seq[java.nio.file.Path] =
@@ -58,12 +104,13 @@ class ScratchGuardSpec extends AnyFunSuite {
     new String(java.nio.file.Files.readAllBytes(p),
       java.nio.charset.StandardCharsets.UTF_8)
 
-  private def assertNoCopies(files: Seq[java.nio.file.Path]): Unit = {
+  private def assertNoCopies(files: Seq[java.nio.file.Path],
+      copies: String => Seq[String]): Unit = {
     val offenders =
-      files.flatMap(p => scratchCopies(read(p)).map(w => s"$p: $w"))
+      files.flatMap(p => copies(read(p)).map(w => s"$p: $w"))
     assert(offenders.isEmpty,
-      "use Scratch.landed / Scratch.withDir instead of a hand-written " +
-        "scratch block:\n" + offenders.mkString("\n"))
+      "use Scratch.landed / Scratch.withDir / Scratch.pin instead of a " +
+        "hand-written scratch block or barrier:\n" + offenders.mkString("\n"))
   }
 
   test("no file in src/main outside Scratch.scala creates a temp " +
@@ -72,11 +119,12 @@ class ScratchGuardSpec extends AnyFunSuite {
     val scratch = files.find(_.getFileName.toString == owner)
     assert(scratch.nonEmpty, "scanned the wrong tree: " +
       java.nio.file.Paths.get("src/main").toAbsolutePath)
-    assertNoCopies(files.filterNot(_ == scratch.get))
+    assertNoCopies(files.filterNot(_ == scratch.get), mainCopies)
     // inside Scratch: one recursive delete, behind the private allocator
-    // and the disk-backed lifecycle
-    assert(scratchCopies(read(scratch.get)).sorted ==
-      Seq("recursive delete", "temp directory", "temp directory"))
+    // and the disk-backed lifecycle, and the one barrier
+    assert(mainCopies(read(scratch.get)).sorted ==
+      Seq("LogicalRDD match", "localCheckpoint", "recursive delete",
+        "temp directory", "temp directory"))
   }
 
   test("no file in src/test creates a temp directory or deletes a " +
@@ -87,6 +135,7 @@ class ScratchGuardSpec extends AnyFunSuite {
       "scanned the wrong tree: " +
         java.nio.file.Paths.get("src/test").toAbsolutePath)
     // this spec's own planted copies are the scanner's fixture
-    assertNoCopies(files.filterNot(_.getFileName.toString == self))
+    assertNoCopies(files.filterNot(_.getFileName.toString == self),
+      scratchCopies)
   }
 }

@@ -2,11 +2,17 @@ package graft
 
 import scala.collection.mutable
 
+import graft.operators.Graph
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The scratch lifecycle and the allocator's liveness sweep.
+/** The scratch lifecycle, the materialization barrier and the
+  * allocator's liveness sweep.
+  *
+  * [[Scratch.pin]] has one rule for "already pinned": a checkpoint is
+  * kept as it is (and, for a lazy pin, so is a frame only marked for
+  * one), while a frame over a plain RDD is pinned, eager or lazy.
   *
   * [[Scratch.landed]] hands back rows that outlive their directory and
   * [[Scratch.withDir]] deletes its directory whatever the body does.
@@ -70,6 +76,68 @@ class ScratchSpec extends AnyFunSuite {
     val pinned = spark.range(5).toDF().localCheckpoint()
     assert(Scratch.landed("graft-scratch-pinned")(_ => pinned) eq pinned)
     assert(Scratch.withDir("graft-scratch-value")(_.isDirectory))
+  }
+
+  /** `(src, dst)` edges over a one-partition plain RDD whose
+    * computations `computed` counts.
+    */
+  private def countedEdges(edges: Seq[(Long, Long)]) = {
+    val computed = spark.sparkContext.longAccumulator("edge computations")
+    val rdd = spark.sparkContext.parallelize(edges, 1).mapPartitions { it =>
+      computed.add(1L)
+      it.map { case (s, d) => Row(s, d) }
+    }
+    val df = spark.createDataFrame(rdd, StructType(Seq(
+      StructField("src", LongType), StructField("dst", LongType))))
+    (df, computed)
+  }
+
+  private val cycle = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 3L)
+
+  /** Runs `body` and returns how many persistent RDDs it added. */
+  private def addedPins(body: => Unit): Int = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    body
+    (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+  }
+
+  test("pageRank over createDataFrame(rdd) edges computes the source RDD " +
+      "once: a frame over a plain RDD is not pinned yet") {
+    val (edges, computed) = countedEdges(cycle)
+    val ranks = Graph.pageRank(edges, iters = 4)
+    assert(ranks.count() == 4L)
+    assert(computed.value == 1L,
+      s"source RDD computed ${computed.value} times")
+  }
+
+  // the graph_modularity → labelPropagation path: each operator's lazy
+  // edge pin must keep a frame the caller pinned, lazily or eagerly
+  test("a lazy pin keeps a frame that is already lazily pinned; an " +
+      "eager pin keeps a checkpoint, and both pin a plain-RDD frame") {
+    val (plain, _) = countedEdges(cycle)
+    val marked = Scratch.pin("lazy", plain, eager = false)
+    assert(!(marked eq plain))
+    assert(addedPins(
+      assert(Scratch.pin("lazy again", marked, eager = false) eq marked)) == 0)
+    val eager = Scratch.pin("eager", plain)
+    assert(!(eager eq plain) && (Scratch.pin("eager again", eager) eq eager))
+    assert(Scratch.pin("lazy over eager", eager, eager = false) eq eager)
+  }
+
+  test("the barrier log holds what logged ran, in order, and nothing " +
+      "outside it") {
+    val df = spark.range(4).toDF()
+    Scratch.pin("unlogged", df.filter("id > 0"))
+    val (n, logged) = Scratch.logged {
+      val p = Scratch.pin("first", df.filter("id > 1"))
+      Scratch.note("second", df.filter("id > 2"))
+      p.count()
+    }
+    assert(n == 2L)
+    assert(logged.map(l => (l.label, l.ms.isDefined)) ==
+      Seq("first" -> true, "second" -> false))
+    assert(logged.head.plan.executedPlan.toString.contains("Filter"))
+    assert(Scratch.logged(())._2.isEmpty)
   }
 
   test("scopedRoot nests under graft-scratch and sweeps by liveness") {

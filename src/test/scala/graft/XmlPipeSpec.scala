@@ -122,6 +122,46 @@ class XmlPipeSpec extends AnyFunSuite {
       "<?xml version=\"1.0\" encoding=\"utf-8\"?><sphinx:docset>\n</sphinx:docset>")
   }
 
+  test("formatDocs rejects a column name that is not an XML name before " +
+      "any job runs; XML names pass and their docset parses") {
+    val sc = spark.sparkContext
+    val base = spark.range(3).toDF("doc_id")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    Seq("sum(v)", "a b", "1x", "a:b", "x<y").foreach { bad =>
+      val df = base.withColumn(bad, col("doc_id").cast("string"))
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.set(0)
+      sc.addSparkListener(counter)
+      try {
+        val e = intercept[IllegalArgumentException](
+          XmlPipe.formatDocs(df, Seq("doc_id")))
+        assert(e.getMessage.contains(s"`$bad`"), e.getMessage)
+        org.apache.spark.ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(counter)
+      assert(jobs.get == 0, s"$bad: ${jobs.get} jobs")
+    }
+    val good = base.withColumn("_x", col("doc_id") * 2)
+      .withColumn("\u00e9t\u00e9", lit("<&>"))
+    val factory = javax.xml.stream.XMLInputFactory.newDefaultFactory()
+    // the sphinx: prefix is undeclared, as in the reference
+    factory.setProperty(javax.xml.stream.XMLInputFactory.IS_NAMESPACE_AWARE,
+      false)
+    val r = factory.createXMLStreamReader(new java.io.StringReader(
+      written(XmlPipe.formatDocs(good, Seq("doc_id")))))
+    val tags = mutable.Buffer.empty[String]
+    while (r.hasNext) {
+      if (r.next() == javax.xml.stream.XMLStreamConstants.START_ELEMENT)
+        tags += r.getLocalName
+    }
+    assert(tags.count(_ == "sphinx:document") == 3)
+    assert(Seq("doc_id", "_x", "\u00e9t\u00e9")
+      .forall(t => tags.count(_ == t) == 3), tags)
+  }
+
   test("strictParity formatDocs: truncated ids, descriptor blobs, " +
       "Date.toString timestamps") {
     import spark.implicits._
