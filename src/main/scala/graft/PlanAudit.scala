@@ -7,7 +7,9 @@ package graft
   * the adjudicated shapes are (a) a 1-row global aggregate under
   * IdentityBroadcastMode — the scalar-broadcast pattern behind the
   * recall gates and normalization joins; (b) a literal bounded
-  * generator (Range); (c) a localCheckpointed iterate frame (Scan
+  * generator (Range) or a driver-local relation (LocalTableScan:
+  * rows the driver already holds, like a layout job's stats row);
+  * (c) a localCheckpointed iterate frame (Scan
   * ExistingRDD — weight/centroid frames, 1-to-d rows by the
   * bounded-iteration discipline); (d) a limit-capped subtree. Two
   * further shapes are benign only where the operator's scaladoc
@@ -55,6 +57,11 @@ object PlanAudit {
     "sim_matryoshka_ann_recall",// probe frame at prefix dims
     "sim_rbm",                  // probe frame
     "sim_topk",                 // 10 query vectors (vec_id < 10 pushed)
+    // the sim_exact_top5 memo each recall gate reads: the sim_topk
+    // build, 10 query vectors (vec_id < 10 pushed)
+    "sim_ann_ivf_recall",
+    "sim_ann_lsh_recall",
+    "sim_ann_pq_recall",
     "sim_triplets",             // anchor frame (vec_id < 10 pushed)
     "text_quality_lr_agreement",// scored sample frame
     "text_quality_lr_calibration", // final-round weight row
@@ -68,13 +75,14 @@ object PlanAudit {
   private val ReusesId = """Reuses operator id: (\d+)""".r
 
   /** One formatted-explain section: the numbered tree plus a detail
-    * map keyed by node id (PlanCapture appends extra sections to the
-    * same file; each re-numbers from (1), so sections must be parsed
-    * independently or detail lookups cross wires). An executed AQE
-    * plan lists its final plan and its initial plan under unnumbered
-    * `== Final Plan ==` / `== Initial Plan ==` lines; a line without a
-    * `+- ` marker sits where its marker would be, and the `* ` of a
-    * whole-stage-codegen'd node is not part of its name.
+    * map keyed by node id (the barrier log, [[Scratch.logged]], appends
+    * extra sections to the same file; each re-numbers from (1), so
+    * sections must be parsed independently or detail lookups cross
+    * wires). An executed AQE plan lists its final plan and its initial
+    * plan under unnumbered `== Final Plan ==` / `== Initial Plan ==`
+    * lines; a line without a `+- ` marker sits where its marker would
+    * be, and the `* ` of a whole-stage-codegen'd node is not part of
+    * its name.
     */
   private def parseSection(s: String): (Vector[Node], Map[Int, String]) = {
     val tree = Vector.newBuilder[Node]
@@ -157,7 +165,7 @@ object PlanAudit {
         if (keysEmpty) Right(())
         else if (KeyedAggAdjudicated(q)) Right(())
         else Left(s"keyed ${name(n)} not in KeyedAggAdjudicated roster")
-      case "Range" => Right(())
+      case "Range" | "LocalTableScan" => Right(())
       case "GlobalLimit" | "CollectLimit" | "LocalLimit" |
           "TakeOrderedAndProject" => Right(())
       case "Scan" =>
@@ -194,7 +202,7 @@ object PlanAudit {
       case "HashAggregate" | "SortAggregate" | "ObjectHashAggregate" => true
       case "GlobalLimit" | "CollectLimit" | "LocalLimit" |
           "TakeOrderedAndProject" => true
-      case "Range" => true
+      case "Range" | "LocalTableScan" => true
       case "Scan" => n.header.contains("ExistingRDD")
       case nm if nm.endsWith("Join") =>
         children(tree, i).forall(c => reduced(tree, details, c))

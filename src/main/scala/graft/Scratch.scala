@@ -193,9 +193,13 @@ object Scratch {
 
   /** Logs `df`'s plan under `label` without pinning it: a frame a loop
     * only `head()`s or `collect()`s, whose shape the plan audit reads.
+    * Its physical plan is built here, while the caches it reads are
+    * live, so the later explain shows the plan that ran.
     */
-  def note(label: String, df: DataFrame): Unit =
-    append(Logged(label, df.queryExecution, None))
+  def note(label: String, df: DataFrame): Unit = append {
+    df.queryExecution.executedPlan
+    Logged(label, df.queryExecution, None)
+  }
 
   /** The one materialization barrier: `df` as a `localCheckpoint`
     * (eager unless `eager = false`), or as it is when it is pinned
@@ -235,10 +239,11 @@ object Scratch {
   /** Point the JVM's java.io.tmpdir at the tmpfs scratch root, so
     * the IMPLICIT ephemeral paths follow too: RocksDB state-store
     * working dirs, and the temporary checkpoint Spark creates for a
-    * streaming query started without one (the registry's never are). Shuffle spill does NOT follow: `spark.local.dir` is pinned
-    * first (via system property, read by SparkConf at session build)
-    * to the original disk tmpdir — see the class doc for why spill
-    * must stay off RAM. Called by the Bench and Verify mains BEFORE
+    * streaming query started without one (the registry's never are).
+    * Shuffle spill does NOT follow: `spark.local.dir` is pinned first
+    * (via system property, read by SparkConf at session build) to the
+    * original disk tmpdir — see the class doc for why spill must stay
+    * off RAM. Called by the Bench and Verify mains BEFORE
     * the session is built; a library user's JVM is never touched.
     */
   def redirectTmpdir(): Unit =

@@ -475,7 +475,6 @@ object Dedup {
         .groupBy(col("node"))
         .agg(min(col("label")).as("label"), max(col("old")).as("old"))
       // lazy pin: materialized by the convergence job below
-      if (iter == 0) graft.Scratch.note("clusters round 0", next)
       val nextCached =
         if ((iter + 1) % checkpointEvery == 0)
           pin(s"clusters round $iter", next, eager = false)

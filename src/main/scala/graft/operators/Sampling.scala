@@ -763,7 +763,6 @@ object Sampling {
           .isInCollection(picked.map(_._1) :+ -1L))
         .join(covered, Seq("g"), "left_anti")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("gain"))
-      if (r == 1) graft.Scratch.note("greedyCoverage round 1", gains)
       val top = gains
         .agg(max(struct(col("gain"), (-col("doc_id")).as("ni"))))
         .head().getStruct(0)

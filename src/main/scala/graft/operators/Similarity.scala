@@ -154,11 +154,26 @@ object Similarity {
   /** All pairs with cosine >= minCosine (embedding near-dup dedup).
     * Brute force O(N²) — ground truth; use [[annTopK]]'s bucketing at
     * scale. Output: (id_a, id_b, cosine).
+    *
+    * The pairs are compared on an 8 x 8 grid: each vector hashes to a
+    * block, its left copy joins the cells of its grid row and its right
+    * copy those of its grid column, so every pair meets in exactly one
+    * cell of an equi-join. The planner picks that join by size, and the
+    * corpus is never the build side of a nested-loop join (the
+    * [[graft.PlanAudit]] census flags one).
     */
   def cosinePairs(emb: DataFrame, minCosine: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val blocks = 8
     val q = withQuantized(emb, idCol, vecCol)
-    q.as("a").join(q.as("b"), col("a.id") < col("b.id"))
+      .withColumn("blk", pmod(hash(col("id")), lit(blocks)))
+    val grid = sequence(lit(0), lit(blocks - 1))
+    val rows = q.withColumn("cell",
+      explode(transform(grid, j => col("blk") * blocks + j)))
+    val cols = q.withColumn("cell",
+      explode(transform(grid, i => i * blocks + col("blk"))))
+    rows.as("a").join(cols.as("b"),
+        col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         qcosine(qdot(col("a.qv"), col("b.qv")), col("a.norm"), col("b.norm"))
           .as("cosine"))
@@ -930,14 +945,13 @@ object Similarity {
       "powerIterationPC needs a non-empty embedding set")
     val d = dRow(0).getInt(0)
     var v = Array.fill(d)(scale)
-    for (r <- 0 until rounds) {
+    for (_ <- 0 until rounds) {
       val vLit = array(v.map(lit(_)): _*)
       val w = q
         .select(col("q"), dot_long(col("q"), vLit).as("s"))
         .select(posexplode(col("q")).as(Seq("j0", "x")), col("s"))
         .groupBy((col("j0") + 1).cast("long").as("j"))
         .agg(sum(col("s").cast("decimal(38,0)") * col("x")).as("w"))
-      if (r == 0) graft.Scratch.note("powerIterationPC round 0", w)
       val rows = w.collect().map(row =>
         (row.getLong(0), BigInt(row.getDecimal(1).toBigInteger)))
       val m = rows.map(_._2.abs).max

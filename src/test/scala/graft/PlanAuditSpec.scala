@@ -103,6 +103,17 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(PlanAudit.violations("anything", rng).isEmpty)
   }
 
+  test("a driver-local LocalTableScan build (a layout job's stats row) " +
+      "is benign without a roster entry; its node name alone is not") {
+    val local = scanBuildPlan
+      .replace("+- Filter (3)\n         +- Scan parquet  (2)",
+        "+- LocalTableScan (2)")
+    assert(local != scanBuildPlan)
+    assert(PlanAudit.violations("io_compaction", local).isEmpty)
+    val other = local.replace("LocalTableScan (2)", "LocalTableScanX (2)")
+    assert(PlanAudit.violations("io_compaction", other).nonEmpty)
+  }
+
   test("BuildLeft picks the FIRST child; an unbounded left build is " +
       "caught even when the right side is tiny") {
     val plan =

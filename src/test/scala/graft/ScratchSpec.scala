@@ -140,6 +140,17 @@ class ScratchSpec extends AnyFunSuite {
     assert(Scratch.logged(())._2.isEmpty)
   }
 
+  test("a noted frame keeps the plan it ran with after its cached " +
+      "input is unpersisted") {
+    val cached = spark.range(8).toDF().persist()
+    cached.count()
+    val (_, logged) =
+      Scratch.logged(Scratch.note("over a cache", cached.filter("id > 2")))
+    cached.unpersist(blocking = true)
+    val plan = logged.head.plan.executedPlan.toString
+    assert(plan.contains("InMemoryTableScan"), plan)
+  }
+
   test("scopedRoot nests under graft-scratch and sweeps by liveness") {
     Scratch.withDir("graft-scratch-spec") { parent =>
       val root = Scratch.scopedRoot(parent).get

@@ -25,6 +25,32 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == Set((0L, 1L)))
   }
 
+  test("cosinePairs' block grid finds every brute-force pair once, " +
+      "and no nested-loop join builds on the corpus") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val data = (0 until 60).map { i =>
+      (i.toLong, Seq.fill(6)((rnd.nextGaussian() + 1).toFloat))
+    }.toDF("vec_id", "embedding")
+    val norm = data.select(col("vec_id"),
+      Similarity.quantize(col("embedding")).as("qv"))
+      .withColumn("n", Similarity.qdot(col("qv"), col("qv")))
+    val brute = norm.as("a").crossJoin(norm.as("b"))
+      .filter(col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id"), col("b.vec_id"),
+        Similarity.qcosine(Similarity.qdot(col("a.qv"), col("b.qv")),
+          col("a.n"), col("b.n")).as("c"))
+      .filter(col("c") >= 0.8)
+      .as[(Long, Long, Double)].collect().sorted.toSeq
+    assert(brute.nonEmpty && brute.length < 60 * 59 / 2)
+    val pairs = Similarity.cosinePairs(data, minCosine = 0.8)
+    assert(pairs.select("id_a", "id_b", "cosine")
+      .as[(Long, Long, Double)].collect().sorted.toSeq == brute)
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin") &&
+      !plan.contains("CartesianProduct"), plan)
+  }
+
   test("semanticDecontaminate drops corpus vectors near any eval " +
       "vector, keeps the rest, with no nested-loop join in the plan") {
     import spark.implicits._
