@@ -210,6 +210,12 @@ object Scratch {
     * (`createDataFrame(rdd, schema)`) reads its input again on every
     * action, so it is pinned in both cases. While [[logged]] runs, the
     * pin is logged under `label` with `df`'s execution and wall time.
+    *
+    * A lazy pin is not free of jobs: under AQE, building the RDD of a
+    * plan with an exchange materializes the query stages below it, so
+    * the pin runs those shuffle stages when it is taken (the later
+    * action then computes only the final stage). A lazy pin over an
+    * exchange-free frame starts no job.
     */
   def pin(label: String, df: DataFrame, eager: Boolean = true): DataFrame = {
     val t0 = System.nanoTime()

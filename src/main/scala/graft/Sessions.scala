@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   *    tasks whose scheduling overhead dominates small queries. AQE
   *    coalesces them to the advisory size at runtime (and splits skewed
   *    ones at scale), so wall-clock is robust to the cpu setting.
-  *  - `spark.sql.legacy.parquet.nanosAsLong`: the events fixture is
-  *    parquet TIMESTAMP(NANOS), which Spark rejects outright. Set once
+  *  - `spark.sql.legacy.parquet.nanosAsLong`: the events fixture may
+  *    be parquet TIMESTAMP(NANOS), which Spark rejects outright
+  *    ([[Tables.schemaOf]] then fails with this guidance). Set once
   *    at construction — flipping it inside a loader would leak a
   *    session-global conf change as a read side effect and be racy
   *    under concurrent loads.

@@ -1,9 +1,7 @@
 package graft
 
-import graft.functions._
 import graft.operators._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -186,7 +184,7 @@ object SparkEntry {
       df: DataFrame): DataFrame = {
     val path = s"${recallDumpDir(dir)}/$name"
     df.coalesce(1).write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** One-row recall gate (n_exact, n_hit, recall_bp, meets_floor):
@@ -539,8 +537,7 @@ object SparkEntry {
     * hash MISMATCH — were both sides to compute the boolean, a
     * recall regression would emit `false` twice and stay green.
     */
-  private[graft] def recallTailSql(name: String, keys: String,
-      floorBp: Int): String = {
+  private[graft] def recallTailSql(name: String, keys: String): String = {
     val bp = "CASE WHEN n_exact = 0 THEN CAST(10000 AS BIGINT) " +
       "ELSE (10000 * n_hit) // n_exact END"
     s"""

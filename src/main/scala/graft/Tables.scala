@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{LongType, StructField, TimestampNTZType}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType,
+  TimestampNTZType}
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   * In a deployment the Cassandra-connector source would sit behind the
@@ -12,18 +15,6 @@ object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Needed only for the TIMESTAMP(NANOS) fixture generation; set at
-    * construction via [[Sessions.builder]] — mutating it here would
-    * leak a session-global conf change as a read side effect (racy
-    * under concurrent loads).
-    */
-  private[graft] def requireNanosConf(spark: SparkSession): Unit =
-    if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      throw new IllegalStateException(
-        "events.parquet may be TIMESTAMP(NANOS): build the session with " +
-          "graft.Sessions.builder (or set " +
-          "spark.sql.legacy.parquet.nanosAsLong=true at construction)")
 
   /** Timestamp normalization for fixture columns — the generator has
     * shipped two flavors across rounds, and the engine accepts both:
@@ -141,15 +132,49 @@ object Tables {
     df.repartition(df.sparkSession.sparkContext.defaultParallelism,
       org.apache.spark.sql.functions.col(key))
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    try normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+  /** The schema Spark's parquet inference gives `path`, read from ONE
+    * parquet footer on the driver, so no Spark job runs. The file is the one
+    * Spark's inference reads with `mergeSchema` off: `path` itself when
+    * it is a file, else the first data file under it in sorted path
+    * order (a name starting with `_` or `.` is not data, except a
+    * `k=v` partition directory). Files that disagree with it are not
+    * merged, exactly as in Spark. A missing path, or a directory with
+    * no data file, fails here and names the path.
+    *
+    * Spark has no nanosecond timestamp: a TIMESTAMP(NANOS) column
+    * converts only on a session built with `nanosAsLong`
+    * ([[Sessions.builder]] sets it at construction — flipping it here
+    * would leak a session-global conf change as a read side effect),
+    * and fails with that guidance otherwise.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val conf = Bridge.hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root))
+      throw new java.io.FileNotFoundException(s"parquet table $path does not exist")
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (s.isFile) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    val file = leaves(fs.getFileStatus(root)).minByOption(_.getPath.toString)
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"parquet table $path holds no data file"))
+    try Bridge.parquetSchema(spark, conf, file)
     catch {
-      // a TIMESTAMP(NANOS) fixture read on a session built without the
-      // nanosAsLong conf fails Spark's parquet schema conversion; keep
-      // the curated guidance instead of the raw "Illegal Parquet type"
-      case e: Exception
-          if Option(e.getMessage).exists(_.contains("Illegal Parquet type")) =>
-        requireNanosConf(spark) // throws the curated message if unset
-        throw e                 // conf was set; some other illegal type
+      case e: AnalysisException if e.getMessage.contains("TIMESTAMP(NANOS") =>
+        throw new IllegalStateException(s"$path has a TIMESTAMP(NANOS) " +
+          "column: build the session with graft.Sessions.builder (or set " +
+          "spark.sql.legacy.parquet.nanosAsLong=true at construction)", e)
     }
+  }
+
+  /** The parquet table at `path`, opened under [[schemaOf]]: no job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    normalizeTs(parquet(spark, s"$dir/$name.parquet"))
 }

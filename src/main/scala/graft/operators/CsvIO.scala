@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter,
-  Row, SparkSession}
+  SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** CSV source/sink pair — the third interchange format beside parquet

@@ -71,9 +71,10 @@ object Graph {
     * slices, each merged against a replicated copy of the hot key's
     * state row — GraphSpec pins `skew=true` in the executed plan on
     * a 97%-hub edge set with bit-identical ranks. For the same
-    * reason the state is MATERIALIZED (LAZY localCheckpoint — the
-    * node-sized frame persists during the round that consumes it,
-    * costing no extra job): skew split also requires both join
+    * reason the state is MATERIALIZED (LAZY pin — the node-sized
+    * frame persists during the round that consumes it; under AQE the
+    * pin runs the state's own shuffle stages when it is taken, see
+    * [[graft.Scratch.pin]]): skew split also requires both join
     * children to be planner-inserted (ENSURE_REQUIREMENTS) shuffle
     * stages, and an inline outdeg⋈ranks subplan on the state side
     * would disqualify the join just as the chain does. The destination-keyed sum is
@@ -427,10 +428,11 @@ object Graph {
       val e = e0
         .join(alive.withColumnRenamed("node", "src"), "src")
         .join(alive.withColumnRenamed("node", "dst"), "dst")
-      // LAZY checkpoint: alive's eager checkpoint job below
-      // materializes deg's cache in the same pass, so each round costs
-      // ONE job instead of two; the final round's deg is then read
-      // from cache by the closing join.
+      // LAZY pin: under AQE taking it runs the shuffle stages below the
+      // groupBy (see Scratch.pin); alive's eager pin below then computes
+      // deg's blocks from that shuffle output in the job that pins
+      // alive, and the final round's deg is read from cache by the
+      // closing join.
       deg = pin(s"kCore round $r degrees", e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg")), eager = false)
       alive = pin(s"kCore round $r alive",
@@ -549,7 +551,6 @@ object Graph {
     * ordered by label.
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     // read 3× below (m2f, deg, intra)
     val e = pin("modularity edges", edges, eager = false)
     val m2f = e.agg(count(lit(1)).as("m2"))

@@ -189,7 +189,7 @@ object Retrieval {
           expr("(10000 * shared) div (a.ng + b.ng - shared)")
             .as("sim_bp")))
     var picked = Vector.empty[(Long, Long)]
-    for (r <- 1 to k) {
+    for (_ <- 1 to k) {
       val rest = base.filter(!col("id")
         .isInCollection(picked.map(_._1) :+ -1L))
       val scored =

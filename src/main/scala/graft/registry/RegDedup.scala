@@ -1,11 +1,9 @@
 package graft
 package registry
 
-import graft.functions._
 import graft.operators._
 import graft.SparkEntry._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dedup query registrations + raw DuckDB oracle twins, split
@@ -245,7 +243,6 @@ private[graft] object RegDedup {
       // nCells=4 on the near-orthogonal fixture keeps ~2/3 of true
       // pairs co-clustered (measured across scales by RecallProbe) —
       // a real clustered corpus concentrates near-dups in one cell
-      val emb = t(s, dir, "embeddings")
       recallGate(s, dir, "dedup_semantic_recall",
         cosPairs(s, dir), semPairs(s, dir),
         Seq("id_a", "id_b"), floorBp = 4000)
@@ -602,10 +599,10 @@ private[graft] object RegDedup {
       ORDER BY id_a, id_b""",
     "dedup_minhash_recall" -> s"""
       WITH $gtPairsCteSql,
-      ${recallTailSql("dedup_minhash_recall", "id_a, id_b", 9500)}""",
+      ${recallTailSql("dedup_minhash_recall", "id_a, id_b")}""",
     "dedup_simhash_recall" -> s"""
       WITH $gtPairsCteSql,
-      ${recallTailSql("dedup_simhash_recall", "id_a, id_b", 9500)}""",
+      ${recallTailSql("dedup_simhash_recall", "id_a, id_b")}""",
     "dedup_embedding_ann_recall" -> s"""
       WITH $qEmbSql,
       d AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.x * b.x) AS dot
@@ -615,7 +612,7 @@ private[graft] object RegDedup {
                 FROM d JOIN n na ON na.vec_id = id_a
                        JOIN n nb ON nb.vec_id = id_b
                 WHERE CAST(dot AS DOUBLE) / sqrt(CAST(na.norm AS DOUBLE) * CAST(nb.norm AS DOUBLE)) >= 0.45),
-      ${recallTailSql("dedup_embedding_ann_recall", "id_a, id_b", 9000)}""",
+      ${recallTailSql("dedup_embedding_ann_recall", "id_a, id_b")}""",
     "dedup_incremental_near_recall" -> s"""
       WITH surv AS (SELECT doc_id
                     FROM read_parquet('$RecallDirToken/dedup_incremental_near_recall/*.parquet')),
@@ -639,7 +636,7 @@ private[graft] object RegDedup {
                 FROM d JOIN n na ON na.vec_id = id_a
                        JOIN n nb ON nb.vec_id = id_b
                 WHERE CAST(dot AS DOUBLE) / sqrt(CAST(na.norm AS DOUBLE) * CAST(nb.norm AS DOUBLE)) >= 0.45),
-      ${recallTailSql("dedup_semantic_recall", "id_a, id_b", 4000)}""",
+      ${recallTailSql("dedup_semantic_recall", "id_a, id_b")}""",
     // within_bound is the literal expected TRUE on the oracle side —
     // see recallTailSql's rationale: both-sides-computed booleans
     // would agree on a violation and stay green; the assertion makes

@@ -1,11 +1,9 @@
 package graft
 package registry
 
-import graft.functions._
 import graft.operators._
 import graft.SparkEntry._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Profile query registrations + raw DuckDB oracle twins, split

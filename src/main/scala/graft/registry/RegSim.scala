@@ -1,11 +1,9 @@
 package graft
 package registry
 
-import graft.functions._
 import graft.operators._
 import graft.SparkEntry._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sim query registrations + raw DuckDB oracle twins, split
@@ -350,15 +348,15 @@ private[graft] object RegSim {
     "sim_ann_lsh_recall" -> s"""
       WITH $qEmbSql,
       $exactTop5CteSql,
-      ${recallTailSql("sim_ann_lsh_recall", "query_id, neighbor_id", 9000)}""",
+      ${recallTailSql("sim_ann_lsh_recall", "query_id, neighbor_id")}""",
     "sim_ann_ivf_recall" -> s"""
       WITH $qEmbSql,
       $exactTop5CteSql,
-      ${recallTailSql("sim_ann_ivf_recall", "query_id, neighbor_id", 8000)}""",
+      ${recallTailSql("sim_ann_ivf_recall", "query_id, neighbor_id")}""",
     "sim_ann_pq_recall" -> s"""
       WITH $qEmbSql,
       $exactTop5CteSql,
-      ${recallTailSql("sim_ann_pq_recall", "query_id, neighbor_id", 8000)}""",
+      ${recallTailSql("sim_ann_pq_recall", "query_id, neighbor_id")}""",
     "sim_matryoshka_ann_recall" -> s"""
       WITH $qEmbSql,
       dm AS (SELECT vec_id, CAST(len(qv) AS BIGINT) AS d FROM q),

@@ -1,7 +1,6 @@
 package graft
 package registry
 
-import graft.functions._
 import graft.operators._
 import graft.SparkEntry._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}

@@ -5,7 +5,6 @@ import graft.functions._
 import graft.operators._
 import graft.SparkEntry._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SqlB query registrations + raw DuckDB oracle twins, split

@@ -228,10 +228,7 @@ object EventsStream {
     */
   def source(spark: SparkSession, dir: String,
       table: String = "events"): DataFrame = {
-    // nanosAsLong must be set at session construction (Sessions.builder);
-    // fail loudly before the schema probe gives a cryptic parquet error.
-    graft.Tables.requireNanosConf(spark)
-    val schema = spark.read.parquet(s"$dir/$table.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/$table.parquet")
     // file-stream sources take a directory; select just this table
     graft.Tables.normalizeTs(spark.readStream.schema(schema)
       .option("pathGlobFilter", s"$table.parquet").parquet(dir))
@@ -705,9 +702,8 @@ object EventsStream {
           s"chunk$i")
       }
       var state = graft.Scratch.pin("ivm state", state0)
-      val schema = spark.read
-        .parquet(new java.io.File(replayDir, "chunk0.parquet").toString)
-        .schema
+      val schema = graft.Tables.schemaOf(spark,
+        new java.io.File(replayDir, "chunk0.parquet").toString)
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
       drained(src.writeStream
@@ -736,7 +732,7 @@ object EventsStream {
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         df.write.mode("append").parquet(outDir)
       })
-    spark.read.parquet(outDir)
+    graft.Tables.parquet(spark, outDir)
   }
 
   /** Streaming content dedup keyed on the engine's own sdbm content

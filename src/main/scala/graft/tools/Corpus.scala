@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.{JsonlExport, Sampling, Scrub, TextStats}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-data hygiene pipeline — the composed run a
@@ -119,7 +119,7 @@ object Corpus {
   /** Run the pipeline; returns the per-stage report. `docs` needs
     * (doc_id, source, text).
     */
-  def run(spark: SparkSession, docs: DataFrame, outDir: String,
+  def run(docs: DataFrame, outDir: String,
       shards: Int = 4, evalDocs: Option[DataFrame] = None,
       nearDupSafeSplit: Boolean = false): Report = {
     val cached = scoreDocs(docs).persist(
@@ -236,7 +236,7 @@ object Corpus {
           Some(docs.filter(col("doc_id") < evalSlice)
             .select(col("doc_id"), col("text")))
         else None
-      println(run(spark, docs, outDir, shards, evalDocs, safeSplit).json)
+      println(run(docs, outDir, shards, evalDocs, safeSplit).json)
     } finally spark.stop()
   }
 }

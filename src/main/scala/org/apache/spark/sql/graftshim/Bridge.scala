@@ -1,12 +1,20 @@
 package org.apache.spark.sql.graftshim
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compile-time bridge into Spark's `private[sql]` and `private[spark]`
@@ -46,4 +54,21 @@ object Bridge {
 
   /** Block until every listener event posted so far is delivered. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The session's Hadoop conf, as its file sources build it. */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession): Configuration =
+    spark.sessionState.newHadoopConf()
+
+  /** The schema Spark's parquet inference reads from `file`: its footer
+    * without row groups, through the Spark row-metadata schema when the
+    * file carries one, else Spark's converter under the session's conf.
+    * Nullable throughout, as a file source's relation makes it.
+    */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession,
+      conf: Configuration, file: FileStatus): StructType = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
 }

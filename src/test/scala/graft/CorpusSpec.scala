@@ -14,7 +14,7 @@ class CorpusSpec extends AnyFunSuite {
     Scratch.withDir("graft-corpus") { tmp =>
       val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
         .select(col("doc_id"), col("source"), col("text"))
-      val r = Corpus.run(spark, docs, tmp.toString, shards = 2)
+      val r = Corpus.run(docs, tmp.toString, shards = 2)
       assert(r.input == docs.count())
       assert(r.kept <= r.input)
       assert(r.deduped <= r.kept && r.deduped > 0)
@@ -28,7 +28,7 @@ class CorpusSpec extends AnyFunSuite {
       assert(total == r.deduped)
       // determinism: a second run reports identical counts
       Scratch.withDir("graft-corpus2") { tmp2 =>
-        assert(Corpus.run(spark, docs, tmp2.toString, shards = 2) == r)
+        assert(Corpus.run(docs, tmp2.toString, shards = 2) == r)
       }
     }
   }
@@ -38,7 +38,7 @@ class CorpusSpec extends AnyFunSuite {
     Scratch.withDir("graft-corpus-s") { tmp =>
       val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
         .select(col("doc_id"), col("source"), col("text"))
-      val r = Corpus.run(spark, docs, tmp.toString, shards = 1,
+      val r = Corpus.run(docs, tmp.toString, shards = 1,
         nearDupSafeSplit = true)
       assert(r.train + r.valN + r.test == r.deduped)
       // re-read the splits and check the leakage invariant against
@@ -75,7 +75,7 @@ class CorpusSpec extends AnyFunSuite {
         (3L, "s", other)).toDF("doc_id", "source", "text")
       // held-out eval set shares other's content, not the span content
       val eval = Seq((99L, other)).toDF("doc_id", "text")
-      val r = Corpus.run(spark, docs, tmp.toString, shards = 1,
+      val r = Corpus.run(docs, tmp.toString, shards = 1,
         evalDocs = Some(eval))
       assert(r.input == 3 && r.kept == 3 && r.deduped == 3)
       // docs 1+2 share the >=30-char prefix: both span-scrubbed
@@ -94,7 +94,7 @@ class CorpusSpec extends AnyFunSuite {
         "the g6 h7 and the i8 j9 and the k10 l11 and"
       val docs = Seq((1L, "s", good), (2L, "s", good)).toDF(
         "doc_id", "source", "text")
-      val r = Corpus.run(spark, docs, tmp.toString, shards = 1)
+      val r = Corpus.run(docs, tmp.toString, shards = 1)
       assert(r.input == 2 && r.kept == 2 && r.deduped == 1)
     }
   }

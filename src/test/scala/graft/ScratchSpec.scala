@@ -124,6 +124,21 @@ class ScratchSpec extends AnyFunSuite {
     assert(Scratch.pin("lazy over eager", eager, eager = false) eq eager)
   }
 
+  // under AQE, building the RDD of a plan with an exchange materializes
+  // the query stages below it, so a lazy pin is not free of jobs
+  test("a lazy pin over a groupBy runs its shuffle stage when the pin is " +
+      "taken; over an exchange-free frame it starts no job") {
+    val grouped = spark.range(0, 1000, 1, 4)
+      .selectExpr("id % 7 AS k").groupBy("k").count()
+    val (_, shuffleJobs) = SparkTestSession.jobsStarted(
+      Scratch.pin("lazy grouped", grouped, eager = false))
+    assert(shuffleJobs >= 1)
+    val narrow = spark.range(0, 1000, 1, 4).selectExpr("id * 2 AS x")
+    val (_, narrowJobs) = SparkTestSession.jobsStarted(
+      Scratch.pin("lazy narrow", narrow, eager = false))
+    assert(narrowJobs == 0)
+  }
+
   test("the barrier log holds what logged ran, in order, and nothing " +
       "outside it") {
     val df = spark.range(4).toDF()

@@ -24,6 +24,24 @@ object SparkTestSession {
     (r, started.get())
   }
 
+  /** Run `f`, counting the Spark jobs started meanwhile. The bus is
+    * drained on both sides, so the count holds exactly `f`'s jobs.
+    */
+  def jobsStarted[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val r = try { val r = f; org.apache.spark.ListenerBusDrain(sc); r }
+      finally sc.removeSparkListener(listener)
+    (r, started.get())
+  }
+
   lazy val spark: SparkSession = {
     val s = Sessions.builder("graft-test", "local[4]", "4")
       // session-lifetime, so inside this JVM's scratch run dir rather

@@ -124,25 +124,14 @@ class XmlPipeSpec extends AnyFunSuite {
 
   test("formatDocs rejects a column name that is not an XML name before " +
       "any job runs; XML names pass and their docset parses") {
-    val sc = spark.sparkContext
     val base = spark.range(3).toDF("doc_id")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
     Seq("sum(v)", "a b", "1x", "a:b", "x<y").foreach { bad =>
       val df = base.withColumn(bad, col("doc_id").cast("string"))
-      org.apache.spark.ListenerBusDrain(sc)
-      jobs.set(0)
-      sc.addSparkListener(counter)
-      try {
-        val e = intercept[IllegalArgumentException](
-          XmlPipe.formatDocs(df, Seq("doc_id")))
-        assert(e.getMessage.contains(s"`$bad`"), e.getMessage)
-        org.apache.spark.ListenerBusDrain(sc)
-      } finally sc.removeSparkListener(counter)
-      assert(jobs.get == 0, s"$bad: ${jobs.get} jobs")
+      val (e, jobs) = SparkTestSession.jobsStarted(
+        intercept[IllegalArgumentException](
+          XmlPipe.formatDocs(df, Seq("doc_id"))))
+      assert(e.getMessage.contains(s"`$bad`"), e.getMessage)
+      assert(jobs == 0, s"$bad: $jobs jobs")
     }
     val good = base.withColumn("_x", col("doc_id") * 2)
       .withColumn("\u00e9t\u00e9", lit("<&>"))
